@@ -13,7 +13,8 @@ Reimplements /root/reference/src/area.rs:39-117 semantics exactly:
     TILE as its geometry (area.rs:104-112 — faithful quirk: the prior
     single-area claim covers the full tile, so its PIP test at probe time is
     always true for points in that tile);
-- probe trichotomy 0 / single / MULTIPLE handled in spatial_join.py.
+- probe trichotomy 0 / single / MULTIPLE: :class:`CellLookup`, the one
+  kernel behind ``probe`` and both distributed enrichers.
 
 The build is a DRIVER-side job over the (small) polygon table — exactly the
 reference's architecture where the index is precomputed once and shared; at
@@ -28,13 +29,14 @@ from __future__ import annotations
 import math
 import os
 from dataclasses import dataclass, field
+from functools import cached_property
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 from . import geom
-from .cells import cell_bounds, num_tiles_lon
+from .cells import cell_bounds, grid_cell_py, num_tiles_lon
 
 MULTIPLE = 0xFFFF  # AREA_ID_MULTIPLE, area.rs:25
 
@@ -60,27 +62,100 @@ class AreaIndex:
     def border_cells(self) -> set[int]:
         return {c for c, a in self.index.items() if a == MULTIPLE}
 
+    @cached_property
+    def cell_lookup(self) -> CellLookup:
+        """The probe tables as numpy arrays (what executors receive),
+        derived on first use: an index is complete once built or loaded."""
+        return CellLookup.from_index(self)
+
+    def lookup(self, cells, lon, lat) -> np.ndarray:
+        """admin_key per point of already-computed grid cells (see
+        :meth:`CellLookup.lookup`)."""
+        return self.cell_lookup.lookup(cells, lon, lat)
+
     def probe(self, lat: float, lon: float) -> str | None:
-        """Driver-side single-point probe (AreaHandler::handle_node,
-        area.rs:366-401) — used by tests; the distributed path is
-        spatial_join.enrich_with_admin."""
-        if abs(lat) >= 90.0:
-            return None
-        ntl = num_tiles_lon(self.tile_size)
-        cell = int((lat + 90.0) // self.tile_size) * ntl + int(
-            (lon + 180.0) // self.tile_size
+        """Single-point probe (AreaHandler::handle_node, area.rs:366-401)
+        through the same kernel as the distributed path."""
+        cell = grid_cell_py(lat, lon, self.tile_size)
+        return self.lookup([np.nan if cell is None else cell], [lon], [lat])[0]
+
+
+@dataclass(frozen=True)
+class CellLookup:
+    """The probe trichotomy (area.rs:366-401) as one vectorised kernel.
+
+    ``cells`` are the indexed cell ids, sorted; ``state[i]`` is the
+    ``keys`` position of a single-area cell, or -1 for a MULTIPLE cell
+    whose candidates (key positions, clipped MultiPolygons, in insertion
+    order) are ``border[i]``.  Plain numpy and lists, so it pickles into a
+    broadcast."""
+
+    keys: np.ndarray
+    cells: np.ndarray
+    state: np.ndarray
+    border: dict[int, tuple[np.ndarray, list[geom.MultiPolygon]]]
+
+    @classmethod
+    def from_index(cls, idx: AreaIndex) -> CellLookup:
+        pos = {aid: i for i, aid in enumerate(sorted(idx.id_to_key))}
+        cells = sorted(idx.index)
+        states = [idx.index[c] for c in cells]
+        return cls(
+            keys=np.array([idx.id_to_key[a] for a in pos], dtype=object),
+            cells=np.array(cells, dtype=np.int64),
+            state=np.array([-1 if a == MULTIPLE else pos[a] for a in states], dtype=np.int64),
+            border={
+                i: (np.array([pos[a] for a, _ in cs], dtype=np.int64), [mp for _, mp in cs])
+                for i, (c, a) in enumerate(zip(cells, states))
+                if a == MULTIPLE and (cs := idx.border.get(c))
+            },
         )
-        state = self.index.get(cell, 0)
-        if state == 0:
-            return None
-        if state != MULTIPLE:
-            return self.id_to_key[state]
-        hits = [
-            self.id_to_key[aid]
-            for aid, mp in self.border[cell]
-            if bool(geom.points_intersect_mp(np.array([lon]), np.array([lat]), mp)[0])
-        ]
-        return ",".join(hits) if hits else None
+
+    def lookup(self, cells, lon, lat) -> np.ndarray:
+        """Object array of admin_key (None = no area) per point.
+
+        ``cells`` is the grid cell per point, NaN where the probe is
+        skipped (|lat| >= 90 or NULL coordinates, area.rs:368-370).
+        Single-area cells resolve by binary search with no geometry test
+        (area.rs:391-394).  Points in MULTIPLE cells are tested against
+        each candidate of their cell (boundary inclusive, area.rs:381);
+        hits are comma-joined in insertion order, once per distinct hit
+        pattern of the cell (area.rs:377-389, 396-399)."""
+        cells = np.asarray(cells, dtype=np.float64)
+        out = np.full(len(cells), None, dtype=object)
+        rows = np.flatnonzero(~np.isnan(cells))
+        if not len(self.cells):
+            return out
+        c = cells[rows].astype(np.int64)
+        at = np.minimum(np.searchsorted(self.cells, c), len(self.cells) - 1)
+        state = np.where(self.cells[at] == c, self.state[at], -2)  # -2: empty
+        single = state >= 0
+        out[rows[single]] = self.keys[state[single]]
+
+        multi = state == -1
+        rows, at = rows[multi], at[multi]
+        lon = np.asarray(lon, dtype=np.float64)[rows]
+        lat = np.asarray(lat, dtype=np.float64)[rows]
+        order = np.argsort(at, kind="stable")
+        cell_at, starts = np.unique(at[order], return_index=True)
+        for b, sel in zip(cell_at, np.split(order, starts[1:])):
+            if b not in self.border:
+                continue
+            key_pos, mps = self.border[b]
+            hits = np.column_stack(
+                [geom.points_intersect_mp(lon[sel], lat[sel], mp) for mp in mps]
+            )
+            out[rows[sel]] = self._joined(hits, key_pos)
+        return out
+
+    def _joined(self, hits: np.ndarray, key_pos: np.ndarray) -> np.ndarray:
+        """Comma-joined keys per row of a (points x candidates) hit matrix."""
+        patterns, inverse = np.unique(hits, axis=0, return_inverse=True)
+        labels = np.array(
+            [",".join(self.keys[key_pos[p]]) if p.any() else None for p in patterns],
+            dtype=object,
+        )
+        return labels[inverse.reshape(-1)]
 
 
 def build_area_index(

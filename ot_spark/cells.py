@@ -42,8 +42,9 @@ def grid_cell(lat: Column, lon: Column, tile_size: float = 1.0) -> Column:
 
 
 def grid_cell_py(lat: float, lon: float, tile_size: float = 1.0) -> int | None:
-    """Driver-side twin of :func:`grid_cell` for index building / tests."""
-    if abs(lat) >= 90.0:
+    """Driver-side twin of :func:`grid_cell` for index building / tests
+    (NULL for a NaN latitude too, as Spark's ``abs(NaN) < 90`` is false)."""
+    if not abs(lat) < 90.0:
         return None
     return int((lat + 90.0) // tile_size) * num_tiles_lon(tile_size) + int(
         (lon + 180.0) // tile_size

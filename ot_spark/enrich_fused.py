@@ -9,10 +9,12 @@ measured anti-scaling).
 
 This module composes the same primitives into a single struct-returning
 pandas UDF: the JVM side still does everything vectorizable in codegen
-(grid cell, single-cell broadcast join, raster routing CASE, skip masks);
-Python does only the irreducible numpy work (border PIP refine, pixel
-gather, S2/true-H3 encode) in one pass.  Semantics are identical to the
-composed operators — tests/test_fused.py asserts equality row-for-row.
+(grid cell, raster routing CASE, skip masks); Python does only the numpy
+work (the CellLookup admin kernel, pixel gather, S2/true-H3 encode) in one
+pass.  The admin lookup needs no join: the UDF receives every row's grid
+cell and returns admin_key directly, so the plan is one Arrow round-trip
+with no exchange.  Semantics are identical to the composed operators —
+tests/test_fused.py asserts equality row-for-row.
 """
 
 from __future__ import annotations
@@ -27,7 +29,6 @@ from pyspark.sql.types import (
     DoubleType, LongType, StringType, StructField, StructType
 )
 
-from . import geom
 from .area_index import AreaIndex
 from .cells import grid_cell
 from .raster import (
@@ -49,52 +50,16 @@ def spatial_enrich(
     cell_col: str = "grid_cell",
 ) -> DataFrame:
     """Adds grid_cell, admin_key, raster_id, elev, s2_<L>, h3_<r> columns."""
-    spark = df.sparkSession
-    sc = spark.sparkContext
-
     lat, lon = F.col(lat_col), F.col(lon_col)
     df = df.withColumn(cell_col, grid_cell(lat, lon, area_index.tile_size))
 
-    # single-area cells: broadcast equi-join, no geometry work (area.rs:391)
-    single = area_index.single_cells
-    if single:
-        single_df = spark.createDataFrame(
-            list(single.items()), f"{cell_col} long, __single_key string"
-        )
-        df = df.join(F.broadcast(single_df), cell_col, "left")
-    else:
-        df = df.withColumn("__single_key", F.lit(None).cast("string"))
-
-    border_cells = area_index.border_cells
-    border_payload = {
-        c: [(area_index.id_to_key[aid], mp) for aid, mp in area_index.border[c]]
-        for c in border_cells
-    }
     grids = raster_index.grids() if raster_index is not None else {}
-    bc = sc.broadcast((border_payload, grids))
+    bc = df.sparkSession.sparkContext.broadcast((area_index.cell_lookup, grids))
 
-    # JVM-side masks: NULL border-cell for non-border rows, NULL raster for
-    # skip-flagged rows — Python loops only touch relevant rows.  Both masks
-    # get the same scale fallbacks as the canonical operators: planet-scale
-    # border sets (>1000 cells) would inline ~10^5 literals into the plan
-    # (spatial_join.py's broadcast-membership path), and deep route CASE
-    # chains blow codegen past ROUTE_JOIN_THRESHOLD tiles (raster.py's
-    # cell-join path).
-    drop_cols = ["__single_key", "__e"]
-    if border_cells:
-        if len(border_cells) <= 1000:
-            is_border = F.col(cell_col).isin([int(c) for c in border_cells])
-        else:
-            border_df = spark.createDataFrame(
-                [(int(c), True) for c in border_cells],
-                f"{cell_col} long, __is_border boolean",
-            )
-            df = df.join(F.broadcast(border_df), cell_col, "left")
-            is_border = F.coalesce(F.col("__is_border"), F.lit(False))
-            drop_cols.append("__is_border")
-        border_cell = F.when(is_border, F.col(cell_col))
-    else:
-        border_cell = F.lit(None).cast("long")
+    # JVM-side raster mask: NULL raster for skip-flagged rows, so the
+    # pixel loop only touches relevant rows.  Deep route CASE chains blow
+    # codegen past ROUTE_JOIN_THRESHOLD tiles, so larger tile sets route
+    # through raster.py's cell-join path, as the canonical operator does.
     if raster_index is not None:
         if len(raster_index.tiles) <= ROUTE_JOIN_THRESHOLD:
             df = df.withColumn("raster_id", route_col(raster_index, lat, lon))
@@ -114,7 +79,7 @@ def spatial_enrich(
         df = df.withColumn("raster_id", F.lit(None).cast("string"))
 
     fields = [
-        StructField("border_key", StringType()),
+        StructField("admin_key", StringType()),
         StructField("elev", DoubleType()),
         StructField(f"s2_{s2_level}", LongType()),
     ] + [StructField(f"h3_{max(h3_resolutions)}", LongType())]
@@ -125,31 +90,16 @@ def spatial_enrich(
     def enrich(
         it: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series]],
     ) -> Iterator[pd.DataFrame]:
-        borders, rgrids = bc.value
+        kernel, rgrids = bc.value
         for cell_s, rid_s, lon_s, lat_s in it:
             n = len(cell_s)
             lon_np = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
             lat_np = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
             out: dict[str, pd.Series] = {}
 
-            # --- border PIP refine (only rows with non-null masked cell)
-            bkey = pd.Series([None] * n, dtype=object)
-            cells_np = cell_s.to_numpy()
-            for cell in pd.unique(cell_s.dropna()):
-                cands = borders.get(int(cell))
-                if not cands:
-                    continue
-                m = cells_np == cell
-                lo, la = lon_np[m], lat_np[m]
-                hits: list[list[str]] = [[] for _ in range(int(m.sum()))]
-                for key, mp in cands:
-                    hit = geom.points_intersect_mp(lo, la, mp)
-                    for j in np.flatnonzero(hit):
-                        hits[j].append(key)
-                bkey.iloc[np.flatnonzero(m)] = [
-                    ",".join(h) if h else None for h in hits
-                ]
-            out["border_key"] = bkey
+            out["admin_key"] = pd.Series(kernel.lookup(
+                cell_s.to_numpy(dtype=np.float64, na_value=np.nan), lon_np, lat_np
+            ))
 
             # --- raster pixel gather (geotiff.rs:36-60 affine math)
             elev = np.full(n, np.nan)
@@ -192,11 +142,11 @@ def spatial_enrich(
     # fields lets column pruning clone the UDF once per field otherwise
     enrich_nd = enrich.asNondeterministic()
     df = df.withColumn(
-        "__e", enrich_nd(border_cell, F.col("raster_id"), lon, lat)
+        "__e", enrich_nd(F.col(cell_col), F.col("raster_id"), lon, lat)
     )
-    df = df.withColumn(
-        "admin_key", F.coalesce("__single_key", F.col("__e.border_key"))
-    ).withColumn("elev", F.round(F.col("__e.elev"), 2))
+    df = df.withColumn("admin_key", F.col("__e.admin_key")).withColumn(
+        "elev", F.round(F.col("__e.elev"), 2)
+    )
     if skip_col is not None:
         df = df.withColumn(
             "elev",
@@ -209,4 +159,4 @@ def spatial_enrich(
             df = df.withColumn(
                 f"h3_{r}", h3x_parent_col(F.col(f"h3_{finest_res}"), r)
             )
-    return df.drop(*drop_cols)
+    return df.drop("__e")

@@ -60,6 +60,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from .session import local_df
+
 # ------------------------------------------------------------ icosahedron
 
 _DEG = np.pi / 180.0
@@ -932,8 +934,8 @@ def knn_nearest_raster_h3x(
     ``knn_raster_id`` and ``knn_k`` (NULL when nothing within
     ``max_k``)."""
     answer = _cell_map_cached(raster_index, res, max_k, pad_deg)
-    spark = df.sparkSession
-    map_df = spark.createDataFrame(
+    map_df = local_df(
+        df.sparkSession,
         [(cell, k, rid) for cell, (k, _pix, _ord, rid) in sorted(answer.items())],
         "__knn_cell long, knn_k int, knn_raster_id string",
     )

@@ -34,6 +34,7 @@ half-written files are orphaned, never read.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import time
 import uuid
@@ -41,6 +42,8 @@ import uuid
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .session import local_df
 
 BUCKET_COL = "cell_bucket"
 RUN_COL = "run"
@@ -203,13 +206,31 @@ def _completed_bucket_list(
     )
 
 
+@contextlib.contextmanager
+def _observations_kept(spark: SparkSession):
+    """Keep ``df.observe`` counters of the written frame alive when its
+    shuffle stage comes out empty (a resume whose completed buckets cover
+    every row): AQE would replace that stage with an empty relation, the
+    final plan would lose the CollectMetrics nodes below it, and every
+    Observation on the frame would fail.  Scoped to the write action."""
+    key = "spark.sql.adaptive.optimizer.excludedRules"
+    prev = spark.conf.get(key, None)
+    rule = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+    spark.conf.set(key, f"{prev},{rule}" if prev else rule)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def completed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame | None:
     rows = _completed_bucket_list(spark, lineage_path)
     if rows is None:
         return None
-    return spark.createDataFrame(
-        [(int(b),) for b in rows], f"{BUCKET_COL} int"
-    )
+    return local_df(spark, [(int(b),) for b in rows], f"{BUCKET_COL} int")
 
 
 def write_with_lineage(
@@ -247,9 +268,7 @@ def write_with_lineage(
     skipped = 0
     if done_list is not None:
         skipped = len(done_list)
-        done = spark.createDataFrame(
-            [(int(b),) for b in done_list], f"{BUCKET_COL} int"
-        )
+        done = local_df(spark, [(int(b),) for b in done_list], f"{BUCKET_COL} int")
         bucketed = bucketed.join(F.broadcast(done), BUCKET_COL, "left_anti")
 
     # idempotency: every run writes only under its own run=<id> subdirs, so
@@ -268,11 +287,12 @@ def write_with_lineage(
     # this exchange — column-only keeps it REPARTITION_BY_COL so AQE can
     # rebalance straggler buckets; each bucket still hashes to exactly one
     # reducer, preserving one file per (bucket, run).
-    bucketed.repartition(F.col(BUCKET_COL)).withColumn(
-        RUN_COL, F.lit(run_id)
-    ).write.option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy(BUCKET_COL, RUN_COL).mode("overwrite").parquet(out_dir)
+    with _observations_kept(spark):
+        bucketed.repartition(F.col(BUCKET_COL)).withColumn(
+            RUN_COL, F.lit(run_id)
+        ).write.option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(BUCKET_COL, RUN_COL).mode("overwrite").parquet(out_dir)
 
     # lineage facts come from a READ-BACK of the committed bucket files, not
     # from re-evaluating the input DAG (which would run the whole upstream

@@ -7,9 +7,9 @@ The reference reads coordinates straight off Node structs
 codegen, strictly faster than any Python/Arrow UDF, and the scan only
 reads the columns actually referenced (column pruning).
 
-Source priority: url path > text body > html meta — first hit wins
-(``coalesce``).  The ``text`` column itself is NEVER rewritten (the
-byte-identical-text invariant from BASELINE.json): extraction only reads.
+Source priority: url path > text body > html meta — first hit wins.
+The ``text`` column itself is NEVER rewritten (the byte-identical-text
+invariant from BASELINE.json): extraction only reads.
 """
 
 from __future__ import annotations
@@ -19,10 +19,10 @@ from pyspark.sql import functions as F
 
 # https://host/geo/<lat>,<lon>/slug — synth embeds %.7f, accept any decimal.
 # ONE capturing group per pattern holding the whole "lat<sep>lon" pair: the
-# regex engine runs ONCE per (row, source); lat/lon split off the captured
-# pair with substring_index (plain byte scans).  The two-group form ran the
-# same regex twice per source — group-1 for lat, group-2 for lon — i.e. up
-# to six regex executions per row (guide §1.2 step 2: per-task work).
+# regex engine runs at most ONCE per (row, source); lat/lon split off the
+# captured pair with substring_index (plain byte scans).  The two-group
+# form ran the same regex twice per source — group-1 for lat, group-2 for
+# lon — i.e. up to six regex executions per row.
 URL_GEO_RE = r"/geo/(-?\d+(?:\.\d+)?,-?\d+(?:\.\d+)?)"
 # "coords: <lat>, <lon>" in body text
 TEXT_GEO_RE = r"coords:\s*(-?\d+(?:\.\d+)?,\s*-?\d+(?:\.\d+)?)"
@@ -30,42 +30,37 @@ TEXT_GEO_RE = r"coords:\s*(-?\d+(?:\.\d+)?,\s*-?\d+(?:\.\d+)?)"
 HTML_GEO_RE = r'geo\.position"\s+content="(-?\d+(?:\.\d+)?;-?\d+(?:\.\d+)?)"'
 
 
-def _extract_pair(
-    col: Column, pattern: str, guard: str, sep: str
-) -> tuple[Column, Column]:
-    """Regex gated behind a cheap substring test (``contains`` is ~10x
-    cheaper than the regex engine, and most rows miss most sources); the
-    single captured "lat<sep>lon" pair splits on ``sep``.  cast(double)
-    trims surrounding whitespace, so the optional post-comma spaces the
-    old group-2 pattern absorbed parse identically."""
-    pair = F.when(col.contains(guard), F.regexp_extract(col, pattern, 1))
-    pair = F.when(pair != "", pair)
-    return (
-        F.substring_index(pair, sep, 1).cast("double"),
-        F.substring_index(pair, sep, -1).cast("double"),
-    )
-
-
-def lat_lon_from_url(url: Column) -> tuple[Column, Column]:
-    return _extract_pair(url, URL_GEO_RE, "/geo/", ",")
-
-
-def lat_lon_from_text(text: Column) -> tuple[Column, Column]:
-    return _extract_pair(text, TEXT_GEO_RE, "coords:", ",")
-
-
-def lat_lon_from_html(html: Column) -> tuple[Column, Column]:
-    return _extract_pair(F.decode(html, "UTF-8"), HTML_GEO_RE, "geo.position", ";")
+def _extract_pair(col: Column, pattern: str, guard: str) -> Column:
+    """The captured "lat<sep>lon" pair, "" when the regex misses, NULL
+    when the source lacks ``guard``: the regex sits behind a cheap
+    substring test (``contains`` is ~10x cheaper than the regex engine,
+    and most rows miss most sources)."""
+    return F.when(col.contains(guard), F.regexp_extract(col, pattern, 1))
 
 
 def with_coordinates(df: DataFrame) -> DataFrame:
-    """Add ``lat``/``lon`` doubles, NULL when no source has coordinates."""
-    u_lat, u_lon = lat_lon_from_url(F.col("url"))
-    t_lat, t_lon = lat_lon_from_text(F.col("text"))
-    h_lat, h_lon = lat_lon_from_html(F.col("html"))
+    """Add ``lat``/``lon`` doubles, NULL when no source has coordinates.
+
+    Each source's regex runs at most once per row, and only while no
+    higher-priority source has produced a pair.  The pair so far is a
+    column that the next step references twice (test, then value), so
+    CollapseProject keeps one projection per source instead of inlining
+    the regex into every branch that reads it.  cast(double) trims
+    surrounding whitespace, so the optional post-comma spaces of the text
+    form parse as before."""
+    html = F.decode(F.col("html"), "UTF-8")
+    pair = F.col("__geo_pair")
+    df = df.withColumn("__geo_pair", _extract_pair(F.col("url"), URL_GEO_RE, "/geo/"))
+    for extract in (
+        _extract_pair(F.col("text"), TEXT_GEO_RE, "coords:"),
+        # normalise the html "lat;lon" to the shared "," separator
+        F.translate(_extract_pair(html, HTML_GEO_RE, "geo.position"), ";", ","),
+    ):
+        df = df.withColumn("__geo_pair", F.when(pair != "", pair).otherwise(extract))
+    found = pair != ""
     return df.withColumns(
         {
-            "lat": F.coalesce(u_lat, t_lat, h_lat),
-            "lon": F.coalesce(u_lon, t_lon, h_lon),
+            "lat": F.when(found, F.substring_index(pair, ",", 1).cast("double")),
+            "lon": F.when(found, F.substring_index(pair, ",", -1).cast("double")),
         }
-    )
+    ).drop("__geo_pair")

@@ -38,6 +38,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
+from .session import local_df
+
 
 class RasterIndex:
     """Driver-side routing metadata + pixel grids (GeoTiffManager analog)."""
@@ -291,8 +293,8 @@ def route_via_cell_join(
             for col in range(c00 % ntl, c11 % ntl + 1):
                 by_cell.setdefault(row * ntl + col, []).append(cand)
 
-    spark = df.sparkSession
-    cell_df = spark.createDataFrame(
+    cell_df = local_df(
+        df.sparkSession,
         list(by_cell.items()) or [(None, [])],
         "__route_cell long, __cands array<struct<"
         "min_lon:double,max_lon:double,min_lat:double,max_lat:double,"

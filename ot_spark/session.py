@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -81,3 +82,19 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A driver-side lookup table as a ``LocalRelation``.
+
+    ``createDataFrame(rows)`` from Python tuples plans a Python RDD
+    (``Scan ExistingRDD``): every execution of a plan that broadcasts it
+    starts a Python job to rebuild the table.  Built from an Arrow table,
+    the rows live in the plan itself and the broadcast needs no Python."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    arrow_schema = to_arrow_schema(_parse_datatype_string(schema))
+    cols = list(zip(*rows)) or [[]] * len(arrow_schema)
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)]
+    return spark.createDataFrame(pa.table(arrays, schema=arrow_schema))

@@ -8,19 +8,19 @@ Probe semantics = /root/reference/src/area.rs:366-401:
 - MULTIPLE cell -> exact point∩clipped-geometry test per candidate, hits
   comma-joined in area-insertion order (area.rs:377-389, 396-399).
 
-Spark shape (SURVEY.md §4): this is a broadcast filter-and-refine join —
-the single-cell map and the border-cell geometries are both *small* (a few
-MB for planet-scale admin boundaries after clipping) and ride to executors
-as broadcast variables; the fact table is never shuffled.  The exact
-geometry test runs only on rows landing in border cells (the reference
-counts these via country_intersect_checks_count — we expose the same
-stats), inside an Arrow-batched pandas UDF that groups each batch by cell
-and tests all points of a cell against its candidate list vectorized.
+Spark shape (SURVEY.md §4): the grid cell is JVM Column arithmetic; the
+probe itself is one Arrow-batched pandas UDF running the vectorised
+:class:`~ot_spark.area_index.CellLookup` kernel — a binary search over the
+sorted indexed cells and the exact geometry test only for rows landing
+in border cells (the reference counts these via
+country_intersect_checks_count — we expose the same stats).  The kernel's
+tables (a few MB for planet-scale admin boundaries after clipping) ride to
+executors as one broadcast variable; the fact table is never shuffled and
+the plan holds no join or exchange for the lookup.
 
-At 1000-executor scale: broadcast ~MBs, zero shuffle, the UDF touches only
-the border fraction (empirically a few % of rows). Skewed mega-cells are a
-non-issue here because there is no shuffle; skew handling matters for the
-downstream per-cell aggregations (see lineage/bench) where AQE +
+At 1000-executor scale: broadcast ~MBs, zero shuffle.  Skewed mega-cells
+are a non-issue here because there is no shuffle; skew handling matters
+for the downstream per-cell aggregations (see lineage/bench) where AQE +
 salting apply.
 """
 
@@ -30,13 +30,13 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from . import geom
 from .area_index import AreaIndex
 from .cells import grid_cell
+from .session import local_df
 
 
 def enrich_with_admin(
@@ -52,86 +52,24 @@ def enrich_with_admin(
     NULL admin_key == the reference's "no country tag appended"
     (area.rs:392-395: empty result_vec -> not-found counter, no tag).
     """
-    spark = df.sparkSession
-    sc = spark.sparkContext
-
     df = df.withColumn(cell_col, grid_cell(F.col(lat_col), F.col(lon_col), index.tile_size))
+    bc = df.sparkSession.sparkContext.broadcast(index.cell_lookup)
 
-    # --- single-area cells: broadcast equi-join, no geometry work
-    single = index.single_cells
-    if single:
-        single_df = spark.createDataFrame(
-            list(single.items()), f"{cell_col} long, __single_key string"
-        )
-        df = df.join(F.broadcast(single_df), cell_col, "left")
-    else:
-        df = df.withColumn("__single_key", F.lit(None).cast("string"))
-
-    # --- border cells: Arrow-batched refine over broadcast clipped geometries
-    border_cells = index.border_cells
-    if border_cells:
-        # geometries as plain numpy (pickle-friendly), insertion order kept
-        border_payload = {
-            c: [(key_of(index, aid), mp) for aid, mp in index.border[c]]
-            for c in border_cells
-        }
-        bc = sc.broadcast(border_payload)
-
-        @F.pandas_udf(StringType())
-        def refine(
-            it: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
-        ) -> Iterator[pd.Series]:
-            payload = bc.value
-            for cell_s, lon_s, lat_s in it:
-                out = pd.Series([None] * len(cell_s), dtype=object)
-                cells_np = cell_s.to_numpy()
-                lon_np = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-                lat_np = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-                for cell in pd.unique(cell_s.dropna()):
-                    cands = payload.get(int(cell))
-                    if not cands:
-                        continue
-                    mask = cells_np == cell
-                    lo, la = lon_np[mask], lat_np[mask]
-                    hit_keys: list[list[str]] = [[] for _ in range(int(mask.sum()))]
-                    for key, mp in cands:
-                        hits = geom.points_intersect_mp(lo, la, mp)
-                        for j in np.flatnonzero(hits):
-                            hit_keys[j].append(key)
-                    joined = [",".join(h) if h else None for h in hit_keys]
-                    out.iloc[np.flatnonzero(mask)] = joined
-                yield out
-
-        # pass NULL cell for non-border rows so the UDF's per-cell loop
-        # skips them entirely (when() does not short-circuit UDF evaluation)
-        if len(border_cells) <= 1000:
-            is_border = F.col(cell_col).isin([int(c) for c in border_cells])
-        else:
-            # planet-scale border sets would put ~10^5 literals in the plan;
-            # a broadcast semi-membership join keeps the plan constant-size
-            border_df = spark.createDataFrame(
-                [(int(c), True) for c in border_cells],
-                f"{cell_col} long, __is_border boolean",
-            )
-            df = df.join(F.broadcast(border_df), cell_col, "left")
-            is_border = F.coalesce(F.col("__is_border"), F.lit(False))
-        masked_cell = F.when(is_border, F.col(cell_col))
-        df = df.withColumn(
-            "__border_key",
-            refine(masked_cell, F.col(lon_col), F.col(lat_col)),
-        )
-        if len(border_cells) > 1000:
-            df = df.drop("__is_border")
-    else:
-        df = df.withColumn("__border_key", F.lit(None).cast("string"))
+    @F.pandas_udf(StringType())
+    def lookup(
+        it: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
+    ) -> Iterator[pd.Series]:
+        kernel = bc.value
+        for cell_s, lon_s, lat_s in it:
+            yield pd.Series(kernel.lookup(
+                cell_s.to_numpy(dtype=np.float64, na_value=np.nan),
+                lon_s.to_numpy(dtype=np.float64, na_value=np.nan),
+                lat_s.to_numpy(dtype=np.float64, na_value=np.nan),
+            ))
 
     return df.withColumn(
-        out_col, F.coalesce("__single_key", "__border_key")
-    ).drop("__single_key", "__border_key")
-
-
-def key_of(index: AreaIndex, area_id: int) -> str:
-    return index.id_to_key[area_id]
+        out_col, lookup(F.col(cell_col), F.col(lon_col), F.col(lat_col))
+    )
 
 
 def admin_stats(df: DataFrame, index: AreaIndex, out_col: str = "admin_key", cell_col: str = "grid_cell") -> dict:
@@ -156,18 +94,15 @@ def admin_stats_df(
     not_found counts only probed rows: the reference early-returns on pole
     latitudes before touching any counter (area.rs:368-370), and our
     grid_cell is NULL exactly there (and for NULL coords)."""
-    border_cells = [int(c) for c in index.border_cells]
-    if len(border_cells) <= 1000:
-        in_border = F.col(cell_col).isin(border_cells)
-    else:
-        # same plan-size guard as the join path above: ~10^5 literal cells
-        # at planet scale -> broadcast membership join instead
-        border_df = df.sparkSession.createDataFrame(
-            [(c, True) for c in border_cells],
-            f"{cell_col} long, __is_border boolean",
-        )
-        df = df.join(F.broadcast(border_df), cell_col, "left")
-        in_border = F.coalesce(F.col("__is_border"), F.lit(False))
+    # a broadcast membership join keeps the plan constant-size (planet-
+    # scale border sets would inline ~10^5 literals into an isin)
+    border_df = local_df(
+        df.sparkSession,
+        [(int(c), True) for c in index.border_cells],
+        f"{cell_col} long, __is_border boolean",
+    )
+    df = df.join(F.broadcast(border_df), cell_col, "left")
+    in_border = F.coalesce(F.col("__is_border"), F.lit(False))
     return df.agg(
         F.count(F.when(F.col(out_col).isNotNull(), 1)).alias("found"),
         F.count(

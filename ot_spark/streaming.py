@@ -8,10 +8,10 @@ actually uses:
 
 - ``stream_pages``: file-source readStream over a pages directory (new
   parquet files = new micro-batch; exactly-once with checkpointing);
-- ``enrich_stream``: the SAME Column-algebra operators (attribute filter,
-  tag projection, grid cell, broadcast single-cell admin join) applied to
-  a streaming frame — they are stateless projections/filters/broadcast
-  joins, legal in streams as-is;
+- ``enrich_stream``: the SAME operators (attribute filter, tag
+  projection, grid cell, admin lookup UDF) applied to a streaming frame —
+  they are stateless projections/filters/Arrow maps, legal in streams
+  as-is;
 - ``windowed_cell_counts``: event-time tumbling-window counts per grid
   cell with a watermark for late data;
 - ``sessionize_stream``: custom stateful operator via
@@ -37,7 +37,7 @@ from pyspark.sql.types import (
     TimestampNTZType, TimestampType,
 )
 
-from . import filters
+from . import filters, spatial_join
 from .area_index import AreaIndex
 from .cells import grid_cell
 
@@ -60,22 +60,15 @@ def enrich_stream(
     tile_size: float = 1.0,
 ) -> DataFrame:
     """Stateless slice of the batch pipeline, unchanged on a stream:
-    complex filter -> tag projection -> grid cell -> broadcast single-cell
-    admin join (border-cell refine needs the pandas UDF — equally legal in
-    streaming, omitted here to keep the demo JVM-only)."""
+    complex filter -> tag projection -> grid cell -> admin lookup (the
+    batch CellLookup pandas UDF, legal in streaming as-is)."""
     out = stream
     if "attrs" in out.columns:
         out = filters.complex_filter(out)
         out = filters.remove_tags(out)
-    out = out.withColumn("grid_cell", grid_cell(F.col("lat"), F.col("lon"), tile_size))
-    if area_index is not None and area_index.single_cells:
-        spark = out.sparkSession
-        single_df = spark.createDataFrame(
-            list(area_index.single_cells.items()),
-            "grid_cell long, admin_key string",
-        )
-        out = out.join(F.broadcast(single_df), "grid_cell", "left")
-    return out
+    if area_index is not None:
+        return spatial_join.enrich_with_admin(out, area_index)
+    return out.withColumn("grid_cell", grid_cell(F.col("lat"), F.col("lon"), tile_size))
 
 
 def enrich_stream_fused(

@@ -120,3 +120,36 @@ def test_full_pipeline_golden_counts(spark, fixture_dir, tmp_path):
     assert out.where(F.col("elev").isNotNull()).count() > 0
     # skip-ele: flagged rows never carry elevation
     assert out.where(F.col("no_elevation") & F.col("elev").isNotNull()).count() == 0
+
+
+def test_pipeline_rerun_over_completed_output(spark, fixture_dir, tmp_path):
+    """submit.py's resume: the same PipelineConfig re-run over a completed
+    output writes no bucket, and its stage counters still come back even
+    though the bucket anti-join empties the write's input."""
+    idx = area_index.build_area_index(
+        [(r["key"], r["name"], r["wkt"]) for r in gen_admin_polygons().to_pylist()]
+    )
+    ridx = raster.RasterIndex.from_df(
+        spark.read.parquet(f"{fixture_dir}/raster_tiles.parquet")
+    )
+
+    def run(run_id):
+        return Pipeline(PipelineConfig(
+            pages_path=f"{fixture_dir}/pages.parquet",
+            links_path=f"{fixture_dir}/links.parquet",
+            out_dir=str(tmp_path / "out"),
+            admin_index=idx,
+            raster_index=ridx,
+            run_id=run_id,
+            n_buckets=16,
+        )).run(spark)
+
+    first = run("first")
+    again = run("again")
+    assert first["buckets_written"] > 0
+    assert again["buckets_written"] == 0
+    assert again["buckets_skipped"] == first["buckets_written"]
+    assert again["metrics"] == first["metrics"]
+    assert again["metrics"]["output"]["rows"] == first["metrics"]["accepted"]["rows"] > 0
+    rows = spark.read.parquet(str(tmp_path / "out")).count()
+    assert rows == first["metrics"]["output"]["rows"]

@@ -85,3 +85,32 @@ def test_synth_determinism(tmp_path):
     assert t1.equals(t2)
     t3 = synth.gen_pages(256, seed=8)
     assert not t1.equals(t3)
+
+
+def test_extraction_falls_through_regex_misses(spark):
+    # a source whose guard matches but whose regex misses yields to the
+    # next source, exactly like a source without the guard
+    df = spark.createDataFrame(
+        [
+            ("https://h/geo/x/p", "coords: 3.0, 4.0", b""),
+            ("u", "coords: a", b'<meta name="geo.position" content="5.0;6.0">'),
+            ("u", "t", b"geo.position nope"),
+            (None, None, None),
+        ],
+        "url string, text string, html binary",
+    )
+    got = [(r.lat, r.lon) for r in parse.with_coordinates(df).collect()]
+    assert got == [(3.0, 4.0), (5.0, 6.0), (None, None), (None, None)]
+
+
+def test_coordinate_regex_single_evaluation(spark):
+    """Each source's regex appears once in the optimized plan.  Reading
+    a regex pair twice (lat and lon, or test and value) lets Catalyst
+    copy it into every reader; PushFoldableIntoBranches then splits the
+    copies so codegen cannot share them (4 per source before)."""
+    from ot_spark.benchdata import pages_range_df
+
+    out = parse.with_coordinates(pages_range_df(spark, 100, partitions=1))
+    plan = out.select("doc_id", "lat", "lon")._jdf.queryExecution().optimizedPlan().toString()
+    n = plan.count("regexp_extract")
+    assert n == 3, f"coordinate regex evaluated {n} times in optimized plan:\n{plan}"

@@ -180,8 +180,8 @@ def _many_tiles(n: int) -> raster.RasterIndex:
 
 
 def test_fused_scale_paths_match_composed(spark):
-    # >1000 border cells -> broadcast membership join (no isin literals);
-    # >ROUTE_JOIN_THRESHOLD tiles -> cell-join routing (no CASE chain).
+    # >1000 border cells (the CellLookup kernel holds them outside the
+    # plan); >ROUTE_JOIN_THRESHOLD tiles -> cell-join routing (no CASE chain).
     # route_col's literal chain at 500 tiles would StackOverflow the JVM at
     # plan build — this test passing AT ALL proves the fallback engaged.
     idx = _many_border_index(1500)

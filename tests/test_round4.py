@@ -156,6 +156,11 @@ def test_flagship_plan_stays_fused(spark):
     assert python_nodes == 1, (
         f"expected exactly 1 Arrow node, got {python_nodes}:\n{plan}"
     )
+    # the admin lookup runs inside that node: no broadcast join, and no
+    # driver-side table planned as a Python RDD that every execution of
+    # the plan would rebuild with a Python job
+    assert "Scan ExistingRDD" not in plan, f"Python-RDD table in plan:\n{plan}"
+    assert "BroadcastExchange" not in plan, f"broadcast join in plan:\n{plan}"
 
 
 # -------------------------- tokenizer evaluates ONCE per row (round-4 perf)

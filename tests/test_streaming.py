@@ -52,6 +52,35 @@ def test_stream_enrich_and_window_equals_batch(spark, pages_stream_dir, tmp_path
     assert len(got) >= len(want) * 0.9
 
 
+def test_stream_admin_lookup_equals_batch(spark, tmp_path):
+    """enrich_stream's admin lookup on a file stream equals the batch
+    enricher on the same rows, border cells included."""
+    from ot_spark import area_index, spatial_join
+    from ot_spark.synth import gen_admin_polygons
+
+    idx = area_index.build_area_index(
+        [(r["key"], r["name"], r["wkt"]) for r in gen_admin_polygons().to_pylist()]
+    )
+    src = str(tmp_path / "pts_in")
+    df = spark.range(0, 28 * 40).select(  # a 0.25-degree lattice
+        F.col("id").alias("doc_id"),
+        (F.floor(F.col("id") / 40) * 0.25 - 1.0).alias("lat"),
+        (F.col("id") % 40 * 0.25 - 1.0).alias("lon"),
+    )
+    df.coalesce(2).write.parquet(src)
+    st = streaming.stream_pages(spark, src, spark.read.parquet(src).schema)
+    streaming.run_to_memory(
+        streaming.enrich_stream(st, idx), "admin_stream", str(tmp_path / "cka")
+    )
+    got = {r.doc_id: r.admin_key for r in spark.table("admin_stream").collect()}
+    want = {
+        r.doc_id: r.admin_key
+        for r in spatial_join.enrich_with_admin(df, idx).collect()
+    }
+    assert got == want
+    assert any(k and "," in k for k in want.values())  # a border hit
+
+
 def test_stateful_sessionize_across_microbatches(spark, tmp_path):
     src = str(tmp_path / "events_in")
     ck = str(tmp_path / "ck2")
