@@ -13,10 +13,13 @@ deliberately NOT Structured Streaming):
   (bucket, run) pairs return byte-identical content forever (Iceberg's
   data-file pinning, expressed as partition dirs);
 - a write first anti-joins buckets already present in the lineage table
-  (broadcast — lineage is tiny), writes only the remainder under its own
-  ``run=<run_id>`` subdirs, then appends one lineage row per completed
-  bucket: ``(run_id, bucket, cell_min, cell_max, row_count, checksum,
-  files, ts)`` — ``files`` lists the data files, manifest-style;
+  (broadcast — lineage is tiny), deletes its own run's unrecorded
+  ``run=<run_id>`` dirs (a same-run_id retry's crash leftovers), appends
+  the remainder under its own ``run=<run_id>`` subdirs, then appends one
+  lineage row per completed bucket: ``(run_id, bucket, cell_min, cell_max,
+  row_count, checksum, files, ts)`` — ``files`` lists the data files,
+  manifest-style.  The lineage rows are collected to the driver and
+  appended like every other metadata log (``_write_tiny``);
 - checksum is ``bit_xor(xxhash64(key cols))`` — order-insensitive,
   overflow-free (ANSI-safe), cheap in codegen;
 - resume = call the same function again: completed buckets are skipped
@@ -30,11 +33,16 @@ Crash-safety argument: the lineage row for a bucket is appended only after
 the bucket's files are committed; a crash in between leaves the bucket
 absent from lineage -> next run rewrites it under a fresh run dir and the
 half-written files are orphaned, never read.
+
+One writer per table: the pre-write delete of this run's dirs and the
+snapshot numbering (``_append_snapshot``, read-modify-write) take no lock.
 """
 
 from __future__ import annotations
 
 import contextlib
+import functools
+import operator
 import os
 import time
 import uuid
@@ -42,8 +50,9 @@ import uuid
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from .session import local_df
+from .session import arrow_table, local_df
 
 BUCKET_COL = "cell_bucket"
 RUN_COL = "run"
@@ -57,16 +66,22 @@ def with_bucket(df: DataFrame, cell_col: str = "grid_cell", n_buckets: int = 64)
     )
 
 
-def _lineage_exists(spark: SparkSession, lineage_path: str) -> bool:
-    # local-fs check is fine in this sandbox; on a cluster this would be a
-    # catalog/Iceberg-metadata lookup
-    return os.path.exists(lineage_path)
+def _hadoop_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path``: local and remote URIs go
+    through the one FileSystem API Spark itself writes with."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    fs, p = _hadoop_path(spark, path)
+    return fs.exists(p)
 
 
 PROPS_SUBDIR = "_properties"  # leading underscore: Spark readers skip it
 
 
-def _tiny_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+def _tiny_df(spark: SparkSession, rows: list, schema: str | StructType) -> DataFrame:
     """Single-partition DataFrame for metadata-log writes.
 
     ``createDataFrame(local_rows)`` slices the rows into defaultParallelism
@@ -84,25 +99,9 @@ def _local_fs_path(path: str) -> str | None:
     return None if "://" in p else p
 
 
-_ARROW_TYPES: dict[str, object] = {}
-
-
-def _arrow_schema(ddl: str):
-    import pyarrow as pa
-
-    types = {
-        "long": pa.int64(), "bigint": pa.int64(),
-        "int": pa.int32(), "string": pa.string(),
-    }
-    fields = []
-    for part in ddl.split(","):
-        name, typ = part.strip().split()
-        fields.append(pa.field(name, types[typ]))
-    return pa.schema(fields)
-
-
 def _write_tiny(
-    spark: SparkSession, rows: list, ddl: str, path: str, mode: str = "append"
+    spark: SparkSession, rows: list, schema: str | StructType, path: str,
+    mode: str = "append",
 ) -> None:
     """Append/overwrite a tiny metadata log.
 
@@ -112,30 +111,23 @@ def _write_tiny(
     scheduling latency to move a handful of rows (measured ~0.15 s per
     write at local[32]; a snapshot commit does three of them).  Local
     paths write one parquet file via pyarrow with an EXPLICIT arrow
-    schema derived from the same DDL the Spark fallback uses, so footer
+    schema derived from the same schema the Spark fallback uses, so footer
     types are identical whichever path wrote a given file; non-local
     URIs (s3://, hdfs://) fall back to the one-task Spark write."""
     local = _local_fs_path(path)
     if local is None:
-        df = _tiny_df(spark, rows, ddl)
-        df.write.mode(mode).parquet(path)
+        _tiny_df(spark, rows, schema).write.mode(mode).parquet(path)
         return
     import shutil
-    import uuid as _uuid
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    schema = _arrow_schema(ddl)
-    cols = {
-        f.name: [r[i] for r in rows] for i, f in enumerate(schema)
-    }
-    table = pa.table(cols, schema=schema)
     if mode == "overwrite" and os.path.exists(local):
         shutil.rmtree(local)
     os.makedirs(local, exist_ok=True)
     pq.write_table(
-        table, os.path.join(local, f"part-{_uuid.uuid4().hex}.parquet")
+        arrow_table(rows, schema),
+        os.path.join(local, f"part-{uuid.uuid4().hex}.parquet"),
     )
 
 
@@ -152,11 +144,11 @@ def write_table_properties(spark: SparkSession, out_dir: str, props: dict) -> No
 
 
 def read_table_properties(spark: SparkSession, in_dir: str) -> dict:
-    try:
-        rows = spark.read.parquet(f"{in_dir}/{PROPS_SUBDIR}").collect()
-    except Exception:  # noqa: BLE001 — absent sidecar == no properties
+    """Properties of ``in_dir``; ``{}`` when it has no sidecar."""
+    path = f"{in_dir}/{PROPS_SUBDIR}"
+    if not _exists(spark, path):
         return {}
-    return {r["key"]: r["value"] for r in rows}
+    return {r["key"]: r["value"] for r in spark.read.parquet(path).collect()}
 
 
 def propagate_table_properties(
@@ -178,7 +170,7 @@ def _completed_bucket_list(
     """Distinct completed buckets, read DRIVER-SIDE on local paths (the
     lineage table is bounded by bucket count x runs — metadata scale);
     falls back to a Spark distinct+collect on remote URIs."""
-    if not _lineage_exists(spark, lineage_path):
+    if not _exists(spark, lineage_path):
         return None
     local = _local_fs_path(lineage_path)
     if local is not None:
@@ -226,13 +218,6 @@ def _observations_kept(spark: SparkSession):
             spark.conf.set(key, prev)
 
 
-def completed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame | None:
-    rows = _completed_bucket_list(spark, lineage_path)
-    if rows is None:
-        return None
-    return local_df(spark, [(int(b),) for b in rows], f"{BUCKET_COL} int")
-
-
 def write_with_lineage(
     df: DataFrame,
     out_dir: str,
@@ -258,9 +243,13 @@ def write_with_lineage(
     global (count, checksum) from the INPUT frame too (one extra pass over
     the upstream DAG — the cost the read-back exists to avoid; use at
     validation scale, not per-commit at 100 TB) and raises if the disk
-    disagrees."""
+    disagrees.
+
+    Assumes one writer per table at a time (see the module docstring)."""
     spark = df.sparkSession
-    run_id = run_id or uuid.uuid4().hex[:12]
+    # a leading letter keeps partition discovery from typing run=<id> as a
+    # number (an all-digit id, or one like 12345e67890)
+    run_id = run_id or f"r{uuid.uuid4().hex[:12]}"
     bucketed = with_bucket(df, cell_col, n_buckets)
 
     done_list = _completed_bucket_list(spark, lineage_path)
@@ -274,9 +263,15 @@ def write_with_lineage(
     # idempotency: every run writes only under its own run=<id> subdirs, so
     # committed (bucket, run) dirs are never touched; a half-written bucket
     # from a crashed run is re-written under the NEW run id and the crashed
-    # files become unreferenced orphans (see remove_orphans).  Dynamic
-    # overwrite keeps a same-run_id retry from duplicating its own files.
-    #
+    # files become unreferenced orphans (see remove_orphans).  A retry under
+    # the crashed run's OWN id first deletes that run's dirs for buckets
+    # lineage does not record, so the append below cannot duplicate rows.
+    fs, run_dirs = _hadoop_path(spark, f"{out_dir}/{BUCKET_COL}=*/{RUN_COL}={run_id}")
+    for st in fs.globStatus(run_dirs) or []:
+        bucket = int(st.getPath().getParent().getName().partition("=")[2])
+        if bucket not in (done_list or ()):
+            fs.delete(st.getPath(), True)
+
     # hash-distribute on bucket before the partitioned write (Iceberg's
     # write.distribution-mode=hash): without it every upstream task emits
     # a file into every bucket dir — tasks x buckets small files, the
@@ -287,12 +282,9 @@ def write_with_lineage(
     # this exchange — column-only keeps it REPARTITION_BY_COL so AQE can
     # rebalance straggler buckets; each bucket still hashes to exactly one
     # reducer, preserving one file per (bucket, run).
+    frame = bucketed.repartition(F.col(BUCKET_COL)).withColumn(RUN_COL, F.lit(run_id))
     with _observations_kept(spark):
-        bucketed.repartition(F.col(BUCKET_COL)).withColumn(
-            RUN_COL, F.lit(run_id)
-        ).write.option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(BUCKET_COL, RUN_COL).mode("overwrite").parquet(out_dir)
+        frame.write.partitionBy(BUCKET_COL, RUN_COL).mode("append").parquet(out_dir)
 
     # lineage facts come from a READ-BACK of the committed bucket files, not
     # from re-evaluating the input DAG (which would run the whole upstream
@@ -304,22 +296,25 @@ def write_with_lineage(
         # _metadata is a hidden column: select it at the scan (it does not
         # survive joins) so the lineage row can list its data files.
         # Path-glob to THIS run's dirs (basePath recovers the partition
-        # cols): lists only the run's directories, and — essential once
-        # schema evolution exists — takes the footer schema from this
-        # run's files, not from an arbitrary older file whose columns may
-        # predate a rename/add.
+        # cols) and read them with the schema just written: no footer
+        # inference job, no stale schema from files that predate a
+        # rename/add, and run stays a string whatever the id looks like.
+        cols = frame.schema
         landed = (
-            spark.read.option("basePath", out_dir)
+            spark.read.schema(StructType(
+                [f for f in cols if f.name not in (BUCKET_COL, RUN_COL)]
+                + [cols[BUCKET_COL], cols[RUN_COL]]
+            ))
+            .option("basePath", out_dir)
             .parquet(f"{out_dir}/{BUCKET_COL}=*/{RUN_COL}={run_id}")
             .select("*", F.col("_metadata.file_path").alias("__file"))
-            .where(F.col(RUN_COL) == run_id)
         )
     except AnalysisException:  # empty input wrote no files at all (the
         # glob matches nothing -> PATH_NOT_FOUND); any other read failure
         # propagates (round-3 advice: a swallowed transient error silently
         # recorded "nothing written")
         landed = None
-    written = 0
+    rows = []
     if landed is not None:
         if done is not None:
             landed = landed.join(F.broadcast(done), BUCKET_COL, "left_anti")
@@ -334,43 +329,31 @@ def write_with_lineage(
             )
             .withColumn("run_id", F.lit(run_id))
             .withColumn("ts", F.lit(int(time.time() * 1000)))
-        ).persist()
-        written = lineage.count()
-        if written:
-            # coalesce(1) over the PERSISTED per-bucket aggregate (row
-            # count bounded by n_buckets): the aggregate exchange above
-            # it keeps the heavy work parallel, and one file per commit
-            # keeps the lineage log's file count = commit count (the
-            # _tiny_df rationale; this frame is computed, not local, so
-            # the parallelize(…, 1) path doesn't apply)
-            lineage.coalesce(1).write.mode("append").parquet(lineage_path)
-        if audit_input:
-            want = bucketed.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.bit_xor(F.xxhash64(*key_cols)).alias("h"),
-            ).first()
-            got = lineage.agg(
-                F.sum("row_count").alias("n"),
-                F.bit_xor("checksum").alias("h"),
-            ).first()
-            if (want["n"], want["h"]) != (got["n"] or 0, got["h"]):
-                raise RuntimeError(
-                    f"write-time divergence: input (rows={want['n']}, "
-                    f"checksum={want['h']}) vs committed files "
-                    f"(rows={got['n']}, checksum={got['h']})"
-                )
-        lineage.unpersist()
-    elif audit_input:
-        want = bucketed.agg(F.count(F.lit(1)).alias("n")).first()
-        if want["n"]:
+        )
+        # one row per bucket written: appended driver-side like the other
+        # metadata logs, typed (nullability included) by the aggregate so
+        # the file matches the lineage files Spark wrote before
+        rows = lineage.collect()
+        if rows:
+            _write_tiny(spark, rows, lineage.schema, lineage_path)
+    written = len(rows)
+    if audit_input:
+        want = bucketed.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(F.xxhash64(*key_cols)).alias("h"),
+        ).first()
+        got_n = sum(r["row_count"] for r in rows)
+        got_h = functools.reduce(operator.xor, [r["checksum"] for r in rows] or [None])
+        if (want["n"], want["h"]) != (got_n, got_h):
             raise RuntimeError(
-                f"write-time divergence: input had {want['n']} rows but "
-                f"no files landed"
+                f"write-time divergence: input (rows={want['n']}, "
+                f"checksum={want['h']}) vs committed files "
+                f"(rows={got_n}, checksum={got_h})"
             )
     if table_props:
         write_table_properties(spark, out_dir, table_props)
     snap_id = None
-    if snapshot and _lineage_exists(spark, lineage_path):
+    if snapshot and _exists(spark, lineage_path):
         schema_id, spec_id = _register_metadata(
             spark, out_dir, df, cell_col, n_buckets
         )
@@ -626,8 +609,8 @@ def _meta_rows(spark: SparkSession, path: str) -> list | None:
     issuing these lookups as jobs doubled snapshot_read).  Local paths read
     through pyarrow on the driver; non-local URIs (s3://, hdfs://) fall
     back to ONE Spark read+collect."""
-    local = path[7:] if path.startswith("file://") else path
-    if "://" not in local:
+    local = _local_fs_path(path)
+    if local is not None:
         import glob as _glob
         from types import SimpleNamespace
 

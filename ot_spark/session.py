@@ -13,6 +13,7 @@ import os
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -77,11 +78,33 @@ def get_spark(
         # back to the per-operator path exactly when fusion stops paying.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
     )
+    if master.startswith("local"):
+        # Past this many paths (default 32; a 64-bucket read-back glob has
+        # 65) Spark lists directories in a Spark job.  In local mode that
+        # job runs in this same JVM, so it adds a job's scheduling and no
+        # parallelism: list on the driver.  Cluster masters keep the default.
+        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        builder = builder.config(key, str(2**31 - 1))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def arrow_table(rows: list[tuple], schema: str | StructType) -> pa.Table:
+    """``rows`` as an Arrow table typed by the Spark ``schema`` (a DDL
+    string or a StructType, whose nullability is kept) — the one
+    Spark-to-Arrow type mapping for tables built on the driver."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [[]] * len(arrow_schema)
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)]
+    return pa.table(arrays, schema=arrow_schema)
 
 
 def local_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
@@ -91,10 +114,4 @@ def local_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     (``Scan ExistingRDD``): every execution of a plan that broadcasts it
     starts a Python job to rebuild the table.  Built from an Arrow table,
     the rows live in the plan itself and the broadcast needs no Python."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
-
-    arrow_schema = to_arrow_schema(_parse_datatype_string(schema))
-    cols = list(zip(*rows)) or [[]] * len(arrow_schema)
-    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)]
-    return spark.createDataFrame(pa.table(arrays, schema=arrow_schema))
+    return spark.createDataFrame(arrow_table(rows, schema))

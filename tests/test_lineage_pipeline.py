@@ -153,3 +153,128 @@ def test_pipeline_rerun_over_completed_output(spark, fixture_dir, tmp_path):
     assert again["metrics"]["output"]["rows"] == first["metrics"]["accepted"]["rows"] > 0
     rows = spark.read.parquet(str(tmp_path / "out")).count()
     assert rows == first["metrics"]["output"]["rows"]
+
+
+def _keyed(spark, n, payload="v"):
+    return spark.range(n).select(
+        F.col("id").alias("key"), (F.col("id") % 10).alias("grid_cell"),
+        F.lit(payload).alias("payload"),
+    )
+
+
+def _leave_crash_rows(df, out, bucket, run_id, n_buckets=4, limit=5):
+    """Rows of ``bucket`` written under ``run=<run_id>`` with no lineage
+    row: what a run that died between data write and lineage append
+    leaves on disk."""
+    lineage.with_bucket(df, n_buckets=n_buckets).where(
+        F.col(lineage.BUCKET_COL) == bucket
+    ).limit(limit).withColumn(lineage.RUN_COL, F.lit(run_id)).write.partitionBy(
+        lineage.BUCKET_COL, lineage.RUN_COL
+    ).mode("append").parquet(out)
+
+
+def _assert_consistent(spark, out, lin, want_rows):
+    cur = lineage.read_current(spark, out, lin)
+    assert cur.count() == cur.select("key").distinct().count() == want_rows
+    lin_rows = spark.read.parquet(lin).agg(F.sum("row_count")).first()[0]
+    assert lin_rows == want_rows
+    assert lineage.verify_against_lineage(spark, out, lin, ["key"]).count() == 0
+
+
+def test_same_run_id_retry_over_its_own_crash_leftovers(spark, tmp_path):
+    """A retry under the crashed run's own run_id replaces that run's
+    unrecorded bucket dirs instead of adding to them, and leaves dirs the
+    lineage table already records untouched."""
+    df = _keyed(spark, 200)
+
+    # no lineage at all: the crash came before the first commit
+    out, lin = str(tmp_path / "o1"), str(tmp_path / "l1")
+    _leave_crash_rows(df, out, 2, "R")
+    info = lineage.write_with_lineage(df, out, lin, ["key"], n_buckets=4, run_id="R")
+    assert info["buckets_written"] == 4
+    _assert_consistent(spark, out, lin, 200)
+
+    # lineage already holds (0, R) and (1, R): those dirs survive byte for
+    # byte, the crashed bucket 2 is rewritten once
+    out, lin = str(tmp_path / "o2"), str(tmp_path / "l2")
+    first = lineage.with_bucket(df, n_buckets=4).where(
+        F.col(lineage.BUCKET_COL) < 2
+    ).drop(lineage.BUCKET_COL)
+    lineage.write_with_lineage(first, out, lin, ["key"], n_buckets=4, run_id="R")
+
+    def listing(bucket):
+        d = tmp_path / "o2" / f"{lineage.BUCKET_COL}={bucket}" / f"{lineage.RUN_COL}=R"
+        return sorted((p.name, p.stat().st_mtime_ns, p.read_bytes()) for p in d.iterdir())
+
+    kept = {b: listing(b) for b in (0, 1)}
+    _leave_crash_rows(df, out, 2, "R")
+    info = lineage.write_with_lineage(df, out, lin, ["key"], n_buckets=4, run_id="R")
+    assert (info["buckets_written"], info["buckets_skipped"]) == (2, 2)
+    assert {b: listing(b) for b in (0, 1)} == kept
+    _assert_consistent(spark, out, lin, 200)
+
+
+def test_lineage_log_mixing_spark_and_driver_written_files(spark, tmp_path):
+    """A lineage log whose first commit was written by Spark (one coalesced
+    file of the aggregate) and whose next commit is appended by a later
+    writer reads back with one set of column types through every reader."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    df = _keyed(spark, 120)
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    half = lineage.with_bucket(df, n_buckets=4).where(
+        F.col(lineage.BUCKET_COL) < 2
+    ).drop(lineage.BUCKET_COL)
+    lineage.write_with_lineage(
+        half, out, str(tmp_path / "scratch_lin"), ["key"], n_buckets=4,
+        run_id="old", snapshot=False,
+    )
+    # the Spark-side lineage write: the per-bucket aggregate of the read-back
+    landed = spark.read.parquet(out).select(
+        "*", F.col("_metadata.file_path").alias("__file")
+    )
+    landed.groupBy(lineage.BUCKET_COL).agg(
+        F.min("grid_cell").alias("cell_min"),
+        F.max("grid_cell").alias("cell_max"),
+        F.count(F.lit(1)).alias("row_count"),
+        F.bit_xor(F.xxhash64("key")).alias("checksum"),
+        F.collect_set(F.col("__file")).alias("files"),
+    ).withColumn("run_id", F.lit("old")).withColumn(
+        "ts", F.lit(1_700_000_000_000)
+    ).coalesce(1).write.mode("append").parquet(lin)
+
+    info = lineage.write_with_lineage(df, out, lin, ["key"], n_buckets=4)
+    assert (info["buckets_written"], info["buckets_skipped"]) == (2, 2)
+    files = sorted(glob.glob(f"{lin}/*.parquet"))
+    assert len(files) == 2
+    arrow = [pq.read_schema(f) for f in files]
+    assert [(f.name, f.type) for f in arrow[0]] == [(f.name, f.type) for f in arrow[1]]
+    spark_types = [spark.read.parquet(f).dtypes for f in files]
+    assert spark_types[0] == spark_types[1] == spark.read.parquet(lin).dtypes
+
+    assert lineage.read_current(spark, out, lin).count() == 120
+    man = lineage.read_manifest(spark, out, info["snapshot_id"])
+    assert dict(man.dtypes) == {
+        c: t for c, t in spark.read.parquet(lin).dtypes if c in man.columns
+    }
+    assert man.agg(F.sum("row_count")).first()[0] == 120
+    assert lineage.audit_snapshot(spark, out, info["snapshot_id"], ["key"]).count() == 0
+    assert lineage.verify_against_lineage(spark, out, lin, ["key"]).count() == 0
+
+
+def test_default_run_id_is_never_numeric(spark, tmp_path):
+    """Partition discovery types a ``run=`` value by its text: an id such
+    as ``12345e67890`` would come back as a number.  The default id always
+    starts with a letter, so ``run`` is read as a string."""
+    df = _keyed(spark, 40)
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    info = lineage.write_with_lineage(df, out, lin, ["key"], n_buckets=4)
+    run_id = info["run_id"]
+    assert run_id[0].isalpha()
+    with pytest.raises(ValueError):
+        float(run_id)
+    assert dict(spark.read.parquet(out).dtypes)[lineage.RUN_COL] == "string"
+    assert lineage.read_current(spark, out, lin).count() == 40
+

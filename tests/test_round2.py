@@ -153,6 +153,7 @@ def test_table_properties_roundtrip_and_propagation(spark, tmp_path):
     # data reads ignore the underscore sidecar
     assert spark.read.parquet(src).count() == 5
     spark.range(3).write.parquet(dst)
+    assert lineage.read_table_properties(spark, dst) == {}  # no sidecar yet
     props = lineage.propagate_table_properties(spark, src, dst, {"run": "r2"})
     assert props["osmosis_replication_timestamp"] == "2024-01-02T03:04:05Z"
     got = lineage.read_table_properties(spark, dst)
