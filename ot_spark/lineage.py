@@ -110,25 +110,31 @@ def _write_tiny(
     fast-path.  Each metadata write issued as a Spark job pays whole-job
     scheduling latency to move a handful of rows (measured ~0.15 s per
     write at local[32]; a snapshot commit does three of them).  Local
-    paths write one parquet file via pyarrow with an EXPLICIT arrow
-    schema derived from the same schema the Spark fallback uses, so footer
-    types are identical whichever path wrote a given file; non-local
-    URIs (s3://, hdfs://) fall back to the one-task Spark write."""
+    paths write through pyarrow (``_put_parquet``), typed by the same
+    schema the Spark fallback uses, so footer types do not depend on the
+    writer; non-local URIs (s3://, hdfs://) use the one-task Spark write."""
     local = _local_fs_path(path)
     if local is None:
         _tiny_df(spark, rows, schema).write.mode(mode).parquet(path)
         return
     import shutil
 
-    import pyarrow.parquet as pq
-
     if mode == "overwrite" and os.path.exists(local):
         shutil.rmtree(local)
     os.makedirs(local, exist_ok=True)
-    pq.write_table(
-        arrow_table(rows, schema),
-        os.path.join(local, f"part-{uuid.uuid4().hex}.parquet"),
-    )
+    _put_parquet(arrow_table(rows, schema), local)
+
+
+def _put_parquet(table, local_dir: str) -> None:
+    """Add ``table`` to ``local_dir`` as a new part file, renamed into place
+    from a hidden temp name so readers only see complete files (a crash
+    leaves a ``.part-*.tmp`` that Spark and the ``*.parquet`` globs skip)."""
+    import pyarrow.parquet as pq
+
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(local_dir, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(local_dir, name))
 
 
 def write_table_properties(spark: SparkSession, out_dir: str, props: dict) -> None:
@@ -474,7 +480,6 @@ def _copy_manifest(
     if local_src is not None and local_dst is not None:
         import glob as _glob
         import shutil
-        import uuid as _uuid
 
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -485,10 +490,7 @@ def _copy_manifest(
         if os.path.exists(local_dst):
             shutil.rmtree(local_dst)
         os.makedirs(local_dst)
-        pq.write_table(
-            merged,
-            os.path.join(local_dst, f"part-{_uuid.uuid4().hex}.parquet"),
-        )
+        _put_parquet(merged, local_dst)
         return
     lin = spark.read.parquet(lineage_path).select(*_MANIFEST_COLS)
     lin.coalesce(1).write.mode("overwrite").parquet(dest)
@@ -887,11 +889,9 @@ def orphan_files(spark: SparkSession, out_dir: str, lineage_path: str) -> list[s
 
 def remove_orphans(spark: SparkSession, out_dir: str, lineage_path: str) -> int:
     """Delete orphaned data files (Iceberg's remove_orphan_files
-    maintenance).  Driver-local fs deletes — fine in this sandbox; on a
-    cluster the same listing would feed the object store's batch delete."""
+    maintenance) through the Hadoop FileSystem, on local and remote URIs."""
     orphans = orphan_files(spark, out_dir, lineage_path)
     for f in orphans:
-        path = f[7:] if f.startswith("file://") else f
-        if os.path.exists(path):
-            os.remove(path)
+        fs, p = _hadoop_path(spark, f)
+        fs.delete(p, False)
     return len(orphans)

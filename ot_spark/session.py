@@ -79,10 +79,10 @@ def get_spark(
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
     )
     if master.startswith("local"):
-        # Past this many paths (default 32; a 64-bucket read-back glob has
-        # 65) Spark lists directories in a Spark job.  In local mode that
-        # job runs in this same JVM, so it adds a job's scheduling and no
-        # parallelism: list on the driver.  Cluster masters keep the default.
+        # Past this many paths (default 32; the 64-bucket read-back glob has
+        # 65) Spark lists them in a job, whose scheduling costs more than a
+        # local listing: on 4 cores, reads of a 1920-run-dir table were ~0.1 s
+        # faster listed on the driver.  Cluster masters keep the default.
         key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
         builder = builder.config(key, str(2**31 - 1))
     for k, v in (extra_conf or {}).items():

@@ -68,6 +68,7 @@ def test_write_resume_identical(spark, enriched, tmp_path):
     orphans = lineage.orphan_files(spark, out_b, lin_b)
     assert orphans and all("crashedrun" in f for f in orphans)
     assert lineage.remove_orphans(spark, out_b, lin_b) == len(orphans)
+    assert lineage.orphan_files(spark, out_b, lin_b) == []
     b2 = _hash_table(lineage.read_current(spark, out_b, lin_b), ["url"])
     assert (b2.h, b2.n) == (a.h, a.n)
 
@@ -212,6 +213,44 @@ def test_same_run_id_retry_over_its_own_crash_leftovers(spark, tmp_path):
     assert (info["buckets_written"], info["buckets_skipped"]) == (2, 2)
     assert {b: listing(b) for b in (0, 1)} == kept
     _assert_consistent(spark, out, lin, 200)
+
+
+def test_crash_during_lineage_append_leaves_no_visible_file(
+    spark, tmp_path, monkeypatch
+):
+    """The lineage append dies halfway through writing its file.  Readers
+    never see the torn file, so the next run resumes: it rewrites the
+    buckets of the lost commit and every read path still works."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    df = _keyed(spark, 200)
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    half = lineage.with_bucket(df, n_buckets=4).where(
+        F.col(lineage.BUCKET_COL) < 2
+    ).drop(lineage.BUCKET_COL)
+    lineage.write_with_lineage(half, out, lin, ["key"], n_buckets=4, snapshot=False)
+
+    real_write = pq.write_table
+
+    def torn_write(table, where, **kw):
+        real_write(table, where, **kw)
+        with open(where, "r+b") as f:  # no footer: the process died here
+            f.truncate(f.seek(0, 2) // 2)
+        raise RuntimeError("killed")
+
+    monkeypatch.setattr(pq, "write_table", torn_write)
+    with pytest.raises(RuntimeError, match="killed"):
+        lineage.write_with_lineage(df, out, lin, ["key"], n_buckets=4, snapshot=False)
+    monkeypatch.undo()
+    assert len(glob.glob(f"{lin}/*.parquet")) == 1
+    assert glob.glob(f"{lin}/.*.tmp")  # the torn file, hidden from readers
+
+    info = lineage.write_with_lineage(df, out, lin, ["key"], n_buckets=4)
+    assert (info["buckets_written"], info["buckets_skipped"]) == (2, 2)
+    _assert_consistent(spark, out, lin, 200)
+    assert lineage.read_manifest(spark, out, info["snapshot_id"]).count() == 4
 
 
 def test_lineage_log_mixing_spark_and_driver_written_files(spark, tmp_path):
