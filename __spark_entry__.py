@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 - ``entry(spark)``: flagship pipeline on sf0.001 — derived pages ->
-  attribute filter -> grid cell -> broadcast PIP spatial join -> per-admin
-  rollup.
+  attribute filter -> grid cell -> PIP lookup (broadcast kernel, no join)
+  -> per-admin rollup.
 - ``queries()``: one callable per implemented operator (SURVEY.md §2).
 - ``oracle_sql()``: DuckDB-equivalent SQL per query.
 
@@ -10,7 +10,7 @@ There is no physical ``pages`` table in the driver testdata, so pages
 columns (lat/lon/attrs) are derived deterministically from
 ``documents.doc_id`` with arithmetic both engines evaluate identically —
 see ot_spark/pagesview.py.  The Spark side always runs the engine's real
-operators (Column algebra, broadcast PIP join, pandas-UDF refine); the
+operators (Column algebra, broadcast PIP kernel, pandas-UDF refine); the
 oracle re-derives expected values through an independent SQL formulation.
 """
 
@@ -1307,18 +1307,24 @@ def q_ivfpq_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _read(spark, sf_dir, "embeddings", fan=True)
     ck, bk = ("ivf_prod", sf_dir), ("pq_prod", sf_dir)
-    if ck not in _TRAIN_CACHE or bk not in _TRAIN_CACHE:
-        # both trainers draw the IDENTICAL sample (same ordering
-        # expression, seed, size) — collect it once; the sort over the
-        # full vector table scales with the corpus, the sample does not
-        sx = _xxhash_sample(emb, 4096, "embedding", 42)
+    # both trainers draw the IDENTICAL sample (same ordering expression,
+    # seed, size) — collect it at most once; the sort over the full vector
+    # table scales with the corpus, the sample does not
+    sx = None
+
+    def sample_x():
+        nonlocal sx
+        if sx is None:
+            sx = _xxhash_sample(emb, 4096, "embedding", 42)
+        return sx
+
     if ck not in _TRAIN_CACHE:
         _TRAIN_CACHE[ck] = train_ivf_centroids(
-            emb, n_centroids=32, sample=4096, iters=10, sample_X=sx
+            emb, n_centroids=32, sample=4096, iters=10, sample_X=sample_x()
         )
     if bk not in _TRAIN_CACHE:
         _TRAIN_CACHE[bk] = train_pq_codebooks(
-            emb, m=16, k=256, sample=4096, iters=10, sample_X=sx
+            emb, m=16, k=256, sample=4096, iters=10, sample_X=sample_x()
         )
     cent, books = _TRAIN_CACHE[ck], _TRAIN_CACHE[bk]
     index = build_ivfpq_index(emb, cent, books, replicas=2)
@@ -3505,8 +3511,7 @@ FROM enc GROUP BY h3_7
 def q_knn_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN nearest-raster-tile via TRUE-GEOMETRY H3 k-ring expansion
     (north_star "nearest elevation/raster tile via H3 k-ring expansion";
-    ot_spark/h3x.py).  Round 6 retires the axial "h3ish" approximation
-    this query ran on through round 5."""
+    ot_spark/h3x.py)."""
     from ot_spark.h3x import knn_nearest_raster_h3x
 
     df = pagesview.pages_df(spark, sf_dir)

@@ -1,8 +1,9 @@
 """Benchmark harness — prints ONE JSON line.
 
 Headline metric: pages/sec through the flagship spatial filter-enrich-tile
-pipeline (parse coords -> attribute filter -> tag projection -> grid cell ->
-broadcast PIP join -> tiled noop write), on a deterministically generated
+pipeline (parse coords -> attribute filter -> tag projection -> fused Arrow
+enrich: grid cell + admin PIP + raster elevation + S2/H3 tiles -> noop
+write), on a deterministically generated
 pages table (BASELINE.json: synthesize at small scale; no external data).
 
 Also times each correctness query from __spark_entry__.queries() at
@@ -29,8 +30,8 @@ FLAGSHIP_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "10"))
 
 
 def run_pipeline(spark, n_pages: int) -> tuple[float, int, list[float]]:
-    """Flagship: parse -> filter -> project -> tile (grid+S2+h3ish) ->
-    broadcast PIP join -> raster elevation -> noop sink.
+    """Flagship: parse -> filter -> project -> fused enrich (grid cell,
+    admin PIP, raster elevation, S2/H3 tiles) -> noop sink.
 
     Measured steady-state: the identical action needs ~8 invocations to
     reach C2 JIT on this host and single timings swing 3x with noisy

@@ -1,20 +1,19 @@
-"""Fused spatial enrichment — ONE Arrow round-trip for all Python work.
+"""The pipeline's spatial enrichment: ONE Arrow round-trip for all Python work.
 
-The composable operators (spatial_join.enrich_with_admin,
-raster.enrich_with_elevation, s2h3.with_tiles) are semantically canonical
-but each contributes its own ArrowEvalPython node; chained, the batch
-crosses the JVM<->Python boundary three times per row and each node runs
-its own per-core Python worker pool (3x oversubscription at local[32] —
-measured anti-scaling).
+Admin PIP (area.rs:366-401), the raster lookup (geotiff.rs) and the
+S2/H3 tile encodes run in a single struct-returning pandas UDF.  The
+composable operators (spatial_join.enrich_with_admin,
+raster.enrich_with_elevation, s2h3.with_tiles) are the semantic
+references: chained, each adds its own ArrowEvalPython node, so a batch
+would cross the JVM<->Python boundary three times per row with one Python
+worker pool per node.
 
-This module composes the same primitives into a single struct-returning
-pandas UDF: the JVM side still does everything vectorizable in codegen
-(grid cell, raster routing CASE, skip masks); Python does only the numpy
-work (the CellLookup admin kernel, pixel gather, S2/true-H3 encode) in one
-pass.  The admin lookup needs no join: the UDF receives every row's grid
-cell and returns admin_key directly, so the plan is one Arrow round-trip
-with no exchange.  Semantics are identical to the composed operators —
-tests/test_fused.py asserts equality row-for-row.
+The JVM side still does everything vectorizable in codegen (grid cell,
+raster routing, skip/keep-original masks); Python does only the numpy
+work — the CellLookup admin kernel, raster.py's one pixel-gather kernel
+and the S2/true-H3 encodes.  The admin lookup needs no join: the UDF
+receives every row's grid cell and returns admin_key directly.  Semantics
+equal the composed operators — tests/test_fused.py asserts it row for row.
 """
 
 from __future__ import annotations
@@ -32,7 +31,8 @@ from pyspark.sql.types import (
 from .area_index import AreaIndex
 from .cells import grid_cell
 from .raster import (
-    ROUTE_JOIN_THRESHOLD, RasterIndex, route_col, route_via_cell_join
+    ROUTE_JOIN_THRESHOLD, RasterIndex, gather_by_raster_id, route_col,
+    route_via_cell_join,
 )
 from .h3x import h3x_cell_ids, h3x_parent_col
 from .s2h3 import s2_cell_ids
@@ -48,35 +48,35 @@ def spatial_enrich(
     lon_col: str = "lon",
     skip_col: str | None = None,
     cell_col: str = "grid_cell",
+    keep_original: bool = False,
 ) -> DataFrame:
-    """Adds grid_cell, admin_key, raster_id, elev, s2_<L>, h3_<r> columns."""
+    """Adds grid_cell, admin_key, raster_id, elev, s2_<L>, h3_<r> columns.
+
+    ``skip_col``: rows with True get no lookup and a NULL raster_id (skip_ele
+    semantics).  ``keep_original``: a row whose input ``elev`` is non-null
+    gets no lookup and keeps that value, skip-flagged or not
+    (geotiff.rs:425-432), as in raster.enrich_with_elevation."""
     lat, lon = F.col(lat_col), F.col(lon_col)
     df = df.withColumn(cell_col, grid_cell(lat, lon, area_index.tile_size))
 
-    grids = raster_index.grids() if raster_index is not None else {}
-    bc = df.sparkSession.sparkContext.broadcast((area_index.cell_lookup, grids))
+    raster_index = raster_index or RasterIndex([])
+    bc = df.sparkSession.sparkContext.broadcast(
+        (area_index.cell_lookup, raster_index.grids())
+    )
 
     # JVM-side raster mask: NULL raster for skip-flagged rows, so the
-    # pixel loop only touches relevant rows.  Deep route CASE chains blow
+    # pixel gather only touches relevant rows.  Deep route CASE chains blow
     # codegen past ROUTE_JOIN_THRESHOLD tiles, so larger tile sets route
     # through raster.py's cell-join path, as the canonical operator does.
-    if raster_index is not None:
-        if len(raster_index.tiles) <= ROUTE_JOIN_THRESHOLD:
-            df = df.withColumn("raster_id", route_col(raster_index, lat, lon))
-        else:
-            df = route_via_cell_join(
-                df, raster_index, lat_col, lon_col, "raster_id"
-            )
-        if skip_col is not None:
-            df = df.withColumn(
-                "raster_id",
-                F.when(
-                    ~F.coalesce(F.col(skip_col), F.lit(False)),
-                    F.col("raster_id"),
-                ),
-            )
+    if len(raster_index.tiles) <= ROUTE_JOIN_THRESHOLD:
+        df = df.withColumn("raster_id", route_col(raster_index, lat, lon))
     else:
-        df = df.withColumn("raster_id", F.lit(None).cast("string"))
+        df = route_via_cell_join(df, raster_index, lat_col, lon_col, "raster_id")
+    if skip_col is not None:
+        df = df.withColumn(
+            "raster_id",
+            F.when(~F.coalesce(F.col(skip_col), F.lit(False)), F.col("raster_id")),
+        )
 
     fields = [
         StructField("admin_key", StringType()),
@@ -100,22 +100,9 @@ def spatial_enrich(
             out["admin_key"] = pd.Series(kernel.lookup(
                 cell_s.to_numpy(dtype=np.float64, na_value=np.nan), lon_np, lat_np
             ))
-
-            # --- raster pixel gather (geotiff.rs:36-60 affine math)
-            elev = np.full(n, np.nan)
-            rids = rid_s.to_numpy(dtype=object)
-            for r in pd.unique(rid_s.dropna()):
-                g = rgrids.get(r)
-                if g is None:
-                    continue
-                m = rids == r
-                px = np.floor((lon_np[m] - g["min_lon"]) / g["pixel_w"]).astype(np.int64)
-                py = np.floor((g["max_lat"] - lat_np[m]) / g["pixel_h"]).astype(np.int64)
-                px = np.clip(px, 0, g["width"] - 1)
-                py = np.clip(py, 0, g["height"] - 1)
-                vals = g["grid"][py, px]
-                elev[m] = np.where(vals == g["nodata"], np.nan, vals)
-            out["elev"] = pd.Series(elev)
+            out["elev"] = pd.Series(
+                gather_by_raster_id(rgrids, rid_s, lat_np, lon_np)
+            )
 
             # --- tile encodes
             ok = ~(np.isnan(lat_np) | np.isnan(lon_np))
@@ -125,8 +112,7 @@ def spatial_enrich(
             ser = pd.Series(s2, dtype="Int64")
             ser[~ok] = pd.NA
             out[f"s2_{s2_level}"] = ser
-            # TRUE-GEOMETRY H3 (round 6: retires the last h3ish use in
-            # the headline path): ONLY the finest resolution crosses the
+            # TRUE-GEOMETRY H3: ONLY the finest resolution crosses the
             # Arrow boundary — coarser resolutions are derived JVM-side
             # by the parent bit-truncation (h3x_parent_col), saving one
             # full Int64 column per extra resolution in the transfer
@@ -141,17 +127,15 @@ def spatial_enrich(
     # nondeterministic marker: a downstream projection of a SUBSET of __e
     # fields lets column pruning clone the UDF once per field otherwise
     enrich_nd = enrich.asNondeterministic()
-    df = df.withColumn(
-        "__e", enrich_nd(F.col(cell_col), F.col("raster_id"), lon, lat)
-    )
+    keep = keep_original and "elev" in df.columns
+    rid = F.when(F.col("elev").isNull(), F.col("raster_id")) if keep else F.col("raster_id")
+    df = df.withColumn("__e", enrich_nd(F.col(cell_col), rid, lon, lat))
+    # skip-flagged rows were routed to NULL above, so their looked-up
+    # value is already NULL; an original value is coalesced back
+    looked = F.round(F.col("__e.elev"), 2)
     df = df.withColumn("admin_key", F.col("__e.admin_key")).withColumn(
-        "elev", F.round(F.col("__e.elev"), 2)
+        "elev", F.coalesce(F.col("elev"), looked) if keep else looked
     )
-    if skip_col is not None:
-        df = df.withColumn(
-            "elev",
-            F.when(~F.coalesce(F.col(skip_col), F.lit(False)), F.col("elev")),
-        )
     for f_ in fields[2:]:
         df = df.withColumn(f_.name, F.col(f"__e.{f_.name}"))
     for r in sorted(h3_resolutions):

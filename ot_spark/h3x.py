@@ -1,9 +1,8 @@
 """True-geometry H3-style icosahedral hex DGGS ("h3x").
 
-Replaces the documented "h3ish" axial approximation (s2h3.py:14-21) with
-the REAL H3 construction from the published algorithm (Uber H3 docs,
-"Cell indexing" / faceijk algorithm; Snyder gnomonic projection): lat/lon
--> unit xyz -> nearest icosahedron face -> gnomonic projection onto the
+Implements the REAL H3 construction from the published algorithm (Uber
+H3 docs, "Cell indexing" / faceijk algorithm; Snyder gnomonic
+projection): lat/lon -> unit xyz -> nearest icosahedron face -> gnomonic projection onto the
 face's tangent plane -> aperture-7 hex lattice (Class II even res, Class
 III odd res rotated by asin(sqrt(3/28))) -> integer ijk rounding ->
 exact integer up-aperture-7 digit chain -> (base cell, digit path) packed
@@ -798,8 +797,8 @@ def with_h3x_cells(
     lon_col: str = "lon",
 ) -> DataFrame:
     """True-geometry h3x ids for every resolution in ONE struct-returning
-    Arrow UDF (same single-ArrowEvalPython shape as with_h3ish_cells —
-    see s2h3.py for why one UDF per res is 2x).  The finest resolution is
+    Arrow UDF (same single-ArrowEvalPython shape as s2h3.with_tiles —
+    one UDF per res would add one ArrowEvalPython node each).  The finest resolution is
     computed once; coarser ones are derived by the parent bit-truncation
     (exactly how a production pipeline would roll res-9 up to res-7)."""
     finest = max(resolutions)
@@ -831,8 +830,7 @@ def with_h3x_cells(
 # ------------------------------------------------- k-ring raster kNN (h3x)
 # North-star operator on TRUE-GEOMETRY H3: nearest raster tile via H3
 # k-ring expansion (BASELINE.json "kNN enrichment (nearest elevation/
-# raster tile via H3 k-ring expansion)").  Replaces the retired axial
-# "h3ish" approximation (s2h3.py round-5 and earlier).
+# raster tile via H3 k-ring expansion)").
 
 
 def h3x_cell_fij(ids: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

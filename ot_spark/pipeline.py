@@ -9,11 +9,14 @@ side — Catalyst needs no second read):
     ─ count(accepted)
     ─ parse coordinates (url/text/html)                            (graft)
     ─ [no-elevation flag from skip-ele links]                      (skip_ele)
-    ─ [elevation enrichment]                                       (J3)
-    ─ [admin PIP enrichment]                                       (J2)
+    ─ spatial enrichment: admin PIP + elevation + S2/H3 tiles   (J2/J3)
     ─ tag projection (remove junk keys)                            (F10)
     ─ count(output)
     ─ write bucketed parquet + lineage  /  return frame
+
+The enrichment is one step, enrich_fused.spatial_enrich, whatever the
+config: a run without polygons gets NULL admin_key, a run without rasters
+NULL elevation, and every run emits the same columns.
 
 Handler-chain order matters in the reference because handlers mutate
 shared state; here order is semantic only where it is in the reference
@@ -28,10 +31,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import filters, lineage, parse, semi, spatial_join
+from . import filters, lineage, parse, semi
 from .area_index import AreaIndex
+from .enrich_fused import spatial_enrich
 from .metrics import PipelineMetrics
-from .raster import RasterIndex, enrich_with_elevation
+from .raster import RasterIndex
 
 
 @dataclass
@@ -42,14 +46,11 @@ class PipelineConfig:
     lineage_path: str | None = None
     filter_pages_by_links: bool = True      # -e node filtering analog
     remove_metadata: bool = True            # --remove-metadata
-    with_elevation: bool = True             # -s/--elevation-tiffs
-    with_admin: bool = True                 # -c/--country-csv
     keep_original_elevation: bool = False   # --keep-original-elevation
-    fused_enrich: bool = True               # one Arrow round-trip (perf path)
     tile_size: float = 1.0
     n_buckets: int = 64
-    admin_index: AreaIndex | None = None
-    raster_index: RasterIndex | None = None
+    admin_index: AreaIndex | None = None    # -c/--country-csv
+    raster_index: RasterIndex | None = None  # -s/--elevation-tiffs
     run_id: str | None = None
     extra: dict = field(default_factory=dict)
 
@@ -79,39 +80,13 @@ class Pipeline:
         else:
             pages = pages.withColumn("no_elevation", F.lit(False))
 
-        if (
-            cfg.fused_enrich
-            and cfg.with_admin
-            and cfg.admin_index is not None
-            and not cfg.keep_original_elevation
-        ):
-            from .enrich_fused import spatial_enrich
-
-            pages = spatial_enrich(
-                pages,
-                cfg.admin_index,
-                cfg.raster_index if cfg.with_elevation else None,
-                skip_col="no_elevation",
-            )
-            if "attrs" in pages.columns:
-                pages = filters.remove_tags(pages)
-            return self.metrics.count_stage(pages, "output")
-
-        if cfg.with_elevation and cfg.raster_index is not None:
-            pages = enrich_with_elevation(
-                pages,
-                cfg.raster_index,
-                skip_col="no_elevation",
-                keep_original=cfg.keep_original_elevation,
-            )
-        if cfg.with_admin and cfg.admin_index is not None:
-            pages = spatial_join.enrich_with_admin(pages, cfg.admin_index)
-        else:
-            from .cells import grid_cell
-
-            pages = pages.withColumn(
-                "grid_cell", grid_cell(F.col("lat"), F.col("lon"), cfg.tile_size)
-            )
+        pages = spatial_enrich(
+            pages,
+            cfg.admin_index or AreaIndex(tile_size=cfg.tile_size),
+            cfg.raster_index,
+            skip_col="no_elevation",
+            keep_original=cfg.keep_original_elevation,
+        )
         if "attrs" in pages.columns:
             pages = filters.remove_tags(pages)
         return self.metrics.count_stage(pages, "output")

@@ -1,8 +1,8 @@
-"""Hierarchical cell indexes: S2 cell ids + an H3-style hex grid.
+"""Hierarchical cell ids: S2 cell ids plus the fused S2/H3 tile encoder.
 
 No s2sphere/h3 libraries exist in the target environment (SURVEY.md §7.0),
-so both indexes are implemented from the published algorithms in pure
-numpy, vectorized over Arrow batches:
+so S2 is implemented from the published algorithm in pure numpy,
+vectorized over Arrow batches:
 
 - **S2** (exact, from the public s2geometry algorithm): lat/lon -> unit
   xyz -> cube face + (u,v) -> quadratic ST transform -> 30-bit (i,j) ->
@@ -11,14 +11,10 @@ numpy, vectorized over Arrow batches:
   any level.  Level-L ids satisfy the s2 hierarchy contract
   (``parent = (leaf & ~(2*lsb-1)) | lsb``) and the face contract
   (``id >> 61 == face``).
-- **H3-style hex grid** (*h3ish*: a simple axial approximation kept for
-  its cheap closed-form SQL oracle).  The TRUE-GEOMETRY icosahedral
-  aperture-7 grid lives in :mod:`ot_spark.h3x` (gnomonic faces, Class
-  II/III lattices, 122 base cells / 12 pentagons, H3-layout ids) and is
-  what the ``h3_tiles`` gate query uses; h3ish remains as a lightweight
-  alternative binning, not the H3 claim.  The k-ring raster kNN moved to
-  h3x in round 6 (h3x.knn_nearest_raster_h3x) — real H3 k-ring expansion,
-  per the north_star.
+- **H3**: the true-geometry icosahedral aperture-7 grid lives in
+  :mod:`ot_spark.h3x` (gnomonic faces, Class II/III lattices, 122 base
+  cells / 12 pentagons, H3-layout ids, k-ring kNN); :func:`with_tiles`
+  encodes it next to S2 in one Arrow UDF.
 """
 
 from __future__ import annotations
@@ -27,7 +23,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
@@ -169,117 +165,6 @@ def with_s2_cell(
             yield ser
 
     return df.withColumn(out_col, enc(F.col(lat_col), F.col(lon_col)).cast("long"))
-
-
-# -------------------------------------------------------------- h3ish hexes
-
-H3ISH_BASE_SIZE = 2.0  # degrees at res 0
-_APERTURE = np.sqrt(7.0)
-
-
-def h3ish_size(res: int) -> float:
-    return H3ISH_BASE_SIZE / (_APERTURE ** res)
-
-
-def _axial_from_xy(x: np.ndarray, y: np.ndarray, size: float):
-    q = (np.sqrt(3.0) / 3.0 * x - y / 3.0) / size
-    r = (2.0 / 3.0 * y) / size
-    return _cube_round(q, r)
-
-
-def _cube_round(q: np.ndarray, r: np.ndarray):
-    cx, cz = q, r
-    cy = -cx - cz
-    rx, ry, rz = np.round(cx), np.round(cy), np.round(cz)
-    dx, dy, dz = np.abs(rx - cx), np.abs(ry - cy), np.abs(rz - cz)
-    fix_x = (dx > dy) & (dx > dz)
-    fix_z = ~fix_x & (dz > dy)
-    rx = np.where(fix_x, -ry - rz, rx)
-    rz = np.where(fix_z, -rx - ry, rz)
-    return rx.astype(np.int64), rz.astype(np.int64)
-
-
-def _hex_center_xy(q: np.ndarray, r: np.ndarray, size: float):
-    x = size * np.sqrt(3.0) * (q + r / 2.0)
-    y = size * 1.5 * r
-    return x, y
-
-
-_BIAS = 1 << 27
-_MASK = (1 << 28) - 1
-
-
-def h3ish_encode(q: np.ndarray, r: np.ndarray, res: int) -> np.ndarray:
-    return (
-        (np.int64(res) << np.int64(56))
-        | ((q + _BIAS).astype(np.int64) << np.int64(28))
-        | (r + _BIAS).astype(np.int64)
-    )
-
-
-def h3ish_decode(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    ids = np.asarray(ids, dtype=np.int64)
-    res = ids >> 56
-    q = ((ids >> 28) & _MASK) - _BIAS
-    r = (ids & _MASK) - _BIAS
-    return res, q, r
-
-
-def h3ish_cell_ids(lat: np.ndarray, lon: np.ndarray, res: int) -> np.ndarray:
-    """Equirectangular x=lon, y=lat (degrees) — a deterministic hex tiling,
-    not equal-area near poles (documented h3ish approximation)."""
-    q, r = _axial_from_xy(
-        np.asarray(lon, dtype=np.float64), np.asarray(lat, dtype=np.float64),
-        h3ish_size(res),
-    )
-    return h3ish_encode(q, r, res)
-
-
-def h3ish_parent(ids: np.ndarray, parent_res: int) -> np.ndarray:
-    """Parent = hex at parent_res containing this cell's center (H3's own
-    center-containment hierarchy)."""
-    res, q, r = h3ish_decode(ids)
-    size = h3ish_size(int(res[0])) if len(np.atleast_1d(res)) else 1.0
-    x, y = _hex_center_xy(q, r, size)
-    pq, pr = _axial_from_xy(x, y, h3ish_size(parent_res))
-    return h3ish_encode(pq, pr, parent_res)
-
-
-def with_h3ish_cells(
-    df: DataFrame, resolutions: tuple[int, ...] = (7, 9),
-    lat_col: str = "lat", lon_col: str = "lon",
-) -> DataFrame:
-    """All resolutions in ONE struct-returning Arrow UDF — one UDF per
-    resolution would cost one ArrowEvalPython node (with its own Python
-    worker pool) each.  The UDF is marked nondeterministic so column
-    pruning cannot clone it per extracted field (measured: 2x
-    ArrowEvalPython on a pruned groupBy otherwise)."""
-    from pyspark.sql.types import StructField, StructType
-
-    fields = [StructField(f"h3_{r}", LongType()) for r in resolutions]
-    schema = StructType(fields)
-
-    @F.pandas_udf(schema)
-    def enc(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
-        for lat_s, lon_s in it:
-            lat_np = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            lon_np = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            ok = ~(np.isnan(lat_np) | np.isnan(lon_np))
-            cols = {}
-            for r in resolutions:
-                h = np.zeros(len(lat_np), dtype=np.int64)
-                if ok.any():
-                    h[ok] = h3ish_cell_ids(lat_np[ok], lon_np[ok], r)
-                hs = pd.Series(h, dtype="Int64")
-                hs[~ok] = pd.NA
-                cols[f"h3_{r}"] = hs
-            yield pd.DataFrame(cols)
-
-    enc = enc.asNondeterministic()
-    tmp = df.withColumn("__h3", enc(F.col(lat_col), F.col(lon_col)))
-    for f_ in fields:
-        tmp = tmp.withColumn(f_.name, F.col(f"__h3.{f_.name}"))
-    return tmp.drop("__h3")
 
 
 def with_tiles(

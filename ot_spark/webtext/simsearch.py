@@ -253,6 +253,22 @@ def _xxhash_sample(
     return np.asarray([r[0] for r in rows], dtype=np.float64)
 
 
+def _training_sample(
+    df: DataFrame, sample: int, vec_col: str, seed: int,
+    sample_X: np.ndarray | None,
+) -> np.ndarray:
+    """The trainers' sample: ``sample_X`` when given — rejected unless it
+    is a 2-D matrix of at most ``sample`` rows — else collected here."""
+    if sample_X is None:
+        return _xxhash_sample(df, sample, vec_col, seed)
+    X = np.asarray(sample_X, dtype=np.float64)
+    if X.ndim != 2 or len(X) > sample:
+        raise ValueError(
+            f"sample_X must be 2-D with at most {sample} rows, got shape {X.shape}"
+        )
+    return X
+
+
 def train_ivf_centroids(
     df: DataFrame,
     n_centroids: int = 16,
@@ -267,12 +283,7 @@ def train_ivf_centroids(
     ``sample_X``: a precollected ``_xxhash_sample(df, sample, vec_col,
     seed)`` matrix — MUST be exactly that, byte-for-byte, or results
     drift; the default path collects it here."""
-    X = (
-        sample_X
-        if sample_X is not None
-        else _xxhash_sample(df, sample, vec_col, seed)
-    )
-    X = np.asarray(X, dtype=np.float64)
+    X = _training_sample(df, sample, vec_col, seed, sample_X)
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     rng = np.random.RandomState(seed)
     cent = X[rng.choice(len(X), n_centroids, replace=False)]
@@ -542,11 +553,7 @@ def train_pq_codebooks(
     embeddings — m=8 was measured at 0.67 there (no cluster structure to
     exploit), m=16 at 0.825; real corpora with cluster structure do
     better at the same m.  Returns (m, k', d/m) with k' = min(k, n)."""
-    X = (
-        np.asarray(sample_X, dtype=np.float64)
-        if sample_X is not None
-        else _xxhash_sample(df, sample, vec_col, seed)
-    )
+    X = _training_sample(df, sample, vec_col, seed, sample_X)
     n, d = X.shape
     assert d % m == 0, f"dim {d} not divisible by m={m}"
     k = min(k, n)

@@ -63,8 +63,6 @@ def main() -> None:
         lineage_path=args.lineage,
         filter_pages_by_links=not args.no_link_filter,
         remove_metadata=not args.no_metadata_removal,
-        with_elevation=raster_index is not None,
-        with_admin=admin_index is not None,
         keep_original_elevation=args.keep_original_elevation,
         tile_size=args.tile_size,
         n_buckets=args.n_buckets,

@@ -9,6 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from ot_spark import densify, lineage, pipeline, raster, semi
+from ot_spark.area_index import AreaIndex
+from ot_spark.enrich_fused import spatial_enrich
 from ot_spark.webtext.dedup import simhash_near_pairs, with_simhash
 
 
@@ -200,7 +202,8 @@ def test_connected_components_chain(spark):
 
 # ------------------------------------------- keep-original x skip interplay
 
-def test_keep_original_skip_preserves_existing_elev(spark, fixture_dir):
+@pytest.mark.parametrize("op", ["enrich_with_elevation", "spatial_enrich"])
+def test_keep_original_skip_preserves_existing_elev(spark, fixture_dir, op):
     rdf = spark.read.parquet(f"{fixture_dir}/raster_tiles.parquet")
     idx = raster.RasterIndex.from_df(rdf)
     pts = spark.createDataFrame(
@@ -212,9 +215,15 @@ def test_keep_original_skip_preserves_existing_elev(spark, fixture_dir):
         ],
         "id long, lon double, lat double, elev double, skip boolean",
     )
-    out = raster.enrich_with_elevation(
-        pts, idx, skip_col="skip", keep_original=True
-    )
+    if op == "enrich_with_elevation":
+        out = raster.enrich_with_elevation(
+            pts, idx, skip_col="skip", keep_original=True
+        )
+    else:
+        out = spatial_enrich(
+            pts, AreaIndex(tile_size=1.0), idx, skip_col="skip",
+            keep_original=True,
+        )
     got = {r.id: r.elev for r in out.collect()}
     assert got[1] == 42.0
     assert got[2] is None

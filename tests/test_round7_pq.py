@@ -5,8 +5,11 @@ whose flips would silently change trained codebooks, PQ codes, and the
 `build_ivfpq_index` must likewise be a pure memory-layout change."""
 
 import numpy as np
+import pytest
 
-from ot_spark.webtext.simsearch import _sq_l2_small_sub
+from ot_spark.webtext.simsearch import (
+    _sq_l2_small_sub, train_ivf_centroids, train_pq_codebooks,
+)
 
 
 def _broadcast_sq_l2(Xs: np.ndarray, cent: np.ndarray) -> np.ndarray:
@@ -55,3 +58,17 @@ def test_row_chunked_coarse_assign_bit_equal():
             _broadcast_sq_l2(Xc, cent), axis=1
         )[:, :2]
     assert np.array_equal(whole, chunked)
+
+
+def test_trainers_reject_mismatched_sample_X():
+    # a precollected sample must be a 2-D matrix of at most `sample` rows;
+    # anything else would silently train drifted centroids/codebooks
+    rng = np.random.RandomState(13)
+    ok = rng.randn(64, 8)
+    for bad in (rng.randn(65, 8), rng.randn(64), rng.randn(2, 32, 8)):
+        with pytest.raises(ValueError, match="sample_X"):
+            train_ivf_centroids(None, n_centroids=4, sample=64, sample_X=bad)
+        with pytest.raises(ValueError, match="sample_X"):
+            train_pq_codebooks(None, m=2, k=4, sample=64, sample_X=bad)
+    assert train_ivf_centroids(None, n_centroids=4, sample=64, sample_X=ok).shape == (4, 8)
+    assert train_pq_codebooks(None, m=2, k=4, sample=64, sample_X=ok).shape == (2, 4, 4)

@@ -1,4 +1,4 @@
-"""S2 / h3ish cell index tests: structural invariants + golden anchors.
+"""S2 / H3 cell index tests: structural invariants + golden anchors.
 
 No s2/h3 library exists in this environment to diff against, so correctness
 is pinned by the algorithm's own contracts (SURVEY.md §7.3): face bits,
@@ -97,31 +97,7 @@ def test_s2_spark_column(spark):
     assert out[2].s2_12 is None
 
 
-# ------------------------------------------------------------------- h3ish
-
-def test_h3ish_hierarchy_and_determinism():
-    rng = np.random.RandomState(3)
-    lat = rng.uniform(-60, 60, 1000)
-    lon = rng.uniform(-170, 170, 1000)
-    c9 = s2h3.h3ish_cell_ids(lat, lon, 9)
-    c7 = s2h3.h3ish_cell_ids(lat, lon, 7)
-    assert np.array_equal(c9, s2h3.h3ish_cell_ids(lat.copy(), lon.copy(), 9))
-    # res encoded in id
-    res, _, _ = s2h3.h3ish_decode(c9)
-    assert set(res.tolist()) == {9}
-    # center-containment hierarchy: parent(child) == res-7 cell of the
-    # child's center for >= 99% of points (hex hierarchy is approximate at
-    # boundaries — same caveat as true H3)
-    par = s2h3.h3ish_parent(c9, 7)
-    agree = (par == c7).mean()
-    assert agree > 0.85
-
-
-def test_h3ish_neighbors_differ():
-    a = s2h3.h3ish_cell_ids(np.array([10.0]), np.array([20.0]), 7)
-    b = s2h3.h3ish_cell_ids(np.array([10.0]), np.array([20.0 + 10 * s2h3.h3ish_size(7)]), 7)
-    assert a[0] != b[0]
-
+# ------------------------------------------------------------------- h3x
 
 def test_h3x_kring_sizes_and_contiguity():
     """k-ring contiguity on TRUE-GEOMETRY H3 (h3x_kring replaced the
@@ -154,20 +130,6 @@ def test_h3x_kring_sizes_and_contiguity():
         dist = (np.abs(di) + np.abs(dj) + np.abs(di - dj)) // 2
         assert (dist == k).all(), dist
         prev, seen = ring, seen | ring
-
-
-def test_h3ish_spark_columns(spark, pages):
-    from ot_spark import parse
-
-    df = parse.with_coordinates(pages.limit(200))
-    out = s2h3.with_h3ish_cells(df, (7, 9))
-    rows = out.select("url", "lat", "lon", "h3_7", "h3_9").collect()
-    for r in rows:
-        if r.lat is None:
-            assert r.h3_7 is None and r.h3_9 is None
-        else:
-            want7 = int(s2h3.h3ish_cell_ids(np.array([r.lat]), np.array([r.lon]), 7)[0])
-            assert r.h3_7 == want7
 
 
 def test_knn_nearest_raster_h3x(spark, fixture_dir):

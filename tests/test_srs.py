@@ -8,6 +8,8 @@ import numpy as np
 import pytest
 
 from ot_spark import raster, srs
+from ot_spark.area_index import AreaIndex
+from ot_spark.enrich_fused import spatial_enrich
 
 LIMBURG = (50.38536322, 8.06185930)          # lat, lon
 LIMBURG_25832 = (433305.7043197789, 5581899.216447188)
@@ -61,12 +63,24 @@ def test_name_resolver():
         srs.epsg_params(2000)
 
 
-def test_projected_raster_lookup(spark):
-    # 100 m UTM32N tile around the Limburg golden point; value = py*1000+px
+# every elevation operator: the composed reference and the pipeline's
+# fused enrichment (no admin polygons: an empty AreaIndex)
+ELEVATION_OPS = {
+    "enrich_with_elevation": raster.enrich_with_elevation,
+    "spatial_enrich": lambda df, idx: spatial_enrich(df, AreaIndex(tile_size=1.0), idx),
+}
+
+
+@pytest.mark.parametrize("epsg", [25832, 2000])
+@pytest.mark.parametrize("op", sorted(ELEVATION_OPS))
+def test_projected_raster_lookup(spark, op, epsg):
+    # 100 m UTM32N tile around the Limburg golden point; value = py*1000+px.
+    # EPSG:2000 is not resolvable (test_name_resolver): the point is routed
+    # to the tile but gets NULL elevation instead of failing the stage
     grid = (np.arange(80)[:, None] * 1000 + np.arange(60)[None, :]).astype(float)
     idx = raster.RasterIndex([
         {
-            "raster_id": "utm", "epsg": 25832,
+            "raster_id": "utm", "epsg": epsg,
             "min_lon": 8.0, "max_lon": 8.1, "min_lat": 50.3, "max_lat": 50.45,
             "min_x": 430000.0, "max_y": 5585000.0,
             "pixel_w": 100.0, "pixel_h": 100.0,
@@ -76,11 +90,11 @@ def test_projected_raster_lookup(spark):
     pts = spark.createDataFrame(
         [(1, LIMBURG[1], LIMBURG[0])], "id long, lon double, lat double"
     )
-    out = raster.enrich_with_elevation(pts, idx).first()
+    out = ELEVATION_OPS[op](pts, idx).first()
     px = int((LIMBURG_25832[0] - 430000.0) // 100)
     py = int((5585000.0 - LIMBURG_25832[1]) // 100)
     assert out.raster_id == "utm"
-    assert out.elev == float(py * 1000 + px)
+    assert out.elev == (float(py * 1000 + px) if srs.epsg_supported(epsg) else None)
 
 
 def test_transform_cols_spark(spark):

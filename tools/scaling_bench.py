@@ -249,8 +249,8 @@ def main() -> None:
 
 Sandbox adaptation (no multi-node cluster; per driver instruction): the
 SAME flagship pipeline (parquet scan -> coordinate parse -> attribute
-filter -> tag projection -> grid+S2+h3ish tiling -> broadcast PIP join ->
-raster elevation -> sink) over the SAME {N_PAGES:,}-row deterministic
+filter -> tag projection -> fused enrich: grid cell + admin PIP + raster
+elevation + S2/H3 tiles -> sink) over the SAME {N_PAGES:,}-row deterministic
 pages parquet, at two local parallelism levels, one fresh JVM per level,
 both sessions alive simultaneously with runs INTERLEAVED N,4N,N,4N,...
 (host noise hits both levels alike), {warmup} warm-up rounds (tiered JIT),
