@@ -176,18 +176,17 @@ def test_pipeline_build_one_enrichment_for_every_config(spark, fixture_dir, tmp_
     spark.read.parquet(pages_path).withColumn(
         "elev", F.when(F.xxhash64("url") % 3 == 0, F.lit(123.45))
     ).write.parquet(elev_path)
+    common = dict(links_path=f"{fixture_dir}/links.parquet", raster_index=ridx)
     configs = {
-        "admin+raster": PipelineConfig(pages_path=pages_path, admin_index=idx),
-        "no admin": PipelineConfig(pages_path=pages_path),
+        "admin+raster": PipelineConfig(pages_path, admin_index=idx, **common),
+        "no admin": PipelineConfig(pages_path, **common),
         "keep original": PipelineConfig(
-            pages_path=elev_path, admin_index=idx, keep_original_elevation=True
+            elev_path, admin_index=idx, keep_original_elevation=True, **common
         ),
     }
     cols = ["url", "grid_cell", "admin_key", "raster_id", "elev", "s2_10", "h3_7", "h3_9"]
     column_sets, got = set(), {}
     for name, cfg in configs.items():
-        cfg.links_path = f"{fixture_dir}/links.parquet"
-        cfg.raster_index = ridx
         out = Pipeline(cfg).build(spark)
         column_sets.add(frozenset(out.columns))
         base = out.select("url", "lat", "lon", "no_elevation")
