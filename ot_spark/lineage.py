@@ -47,7 +47,6 @@ import os
 import time
 import uuid
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -71,6 +70,11 @@ def _hadoop_path(spark: SparkSession, path: str):
     through the one FileSystem API Spark itself writes with."""
     p = spark._jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _bucket_of(status) -> int:
+    """The bucket of a ``<bucket col>=<b>/<run col>=<id>`` dir's FileStatus."""
+    return int(status.getPath().getParent().getName().partition("=")[2])
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
@@ -258,13 +262,11 @@ def write_with_lineage(
     run_id = run_id or f"r{uuid.uuid4().hex[:12]}"
     bucketed = with_bucket(df, cell_col, n_buckets)
 
-    done_list = _completed_bucket_list(spark, lineage_path)
-    done = None
-    skipped = 0
-    if done_list is not None:
-        skipped = len(done_list)
-        done = local_df(spark, [(int(b),) for b in done_list], f"{BUCKET_COL} int")
-        bucketed = bucketed.join(F.broadcast(done), BUCKET_COL, "left_anti")
+    done = set(_completed_bucket_list(spark, lineage_path) or ())
+    skipped = len(done)
+    if done:
+        done_df = local_df(spark, [(int(b),) for b in sorted(done)], f"{BUCKET_COL} int")
+        bucketed = bucketed.join(F.broadcast(done_df), BUCKET_COL, "left_anti")
 
     # idempotency: every run writes only under its own run=<id> subdirs, so
     # committed (bucket, run) dirs are never touched; a half-written bucket
@@ -274,8 +276,7 @@ def write_with_lineage(
     # lineage does not record, so the append below cannot duplicate rows.
     fs, run_dirs = _hadoop_path(spark, f"{out_dir}/{BUCKET_COL}=*/{RUN_COL}={run_id}")
     for st in fs.globStatus(run_dirs) or []:
-        bucket = int(st.getPath().getParent().getName().partition("=")[2])
-        if bucket not in (done_list or ()):
+        if _bucket_of(st) not in done:
             fs.delete(st.getPath(), True)
 
     # hash-distribute on bucket before the partitioned write (Iceberg's
@@ -297,14 +298,22 @@ def write_with_lineage(
     # pipeline again for the agg and a third time for the count — the
     # round-2 3x-compute finding).  Reading what actually landed also makes
     # the checksum an integrity audit of the files themselves.  Restrict to
-    # THIS run's subdirs == exactly the buckets this run committed.
-    try:
+    # THIS run's dirs of buckets lineage does not record == exactly the
+    # buckets this run committed, listed once; an empty input (or a resume
+    # that skipped every bucket) wrote none and reads nothing.
+    landed_dirs = [
+        st.getPath().toString()
+        for st in fs.globStatus(run_dirs) or []
+        if _bucket_of(st) not in done
+    ]
+    rows = []
+    if landed_dirs:
         # _metadata is a hidden column: select it at the scan (it does not
         # survive joins) so the lineage row can list its data files.
-        # Path-glob to THIS run's dirs (basePath recovers the partition
-        # cols) and read them with the schema just written: no footer
-        # inference job, no stale schema from files that predate a
-        # rename/add, and run stays a string whatever the id looks like.
+        # basePath recovers the partition cols; reading with the schema just
+        # written means no footer inference job, no stale schema from files
+        # that predate a rename/add, and run stays a string whatever the id
+        # looks like.
         cols = frame.schema
         landed = (
             spark.read.schema(StructType(
@@ -312,18 +321,9 @@ def write_with_lineage(
                 + [cols[BUCKET_COL], cols[RUN_COL]]
             ))
             .option("basePath", out_dir)
-            .parquet(f"{out_dir}/{BUCKET_COL}=*/{RUN_COL}={run_id}")
+            .parquet(*landed_dirs)
             .select("*", F.col("_metadata.file_path").alias("__file"))
         )
-    except AnalysisException:  # empty input wrote no files at all (the
-        # glob matches nothing -> PATH_NOT_FOUND); any other read failure
-        # propagates (round-3 advice: a swallowed transient error silently
-        # recorded "nothing written")
-        landed = None
-    rows = []
-    if landed is not None:
-        if done is not None:
-            landed = landed.join(F.broadcast(done), BUCKET_COL, "left_anti")
         lineage = (
             landed.groupBy(BUCKET_COL)
             .agg(

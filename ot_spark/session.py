@@ -4,7 +4,8 @@ Local-mode testing, cluster-shaped configuration: AQE on (runtime re-plan,
 skew-join splitting, small-partition coalescing), Arrow on (all Python
 boundaries are vectorized), shuffle partitions sized to parallelism rather
 than the 200 default.  On a real cluster the same builder is used with
-``master`` left to spark-submit.
+``master`` left to spark-submit.  A driver JVM this process launches for a
+local master starts over a class-data-sharing archive (:mod:`ot_spark.cds`).
 """
 
 from __future__ import annotations
@@ -14,6 +15,8 @@ import os
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from . import cds
 
 
 def get_spark(
@@ -30,6 +33,8 @@ def get_spark(
     partitions default to 2x parallelism — enough to keep AQE's coalescing
     busy without tiny-task overhead at local scale; at 100 TB this knob is
     instead set to ~2-3x total executor cores and AQE coalesces down.
+    A ``spark.driver.extraJavaOptions`` in ``extra_conf`` is kept; the
+    class-data-sharing flags are appended to it.
     """
     if parallelism is None:
         parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -38,20 +43,18 @@ def get_spark(
     if master is None:
         master = f"local[{parallelism}]"
 
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(parallelism))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("OT_SPARK_DRIVER_MEM", "24g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.default.parallelism": str(parallelism),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.driver.memory": os.environ.get("OT_SPARK_DRIVER_MEM", "24g"),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # InferFiltersFromGenerate synthesizes `size(arr)>0 AND isnotnull`
         # above every explode; PushDownPredicate then moves it below the
         # scan-parallelism-floor repartition and CollapseProject INLINES
@@ -62,32 +65,30 @@ def get_spark(
         # The rule only prunes empty-array rows pre-shuffle — a no-op
         # semantically, and our explodes sit above the fan repartition
         # where the early prune saves nothing.  Overridable per deploy.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            os.environ.get(
-                "OT_SPARK_EXCLUDED_RULES",
-                "org.apache.spark.sql.catalyst.optimizer."
-                "InferFiltersFromGenerate",
-            ),
-        )
+        "spark.sql.optimizer.excludedRules": os.environ.get(
+            "OT_SPARK_EXCLUDED_RULES",
+            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+        ),
         # HotSpot never JIT-compiles methods over ~8 KB of bytecode, so a
         # whole-stage-fused method past that limit runs JVM-INTERPRETED —
         # measured 3x slower than per-operator execution on the Bloom
         # register build (big generated expression trees: sketches, h3x).
         # Capping hugeMethodLimit at the JIT threshold makes Spark fall
         # back to the per-operator path exactly when fusion stops paying.
-        .config("spark.sql.codegen.hugeMethodLimit", "8000")
-    )
+        "spark.sql.codegen.hugeMethodLimit": "8000",
+    }
     if master.startswith("local"):
-        # Past this many paths (default 32; the 64-bucket read-back glob has
-        # 65) Spark lists them in a job, whose scheduling costs more than a
+        # Past this many paths (default 32; the 64-bucket read-back lists
+        # 64 run dirs) Spark lists them in a job, whose scheduling costs more than a
         # local listing: on 4 cores, reads of a 1920-run-dir table were ~0.1 s
         # faster listed on the driver.  Cluster masters keep the default.
-        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-        builder = builder.config(key, str(2**31 - 1))
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+        conf["spark.sql.sources.parallelPartitionDiscovery.threshold"] = str(2**31 - 1)
+    conf.update(extra_conf or {})
+    spark = cds.get_or_create(
+        lambda c: SparkSession.builder.master(master).appName(app_name).config(map=c).getOrCreate(),
+        master,
+        conf,
+    )
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -15,6 +15,9 @@
 
 from __future__ import annotations
 
+import functools
+import warnings
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -510,6 +513,36 @@ def with_pq_codes(
     )
 
 
+def _sq_l2_broadcast(Xs: np.ndarray, cent: np.ndarray) -> np.ndarray:
+    return ((Xs[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+
+
+def _sq_l2_accumulate(Xs: np.ndarray, cent: np.ndarray) -> np.ndarray:
+    d2 = (Xs[:, 0, None] - cent[None, :, 0]) ** 2
+    for j in range(1, Xs.shape[1]):
+        d2 += (Xs[:, j, None] - cent[None, :, j]) ** 2
+    return d2
+
+
+@functools.cache
+def _accumulate_is_exact() -> bool:
+    """Whether this numpy sums a length-<8 axis left to right, checked once
+    per process on a fixed input; warns when it does not."""
+    rng = np.random.RandomState(7)
+    for sub in range(1, 8):
+        Xs = rng.randn(33, sub) * rng.choice([1e-6, 1.0, 1e6], size=sub)
+        cent = rng.randn(9, sub)
+        if not np.array_equal(_sq_l2_accumulate(Xs, cent), _sq_l2_broadcast(Xs, cent)):
+            warnings.warn(
+                f"numpy {np.__version__} does not sum a length-{sub} axis left to "
+                "right: PQ/IVF distances use the slower broadcast form",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+            return False
+    return True
+
+
 def _sq_l2_small_sub(Xs: np.ndarray, cent: np.ndarray) -> np.ndarray:
     """(n, k) squared-L2 matrix, BIT-IDENTICAL to
     ``((Xs[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)`` for
@@ -521,18 +554,17 @@ def _sq_l2_small_sub(Xs: np.ndarray, cent: np.ndarray) -> np.ndarray:
     this explicit term accumulation — so every float is reproduced to
     the last ulp (pinned by tests/test_round7_pq.py on random data;
     at length 8 numpy switches to its unrolled multi-accumulator loop
-    and the orders diverge, measured, so 8 takes the fallback).
+    and the orders diverge, measured, so 8 takes the fallback).  That
+    order is a numpy internal, so ``_accumulate_is_exact`` checks it on
+    first use and falls back to the broadcast form, with a warning, on a
+    numpy that sums differently.
     Why faster: the broadcast form materializes an (n, k, sub) 3D
     temporary (33 MB at n=4096, k=256 — far past L2) twice per call;
     accumulating per-dim (n, k) planes keeps the working set ~8x
     smaller."""
-    sub = Xs.shape[1]
-    if sub > 7:
-        return ((Xs[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-    d2 = (Xs[:, 0, None] - cent[None, :, 0]) ** 2
-    for j in range(1, sub):
-        d2 += (Xs[:, j, None] - cent[None, :, j]) ** 2
-    return d2
+    if Xs.shape[1] > 7 or not _accumulate_is_exact():
+        return _sq_l2_broadcast(Xs, cent)
+    return _sq_l2_accumulate(Xs, cent)
 
 
 def train_pq_codebooks(

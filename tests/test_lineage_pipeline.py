@@ -123,10 +123,12 @@ def test_full_pipeline_golden_counts(spark, fixture_dir, tmp_path):
     assert out.where(F.col("no_elevation") & F.col("elev").isNotNull()).count() == 0
 
 
-def test_pipeline_rerun_over_completed_output(spark, fixture_dir, tmp_path):
+def test_pipeline_rerun_over_completed_output(spark, fixture_dir, tmp_path, monkeypatch):
     """submit.py's resume: the same PipelineConfig re-run over a completed
     output writes no bucket, and its stage counters still come back even
-    though the bucket anti-join empties the write's input."""
+    though the bucket anti-join empties the write's input.  The lineage
+    read-back is skipped: nothing under the output is read."""
+    from pyspark.sql.readwriter import DataFrameReader
     idx = area_index.build_area_index(
         [(r["key"], r["name"], r["wkt"]) for r in gen_admin_polygons().to_pylist()]
     )
@@ -146,7 +148,18 @@ def test_pipeline_rerun_over_completed_output(spark, fixture_dir, tmp_path):
         )).run(spark)
 
     first = run("first")
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        reads.extend(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
     again = run("again")
+    monkeypatch.undo()
+    out = str(tmp_path / "out")
+    assert reads and not [p for p in reads if str(p).removeprefix("file:").startswith(out)]
     assert first["buckets_written"] > 0
     assert again["buckets_written"] == 0
     assert again["buckets_skipped"] == first["buckets_written"]

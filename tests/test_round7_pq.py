@@ -7,6 +7,7 @@ whose flips would silently change trained codebooks, PQ codes, and the
 import numpy as np
 import pytest
 
+from ot_spark.webtext import simsearch
 from ot_spark.webtext.simsearch import (
     _sq_l2_small_sub, train_ivf_centroids, train_pq_codebooks,
 )
@@ -42,6 +43,26 @@ def test_sq_l2_small_sub_argmin_ties_match():
     b = _broadcast_sq_l2(Xs, cent).argmin(axis=1)
     assert np.array_equal(a, b)
     assert a.max() < 8  # ties resolve to the first copy
+
+
+def test_sq_l2_small_sub_falls_back_loudly(monkeypatch):
+    # a numpy whose small-axis summation order differs: the first call
+    # warns and every call returns the broadcast form
+    accumulate = simsearch._sq_l2_accumulate
+    monkeypatch.setattr(
+        simsearch, "_sq_l2_accumulate", lambda X, c: np.nextafter(accumulate(X, c), np.inf)
+    )
+    simsearch._accumulate_is_exact.cache_clear()
+    try:
+        rng = np.random.RandomState(14)
+        Xs, cent = rng.randn(50, 4), rng.randn(6, 4)
+        with pytest.warns(RuntimeWarning, match="broadcast form"):
+            first = _sq_l2_small_sub(Xs, cent)
+        assert np.array_equal(first, _broadcast_sq_l2(Xs, cent))
+        assert not np.array_equal(first, simsearch._sq_l2_accumulate(Xs, cent))
+        assert np.array_equal(_sq_l2_small_sub(Xs, cent), first)
+    finally:
+        simsearch._accumulate_is_exact.cache_clear()
 
 
 def test_row_chunked_coarse_assign_bit_equal():
