@@ -2,30 +2,43 @@
 
 Most of a cold ``get_spark`` is the JVM loading and verifying ~12k classes
 from Spark's jars.  A dynamic AppCDS archive holds those classes already
-parsed; the JVM maps it at start instead.  The first launch for a given JDK
-and jar set runs with ``-XX:ArchiveClassesAtExit`` and the JVM writes the
-archive as it exits; later launches pass ``-XX:SharedArchiveFile``.
+parsed; the JVM maps it at start instead (``-XX:SharedArchiveFile``).
+
+The archive is built by a fixed training run, never by whichever run comes
+first, so what it holds depends only on the JDK, the jars and this module.
+A run that finds no usable archive starts its JVM as before and, at
+interpreter exit, builds one: a child process starts a JVM with
+``-XX:ArchiveClassesAtExit`` and runs ``_workload``, a small synthetic
+``Pipeline.run`` (bucketed write, lineage, resume) and the flagship chain,
+which load the classes of both of the engine's paths.  The build is
+announced on stderr and takes ~50 s on 4 cores; later runs map the
+archive.
 
 Files under ``${XDG_CACHE_HOME:-~/.cache}/ot_spark/cds/``:
 
-- ``conf/``: an empty ``SPARK_CONF_DIR`` for the launch.  Spark puts the
-  conf dir first on the classpath and the dump refuses a non-empty
-  directory there, so CDS is used only when the real conf dir holds nothing
-  but ``*.template`` files (a real ``spark-defaults.conf`` is never dropped).
-- ``<key>.<size>.jsa``: the archive.  ``key`` hashes ``libjvm`` and the jar
-  classpath (names, sizes, mtimes), so computing it starts no JVM.  The
-  byte size in the name is checked before launch: the JVM does not check
-  it, and mapping a truncated archive kills it with SIGBUS.
-- ``<key>.<pid>-<rand>.part`` / ``.log``: one launch's dump in progress and
-  its CDS log (CDS messages go there, never to stdout).  A dump becomes an
-  archive only by ``os.replace`` after the log shows it was written, and a
-  leftover of a dead process is deleted by the next launch.
+- ``conf/``: an empty ``SPARK_CONF_DIR`` for the build and for launches
+  that map the archive.  Spark puts the conf dir first on the classpath and
+  the dump refuses a non-empty directory there, so CDS is used only when
+  the real conf dir holds nothing but ``*.template`` files (a real
+  ``spark-defaults.conf`` is never dropped).
+- ``<key>.<size>.jsa``: the archive.  ``key`` hashes ``libjvm``, the jar
+  classpath (names, sizes, mtimes) and ``_TRAINING``, so computing it
+  starts no JVM.  The byte size in the name is checked before launch: the
+  JVM does not check it, and mapping a truncated archive kills it with
+  SIGBUS.
+- ``<key>.failed``: a build that made no archive leaves its child's stderr
+  here, and runs start without CDS until the file is deleted or the key
+  changes.
+- ``<key>.<pid>-<rand>.{part,log,err,tmp}``: one launch's or build's dump
+  in progress, CDS log (CDS messages go there, never to stdout), child
+  stderr and scratch dir.  A dump becomes an archive only by ``os.replace``
+  after the log shows it was written, and leftovers of a dead process are
+  deleted by the next launch.
 
 An archive the JVM does not use (wrong magic, classpath or JVM mismatch) is
-deleted, so the next launch dumps a new one; a launch that fails with CDS
-options is retried without them.  Under ``spark-submit``, with a running
-gateway or a non-local master, the JVM is not ours to start and nothing
-changes.
+deleted and rebuilt at exit; a launch that fails with CDS options is
+retried without them.  Under ``spark-submit``, with a running gateway or a
+non-local master, the JVM is not ours to start and nothing changes.
 """
 
 from __future__ import annotations
@@ -33,21 +46,32 @@ from __future__ import annotations
 import atexit
 import contextlib
 import hashlib
+import json
 import logging
 import os
 import shutil
 import subprocess
+import sys
+import time
 import uuid
 from collections.abc import Callable
 
 log = logging.getLogger(__name__)
 
-# a dumping JVM writes the archive (~150 MB) after Spark stops; the process
-# waits this long for it at exit before leaving the dump unfinished
-DUMP_WAIT_S = 120.0
+# bump when _workload changes: archives trained by the old one are rebuilt
+_TRAINING = "1"
+# the build's child process: start, training workload, dump (~150 MB)
+BUILD_TIMEOUT_S = 600.0
+# this process's own JVM, asked to exit before the build starts
+JVM_EXIT_WAIT_S = 60.0
 _MAPPED = "Mapped dynamic region"
 _REJECTED = "Unable to use shared archive"
 _WRITTEN = "Written dynamic archive"
+# the launch's settings the build's JVM takes over, so the archive matches
+# it (-Xmx past 32 GB turns compressed oops off, and the JVM then rejects
+# an archive dumped with them on)
+_JVM_CONF = ("spark.driver.memory", "spark.driver.extraJavaOptions", "spark.driver.extraClassPath")
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_or_create(create: Callable[[dict], object], master: str, conf: dict[str, str]):
@@ -56,6 +80,10 @@ def get_or_create(create: Callable[[dict], object], master: str, conf: dict[str,
     launch = _Launch.plan(master, conf)
     if launch is None:
         return create(conf)
+    if launch.archive is None:
+        spark = create(conf)
+        launch.build_at_exit(spark)
+        return spark
     from pyspark.errors import PySparkRuntimeError
 
     try:
@@ -66,8 +94,11 @@ def get_or_create(create: Callable[[dict], object], master: str, conf: dict[str,
             raise
         launch.discard()
         log.warning("driver JVM did not start with class-data sharing; starting it without")
-        return create(conf)
-    launch.started(spark)
+        spark = create(conf)
+        launch.build_at_exit(spark)
+        return spark
+    if not launch.mapped():
+        launch.build_at_exit(spark)
     return spark
 
 
@@ -96,7 +127,7 @@ def _archive_key(spark_home: str, extra_classpath: str) -> str | None:
     jars = os.path.join(spark_home, "jars")
     if libjvm is None or not os.path.isdir(jars):
         return None
-    h = hashlib.sha256()
+    h = hashlib.sha256(f"training {_TRAINING}\n".encode())
     st = os.stat(libjvm)
     h.update(f"{libjvm}\0{st.st_size}\0{st.st_mtime_ns}\n{jars}\n{extra_classpath}\n".encode())
     with os.scandir(jars) as it:
@@ -104,6 +135,15 @@ def _archive_key(spark_home: str, extra_classpath: str) -> str | None:
             st = e.stat()
             h.update(f"{e.name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
     return h.hexdigest()[:16]
+
+
+def _tag(cache: str, key: str) -> str:
+    """Path prefix of one launch's or build's files."""
+    return os.path.join(cache, f"{key}.{os.getpid()}-{uuid.uuid4().hex[:8]}")
+
+
+def _log_opts(log_path: str) -> str:
+    return f"-Xlog:cds*=off -Xlog:cds=info,cds+dynamic=info:file={log_path}"
 
 
 def _alive(pid: int) -> bool:
@@ -117,8 +157,11 @@ def _alive(pid: int) -> bool:
 
 
 def _unlink(path: str) -> None:
-    with contextlib.suppress(FileNotFoundError):
-        os.remove(path)
+    if os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+    else:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(path)
 
 
 def _read(path: str) -> str:
@@ -130,16 +173,15 @@ def _read(path: str) -> str:
 
 
 class _Launch:
-    """One driver-JVM launch: it maps ``archive``, or dumps to ``part``."""
+    """One driver-JVM launch; it maps ``archive`` when there is one."""
 
-    def __init__(self, cache: str, key: str, archive: str | None):
+    def __init__(self, cache: str, key: str, archive: str | None, conf: dict[str, str]):
         self.cache = cache
         self.key = key
         self.archive = archive
+        self.jvm_conf = {k: conf[k] for k in _JVM_CONF if k in conf}
         self.inode = os.stat(archive).st_ino if archive else None
-        tag = f"{key}.{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        self.part = None if archive else os.path.join(cache, f"{tag}.part")
-        self.log_path = os.path.join(cache, f"{tag}.log")
+        self.log_path = _tag(cache, key) + ".log"
 
     @classmethod
     def plan(cls, master: str, conf: dict[str, str]) -> _Launch | None:
@@ -186,41 +228,16 @@ class _Launch:
         os.makedirs(empty_conf, exist_ok=True)
         if os.listdir(empty_conf):
             return None
-        return cls(cache, key, cls._sweep(cache, key))
-
-    @staticmethod
-    def _sweep(cache: str, key: str) -> str | None:
-        """Delete dumps and logs of dead processes and this key's truncated
-        archives; return this key's newest intact archive."""
-        found = []
-        for name in os.listdir(cache):
-            path = os.path.join(cache, name)
-            stem, _, ext = name.rpartition(".")
-            if ext in ("part", "log"):
-                pid = stem.rpartition(".")[2].partition("-")[0]
-                if not (pid.isdigit() and _alive(int(pid))):
-                    _unlink(path)
-            elif ext == "jsa" and stem.startswith(key + "."):
-                st = os.stat(path)
-                want = stem[len(key) + 1:]
-                if want.isdigit() and st.st_size == int(want):
-                    found.append((st.st_mtime_ns, path))
-                else:
-                    _unlink(path)
-                    log.warning(
-                        "class-data archive %s is %d bytes, not %s; deleted, this run dumps a new one",
-                        path, st.st_size, want,
-                    )
-        return max(found)[1] if found else None
+        failed = os.path.join(cache, f"{key}.failed")
+        if os.path.exists(failed):
+            log.info("JVM class-data sharing off: building the archive failed, see %s", failed)
+            return None
+        return cls(cache, key, _sweep(cache, key), conf)
 
     def apply(self, conf: dict[str, str]) -> dict[str, str]:
         """``conf`` with the CDS flags appended to the caller's driver java
         options; CDS messages go to this launch's log file only."""
-        flag = (
-            f"-XX:SharedArchiveFile={self.archive}" if self.archive
-            else f"-XX:ArchiveClassesAtExit={self.part}"
-        )
-        ours = f"{flag} -Xlog:cds*=off -Xlog:cds=info,cds+dynamic=info:file={self.log_path}"
+        ours = f"-XX:SharedArchiveFile={self.archive} {_log_opts(self.log_path)}"
         opts = " ".join(filter(None, [conf.get("spark.driver.extraJavaOptions"), ours]))
         return {**conf, "spark.driver.extraJavaOptions": opts}
 
@@ -238,50 +255,164 @@ class _Launch:
                 os.environ["SPARK_CONF_DIR"] = prev
 
     def discard(self) -> None:
-        """The JVM did not start: drop this launch's files and the archive."""
-        for path in (self.part, self.log_path, self.archive):
-            if path:
-                _unlink(path)
+        """The JVM did not start: drop this launch's log and the archive."""
+        _unlink(self.log_path)
+        _unlink(self.archive)
 
-    def started(self, spark) -> None:
-        if self.archive is None:
-            proc = spark.sparkContext._gateway.proc
-            atexit.register(self._finish_dump, proc)
-            log.info("JVM class-data archive: dumping at JVM exit (%s)", self.part)
-            return
+    def mapped(self) -> bool:
+        """Whether the JVM mapped the archive; one it did not use is deleted."""
         text = _read(self.log_path)
         _unlink(self.log_path)
         if _MAPPED in text and _REJECTED not in text:
             log.info("JVM class-data archive: mapped %s", self.archive)
-            return
+            return True
         with contextlib.suppress(FileNotFoundError):
             if os.stat(self.archive).st_ino == self.inode:
                 os.remove(self.archive)
         log.warning(
-            "class-data archive %s was not used by the JVM; deleted, the next run dumps a new one",
+            "class-data archive %s was not used by the JVM; deleted, a new one is built at exit",
             self.archive,
         )
+        return False
 
-    def _finish_dump(self, proc: subprocess.Popen) -> None:
-        """At interpreter exit: let the JVM exit and write the dump, then
-        move it into place and delete archives of other keys."""
-        if proc.poll() is None:
-            with contextlib.suppress(OSError, ValueError):
-                proc.stdin.close()  # the gateway exits on EOF
-            try:
-                proc.wait(timeout=DUMP_WAIT_S)
-            except subprocess.TimeoutExpired:
-                return  # still writing; a later launch deletes the part
-        written = _WRITTEN in _read(self.log_path)
-        _unlink(self.log_path)
-        if not (written and os.path.isfile(self.part)):
-            _unlink(self.part)
+    def build_at_exit(self, spark) -> None:
+        proc = spark.sparkContext._gateway.proc
+        atexit.register(_build, self.cache, self.key, self.jvm_conf, proc)
+        log.info("JVM class-data archive: none usable in %s; one is built at exit", self.cache)
+
+
+def _sweep(cache: str, key: str) -> str | None:
+    """Delete files of dead processes and this key's truncated archives;
+    return this key's newest intact archive."""
+    found = []
+    for name in os.listdir(cache):
+        path = os.path.join(cache, name)
+        stem, _, ext = name.rpartition(".")
+        if ext in ("part", "log", "err", "tmp"):
+            pid = stem.rpartition(".")[2].partition("-")[0]
+            if not (pid.isdigit() and _alive(int(pid))):
+                _unlink(path)
+        elif ext == "jsa" and stem.startswith(key + "."):
+            st = os.stat(path)
+            want = stem[len(key) + 1:]
+            if want.isdigit() and st.st_size == int(want):
+                found.append((st.st_mtime_ns, path))
+            else:
+                _unlink(path)
+                log.warning(
+                    "class-data archive %s is %d bytes, not %s; deleted, a new one is built at exit",
+                    path, st.st_size, want,
+                )
+    return max(found)[1] if found else None
+
+
+def _build(cache: str, key: str, jvm_conf: dict[str, str], proc: subprocess.Popen | None) -> None:
+    """At interpreter exit: let this process's JVM exit, build the archive in
+    a child process, move it into place and delete archives of other keys."""
+    if proc is not None and proc.poll() is None:
+        from pyspark import SparkContext
+
+        if SparkContext._active_spark_context is not None:
+            # stops the accumulator server too, which otherwise prints an
+            # EOFError traceback when the JVM goes away under it
+            with contextlib.suppress(Exception):
+                SparkContext._active_spark_context.stop()
+        with contextlib.suppress(OSError, ValueError):
+            proc.stdin.close()  # the gateway exits on EOF
+        with contextlib.suppress(subprocess.TimeoutExpired):
+            proc.wait(timeout=JVM_EXIT_WAIT_S)
+    try:
+        if _sweep(cache, key) is not None:
+            return  # another process built it meanwhile
+        tag = _tag(cache, key)
+        os.makedirs(tag + ".tmp")
+    except OSError as e:  # the cache went away meanwhile: no archive this time
+        log.warning("class-data archive not built: %s", e)
+        return
+    part, log_path, err, tmp = (f"{tag}.{ext}" for ext in ("part", "log", "err", "tmp"))
+    log.warning(
+        "building the JVM class-data archive in %s (once per JDK and jar set; ~50 s)", cache
+    )
+    env = {k: v for k, v in os.environ.items() if not k.startswith("PYSPARK_GATEWAY_")}
+    env.update(
+        SPARK_CONF_DIR=os.path.join(cache, "conf"), TMPDIR=tmp, SPARK_LOCAL_DIRS=tmp,
+        PYTHONPATH=os.pathsep.join(filter(None, [_PKG_PARENT, env.get("PYTHONPATH")])),
+    )
+    cmd = "import sys; from ot_spark import cds; cds._train(*sys.argv[1:])"
+    t0 = time.perf_counter()
+    try:
+        with open(err, "wb") as fh:
+            code = subprocess.run(
+                [sys.executable, "-c", cmd, part, log_path, tmp, json.dumps(jvm_conf)],
+                env=env, stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL, stderr=fh,
+                timeout=BUILD_TIMEOUT_S,
+            ).returncode
+        if not (code == 0 and _WRITTEN in _read(log_path) and os.path.isfile(part)):
+            failed = os.path.join(cache, f"{key}.failed")
+            os.replace(err, failed)
+            log.warning(
+                "building the JVM class-data archive failed (exit %s); runs start without it "
+                "until %s is deleted", code, failed,
+            )
             return
-        final = os.path.join(self.cache, f"{self.key}.{os.path.getsize(self.part)}.jsa")
-        try:
-            os.replace(self.part, final)
-            for name in os.listdir(self.cache):
-                if name.endswith(".jsa") and os.path.join(self.cache, name) != final:
-                    _unlink(os.path.join(self.cache, name))
-        except OSError as e:  # the cache went away meanwhile: no archive this time
-            log.warning("class-data archive not kept: %s", e)
+        final = os.path.join(cache, f"{key}.{os.path.getsize(part)}.jsa")
+        os.replace(part, final)
+        for name in os.listdir(cache):
+            if name.endswith((".jsa", ".failed")) and os.path.join(cache, name) != final:
+                _unlink(os.path.join(cache, name))
+        log.warning(
+            "JVM class-data archive built in %.0f s: %s", time.perf_counter() - t0, final
+        )
+    except subprocess.TimeoutExpired:
+        log.warning("building the JVM class-data archive took over %.0f s; gave up", BUILD_TIMEOUT_S)
+    except OSError as e:
+        log.warning("class-data archive not built: %s", e)
+    finally:
+        for path in (part, log_path, err, tmp):
+            _unlink(path)
+
+
+def _train(part: str, log_path: str, tmp: str, jvm_conf: str) -> None:
+    """The build's child process: its JVM, started with the launch's
+    ``jvm_conf``, runs ``_workload`` and dumps the classes it loaded to
+    ``part`` as it exits."""
+    from pyspark import SparkContext
+
+    from .session import get_spark
+
+    conf = json.loads(jvm_conf)
+    ours = f"-XX:ArchiveClassesAtExit={part} -Djava.io.tmpdir={tmp} {_log_opts(log_path)}"
+    opts = [conf.get("spark.driver.extraJavaOptions"), ours]
+    conf["spark.driver.extraJavaOptions"] = " ".join(filter(None, opts))
+    spark = get_spark("ot_spark_cds_build", parallelism=2, extra_conf=conf)
+    _workload(spark, tmp)
+    spark.stop()
+    proc = SparkContext._gateway.proc
+    proc.stdin.close()  # the gateway exits on EOF; the JVM then writes the dump
+    proc.wait(timeout=BUILD_TIMEOUT_S)
+
+
+def _workload(spark, tmp: str) -> None:
+    """Both engine paths on the synthetic fixture: ``Pipeline.run`` (semi
+    join, fused enrich, bucketed write, lineage) and its all-skipped resume,
+    the flagship chain into a noop sink, and a read of the output."""
+    from . import filters, parse, synth
+    from .area_index import build_area_index
+    from .enrich_fused import spatial_enrich
+    from .pipeline import Pipeline, PipelineConfig
+    from .raster import RasterIndex
+
+    paths = synth.write_fixture_dir(os.path.join(tmp, "in"), n_pages=2000)
+    rows = [(r["key"], r["name"], r["wkt"]) for r in synth.gen_admin_polygons().to_pylist()]
+    idx = build_area_index(rows, tile_size=1.0)
+    ridx = RasterIndex.from_arrow(synth.gen_raster_tiles())
+    cfg = PipelineConfig(
+        pages_path=paths["pages"], links_path=paths["links"], out_dir=os.path.join(tmp, "out"),
+        admin_index=idx, raster_index=ridx, run_id="cds",
+    )
+    for _ in range(2):
+        Pipeline(cfg).run(spark)
+    df = parse.with_coordinates(spark.read.parquet(paths["pages"]))
+    df = filters.remove_tags(filters.complex_filter(df))
+    spatial_enrich(df, idx, ridx).write.format("noop").mode("overwrite").save()
+    spark.read.parquet(cfg.out_dir).count()

@@ -10,6 +10,7 @@ import os
 import shutil
 import subprocess
 import sys
+import types
 
 import pytest
 
@@ -21,17 +22,23 @@ logging.basicConfig(level=logging.INFO, stream=sys.stderr, format="LOG %(levelna
 from ot_spark.session import get_spark
 spark = get_spark("cds_test", parallelism=2, extra_conf=json.loads(sys.argv[1]))
 jvm = spark.sparkContext._jvm
+args = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
 print("RESULT " + json.dumps({
-    "rows": spark.range(100).count(),
+    "rows": spark.range(100).mapInArrow(lambda it: it, "id long").count(),
     "prop": jvm.java.lang.System.getProperty("ot.cds.test"),
     "marker": spark.conf.get("spark.ot.cds.marker", None),
+    "cds_args": [str(a) for a in args if "Archive" in str(a)],
 }))
 """
+
+BUILT = "JVM class-data archive built"
 
 
 def _run(cache, extra_conf=None, conf_dir=None) -> tuple[dict, str]:
     """(result, stderr) of one fresh process, whose stdout must hold only
-    the result line: nothing from the JVM, the dump or CDS reaches it."""
+    the result line: nothing from the JVM, the dump or CDS reaches it.  Its
+    Python-worker job makes the JVM connect to the accumulator server, which
+    must not report the JVM's exit before a build as an error."""
     env = dict(os.environ, XDG_CACHE_HOME=str(cache), OT_SPARK_DRIVER_MEM="1g")
     env.pop("SPARK_CONF_DIR", None)
     if conf_dir is not None:
@@ -41,6 +48,7 @@ def _run(cache, extra_conf=None, conf_dir=None) -> tuple[dict, str]:
         cwd=ROOT, env=env, capture_output=True, text=True, timeout=300,
     )
     assert p.returncode == 0, p.stderr[-3000:]
+    assert "Exception occurred" not in p.stderr, p.stderr[-3000:]
     lines = p.stdout.splitlines()
     assert len(lines) == 1 and lines[0].startswith("RESULT "), p.stdout
     result = json.loads(lines[0].removeprefix("RESULT "))
@@ -53,7 +61,11 @@ def _cds_files(cache, pattern="*") -> list[str]:
 
 
 def _warnings(stderr: str) -> list[str]:
-    return [line for line in stderr.splitlines() if line.startswith("LOG WARNING ot_spark")]
+    """Warnings other than the build's start and end notices."""
+    return [
+        line for line in stderr.splitlines()
+        if line.startswith("LOG WARNING ot_spark") and "building the JVM" not in line and BUILT not in line
+    ]
 
 
 def _intact(path: str) -> bool:
@@ -61,8 +73,8 @@ def _intact(path: str) -> bool:
 
 
 @pytest.fixture(scope="module")
-def dumped(tmp_path_factory):
-    """A cache whose first run dumped the archive, that run's output, and a
+def built(tmp_path_factory):
+    """A cache whose first run built the archive, that run's output, and a
     copy of the cache's files."""
     cache = tmp_path_factory.mktemp("cds")
     first = _run(cache)
@@ -74,39 +86,42 @@ def dumped(tmp_path_factory):
 
 
 @pytest.fixture
-def cache(dumped):
-    """The dumped cache as its first run left it.  Restored in place: the
+def cache(built):
+    """The built cache as its first run left it.  Restored in place: the
     archive records the path of the empty conf dir beside it."""
-    cache, _, saved = dumped
+    cache, _, saved = built
     shutil.rmtree(os.path.join(cache, "ot_spark", "cds"))
     shutil.copytree(saved, os.path.join(cache, "ot_spark", "cds"))
     return cache
 
 
-def test_first_run_dumps_second_maps(dumped, cache):
-    _, stderr = dumped[1]
-    assert "class-data archive: dumping at JVM exit" in stderr
+def test_first_run_builds_second_maps(built, cache):
+    result, stderr = built[1]
+    assert result["cds_args"] == []  # the first run's own JVM neither maps nor dumps
+    assert "building the JVM class-data archive" in stderr and BUILT in stderr
+    assert _warnings(stderr) == []
     (archive,) = _cds_files(cache, "*.jsa")
     assert _intact(archive)
-    assert _cds_files(cache, "*.part") == _cds_files(cache, "*.log") == []
-    _, stderr = _run(cache)
+    assert _cds_files(cache, "*.*") == [archive]  # no part, log, err, tmp or failed file
+    result, stderr = _run(cache)
+    assert result["cds_args"] == [f"-XX:SharedArchiveFile={archive}"]
     assert f"class-data archive: mapped {archive}" in stderr
-    assert _warnings(stderr) == []
+    assert _warnings(stderr) == [] and BUILT not in stderr
 
 
-def test_truncated_archive_falls_back_and_dumps_again(cache):
+def test_truncated_archive_falls_back_and_is_rebuilt(cache):
     (archive,) = _cds_files(cache, "*.jsa")
     os.chmod(archive, 0o644)
     os.truncate(archive, os.path.getsize(archive) // 2)
-    _, stderr = _run(cache)
+    result, stderr = _run(cache)
     (warning,) = _warnings(stderr)
     assert archive in warning and "deleted" in warning
-    assert "dumping at JVM exit" in stderr
+    assert result["cds_args"] == [] and BUILT in stderr
     (fresh,) = _cds_files(cache, "*.jsa")
     assert _intact(fresh)
 
 
-def test_garbage_archive_falls_back_and_next_run_dumps(cache):
+def test_garbage_archive_falls_back_and_is_rebuilt(cache):
     (archive,) = _cds_files(cache, "*.jsa")
     os.chmod(archive, 0o644)
     with open(archive, "r+b") as fh:  # same size, so only the JVM can tell
@@ -114,11 +129,11 @@ def test_garbage_archive_falls_back_and_next_run_dumps(cache):
     _, stderr = _run(cache)
     (warning,) = _warnings(stderr)
     assert archive in warning and "not used by the JVM" in warning
-    assert _cds_files(cache, "*.jsa") == []
-    _, stderr = _run(cache)
-    assert "dumping at JVM exit" in stderr
+    assert BUILT in stderr
     (fresh,) = _cds_files(cache, "*.jsa")
     assert _intact(fresh)
+    result, stderr = _run(cache)
+    assert result["cds_args"] == [f"-XX:SharedArchiveFile={fresh}"] and _warnings(stderr) == []
 
 
 def test_caller_java_options_are_kept(cache):
@@ -139,28 +154,68 @@ def test_real_conf_dir_skips_cds(tmp_path):
     assert _cds_files(tmp_path / "cache", "*.jsa") == []
 
 
-def test_failed_launch_is_retried_without_cds(tmp_path, monkeypatch, caplog):
-    """A driver JVM that does not start with the CDS flags is started again
-    without them, and the launch's files are removed (no JVM needed)."""
+def _no_gateway(tmp_path, monkeypatch):
     from pyspark import SparkContext
-    from pyspark.errors import PySparkRuntimeError
-
-    from ot_spark import cds
 
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
     monkeypatch.setattr(SparkContext, "_gateway", None)
+
+
+def test_failed_launch_is_retried_without_cds(tmp_path, monkeypatch, caplog):
+    """A driver JVM that does not start with the archive is started again
+    without it, the archive and the launch's log are removed, and a new
+    archive is built at exit (no JVM needed)."""
+    from pyspark.errors import PySparkRuntimeError
+
+    from ot_spark import cds
+
+    _no_gateway(tmp_path, monkeypatch)
+    archive = tmp_path / "ot_spark" / "cds" / "k.4.jsa"
+    archive.parent.mkdir(parents=True)
+    archive.write_bytes(b"junk")
+    monkeypatch.setattr(cds, "_sweep", lambda cache, key: str(archive))
+    at_exit = []
+    monkeypatch.setattr(cds.atexit, "register", lambda *a: at_exit.append(a))
     seen = []
+    session = types.SimpleNamespace(sparkContext=types.SimpleNamespace(_gateway=types.SimpleNamespace(proc=None)))
 
     def create(conf):
         seen.append((conf.get("spark.driver.extraJavaOptions"), os.environ.get("SPARK_CONF_DIR")))
         if len(seen) == 1:
             raise PySparkRuntimeError(errorClass="JAVA_GATEWAY_EXITED", messageParameters={})
-        return "session"
+        return session
 
-    assert cds.get_or_create(create, "local[2]", {"spark.app.name": "x"}) == "session"
+    conf = {"spark.app.name": "x", "spark.driver.memory": "40g"}
+    assert cds.get_or_create(create, "local[2]", conf) is session
     (flags, conf_dir), (plain, plain_conf_dir) = seen
-    assert "-XX:ArchiveClassesAtExit=" in flags and conf_dir.startswith(str(tmp_path))
+    assert f"-XX:SharedArchiveFile={archive}" in flags and conf_dir.startswith(str(tmp_path))
     assert plain is None and plain_conf_dir is None
     assert _cds_files(tmp_path, "*.*") == []
     assert "starting it without" in caplog.text
+    ((fn, *_, jvm_conf, proc),) = at_exit
+    assert fn is cds._build and jvm_conf == {"spark.driver.memory": "40g"} and proc is None
+
+
+def test_failed_build_turns_cds_off(tmp_path, monkeypatch, caplog):
+    """A build whose child process fails keeps its stderr in ``<key>.failed``
+    and leaves nothing else; later launches then skip CDS (no JVM needed).
+    The child gets the launch's JVM settings."""
+    from ot_spark import cds
+
+    _no_gateway(tmp_path, monkeypatch)
+    cache = tmp_path / "ot_spark" / "cds"
+    cache.mkdir(parents=True)
+
+    def failing_child(cmd, stderr, **kw):
+        assert json.loads(cmd[-1]) == {"spark.driver.memory": "40g"}
+        stderr.write(b"boom\n")
+        return subprocess.CompletedProcess(cmd, 1)
+
+    monkeypatch.setattr(cds.subprocess, "run", failing_child)
+    cds._build(str(cache), "k", {"spark.driver.memory": "40g"}, None)
+    assert os.listdir(cache) == ["k.failed"]
+    assert (cache / "k.failed").read_text() == "boom\n"
+    assert "class-data archive failed" in caplog.text
+    monkeypatch.setattr(cds, "_archive_key", lambda *a: "k")
+    assert cds._Launch.plan("local[2]", {}) is None
