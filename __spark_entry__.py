@@ -3145,8 +3145,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time tumbling-window counts (the batch twin of
-    streaming.windowed_cell_counts; oracle = DuckDB time_bucket)."""
+    """Event-time tumbling-window counts (oracle = DuckDB time_bucket)."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return (
         ev.groupBy(

@@ -23,10 +23,6 @@ def num_tiles_lon(tile_size: float) -> int:
     return math.ceil(360.0 / tile_size)
 
 
-def num_tiles_lat(tile_size: float) -> int:
-    return math.ceil(180.0 / tile_size)
-
-
 def grid_cell(lat: Column, lon: Column, tile_size: float = 1.0) -> Column:
     """Cell id per the reference probe formula (src/area.rs:371).
 

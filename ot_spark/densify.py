@@ -338,11 +338,3 @@ def split_ways(
     )
     rewritten = links.drop(ref_col).join(rebuilt, link_key, "left")
     return new_nodes, rewritten
-
-
-def split_stats(new_nodes: DataFrame, link_key: str = "link_id") -> dict:
-    """splitted_way_count analog (geotiff.rs:584-586)."""
-    return {
-        "splitted_way_count": new_nodes.select(link_key).distinct().count(),
-        "new_node_count": new_nodes.count(),
-    }

@@ -208,21 +208,6 @@ def _up_step(i: np.ndarray, j: np.ndarray, child_res: int):
     return pi, pj, digit
 
 
-def _down_chain(i0: int, j0: int, digits: np.ndarray, res: int):
-    """Inverse of the up-chain: res-0 lattice point + digit path ->
-    res-`res` lattice point (vectorized over rows of `digits`)."""
-    i = np.full(digits.shape[0], i0, dtype=np.int64)
-    j = np.full(digits.shape[0], j0, dtype=np.int64)
-    for rr in range(1, res + 1):
-        if rr % 2 == 1:
-            ci, cj = 2 * i + j, -i + 3 * j
-        else:
-            ci, cj = 3 * i - j, i + 2 * j
-        off = np.array([_OFF_OF[int(d)] for d in digits[:, rr - 1]])
-        i, j = ci + off[:, 0], cj + off[:, 1]
-    return i, j
-
-
 def _rotate_digits(digits: np.ndarray, rot: np.ndarray) -> np.ndarray:
     """Rotate every non-center digit `rot` ccw 60-degree steps through the
     axis cycle (vectorized; rot broadcast per row)."""

@@ -641,10 +641,6 @@ def _meta_rows(spark: SparkSession, path: str) -> list | None:
     return None if df is None else df.collect()
 
 
-def schema_log(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    return _read_meta(spark, f"{out_dir}/{SCHEMAS_SUBDIR}")
-
-
 def partition_specs(spark: SparkSession, out_dir: str) -> DataFrame | None:
     return _read_meta(spark, f"{out_dir}/{SPECS_SUBDIR}")
 

@@ -39,8 +39,7 @@ def clean_features(
 ) -> DataFrame:
     """The narrow per-document feature frame every cleaning variant shares:
     one tokenizer evaluation feeding quality, repetition, and langid, plus
-    the content hash — all STATELESS Column algebra, so the same frame is
-    legal on a stream (see ot_spark.streaming.clean_stream).
+    the content hash — all per-row and STATELESS (no window, no shuffle).
 
     Columns: doc_id, __hash, n_tokens, stopword_ratio, lang_pred,
     dup_token_frac (rounded), __top_frac / __dup_frac (unrounded, for the

@@ -440,9 +440,6 @@ def minhash_dedup(
 
 # ------------------------------------------------------------------ simhash
 
-SIMHASH_BITS = {"xxhash": 64, "md5": 60}
-
-
 def _token_hash(t: Column, mode: str) -> Column:
     if mode == "xxhash":
         return F.xxhash64(t)

@@ -1,7 +1,7 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video ride as ``binary`` columns with a struct of metadata;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
+decode / feature-extract / frame-sample run as Arrow-batched
 ``mapInPandas`` transforms.  The container has no image/audio codecs, so
 REAL codec decode raises NotImplementedError behind a clearly marked stub —
 but everything Spark-side (schema, batching, partitioning, UDF signatures)
@@ -44,23 +44,16 @@ IMG_FEATURE_SCHEMA = StructType(
 )
 
 
-def make_fake_image(width: int, height: int, seed: int) -> bytes:
-    rng = np.random.RandomState(seed)
-    px = rng.randint(0, 256, width * height, dtype=np.uint8).tobytes()
-    return FAKE_IMG_MAGIC + struct.pack("<ii", width, height) + px
-
-
 # Weyl-style mixing constants (Knuth multiplicative / xxhash prime — public)
 _PORTABLE_C1 = 2654435761
 _PORTABLE_C2 = 2246822519
 
 
 def make_fake_image_portable(width: int, height: int, seed: int) -> bytes:
-    """Same container as ``make_fake_image`` but pixels come from a
-    CLOSED-FORM integer sequence, p_k = (seed*C1 + k*C2) mod 256, instead
-    of numpy's MT19937 — so a SQL oracle can re-derive every pixel (and
-    thus mean/std/hist) arithmetically while the Spark side still decodes
-    the actual bytes through the real mapInPandas path."""
+    """FAKEIMG1 container whose pixels come from a CLOSED-FORM integer
+    sequence, p_k = (seed*C1 + k*C2) mod 256 — so a SQL oracle can re-derive
+    every pixel (and thus mean/std/hist) arithmetically while the Spark side
+    still decodes the actual bytes through the real mapInPandas path."""
     px = bytes(
         (seed * _PORTABLE_C1 + k * _PORTABLE_C2) % 256
         for k in range(width * height)
@@ -90,18 +83,6 @@ def make_fake_video_portable(n_frames: int, seed: int) -> bytes:
         for k in range(n_frames * 16)
     )
     return FAKE_VID_MAGIC + struct.pack("<i", n_frames) + fb
-
-
-def make_fake_video(n_frames: int, seed: int) -> bytes:
-    rng = np.random.RandomState(seed)
-    frames = rng.randint(0, 256, n_frames * 16, dtype=np.uint8).tobytes()
-    return FAKE_VID_MAGIC + struct.pack("<i", n_frames) + frames
-
-
-def make_fake_audio(rate: int, n_samples: int, seed: int) -> bytes:
-    rng = np.random.RandomState(seed)
-    pcm = rng.randint(-2048, 2048, n_samples).astype("<i2").tobytes()
-    return FAKE_AUD_MAGIC + struct.pack("<ii", rate, n_samples) + pcm
 
 
 def _decode_audio(buf: bytes) -> tuple[int, np.ndarray]:
@@ -162,44 +143,6 @@ def with_audio_features(
     return df.mapInPandas(decode, out_schema)
 
 
-def resample_audio(
-    df: DataFrame,
-    payload_col: str = "payload",
-    target_rate: int = 8000,
-    out_col: str = "resampled",
-) -> DataFrame:
-    """Integer-factor decimation with block-mean anti-aliasing (the real
-    version would swap in a polyphase resampler); output = float64 samples
-    at ~target_rate."""
-    out_schema = StructType(
-        df.schema.fields + [StructField(out_col, ArrayType(DoubleType()))]
-    )
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            res = []
-            for buf in pdf[payload_col]:
-                try:
-                    rate, pcm = (
-                        _decode_audio(bytes(buf)) if buf is not None else (0, None)
-                    )
-                except NotImplementedError:
-                    res.append(None)
-                    continue
-                if pcm is None or rate < target_rate or len(pcm) == 0:
-                    res.append(None)
-                    continue
-                k = max(rate // target_rate, 1)
-                x = pcm.astype(np.float64)
-                x = x[: (len(x) // k) * k]
-                res.append(x.reshape(-1, k).mean(axis=1).round(4).tolist())
-            pdf = pdf.copy()
-            pdf[out_col] = res
-            yield pdf
-
-    return df.mapInPandas(work, out_schema)
-
-
 def _decode_image(buf: bytes) -> tuple[int, int, np.ndarray]:
     if buf[:8] == FAKE_IMG_MAGIC:
         w, h = struct.unpack("<ii", buf[8:16])
@@ -242,40 +185,6 @@ def with_image_features(
             yield pdf
 
     return df.mapInPandas(decode, out_schema)
-
-
-def resize_images(
-    df: DataFrame, payload_col: str = "payload", target: int = 8, out_col: str = "thumb"
-) -> DataFrame:
-    """'Resize' = block-mean downsample of the fake grayscale grid to
-    target x target doubles — the real-codec version would swap the decode."""
-    out_schema = StructType(
-        df.schema.fields + [StructField(out_col, ArrayType(DoubleType()))]
-    )
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            thumbs = []
-            for buf in pdf[payload_col]:
-                try:
-                    w, h, px = _decode_image(bytes(buf)) if buf is not None else (0, 0, None)
-                except NotImplementedError:
-                    thumbs.append(None)
-                    continue
-                if not px is None and w >= target and h >= target:
-                    img = px.reshape(h, w).astype(np.float64)
-                    bh, bw = h // target, w // target
-                    small = img[: bh * target, : bw * target].reshape(
-                        target, bh, target, bw
-                    ).mean(axis=(1, 3))
-                    thumbs.append(small.reshape(-1).round(4).tolist())
-                else:
-                    thumbs.append(None)
-            pdf = pdf.copy()
-            pdf[out_col] = thumbs
-            yield pdf
-
-    return df.mapInPandas(work, out_schema)
 
 
 def sample_video_frames(

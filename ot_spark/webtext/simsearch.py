@@ -389,25 +389,6 @@ def with_ivf_cell(
     return tmp.withColumn(out_col, best).drop(*[f"__d{i}" for i in range(len(centroids))])
 
 
-def ivf_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    centroids: np.ndarray,
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "ivf_cell",
-) -> DataFrame:
-    if cell_col not in df.columns:
-        df = with_ivf_cell(df, centroids, vec_col, cell_col)
-    q = np.asarray(query_vec, dtype=np.float64)
-    q = q / max(np.linalg.norm(q), 1e-12)
-    order = np.argsort(-(centroids @ q))[:nprobe]
-    cand = df.where(F.col(cell_col).isin([int(c) for c in order]))
-    return brute_force_topk(cand, query_vec, k, id_col, vec_col)
-
-
 # ------------------------------------------------------ product quantization
 
 def _l2sq(a: Column, b: Column) -> Column:
@@ -614,35 +595,6 @@ def train_pq_codebooks(
     return books
 
 
-def with_pq_codes_packed(
-    df: DataFrame,
-    books: np.ndarray,
-    vec_col: str = "embedding",
-    out_col: str = "pq_code",
-) -> DataFrame:
-    """Encode vectors as an m-byte ``binary`` column of uint8 codes —
-    the production twin of :func:`with_pq_codes`.  At k=256 a when-chain
-    per (subspace, code) would be 4096 Catalyst expressions; one
-    Arrow-batched pandas UDF (a (batch, k) argmin matmul per subspace)
-    is the right physical plan.  binary(m) is the FAISS storage layout:
-    10^12 vectors x 16 B = 16 TB of codes vs 256 TB of float32."""
-    from pyspark.sql.types import BinaryType
-
-    m, k, sub = books.shape
-    b = books
-
-    @F.pandas_udf(BinaryType())
-    def enc(s: pd.Series) -> pd.Series:
-        X = np.asarray(s.tolist(), dtype=np.float64)
-        codes = np.empty((len(X), m), dtype=np.uint8)
-        for j in range(m):
-            Xs = X[:, j * sub:(j + 1) * sub]
-            codes[:, j] = _sq_l2_small_sub(Xs, b[j]).argmin(axis=1)
-        return pd.Series([c.tobytes() for c in codes])
-
-    return df.withColumn(out_col, enc(F.col(vec_col).cast("array<double>")))
-
-
 def _adc_dist_udf(query_vec: list[float], books: np.ndarray):
     """Per-query ADC distance over packed codes: the (m, k) lookup table
     is computed once on the driver and closed over; the UDF is a pure
@@ -663,22 +615,6 @@ def _adc_dist_udf(query_vec: list[float], books: np.ndarray):
         return pd.Series(table[np.arange(m)[None, :], arr].sum(axis=1))
 
     return adc
-
-
-def pq_adc_topk_packed(
-    codes: DataFrame,
-    query_vec: list[float],
-    books: np.ndarray,
-    k_out: int = 10,
-    id_col: str = "vec_id",
-    code_col: str = "pq_code",
-) -> DataFrame:
-    """Production ADC top-k over binary codes: scan touches only the
-    m-byte code column (plan-guarded in tests), approx_dist = table
-    gather, rank (dist asc, id asc) via TakeOrdered."""
-    adc = _adc_dist_udf(query_vec, books)
-    scored = codes.select(id_col, adc(F.col(code_col)).alias("approx_dist"))
-    return scored.orderBy(F.asc("approx_dist"), F.asc(id_col)).limit(k_out)
 
 
 def build_ivfpq_index(

@@ -27,8 +27,6 @@ approximate-distinct member of that family at web scale.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -136,11 +134,6 @@ def hll_estimate(
         F.lit(float(m)) * F.log(F.lit(float(m)) / zeros),
     ).otherwise(raw)
     return g.select(*keys, est.alias("hll_estimate"))
-
-
-def hll_error_bound(b: int = 4, sigmas: float = 3.0) -> float:
-    """Published standard error 1.04/sqrt(m), scaled."""
-    return sigmas * 1.04 / math.sqrt(2 ** b)
 
 
 # --------------------------------------------------------------- Bloom

@@ -230,22 +230,6 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
 FP_PRIME = 2147483647  # 2^31 - 1: keeps the rolling product ANSI-overflow-safe
 
 
-def rolling_fingerprints(
-    tokens: Column, window: int = 8, hash_mode: str = "xxhash"
-) -> Column:
-    """Rabin-Karp-style window fingerprints: polynomial rolling hash of each
-    ``window``-token span, all JVM arithmetic, mod 2^31-1.
-
-    ``hash_mode='md5'`` swaps the per-token xxhash64 for the first 15 md5
-    hex chars as an integer — identical fold, DuckDB-reproducible
-    (list_reduce over the same values).
-
-    ``tokens`` should be a bound column (see ``with_tokens``) — it is
-    referenced once per window position."""
-    hashed = token_hashes(tokens, hash_mode)
-    return _rolling_over_hashes(hashed, window)
-
-
 def token_hashes(tokens: Column, hash_mode: str = "xxhash") -> Column:
     """Per-token hash mod 2^31-1, computed ONCE per token.  Each token sits
     in up to ``window`` overlapping spans; hashing inside the window fold

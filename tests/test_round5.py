@@ -251,56 +251,6 @@ def test_tfidf_top_terms(spark):
     assert all(r.tfidf >= 0 for r in out)
 
 
-def test_clean_stream_equals_batch(spark, tmp_path):
-    """Streaming corpus cleaning == batch corpus_clean on arrival-ordered
-    input (first arrival == lowest doc_id), including dedup state carried
-    across two availableNow runs via the checkpoint."""
-    from ot_spark import streaming
-    from ot_spark.webtext.curate import corpus_clean
-
-    src = str(tmp_path / "clean_in")
-    ck = str(tmp_path / "clean_ck")
-    out = str(tmp_path / "clean_out")
-
-    def batch_df(lo, hi):
-        rows = []
-        for i in range(lo, hi):
-            if i % 7 == 0:
-                text = "the dup content is the same here always ok"  # dup group
-            elif i % 5 == 0:
-                text = "x " * 3  # too short
-            else:
-                text = f"it is a day {i} and the dog walked to the park"
-            rows.append((i, text, f"2024-03-01 00:{i % 60:02d}:00"))
-        return spark.createDataFrame(
-            rows, "doc_id long, text string, ts_s string"
-        ).select(
-            "doc_id", "text", F.col("ts_s").cast("timestamp").alias("warc_ts")
-        )
-
-    # two micro-batch files, arrival order == doc_id order
-    batch_df(0, 40).coalesce(1).write.mode("append").parquet(src)
-    schema = spark.read.parquet(src).schema
-    st = streaming.stream_pages(spark, src, schema)
-    streaming.run_to_parquet(streaming.clean_stream(st), out, ck)
-
-    batch_df(40, 80).coalesce(1).write.mode("append").parquet(src)
-    st2 = streaming.stream_pages(spark, src, schema)
-    streaming.run_to_parquet(streaming.clean_stream(st2), out, ck)
-
-    got = {
-        (r.doc_id, r.lang_pred, r.n_tokens)
-        for r in spark.read.parquet(out).collect()
-    }
-    want = {
-        (r.doc_id, r.lang_pred, r.n_tokens)
-        for r in corpus_clean(batch_df(0, 80)).collect()
-    }
-    assert got == want and len(want) > 20
-    # the duplicate group collapsed to its first arrival (doc_id 0)
-    assert sum(1 for d, _, _ in got if d % 7 == 0) == 1
-
-
 def test_unigram_logprob(spark):
     """Hand-checked unigram LM scores on a 3-doc corpus."""
     import math
@@ -469,28 +419,37 @@ def test_pq_adc_recall(spark):
     over the sf0.001 embeddings, averaged over 5 query vectors — on the
     PRODUCTION config (m=16, k=256 uint8 codebooks, kmeans++, 10 Lloyd
     iters; binary-packed codes + Arrow ADC).  Measured 0.88; floor 0.7.
-    The oracle-portable m=4/k=8 twin stays gate-only — its 3-bit codes
-    were measured at 0.14 recall here (too coarse to claim quality), which
-    is exactly why the production path exists."""
+    The search runs through the production IVF+PQ path with every cell
+    probed and no refine vectors, so the ranking is pure ADC over all
+    codes.  The oracle-portable m=4/k=8 twin stays gate-only — its 3-bit
+    codes were measured at 0.14 recall here (too coarse to claim
+    quality), which is exactly why the production path exists."""
     import numpy as np
 
     from ot_spark.webtext.simsearch import (
-        pq_adc_topk_packed, train_pq_codebooks, with_pq_codes_packed,
+        build_ivfpq_index, ivfpq_search_packed, train_ivf_centroids,
+        train_pq_codebooks,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    books = train_pq_codebooks(emb, m=16, k=256, sample=4096, iters=10)
-    codes = with_pq_codes_packed(emb, books)
     rows = emb.collect()
     X = np.asarray([r.embedding for r in rows], dtype=np.float64)
     ids = np.asarray([r.vec_id for r in rows])
+    cents = train_ivf_centroids(emb, n_centroids=8, sample=200, iters=3)
+    assert cents.shape == (8, X.shape[1])
+    books = train_pq_codebooks(emb, m=16, k=256, sample=4096, iters=10)
+    index = build_ivfpq_index(emb, cents, books, replicas=1).cache()
     recalls = []
     for qi in range(5):
         q = X[qi]
         exact = set(ids[np.argsort(((X - q) ** 2).sum(axis=1))[:10]].tolist())
         approx = {
             r.vec_id
-            for r in pq_adc_topk_packed(codes, q.tolist(), books, k_out=10).collect()
+            for r in ivfpq_search_packed(
+                index, q.tolist(), cents, books, k_out=10,
+                nprobe=len(cents), refine=10, vectors_df=None,
+            ).collect()
         }
         recalls.append(len(exact & approx) / 10)
+    index.unpersist()
     assert sum(recalls) / len(recalls) >= 0.7, recalls

@@ -223,57 +223,6 @@ def test_pagerank_fixed_point_properties(spark):
     assert len(set(rows.values())) > n // 4  # non-degenerate distribution
 
 
-def test_streaming_canonical_url_dedup_matches_batch(spark, tmp_path):
-    """Streaming twin of url_dedup: canonicalization is stateless Column
-    algebra, so it composes with the watermark-bounded streaming dedup
-    unchanged — the stream keeps exactly one row per canonical URL, and
-    the kept canonical set equals the batch url_dedup group keys.  State
-    survives a second availableNow run via the checkpoint."""
-    from ot_spark import streaming
-    from ot_spark.webtext.urltools import (
-        canonicalize_url_col, synthetic_url_col, url_dedup,
-    )
-
-    src = str(tmp_path / "curl_in")
-    ck = str(tmp_path / "curl_ck")
-    out = str(tmp_path / "curl_out")
-
-    def docs(ids):
-        return spark.createDataFrame(
-            [(i, f"2024-03-01 00:{i % 60:02d}:00") for i in ids],
-            "doc_id long, ts_s string",
-        ).select("doc_id", F.col("ts_s").cast("timestamp").alias("warc_ts"))
-
-    docs(range(300)).coalesce(1).write.mode("append").parquet(src)
-    schema = spark.read.parquet(src).schema
-    batch = url_dedup(spark.read.parquet(src))
-    expect = {r.canonical_url for r in batch.collect()}
-
-    def canon_stream():
-        st = streaming.stream_pages(spark, src, schema)
-        with_c = st.withColumn(
-            "canonical_url",
-            canonicalize_url_col(synthetic_url_col(F.col("doc_id"))),
-        )
-        return streaming.dedup_stream(with_c, ["canonical_url"])
-
-    streaming.run_to_parquet(canon_stream(), out, ck)
-    got = spark.read.parquet(out)
-    assert {r.canonical_url for r in got.collect()} == expect
-    assert got.count() == len(expect)
-
-    # second run: only-new doc_ids whose canonical URLs all repeat
-    docs(range(300, 600)).coalesce(1).write.mode("append").parquet(src)
-    streaming.run_to_parquet(canon_stream(), out, ck)
-    back = spark.read.parquet(out)
-    # doc_id % 200 / % 50 cycle with period 1800, so ids 300..599 add only
-    # canonical URLs already emitted OR genuinely fresh ones — recompute
-    batch2 = url_dedup(spark.read.parquet(src))
-    expect2 = {r.canonical_url for r in batch2.collect()}
-    assert {r.canonical_url for r in back.collect()} == expect2
-    assert back.select("canonical_url").distinct().count() == back.count()
-
-
 def test_html_extract_byte_identical_to_body(spark, pages):
     """north_star invariant (BASELINE.json input_hint): byte-identical
     extracted text per url, derived from the RAW html bytes.  synth pages
@@ -505,50 +454,6 @@ def test_host_col_cases(spark):
     df = spark.createDataFrame([(u,) for u, _ in cases], ["url"])
     got = [r["h"] for r in df.select(host_col(F.col("url")).alias("h")).collect()]
     assert got == [e for _, e in cases]
-
-
-def test_streaming_latest_wins_matches_batch_asof(spark, tmp_path):
-    """Streaming twin of crawldiff.latest_snapshot: revisions arrive
-    OUT OF ORDER across two availableNow runs (state survives the
-    checkpoint restart); applying last-writer-wins to the emitted CDC
-    log reproduces the batch as-of state over the full log exactly."""
-    from ot_spark import streaming
-    from ot_spark.webtext.crawldiff import _latest_state, synthetic_revisions
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    revs = synthetic_revisions(docs)
-    src = str(tmp_path / "revs_in")
-    ck = str(tmp_path / "revs_ck")
-    out = str(tmp_path / "revs_out")
-
-    # interleave arrivals: chunk 1 holds ~half of each key's revisions
-    # (later revisions of some keys arrive BEFORE earlier ones)
-    revs.where((F.col("doc_id") + F.col("rev")) % 2 == 0) \
-        .coalesce(1).write.mode("append").parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    def st():
-        return streaming.latest_wins_stream(
-            streaming.stream_pages(spark, src, schema)
-        )
-
-    streaming.run_to_parquet(st(), out, ck)
-    revs.where((F.col("doc_id") + F.col("rev")) % 2 == 1) \
-        .coalesce(1).write.mode("append").parquet(src)
-    streaming.run_to_parquet(st(), out, ck)
-
-    emitted = spark.read.parquet(out)
-    # last-writer-wins over the CDC log
-    got = (
-        emitted.groupBy("doc_id")
-        .agg(F.max(F.struct("warc_epoch", "rev", "content_sig",
-                            "is_deleted")).alias("s"))
-        .select("doc_id", "s.*")
-    )
-    expect = _latest_state(revs, 10 ** 12)
-    g = {tuple(r) for r in got.collect()}
-    e = {tuple(r) for r in expect.collect()}
-    assert g == e and len(g) == docs.count()
 
 
 def test_warc_framing_is_content_length_not_delimiter(spark):
@@ -1461,39 +1366,3 @@ def test_ppr_python_replay_and_seed_locality(spark):
     seed_ranks = [r[i] for i in seeds_l]
     non_seed = sorted(r[i] for i in range(n) if i % 97 != 0)
     assert min(seed_ranks) > non_seed[len(non_seed) // 2]
-
-
-def test_bloom_stream_equals_batch(spark, tmp_path):
-    """Streaming Bloom registers == batch bloom_build on the same rows:
-    the register aggregation is commutative/idempotent bit_or, so the
-    micro-batched stream must land on the identical 8-word state per
-    host regardless of batch boundaries."""
-    from ot_spark import streaming
-    from ot_spark.webtext.sketch import BLOOM_WORDS, bloom_build
-    from ot_spark.webtext.urltools import synthetic_url_col
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    rows = docs.select(
-        (F.col("doc_id") % 7).cast("string").alias("host"),
-        synthetic_url_col(F.col("doc_id")).alias("url"),
-    )
-    src = str(tmp_path / "src")
-    rows.repartition(4).write.parquet(src)  # several files -> micro-batches
-    batch = {
-        r["host"]: tuple(r[f"w{w}"] for w in range(BLOOM_WORDS))
-        for r in bloom_build(spark.read.parquet(src), ["host"], "url").collect()
-    }
-    st = (
-        spark.readStream.schema("host string, url string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    streaming.run_to_memory(
-        streaming.bloom_stream(st, ["host"], "url"),
-        "bloom_stream_t", str(tmp_path / "ck"), complete=True,
-    )
-    got = {
-        r["host"]: tuple(r[f"w{w}"] for w in range(BLOOM_WORDS))
-        for r in spark.sql("SELECT * FROM bloom_stream_t").collect()
-    }
-    assert got == batch and len(got) == 7

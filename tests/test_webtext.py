@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -105,14 +104,6 @@ def test_lsh_topk_recall(spark, emb):
     )
 
 
-def test_ivf_topk(spark, emb):
-    cents = simsearch.train_ivf_centroids(emb, n_centroids=8, sample=200, iters=3)
-    assert cents.shape[0] == 8
-    qrow = emb.where("vec_id = 7").first()
-    out = simsearch.ivf_topk(emb, list(qrow.embedding), cents, k=5, nprobe=4).collect()
-    assert out[0].vec_id == 7
-
-
 # --------------------------------------------------------------- textstats
 
 def test_langid(spark, docs):
@@ -146,8 +137,8 @@ def test_fingerprint_stability(spark):
 
 def test_image_features_and_resize(spark):
     rows = [
-        (0, multimodal.make_fake_image(32, 16, seed=1)),
-        (1, multimodal.make_fake_image(8, 8, seed=2)),
+        (0, multimodal.make_fake_image_portable(32, 16, seed=1)),
+        (1, multimodal.make_fake_image_portable(8, 8, seed=2)),
         (2, b"\xff\xd8\xff\xe0 not a real jpeg"),  # real-codec stub -> None
         (3, None),
     ]
@@ -158,24 +149,19 @@ def test_image_features_and_resize(spark):
     assert abs(sum(feats[0].hist8) - 1.0) < 1e-9
     assert feats[2] is None and feats[3] is None
 
-    thumbs = {r.media_id: r.thumb for r in multimodal.resize_images(df, target=4).collect()}
-    assert len(thumbs[0]) == 16
-    assert thumbs[2] is None
-
 
 def test_video_frame_sampling(spark):
     df = spark.createDataFrame(
-        [(0, multimodal.make_fake_video(16, seed=3))], "media_id long, payload binary"
+        [(0, multimodal.make_fake_video_portable(16, seed=3))],
+        "media_id long, payload binary",
     )
     out = multimodal.sample_video_frames(df, every_k=4).first()
     assert len(out.frame_means) == 4
 
 
 def test_audio_features_and_resample(spark):
-    import numpy as np
-
     rows = [
-        (0, multimodal.make_fake_audio(16000, 16000 * 2, seed=5)),  # 2s clip
+        (0, multimodal.make_fake_audio_portable(16000, 16000 * 2, seed=5)),  # 2s clip
         (1, b"RIFF not a real wav"),  # real-codec stub -> None
         (2, None),
     ]
@@ -190,15 +176,3 @@ def test_audio_features_and_resample(spark):
     assert 0 < feats[0].rms < 2048
     assert 0 < feats[0].zero_cross_rate < 1
     assert feats[1] is None and feats[2] is None
-
-    res = {
-        r.media_id: r.resampled
-        for r in multimodal.resample_audio(df, target_rate=8000).collect()
-    }
-    assert len(res[0]) == 16000  # 2s at 8 kHz
-    assert res[1] is None
-    # decimation preserves the DC level
-    rate, pcm = multimodal._decode_audio(
-        multimodal.make_fake_audio(16000, 16000 * 2, seed=5)
-    )
-    assert abs(np.mean(res[0]) - pcm.astype(np.float64).mean()) < 1e-6
