@@ -43,8 +43,8 @@ def run_pipeline(spark, n_pages: int) -> tuple[float, int, list[float]]:
 
     idx = entrymod._admin_index()
     ridx = entrymod._raster_index()
-    # scan a materialized parquet (the production shape — and the same
-    # input tools/scaling_bench.py measures), generating it once if absent.
+    # scan a materialized parquet (the production shape), generating it
+    # once if absent.
     # The default path carries the generator version so a stale file from an
     # older pages_range_df is never silently reused; the write goes to a
     # pid-unique temp dir + atomic rename so concurrent bench runs can't
@@ -77,6 +77,18 @@ def run_pipeline(spark, n_pages: int) -> tuple[float, int, list[float]]:
         out.write.format("noop").mode("overwrite").save()
         times.append(time.time() - t0)
     return min(times), n_pages, [round(t, 3) for t in times]
+
+
+def time_query(spark, fn, sf_dir: str, repeats: int) -> list[float]:
+    """Wall seconds of ``repeats`` runs of one gate query: build the
+    DataFrame (driver-side index builds and training collects included)
+    and write it to the noop sink."""
+    runs = []
+    for _ in range(repeats):
+        t0 = time.time()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        runs.append(round(time.time() - t0, 3))
+    return runs
 
 
 def main() -> None:
@@ -120,13 +132,8 @@ def main() -> None:
         if time.time() > deadline:
             skipped.append(name)
             continue
-        runs = []
         try:
-            for _ in range(2):
-                t0 = time.time()
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(round(time.time() - t0, 3))
+            runs = time_query(spark, fn, sf_dir, 2)
             q_times[name] = min(runs)
             q_cold[name] = runs
         except Exception as exc:  # noqa: BLE001 — isolate per query

@@ -23,7 +23,7 @@ Spark shape: explode refs with position -> ONE join against the node table
 for coordinates (the reference's node_cache hash map, geotiff.rs:463-477 —
 never a driver-side map here) -> lead() window for segment pairs ->
 ``posexplode(sequence(...))`` generates intermediates declaratively ->
-raster lookup reuses the elevation UDF -> lag/lead window for the
+one three-point elevation lookup (``raster.make_lookup3``) for the
 threshold test -> row_number for the id contract.
 
 Scale note: the only global ordering is the id assignment; row_number over
@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .raster import RasterIndex
+from .raster import RasterIndex, make_lookup3
 
 SPLIT_ID_OFFSET = 50_000_000_000
 
@@ -240,66 +240,44 @@ def split_ways(
     rewritten_links: links with refs arrays containing the spliced new ids.
     """
     segments = explode_segments(links, nodes, link_key, ref_col, node_key)
-    if raster_index is not None:
-        # Fused threshold path (optimization guide §2.4/§4.1): the window
-        # version shuffles + sorts the FULL interpolated point stream on
-        # (link, pos) only to read each point's sequence neighbors — but
-        # neighbor i±1 of ``from + i*step`` is ``from + (i±1)*step``, so ONE
-        # Arrow crossing of six narrow numeric columns computes all three
-        # elevations (numpy routing + gather), and the exchange disappears.
-        # Rounding/coalesce/threshold stay JVM-side: bit-identical to the
-        # window path (pinned by query_snapshot parity at 3 SFs).
-        from .raster import make_lookup3
-
-        inter = interpolate(segments, res_lon, res_lat, link_key, carry_coords=True)
-        lookup3 = make_lookup3(raster_index, inter.sparkSession)
-        s_lat = (F.col("to_lat") - F.col("from_lat")) / F.col("n")
-        s_lon = (F.col("to_lon") - F.col("from_lon")) / F.col("n")
-        inter = inter.withColumn(
-            "_ev3",
-            lookup3(
-                F.col("from_lat"), F.col("from_lon"), s_lat, s_lon,
-                F.col("i"), F.col("n"),
-            ),
-        )
-        inter = inter.withColumn("elev", F.round(F.col("_ev3").getField("ev_c"), 2))
-        inter = inter.withColumn("elev0", F.coalesce("elev", F.lit(0.0)))
-        before = F.when(
-            F.col("i") == 1, F.coalesce("from_elev", F.lit(0.0))
-        ).otherwise(
-            F.coalesce(F.round(F.col("_ev3").getField("ev_p"), 2), F.lit(0.0))
-        )
-        after = F.when(
-            F.col("i") == F.col("n") - 1, F.coalesce("to_elev", F.lit(0.0))
-        ).otherwise(
-            F.coalesce(F.round(F.col("_ev3").getField("ev_n"), 2), F.lit(0.0))
-        )
-        kept = (
-            inter.withColumn(
-                "keep",
-                F.abs(F.col("elev0") - (before + after) / F.lit(2.0))
-                >= F.lit(threshold),
-            )
-            .where("keep")
-            .drop("_ev3", "from_lat", "from_lon", "to_lat", "to_lon")
-        )
-    else:
-        inter = interpolate(segments, res_lon, res_lat, link_key)
-        inter = inter.withColumn("elev", F.lit(None).cast("double"))
-        inter = inter.withColumn("elev0", F.coalesce("elev", F.lit(0.0)))
-
-        # threshold test against RAW sequence neighbors incl. endpoints
-        w = Window.partitionBy(link_key, "pos").orderBy("i")
-        before = F.coalesce(
-            F.lag("elev0").over(w), F.coalesce("from_elev", F.lit(0.0))
-        )
-        after = F.coalesce(
-            F.lead("elev0").over(w), F.coalesce("to_elev", F.lit(0.0))
-        )
-        kept = inter.withColumn(
+    # Threshold test on each point and its two sequence neighbours: the
+    # neighbours of ``from + i*step`` are ``from + (i±1)*step``, so one
+    # Arrow crossing of six narrow numeric columns computes all three
+    # elevations (numpy routing + gather) with no (link, pos) window sort.
+    # Rounding/coalesce/threshold stay JVM-side.  With no raster every
+    # elevation is NaN -> null, so only the endpoint fallbacks count.
+    inter = interpolate(segments, res_lon, res_lat, link_key, carry_coords=True)
+    lookup3 = make_lookup3(raster_index or RasterIndex([]), inter.sparkSession)
+    s_lat = (F.col("to_lat") - F.col("from_lat")) / F.col("n")
+    s_lon = (F.col("to_lon") - F.col("from_lon")) / F.col("n")
+    inter = inter.withColumn(
+        "_ev3",
+        lookup3(
+            F.col("from_lat"), F.col("from_lon"), s_lat, s_lon,
+            F.col("i"), F.col("n"),
+        ),
+    )
+    inter = inter.withColumn("elev", F.round(F.col("_ev3").getField("ev_c"), 2))
+    inter = inter.withColumn("elev0", F.coalesce("elev", F.lit(0.0)))
+    before = F.when(
+        F.col("i") == 1, F.coalesce("from_elev", F.lit(0.0))
+    ).otherwise(
+        F.coalesce(F.round(F.col("_ev3").getField("ev_p"), 2), F.lit(0.0))
+    )
+    after = F.when(
+        F.col("i") == F.col("n") - 1, F.coalesce("to_elev", F.lit(0.0))
+    ).otherwise(
+        F.coalesce(F.round(F.col("_ev3").getField("ev_n"), 2), F.lit(0.0))
+    )
+    kept = (
+        inter.withColumn(
             "keep",
-            F.abs(F.col("elev0") - (before + after) / F.lit(2.0)) >= F.lit(threshold),
-        ).where("keep")
+            F.abs(F.col("elev0") - (before + after) / F.lit(2.0))
+            >= F.lit(threshold),
+        )
+        .where("keep")
+        .drop("_ev3", "from_lat", "from_lon", "to_lat", "to_lon")
+    )
 
     with_ids = assign_split_ids(
         kept, mode=id_mode, order_cols=(link_key, "pos", "i")

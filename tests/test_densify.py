@@ -110,3 +110,32 @@ def test_missing_coords_segment_skipped(spark):
     assert new_nodes.count() == 0
     refs = rewritten.collect()[0].refs
     assert refs == ["a", "missing", "b"]
+
+
+def test_no_raster_split_uses_endpoint_elevations(spark):
+    # no raster: every intermediate has elevation 0, so a point is kept
+    # when its neighbours' mean is off 0 — only next to an endpoint with a
+    # known elevation (first/last intermediate of a segment)
+    nodes = _nodes(
+        spark,
+        [("a", 0.0, 0.0, 100.0), ("b", 0.5, 0.0, 50.0), ("c", 0.5, 0.25, None)],
+    )
+    links = _links(spark, [(1, ["a", "b", "c"])])
+    new_nodes, rewritten = densify.split_ways(
+        links, nodes, None, res_lon=0.125, res_lat=0.125, threshold=1.0
+    )
+    got = [
+        (r.node_id, r.link_id, r.pos, r.i, r.lat, r.lon, r.elev)
+        for r in new_nodes.orderBy("node_id").collect()
+    ]
+    first = densify.SPLIT_ID_OFFSET + 1
+    # segment a->b: 3 intermediates, the middle one has neighbours 0/0;
+    # segment b->c: 1 intermediate between elevations 50 and unknown (0)
+    assert got == [
+        (first, 1, 0, 1, 0.125, 0.0, 0.0),
+        (first + 1, 1, 0, 3, 0.375, 0.0, 0.0),
+        (first + 2, 1, 1, 1, 0.5, 0.125, 0.0),
+    ]
+    assert rewritten.collect()[0].refs == [
+        "a", f"split:{first}", f"split:{first + 1}", "b", f"split:{first + 2}", "c"
+    ]

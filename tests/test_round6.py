@@ -1105,6 +1105,31 @@ def test_kcore_cascading_peel(spark):
     assert got4 == {0: 2, 1: 2, 2: 2}
 
 
+def test_iterative_graph_plan_depth(spark, sf_dir):
+    """Plan size against iteration depth at sf0.001.  label_prop and
+    kcore checkpoint the frame they iterate on, so their final plan has
+    the same Exchange count at depth 3 and 6; pagerank_fixed unrolls
+    its loop into the plan and grows by the same count per iteration."""
+    from ot_spark.graph import kcore, label_prop, pagerank_fixed, synthetic_edges
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    n = docs.count()
+    edges = synthetic_edges(docs, n)
+    nodes = docs.select(F.col("doc_id").alias("node"))
+
+    def exchanges(df) -> int:
+        return _formatted_plan(df).count("Exchange")
+
+    for build in (
+        lambda k: label_prop(edges, nodes, iters=k),
+        lambda k: kcore(edges, k=3, rounds=k),
+    ):
+        assert exchanges(build(3)) == exchanges(build(6))
+    pr = [exchanges(pagerank_fixed(edges, nodes, n, iters=k)) for k in (3, 4, 5, 6)]
+    steps = {b - a for a, b in zip(pr, pr[1:])}
+    assert len(steps) == 1 and steps.pop() > 0, pr
+
+
 def test_delta_postings_roundtrip_and_bytes(spark):
     """Gap arrays prefix-sum back to the original capped postings for
     every term at sf0.001, and the varint byte tally matches a python

@@ -135,7 +135,7 @@ def test_fingerprint_stability(spark):
 
 # -------------------------------------------------------------- multimodal
 
-def test_image_features_and_resize(spark):
+def test_image_features(spark):
     rows = [
         (0, multimodal.make_fake_image_portable(32, 16, seed=1)),
         (1, multimodal.make_fake_image_portable(8, 8, seed=2)),
@@ -159,7 +159,7 @@ def test_video_frame_sampling(spark):
     assert len(out.frame_means) == 4
 
 
-def test_audio_features_and_resample(spark):
+def test_audio_features(spark):
     rows = [
         (0, multimodal.make_fake_audio_portable(16000, 16000 * 2, seed=5)),  # 2s clip
         (1, b"RIFF not a real wav"),  # real-codec stub -> None
