@@ -36,13 +36,13 @@ def run_pipeline(spark, n_pages: int) -> tuple[float, int, list[float]]:
     Measured steady-state: the identical action needs ~8 invocations to
     reach C2 JIT on this host and single timings swing 3x with noisy
     neighbors (BENCH/BASELINE.md protocol) — warm up, then min-of-K."""
-    import __spark_entry__ as entrymod
+    from gate_queries.common import _admin_index, _raster_index
     from ot_spark import filters, parse
     from ot_spark.benchdata import GEN_VERSION, pages_range_df
     from ot_spark.enrich_fused import spatial_enrich
 
-    idx = entrymod._admin_index()
-    ridx = entrymod._raster_index()
+    idx = _admin_index()
+    ridx = _raster_index()
     # scan a materialized parquet (the production shape), generating it
     # once if absent.
     # The default path carries the generator version so a stale file from an

@@ -92,17 +92,19 @@ def attrs_col() -> Column:
     return F.map_from_entries(arr)
 
 
-def pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents parquet -> derived pages frame with doc_id/lat/lon/attrs.
-
-    Scan parallelism floor: the fixture is a single-row-group parquet
-    (unsplittable — every map stage above it would be ONE task), so
-    repartition once after the read when the planned scan is narrower
-    than the session's cores (guide §2.5); no-op on production layouts."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+def scan_floor(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """Scan parallelism floor: a single-row-group parquet is unsplittable,
+    so every map stage above it would be ONE task.  Repartition once after
+    the read when the planned scan is narrower than the session's cores
+    (guide §2.5); a no-op on production layouts."""
     floor = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < floor:
-        docs = docs.repartition(floor)
+    return df.repartition(floor) if df.rdd.getNumPartitions() < floor else df
+
+
+def pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents parquet -> derived pages frame with doc_id/lat/lon/attrs,
+    over a ``scan_floor``-ed read."""
+    docs = scan_floor(spark, spark.read.parquet(f"{sf_dir}/documents.parquet"))
     return docs.withColumns(
         {"lat": lat_col(), "lon": lon_col(), "attrs": attrs_col()}
     )

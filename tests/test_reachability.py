@@ -98,8 +98,8 @@ def test_walk_resolves_relative_and_function_level_imports():
     textstats = _imported_names(ROOT / PACKAGE / "webtext" / "textstats.py")
     assert "ot_spark.webtext.dedup" in textstats
     # query builders import their operators inside the function body
-    entry = _imported_names(ROOT / "__spark_entry__.py")
-    assert "ot_spark.webtext.simsearch" in entry
+    vectors = _imported_names(ROOT / "gate_queries" / "vectors.py")
+    assert "ot_spark.webtext.simsearch" in vectors
     # a reached submodule reaches its packages
     reached = reached_modules()
     assert {PACKAGE, "ot_spark.webtext"} <= reached

@@ -135,7 +135,7 @@ def test_flagship_plan_stays_fused(spark):
     Python boundary (the fused Arrow enricher).  A future change that adds
     an exchange or lets column pruning clone the UDF into a second
     ArrowEvalPython node fails here, not in the next round's bench."""
-    import __spark_entry__ as entrymod
+    import gate_queries.common as entrymod
     from ot_spark import filters, parse
     from ot_spark.benchdata import pages_range_df
     from ot_spark.enrich_fused import spatial_enrich

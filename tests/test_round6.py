@@ -124,18 +124,18 @@ def test_knn_coverage_enumerations_agree():
     import sys
 
     sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as e
+    from gate_queries import common, tiles
     from ot_spark.h3x import h3x_cell_fij, knn_raster_coverage
 
     res, pad = 4, 0.25
-    prod = knn_raster_coverage(e._raster_index(), res, pad)
+    prod = knn_raster_coverage(common._raster_index(), res, pad)
     ids = np.array(sorted(prod), dtype=np.int64)
     f, i, j = h3x_cell_fij(ids, res)
     prod_keyed = {
         (int(ff), int(ii), int(jj)): prod[int(c)]
         for c, ff, ii, jj in zip(ids, f, i, j)
     }
-    oracle = e._knn_raster_h3x_cov_rows(res, 4, pad)
+    oracle = tiles._knn_raster_h3x_cov_rows(res, 4, pad)
     assert set(prod_keyed) == set(oracle), (
         len(set(prod_keyed) - set(oracle)), len(set(oracle) - set(prod_keyed))
     )
@@ -303,7 +303,7 @@ def test_ccnet_bucket_thresholds_parity(spark):
     few hundred rows the sketch is exact, so parity is total."""
     from ot_spark.webtext.curate import ccnet_bucket_thresholds, ccnet_buckets
 
-    from __spark_entry__ import _total_tokens
+    from gate_queries.text import _total_tokens
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     total = _total_tokens(spark, "/root/testdata/sf0.001")
@@ -324,7 +324,7 @@ def test_ccnet_bucket_thresholds_parity(spark):
 
 
 def test_ccnet_buckets_are_balanced_per_group(spark):
-    from __spark_entry__ import _total_tokens
+    from gate_queries.text import _total_tokens
     from ot_spark.webtext.curate import ccnet_buckets
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

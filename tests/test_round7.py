@@ -178,7 +178,7 @@ def test_distinct_spans_parity(spark, sf_dir):
 def test_read_parallelism_floor(spark, sf_dir):
     """_read repartitions narrow scans up to defaultParallelism without
     changing contents."""
-    import __spark_entry__ as entrymod
+    import gate_queries.common as entrymod
 
     df = entrymod._read(spark, sf_dir, "documents", fan=True)
     assert df.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
@@ -257,7 +257,7 @@ def test_substring_dup_shared_shuffle_plan(spark, sf_dir):
 def test_read_fan_threshold(spark, sf_dir):
     """fan=<rows>: below the footer-row threshold the scan is untouched;
     at/below it the floor engages."""
-    import __spark_entry__ as entrymod
+    import gate_queries.common as entrymod
 
     import pyarrow.parquet as pq
 
@@ -342,7 +342,7 @@ def test_fused_split_threshold_matches_window_path(spark, fixture_dir):
 
 
 def test_table_rows_matches_count(spark, sf_dir):
-    import __spark_entry__ as entrymod
+    import gate_queries.common as entrymod
 
     for name in ("documents", "orders"):
         want = entrymod._read(spark, sf_dir, name).count()
