@@ -158,7 +158,8 @@ def main() -> None:
     # queries_all_runs and outgrew the driver's tail capture, leaving
     # BENCH_r04.json "parsed": null.  Headline + per-query min only here;
     # all-runs detail, protocol, and the active query list go to
-    # BENCH/BENCH_DETAIL.json.
+    # .bench/BENCH_DETAIL.json (git-ignored: a run leaves no tracked file
+    # modified).
     flagship_steady = (
         round(sorted(flagship_all[-5:])[len(flagship_all[-5:]) // 2], 3)
         if len(flagship_all) >= 5
@@ -176,7 +177,7 @@ def main() -> None:
         "skipped_on_deadline": skipped,
     }
     detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH", "BENCH_DETAIL.json"
+        os.path.dirname(os.path.abspath(__file__)), ".bench", "BENCH_DETAIL.json"
     )
     try:
         os.makedirs(os.path.dirname(detail_path), exist_ok=True)

@@ -37,6 +37,22 @@ _OFF_BOUNDARY_SQL = (
 )
 
 
+# The fixture admin polygons (synth.gen_admin_polygons) as the oracles'
+# point-in-polygon over lat/lon: one WHEN per polygon.
+_ADMIN_WHENS = (
+    "lon > 1.5 AND lon < 2.5 AND lat > 1.5 AND lat < 2.5 THEN 'SQA'",
+    "lon > 2.5 AND lon < 4.5 AND lat > 1.5 AND lat < 2.5 THEN 'REC'",
+    "lat > 1.5 AND lon > lat + 4.0 AND lon < 9.0 - lat THEN 'TRI'",
+    "lon > 7.0 AND lon < 8.0 AND lat > 3.0 AND lat < 4.0 THEN 'EDG'",
+)
+
+
+def _admin_case_sql(indent: str) -> str:
+    """The admin-key ``CASE ... END``, its lines laid out at ``indent``."""
+    whens = "".join(f"{indent}  WHEN {w}\n" for w in _ADMIN_WHENS)
+    return f"CASE\n{whens}{indent}END"
+
+
 def _off_boundary_col() -> F.Column:
     lat100 = pagesview.lat100_col()
     lon100 = pagesview.lon100_col()

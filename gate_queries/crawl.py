@@ -7,8 +7,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gate_queries.common import (
-    FAN_ROWS, _OFF_BOUNDARY_SQL, _SYNTH_URL_SQL, _admin_index, _elevation_cases,
-    _off_boundary_col, _raster_index, _read,
+    FAN_ROWS, _OFF_BOUNDARY_SQL, _SYNTH_URL_SQL, _admin_case_sql, _admin_index,
+    _elevation_cases, _off_boundary_col, _raster_index, _read,
 )
 from ot_spark import pagesview, spatial_join
 
@@ -586,12 +586,7 @@ pts AS (
   WHERE {_OFF_BOUNDARY_SQL}
 )
 SELECT d.doc_id, d.status,
-       CASE
-         WHEN lon > 1.5 AND lon < 2.5 AND lat > 1.5 AND lat < 2.5 THEN 'SQA'
-         WHEN lon > 2.5 AND lon < 4.5 AND lat > 1.5 AND lat < 2.5 THEN 'REC'
-         WHEN lat > 1.5 AND lon > lat + 4.0 AND lon < 9.0 - lat THEN 'TRI'
-         WHEN lon > 7.0 AND lon < 8.0 AND lat > 3.0 AND lat < 4.0 THEN 'EDG'
-       END AS admin_key,
+       {_admin_case_sql("       ")} AS admin_key,
        {rid_case} AS raster_id,
        {val_case} AS elev
 FROM d JOIN pts USING (doc_id)

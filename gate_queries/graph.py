@@ -9,6 +9,16 @@ from pyspark.sql import functions as F
 from gate_queries.common import _read, _table_rows
 
 
+def _graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, int]:
+    """(documents, their ``synthetic_edges`` link graph, document count):
+    the input every builder here runs over."""
+    from ot_spark.graph import synthetic_edges
+
+    docs = _read(spark, sf_dir, "documents")
+    n = _table_rows(spark, sf_dir, "documents")
+    return docs, synthetic_edges(docs, n), n
+
+
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-point PageRank over the deterministic link graph (round 6;
     ot_spark/graph.py): BIGINT ranks scaled by 1e12, integer-division
@@ -16,11 +26,9 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolls the 3 iterations as CTEs and matches bit-for-bit, no float
     tolerance.  Per iteration: one join + one groupBy — the
     connected-components shuffle shape at 10^12-edge scale."""
-    from ot_spark.graph import pagerank_fixed, synthetic_edges
+    from ot_spark.graph import pagerank_fixed
 
-    docs = _read(spark, sf_dir, "documents")
-    n = _table_rows(spark, sf_dir, "documents")
-    edges = synthetic_edges(docs, n)
+    docs, edges, n = _graph(spark, sf_dir)
     ranks = pagerank_fixed(
         edges, docs.select(F.col("doc_id").alias("node")), n, iters=3
     )
@@ -83,11 +91,9 @@ def q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     round k-1, never the whole node set.  Exactly integer (depths are
     literals, reachability is set algebra), so the unrolled-CTE DuckDB
     oracle matches bit-for-bit."""
-    from ot_spark.graph import bfs_depth, synthetic_edges
+    from ot_spark.graph import bfs_depth
 
-    docs = _read(spark, sf_dir, "documents")
-    n = _table_rows(spark, sf_dir, "documents")
-    edges = synthetic_edges(docs, n)
+    docs, edges, _ = _graph(spark, sf_dir)
     seeds = docs.where(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("node")
     )
@@ -122,11 +128,9 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly order-independent; top-20 authorities against a bit-equal
     unrolled-CTE oracle.  Per round: two join+groupBy pairs plus two
     one-row max broadcasts — the published algorithm's shuffle floor."""
-    from ot_spark.graph import hits_fixed, synthetic_edges
+    from ot_spark.graph import hits_fixed
 
-    docs = _read(spark, sf_dir, "documents")
-    n = _table_rows(spark, sf_dir, "documents")
-    edges = synthetic_edges(docs, n)
+    docs, edges, _ = _graph(spark, sf_dir)
     out = hits_fixed(
         edges, docs.select(F.col("doc_id").alias("node")), iters=2
     )
@@ -176,11 +180,10 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20 nodes checked against a DuckDB oracle that re-derives the
     canonicalization, orientation, and wedge join in SQL.  Pure set
     algebra on BIGINTs: bit-exact across engines."""
-    from ot_spark.graph import synthetic_edges, triangles
+    from ot_spark.graph import triangles
 
-    docs = _read(spark, sf_dir, "documents")
-    n = _table_rows(spark, sf_dir, "documents")
-    out = triangles(synthetic_edges(docs, n))
+    _, edges, _ = _graph(spark, sf_dir)
+    out = triangles(edges)
     return out.orderBy(F.desc("n_triangles"), F.asc("node")).limit(20)
 
 
@@ -224,11 +227,9 @@ def q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the TrustRank/seed-expansion primitive.  Same integer fixed-point
     and shuffle shape as pagerank; top-20 against a bit-equal
     unrolled-CTE oracle."""
-    from ot_spark.graph import ppr_fixed, synthetic_edges
+    from ot_spark.graph import ppr_fixed
 
-    docs = _read(spark, sf_dir, "documents")
-    n = _table_rows(spark, sf_dir, "documents")
-    edges = synthetic_edges(docs, n)
+    docs, edges, _ = _graph(spark, sf_dir)
     nodes = docs.select(F.col("doc_id").alias("node"))
     seeds = docs.where(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("node")
@@ -273,13 +274,10 @@ def q_cocitation(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out is bounded by the row_number cap BEFORE the self-join (the
     LSH max_bucket discipline); degree lookups broadcast.  Counts are
     BIGINTs, the one float rounds to 6 dp — bit-stable oracle."""
-    from ot_spark.graph import cocitation, synthetic_edges
+    from ot_spark.graph import cocitation
 
-    docs = _read(spark, sf_dir, "documents")
-    n = _table_rows(spark, sf_dir, "documents")
-    hosted = synthetic_edges(docs, n).select(
-        "src", (F.col("dst") % 50).alias("dst")
-    )
+    _, edges, _ = _graph(spark, sf_dir)
+    hosted = edges.select("src", (F.col("dst") % 50).alias("dst"))
     return cocitation(hosted, cap=20)
 
 
@@ -312,11 +310,9 @@ def q_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned join plus two partial-aggregable groupBys (count,
     then max-struct argmax — no window, no per-node sort).  Pure
     integer, so the unrolled-CTE oracle matches bit-for-bit."""
-    from ot_spark.graph import label_prop, synthetic_edges
+    from ot_spark.graph import label_prop
 
-    docs = _read(spark, sf_dir, "documents")
-    n = _table_rows(spark, sf_dir, "documents")
-    edges = synthetic_edges(docs, n)
+    docs, edges, _ = _graph(spark, sf_dir)
     return label_prop(
         edges, docs.select(F.col("doc_id").alias("node")), iters=3
     )
@@ -359,11 +355,10 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree as of the last peel.  One degree agg + two semi-joins per
     round; the edge set only shrinks.  Pure set algebra on BIGINTs —
     the unrolled-CTE oracle is bit-exact."""
-    from ot_spark.graph import kcore, synthetic_edges
+    from ot_spark.graph import kcore
 
-    docs = _read(spark, sf_dir, "documents")
-    n = _table_rows(spark, sf_dir, "documents")
-    return kcore(synthetic_edges(docs, n), k=3, rounds=3)
+    _, edges, _ = _graph(spark, sf_dir)
+    return kcore(edges, k=3, rounds=3)
 
 
 def kcore_oracle_sql(k: int = 3, rounds: int = 3) -> str:

@@ -7,8 +7,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gate_queries.common import (
-    _LAT100, _LON100, _OFF_BOUNDARY_SQL, _admin_index, _elevation_cases,
-    _off_boundary_col, _raster_index, _read, _scratch_dir,
+    _LAT100, _LON100, _OFF_BOUNDARY_SQL, _admin_case_sql, _admin_index,
+    _elevation_cases, _off_boundary_col, _raster_index, _read, _scratch_dir,
 )
 from ot_spark import area_index, filters, pagesview, spatial_join
 from ot_spark.cells import grid_cell, grid_cell_sql
@@ -108,12 +108,7 @@ WITH pts AS (
   WHERE {_OFF_BOUNDARY_SQL}
 )
 SELECT doc_id,
-       CASE
-         WHEN lon > 1.5 AND lon < 2.5 AND lat > 1.5 AND lat < 2.5 THEN 'SQA'
-         WHEN lon > 2.5 AND lon < 4.5 AND lat > 1.5 AND lat < 2.5 THEN 'REC'
-         WHEN lat > 1.5 AND lon > lat + 4.0 AND lon < 9.0 - lat THEN 'TRI'
-         WHEN lon > 7.0 AND lon < 8.0 AND lat > 3.0 AND lat < 4.0 THEN 'EDG'
-       END AS admin_key
+       {_admin_case_sql("       ")} AS admin_key
 FROM pts
 """
 
@@ -201,11 +196,9 @@ FROM pts
 """
 
 
-def q_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Segment interpolation (interpolate.rs:39-61): links between
-    consecutive even-doc region points, posexplode(sequence) intermediates."""
-    from ot_spark import densify
-
+def _even_doc_ways(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(links, nodes) of the way queries: the even-doc region points as
+    nodes, each linked to the next even doc (refs [d, d + 2])."""
     pts = pagesview.pages_df(spark, sf_dir).where("doc_id % 2 = 0")
     nodes = pts.select(
         F.col("doc_id").cast("string").alias("url"), "lat", "lon"
@@ -217,6 +210,15 @@ def q_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 2).cast("string"),
         ).alias("refs"),
     )
+    return links, nodes
+
+
+def q_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Segment interpolation (interpolate.rs:39-61): links between
+    consecutive even-doc region points, posexplode(sequence) intermediates."""
+    from ot_spark import densify
+
+    links, nodes = _even_doc_ways(spark, sf_dir)
     seg = densify.explode_segments(links, nodes)
     out = densify.interpolate(seg, res_lon=0.05, res_lat=0.05)
     return out.select(
@@ -325,17 +327,7 @@ def q_split_ways(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCALE id path (range-partitioned offsets, no single-task sort)."""
     from ot_spark import densify
 
-    pts = pagesview.pages_df(spark, sf_dir).where("doc_id % 2 = 0")
-    nodes = pts.select(
-        F.col("doc_id").cast("string").alias("url"), "lat", "lon"
-    )
-    links = pts.select(
-        F.col("doc_id").alias("link_id"),
-        F.array(
-            F.col("doc_id").cast("string"),
-            (F.col("doc_id") + 2).cast("string"),
-        ).alias("refs"),
-    )
+    links, nodes = _even_doc_ways(spark, sf_dir)
     new_nodes, _rewritten = densify.split_ways(
         links,
         nodes,
@@ -499,12 +491,7 @@ WITH pts AS (
   SELECT doc_id, {pagesview.LAT_SQL} AS lat, {pagesview.LON_SQL} AS lon
   FROM documents WHERE {_OFF_BOUNDARY_SQL}
 ), j AS (
-  SELECT CASE
-           WHEN lon > 1.5 AND lon < 2.5 AND lat > 1.5 AND lat < 2.5 THEN 'SQA'
-           WHEN lon > 2.5 AND lon < 4.5 AND lat > 1.5 AND lat < 2.5 THEN 'REC'
-           WHEN lat > 1.5 AND lon > lat + 4.0 AND lon < 9.0 - lat THEN 'TRI'
-           WHEN lon > 7.0 AND lon < 8.0 AND lat > 3.0 AND lat < 4.0 THEN 'EDG'
-         END AS admin_key,
+  SELECT {_admin_case_sql(" " * 9)} AS admin_key,
          {cell_sql} AS cell
   FROM pts
 )

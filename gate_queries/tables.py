@@ -79,14 +79,32 @@ MINMAX_IDS_ORACLE_SQL = (
 )
 
 
-def _write_query_cap(df: DataFrame) -> DataFrame:
-    """Bench-mode input cap for the write-twice integrity queries
-    (lineage_resume, snapshot_read): their bench cost is /tmp I/O of two
-    full materializations, not operator cost, and the page-cache churn
-    perturbs the queries timed after them (VERDICT r3).  bench.py sets the
-    env var; the correctness gate never does, so oracles see full data."""
+def _half_then_full(spark: SparkSession, sf_dir: str, name: str):
+    """Shared set-up of the write-twice integrity queries (lineage_resume,
+    snapshot_read): (out dir, lineage path, the pages' (doc_id, grid_cell)
+    frame, the half of it in buckets < 32), under a fresh scratch dir.
+
+    Bench mode caps the input: these queries' bench cost is /tmp I/O of
+    two full materializations, not operator cost, and the page-cache churn
+    perturbs the queries timed after them (VERDICT r3).  bench.py sets
+    SPARK_GRAFT_WRITE_QUERY_CAP; the correctness gate never does, so
+    oracles see full data."""
+    from ot_spark import lineage as lin
+
+    base = _scratch_dir(name)
+    df = pagesview.pages_df(spark, sf_dir)
     cap = os.environ.get("SPARK_GRAFT_WRITE_QUERY_CAP")
-    return df.where(F.col("doc_id") < int(cap)) if cap else df
+    if cap:
+        df = df.where(F.col("doc_id") < int(cap))
+    df = df.select(
+        "doc_id", grid_cell(F.col("lat"), F.col("lon"), 1.0).alias("grid_cell")
+    )
+    half = (
+        lin.with_bucket(df)
+        .where(F.col(lin.BUCKET_COL) < 32)
+        .drop(lin.BUCKET_COL)
+    )
+    return f"{base}/out", f"{base}/lineage", df, half
 
 
 def q_lineage_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -94,16 +112,7 @@ def q_lineage_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     produce each row exactly once; returns per-bucket counts."""
     from ot_spark import lineage as lin
 
-    base = _scratch_dir("lineage")
-    df = _write_query_cap(pagesview.pages_df(spark, sf_dir)).select(
-        "doc_id", grid_cell(F.col("lat"), F.col("lon"), 1.0).alias("grid_cell")
-    )
-    out_dir, lin_path = f"{base}/out", f"{base}/lineage"
-    half = (
-        lin.with_bucket(df)
-        .where(F.col(lin.BUCKET_COL) < 32)
-        .drop(lin.BUCKET_COL)
-    )
+    out_dir, lin_path, df, half = _half_then_full(spark, sf_dir, "lineage")
     # snapshot=False: this query pins RESUME semantics; the snapshot layer
     # has its own gate query (snapshot_read)
     lin.write_with_lineage(
@@ -134,16 +143,7 @@ def q_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit of snapshot 2 must come back clean."""
     from ot_spark import lineage as lin
 
-    base = _scratch_dir("snapshot")
-    df = _write_query_cap(pagesview.pages_df(spark, sf_dir)).select(
-        "doc_id", grid_cell(F.col("lat"), F.col("lon"), 1.0).alias("grid_cell")
-    )
-    out_dir, lin_path = f"{base}/out", f"{base}/lineage"
-    half = (
-        lin.with_bucket(df)
-        .where(F.col(lin.BUCKET_COL) < 32)
-        .drop(lin.BUCKET_COL)
-    )
+    out_dir, lin_path, df, half = _half_then_full(spark, sf_dir, "snapshot")
     info1 = lin.write_with_lineage(half, out_dir, lin_path, key_cols=["doc_id"])
     info2 = lin.write_with_lineage(df, out_dir, lin_path, key_cols=["doc_id"])
     assert info1["snapshot_id"] == 1 and info2["snapshot_id"] == 2

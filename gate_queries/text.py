@@ -288,9 +288,8 @@ FROM s GROUP BY 1
 def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet head/middle/tail corpus split (round 6; curate.ccnet_buckets):
     per-source perplexity ntile — the published filtering step between LM
-    scoring and pretraining-set selection.  Exact-window path here (the
-    oracle reference); the 100-TB path is ccnet_bucket_thresholds
-    (percentile sketch + map-side compare, parity pytest-pinned)."""
+    scoring and pretraining-set selection, as the exact per-source window
+    the oracle replays."""
     from ot_spark.webtext.curate import ccnet_buckets
 
     docs = _read(spark, sf_dir, "documents", fan=True)

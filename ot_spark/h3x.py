@@ -39,9 +39,8 @@ Scale shape: the per-row transform is a single struct-returning Arrow
 pandas UDF over (lat, lon) — pure vectorized numpy, no shuffle, no
 driver involvement beyond the 500-ish-entry lookup tables baked into the
 closure.  Parent/rollup derivation is pure JVM bit algebra on the id.
-Adjacency: :func:`h3x_neighbors` / :func:`h3x_kring` (gridDisk) step one
-lattice unit in the cell's own face frame and re-encode — table-free
-cross-face resolution.
+Adjacency: :func:`h3x_neighbors` steps one lattice unit in the cell's own
+face frame and re-encodes — table-free cross-face resolution.
 
 Reference parity: the reference's grid operator is cells.rs (reference
 src/cell.rs equivalent — see ot_spark/cells.py); h3x is the north_star's
@@ -593,11 +592,6 @@ def h3x_base_cell(ids: np.ndarray) -> np.ndarray:
     return (np.asarray(ids, dtype=np.int64) >> _BC_SHIFT) & 127
 
 
-def h3x_is_pentagon(ids: np.ndarray) -> np.ndarray:
-    *_, pent, _cands = _table_arrays()
-    return pent[h3x_base_cell(ids)]
-
-
 def _down_from(i0, j0, digits, res):
     """Down-chain: res-0 slot (i0, j0) broadcast + digit path -> res-`res`
     lattice point (exact inverse of the encode up-chain)."""
@@ -698,8 +692,7 @@ def h3x_neighbors(ids: np.ndarray) -> np.ndarray:
     carries per-edge remap tables; same reachability, table-free).
     Pentagons (and their ragged fringe, module-docstring delta #3) can
     repeat a neighbor across slots — callers that need the SET of
-    neighbors dedup, as :func:`h3x_kring` does.  All ids must share one
-    resolution."""
+    neighbors dedup.  All ids must share one resolution."""
     ids = np.asarray(ids, dtype=np.int64)
     if not len(ids):
         return np.empty((0, 6), dtype=np.int64)
@@ -723,24 +716,6 @@ def h3x_neighbors(ids: np.ndarray) -> np.ndarray:
         nlon = np.degrees(np.arctan2(n[:, 1], n[:, 0]))
         out[:, p] = h3x_cell_ids(nlat, nlon, res)
     return out
-
-
-def h3x_kring(cell: int, k: int) -> np.ndarray:
-    """All cells within grid distance <= k of ``cell`` (the H3 gridDisk
-    surface), by frontier expansion over :func:`h3x_neighbors` with
-    dedup — O(ring area) work, no global state.  Returns a sorted id
-    array including ``cell`` itself (size 1+3k(k+1) away from
-    pentagons)."""
-    seen = {int(cell)}
-    frontier = np.array([int(cell)], dtype=np.int64)
-    for _ in range(k):
-        nxt = np.unique(h3x_neighbors(frontier))
-        fresh = np.array([c for c in nxt if int(c) not in seen], dtype=np.int64)
-        seen.update(int(c) for c in fresh)
-        if not len(fresh):
-            break
-        frontier = fresh
-    return np.array(sorted(seen), dtype=np.int64)
 
 
 def oracle_constants(res: int) -> dict:

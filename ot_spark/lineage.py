@@ -255,8 +255,21 @@ def write_with_lineage(
     validation scale, not per-commit at 100 TB) and raises if the disk
     disagrees.
 
+    A snapshot commit whose data columns differ from the last snapshot's
+    raises ``ValueError`` before anything is written.
+
     Assumes one writer per table at a time (see the module docstring)."""
     spark = df.sparkSession
+    data_schema = StructType(
+        [f for f in df.schema if f.name not in (BUCKET_COL, RUN_COL)]
+    ).simpleString()
+    last = _last_snapshot(spark, out_dir) if snapshot else None
+    last_schema = getattr(last, "data_schema", None)
+    if last_schema not in (None, data_schema):
+        raise ValueError(
+            f"{out_dir}: data schema {data_schema} differs from the last "
+            f"snapshot's {last_schema}; write a new table instead"
+        )
     # a leading letter keeps partition discovery from typing run=<id> as a
     # number (an all-digit id, or one like 12345e67890)
     run_id = run_id or f"r{uuid.uuid4().hex[:12]}"
@@ -311,9 +324,8 @@ def write_with_lineage(
         # _metadata is a hidden column: select it at the scan (it does not
         # survive joins) so the lineage row can list its data files.
         # basePath recovers the partition cols; reading with the schema just
-        # written means no footer inference job, no stale schema from files
-        # that predate a rename/add, and run stays a string whatever the id
-        # looks like.
+        # written means no footer inference job, and run stays a string
+        # whatever the id looks like.
         cols = frame.schema
         landed = (
             spark.read.schema(StructType(
@@ -360,12 +372,10 @@ def write_with_lineage(
         write_table_properties(spark, out_dir, table_props)
     snap_id = None
     if snapshot and _exists(spark, lineage_path):
-        schema_id, spec_id = _register_metadata(
-            spark, out_dir, df, cell_col, n_buckets
-        )
         snap_id = _append_snapshot(
-            spark, out_dir, lineage_path, run_id, written, skipped,
-            schema_id, spec_id,
+            spark, out_dir, lineage_path,
+            None if last is None else last.snapshot_id,
+            run_id, written, skipped, data_schema,
         )
     return {
         "run_id": run_id,
@@ -379,57 +389,37 @@ def write_with_lineage(
 # The graft's input_hint names an Iceberg table; without Iceberg jars in the
 # sandbox we keep the SPIRIT of its metadata model on plain parquet: every
 # write_with_lineage commit appends a snapshot row (id, parent, ts,
-# operation, summary) to ``<out>/_snapshots`` and a manifest under
-# ``<out>/_manifests/snap=<id>`` listing the buckets (files) VISIBLE at that
-# snapshot with row counts + checksums — enabling time-travel reads of table
-# membership and snapshot-pinned integrity audits for resume.  Underscore
-# prefixes keep both invisible to readers of the data dir.
+# operation, summary, data schema) to ``<out>/_snapshots`` and a manifest
+# under ``<out>/_manifests/snap=<id>`` listing the buckets (files) VISIBLE
+# at that snapshot with row counts + checksums — enabling time-travel reads
+# of table membership and snapshot-pinned integrity audits for resume.
+# Underscore prefixes keep both invisible to readers of the data dir.
+#
+# A table has ONE data schema: reads take the columns of whichever file
+# footer Spark samples, so a commit that changed the columns could lose
+# some silently.  A snapshot commit whose schema differs from the last
+# snapshot's is refused before anything is written.
 
 SNAPSHOTS_SUBDIR = "_snapshots"
 MANIFESTS_SUBDIR = "_manifests"
-SCHEMAS_SUBDIR = "_schemas"
-SPECS_SUBDIR = "_specs"
 
 
-def snapshots(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The snapshot log (newest last), or None for a never-committed table."""
-    try:
-        # mergeSchema: snapshot files written before a metadata upgrade
-        # (7-column generation) coexist with newer 9-column ones; without
-        # the merge, whichever file's footer Spark samples decides whether
-        # schema_id/spec_id surface at all.  The log is tiny, so the
-        # footer merge costs nothing.
-        return (
-            spark.read.option("mergeSchema", "true")
-            .parquet(f"{out_dir}/{SNAPSHOTS_SUBDIR}")
-            .orderBy("snapshot_id")
-        )
-    except Exception:  # noqa: BLE001 — absent log == no snapshots
-        return None
-
-
-def _snapshot_rows(spark: SparkSession, out_dir: str) -> list | None:
-    return _meta_rows(spark, f"{out_dir}/{SNAPSHOTS_SUBDIR}")
-
-
-def current_snapshot_id(spark: SparkSession, out_dir: str) -> int | None:
-    rows = _snapshot_rows(spark, out_dir)
-    if not rows:
-        return None
-    return max(r.snapshot_id for r in rows)
+def _last_snapshot(spark: SparkSession, out_dir: str):
+    """The newest snapshot row, or None for a never-committed table."""
+    rows = _meta_rows(spark, f"{out_dir}/{SNAPSHOTS_SUBDIR}")
+    return max(rows, key=lambda r: r.snapshot_id) if rows else None
 
 
 def _append_snapshot(
     spark: SparkSession,
     out_dir: str,
     lineage_path: str,
+    parent: int | None,
     run_id: str,
     written: int,
     skipped: int,
-    schema_id: int | None = None,
-    spec_id: int | None = None,
+    data_schema: str,
 ) -> int:
-    parent = current_snapshot_id(spark, out_dir)
     snap_id = (parent or 0) + 1
     # manifest = full lineage state AS OF this commit (cumulative bucket
     # membership — Iceberg's manifest-list role); tiny: one row per bucket
@@ -444,15 +434,14 @@ def _append_snapshot(
         run_id,
         written,
         skipped,
-        schema_id,
-        spec_id,
+        data_schema,
     )]
     _write_tiny(
         spark,
         row,
         "snapshot_id long, parent_id long, ts long, operation string, "
         "run_id string, buckets_written long, buckets_skipped long, "
-        "schema_id long, spec_id long",
+        "data_schema string",
         f"{out_dir}/{SNAPSHOTS_SUBDIR}",
     )
     return snap_id
@@ -502,23 +491,15 @@ def read_manifest(spark: SparkSession, out_dir: str, snapshot_id: int) -> DataFr
     )
 
 
-def _pinned_read(
-    spark: SparkSession, out_dir: str, pins: DataFrame, merge: bool = False
-) -> DataFrame:
+def _pinned_read(spark: SparkSession, out_dir: str, pins: DataFrame) -> DataFrame:
     """Data restricted to the (bucket, run) pairs in ``pins`` — partition
     pruning makes this touch only the pinned directories; the run column is
-    dropped so reader-facing schema stays stable.  ``merge``: set when the
-    table has >1 schema version, so files written under different schemas
-    union their columns (otherwise Spark picks one file's footer and a
-    post-evolution column may silently vanish)."""
+    dropped so reader-facing schema stays stable."""
     pairs = pins.select(
         BUCKET_COL, F.col("run_id").alias(RUN_COL)
     ).distinct()
-    reader = spark.read
-    if merge:
-        reader = reader.option("mergeSchema", "true")
     return (
-        reader.parquet(out_dir)
+        spark.read.parquet(out_dir)
         .join(F.broadcast(pairs), [BUCKET_COL, RUN_COL], "left_semi")
         .drop(RUN_COL)
     )
@@ -526,87 +507,23 @@ def _pinned_read(
 
 def read_current(spark: SparkSession, out_dir: str, lineage_path: str) -> DataFrame:
     """CURRENT table state: the (bucket, run) pairs the lineage table
-    records.  Orphaned files from crashed runs are invisible here.  With a
-    schema log the result is projected to the CURRENT schema (renamed
-    fields resolve across their physical-name history; columns added since
-    a file was written null-fill)."""
-    rows = _schema_rows(spark, out_dir)
-    df = _pinned_read(
-        spark, out_dir, spark.read.parquet(lineage_path),
-        merge=_nversions(rows) > 1,
-    )
-    if not rows:
-        return df
-    _sid, fields = _current_from(rows)
-    return _project_to_schema(df, fields, _cands_from(rows))
+    records.  Orphaned files from crashed runs are invisible here."""
+    return _pinned_read(spark, out_dir, spark.read.parquet(lineage_path))
 
 
 def read_as_of(spark: SparkSession, out_dir: str, snapshot_id: int) -> DataFrame:
     """Time-travel read: exactly the (bucket, run) directories committed as
     of ``snapshot_id``.  Committed run dirs are immutable, so this returns
     byte-identical CONTENT even after a later rewrite of the same bucket
-    (full Iceberg data-file pinning, not just membership).
-
-    When the table has a schema log, the result is projected to the SCHEMA
-    RECORDED AT that snapshot (Iceberg: a snapshot references a schema-id):
-    columns added after it vanish, and a field renamed since still comes
-    back under its as-of name via field-id resolution."""
-    rows = _schema_rows(spark, out_dir)
-    df = _pinned_read(
-        spark, out_dir, read_manifest(spark, out_dir, snapshot_id),
-        merge=_nversions(rows) > 1,
-    )
-    if not rows:
-        return df
-    snap = next(
-        (
-            s
-            for s in _snapshot_rows(spark, out_dir) or []
-            if s.snapshot_id == snapshot_id
-        ),
-        None,
-    )
-    sid = getattr(snap, "schema_id", None)
-    if sid is None:  # snapshot predates the schema log
-        return df
-    fields = sorted((r for r in rows if r.schema_id == sid), key=lambda r: r.ord)
-    return _project_to_schema(df, fields, _cands_from(rows))
-
-
-# --------------------------------------- schema / partition-spec evolution
-# Iceberg tracks table schemas and partition specs as versioned metadata:
-# every field has a stable field-id; a snapshot references the schema-id and
-# spec-id current at commit; readers resolve columns by FIELD-ID, so renames
-# are metadata-only and added columns null-fill for files written before
-# them.  Without Iceberg jars we keep that model in two tiny parquet logs:
-#
-#   <out>/_schemas: (schema_id, ord, field_id, name, type, physical)
-#     ``physical`` is the column name as it appears in data files written
-#     while that schema was current — the field-id -> physical mapping IS
-#     the rename history, and reads coalesce a field across all of its
-#     physical names (the plain-parquet analog of field-id resolution).
-#   <out>/_specs: (spec_id, source, transform, n)
-#     Bucket-transform spec; changing the cell column or bucket count at
-#     write time appends a new spec (Iceberg partition-spec evolution:
-#     applies to NEW data only — old (bucket, run) dirs keep their layout,
-#     and reads are unaffected because membership is pinned per snapshot).
-#
-# Both logs are append-only and driver-readable (a handful of rows).
-
-
-def _read_meta(spark: SparkSession, path: str) -> DataFrame | None:
-    try:
-        # mergeSchema for the same mixed-generation reason as snapshots()
-        return spark.read.option("mergeSchema", "true").parquet(path)
-    except Exception:  # noqa: BLE001 — absent log
-        return None
+    (full Iceberg data-file pinning, not just membership)."""
+    return _pinned_read(spark, out_dir, read_manifest(spark, out_dir, snapshot_id))
 
 
 def _meta_rows(spark: SparkSession, path: str) -> list | None:
     """Collected rows of a tiny metadata log, or None when absent.
 
     Iceberg reads table metadata DRIVER-SIDE (through FileIO), never as
-    cluster jobs — a schema/snapshot/spec lookup that launches a Spark job
+    cluster jobs — a snapshot lookup that launches a Spark job
     pays whole-job scheduling latency to fetch a handful of rows (measured:
     issuing these lookups as jobs doubled snapshot_read).  Local paths read
     through pyarrow on the driver; non-local URIs (s3://, hdfs://) fall
@@ -637,184 +554,13 @@ def _meta_rows(spark: SparkSession, path: str) -> list | None:
                 for d in t.to_pylist()
             )
         return rows
-    df = _read_meta(spark, path)
-    return None if df is None else df.collect()
-
-
-def partition_specs(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    return _read_meta(spark, f"{out_dir}/{SPECS_SUBDIR}")
-
-
-def _schema_rows(spark: SparkSession, out_dir: str) -> list | None:
-    return _meta_rows(spark, f"{out_dir}/{SCHEMAS_SUBDIR}")
-
-
-def _nversions(rows: list | None) -> int:
-    return len({r.schema_id for r in rows}) if rows else 0
-
-
-def _current_from(rows: list) -> tuple[int, list]:
-    sid = max(r.schema_id for r in rows)
-    fields = sorted((r for r in rows if r.schema_id == sid), key=lambda r: r.ord)
-    return sid, fields
-
-
-def _cands_from(rows: list) -> dict[int, list[str]]:
-    """field_id -> physical-name candidates across ALL schema versions
-    (the rename history, i.e. plain-parquet field-id resolution)."""
-    cands: dict[int, list[str]] = {}
-    for r in sorted(rows, key=lambda r: (r.schema_id, r.ord)):
-        lst = cands.setdefault(r.field_id, [])
-        if r.physical not in lst:
-            lst.append(r.physical)
-    return cands
-
-
-def _write_schema(
-    spark: SparkSession, out_dir: str, schema_id: int, fields: list[tuple]
-) -> None:
-    """``fields``: ordered (field_id, name, type, physical) tuples."""
-    rows = [(schema_id, i, *f) for i, f in enumerate(fields)]
-    _write_tiny(
-        spark,
-        rows,
-        "schema_id long, ord int, field_id long, name string, "
-        "type string, physical string",
-        f"{out_dir}/{SCHEMAS_SUBDIR}",
-    )
-
-
-def current_schema(
-    spark: SparkSession, out_dir: str
-) -> tuple[int, list] | None:
-    """(schema_id, ordered field rows) of the latest schema, or None."""
-    rows = _schema_rows(spark, out_dir)
-    return None if not rows else _current_from(rows)
-
-
-def add_column(spark: SparkSession, out_dir: str, name: str, dtype: str) -> int:
-    """Schema evolution: append a column (new field-id).  Metadata-only —
-    existing data files are untouched; reads null-fill the column for files
-    written before it.  Returns the new schema_id."""
-    sid, fields = current_schema(spark, out_dir)
-    if any(f.name == name for f in fields):
-        raise ValueError(f"column {name!r} already exists")
-    nfid = max(f.field_id for f in fields) + 1
-    new = [(f.field_id, f.name, f.type, f.physical) for f in fields]
-    new.append((nfid, name, dtype, name))
-    _write_schema(spark, out_dir, sid + 1, new)
-    return sid + 1
-
-
-def rename_column(spark: SparkSession, out_dir: str, old: str, new: str) -> int:
-    """Schema evolution: rename a column KEEPING its field-id (Iceberg
-    renames are metadata-only).  Data files written before the rename keep
-    the old physical name; reads resolve the field across both.  Returns
-    the new schema_id."""
-    sid, fields = current_schema(spark, out_dir)
-    if not any(f.name == old for f in fields):
-        raise ValueError(f"no column {old!r}")
-    if any(f.name == new for f in fields):
-        raise ValueError(f"column {new!r} already exists")
-    nf = [
-        (f.field_id, new if f.name == old else f.name, f.type,
-         new if f.name == old else f.physical)
-        for f in fields
-    ]
-    _write_schema(spark, out_dir, sid + 1, nf)
-    return sid + 1
-
-
-def _register_metadata(
-    spark: SparkSession,
-    out_dir: str,
-    df: DataFrame,
-    cell_col: str,
-    n_buckets: int,
-) -> tuple[int, int]:
-    """Commit-time registration: initialize the schema from the written
-    frame on first commit; auto-append a schema version when the write
-    carries brand-new columns (Iceberg's accept-any-schema/mergeSchema
-    write mode); append a partition spec whenever (source, n) changes.
-    Returns (schema_id, spec_id) current for this commit."""
-    data_fields = [
-        f for f in df.schema.fields if f.name not in (BUCKET_COL, RUN_COL)
-    ]
-    srows = _schema_rows(spark, out_dir)
-    cur = None if not srows else _current_from(srows)
-    if cur is None:
-        sid = 0
-        _write_schema(
-            spark, out_dir, sid,
-            [(i + 1, f.name, f.dataType.simpleString(), f.name)
-             for i, f in enumerate(data_fields)],
-        )
-    else:
-        sid, fields = cur
-        known = {f.name for f in fields}
-        fresh = [f for f in data_fields if f.name not in known]
-        if fresh:
-            # a name absent from the CURRENT schema may still live in the
-            # rename HISTORY of another field; minting a new field-id for
-            # it would leave two logical fields resolving to the same
-            # physical column (_cands_from collision) — refuse instead of
-            # silently corrupting field-id resolution
-            hist = {r.physical for r in srows} | {r.name for r in srows}
-            for f in fresh:
-                if f.name in hist:
-                    raise ValueError(
-                        f"column '{f.name}' reuses a renamed column's "
-                        "historical name; field-id resolution would become "
-                        "ambiguous — pick a fresh name or rename the "
-                        "existing field back explicitly"
-                    )
-            nfid = max(f.field_id for f in fields)
-            nf = [(f.field_id, f.name, f.type, f.physical) for f in fields]
-            for f in fresh:
-                nfid += 1
-                nf.append((nfid, f.name, f.dataType.simpleString(), f.name))
-            sid += 1
-            _write_schema(spark, out_dir, sid, nf)
-
-    rows = _meta_rows(spark, f"{out_dir}/{SPECS_SUBDIR}")
-    if rows is None:
-        pid = 0
-        _write_tiny(
-            spark,
-            [(pid, cell_col, f"bucket[{n_buckets}]", n_buckets)],
-            "spec_id long, source string, transform string, n long",
-            f"{out_dir}/{SPECS_SUBDIR}",
-        )
-    else:
-        latest = max(rows, key=lambda r: r.spec_id)
-        pid = latest.spec_id
-        if (latest.source, latest.n) != (cell_col, n_buckets):
-            pid += 1
-            _write_tiny(
-                spark,
-                [(pid, cell_col, f"bucket[{n_buckets}]", n_buckets)],
-                "spec_id long, source string, transform string, n long",
-                f"{out_dir}/{SPECS_SUBDIR}",
-            )
-    return sid, pid
-
-
-def _project_to_schema(df: DataFrame, fields: list, cands: dict) -> DataFrame:
-    """Field-id resolution on plain parquet: each schema field maps to the
-    data columns that ever carried it (rename history); missing everywhere
-    -> typed NULL (file written before the column existed)."""
-    cols = []
-    for f in fields:
-        present = [c for c in cands.get(f.field_id, []) if c in df.columns]
-        if not present:
-            cols.append(F.lit(None).cast(f.type).alias(f.name))
-        elif len(present) == 1:
-            cols.append(F.col(present[0]).alias(f.name))
-        else:
-            cols.append(F.coalesce(*[F.col(c) for c in present]).alias(f.name))
-    if BUCKET_COL in df.columns:  # partition column rides along for readers
-        cols.append(F.col(BUCKET_COL))
-    return df.select(*cols)
+    try:
+        # mergeSchema: files of older metadata generations lack columns
+        # newer ones carry; the log is tiny, so the footer merge is free
+        df = spark.read.option("mergeSchema", "true").parquet(path)
+    except Exception:  # noqa: BLE001 — absent log
+        return None
+    return df.collect()
 
 
 def audit_snapshot(

@@ -85,7 +85,7 @@ class RasterIndex:
 
     def unknown_crs_ids(self) -> list[str]:
         """raster_ids whose CRS the transform layer cannot resolve — these
-        tiles yield NULL elevation; surfaced loudly via elevation_stats
+        tiles yield NULL elevation; surfaced loudly via elevation_stats_df
         instead of failing the stage or silently dropping (round-2 finding)."""
         from .srs import epsg_supported
 
@@ -121,7 +121,7 @@ def _gather_elevations(pos, grids: list, lat_np, lon_np):
 
             if not epsg_supported(epsg):
                 # unknown CRS -> no value (counted as unknown_crs in
-                # elevation_stats), never a stage failure
+                # elevation_stats_df), never a stage failure
                 continue
             # projected tiff: WGS84 probe -> tiff CRS before the
             # affine (geotiff.rs:77-93); pixel origin is in CRS units
@@ -375,19 +375,3 @@ def elevation_stats_df(
         F.count(F.when(skip, 1)).alias("skipped"),
         F.count(F.when(unknown, 1)).alias("unknown_crs"),
     )
-
-
-def elevation_stats(
-    df: DataFrame,
-    out_col: str = "elev",
-    skip_col: str | None = None,
-    index: RasterIndex | None = None,
-) -> dict:
-    """found / not-found / skipped counters (geotiff.rs:350-357)."""
-    row = elevation_stats_df(df, out_col, skip_col, index).first()
-    return {
-        "elevation_found_node_count": row.found,
-        "elevation_not_found_node_count": row.not_found,
-        "elevation_skipped_node_count": row.skipped,
-        "elevation_unknown_crs_node_count": row.unknown_crs,
-    }

@@ -138,12 +138,6 @@ def s2_cell_ids(lat: np.ndarray, lon: np.ndarray, level: int = 10) -> np.ndarray
     return s2_parent(s2_leaf_ids(lat, lon), level)
 
 
-def s2_level_of(cell_id: int) -> int:
-    u = np.array(cell_id, dtype=np.int64).astype(np.uint64)
-    lsb = u & (~u + np.uint64(1))
-    return _MAX_LEVEL - (int(lsb).bit_length() - 1) // 2
-
-
 def with_s2_cell(
     df: DataFrame, level: int = 10, lat_col: str = "lat", lon_col: str = "lon",
     out_col: str | None = None,

@@ -77,16 +77,3 @@ def salted_agg(
         *[F.min(f"__mn_{o}").alias(o) for o in mins],
         *[F.max(f"__mx_{o}").alias(o) for o in maxs],
     )
-
-
-def salted_count(
-    df: DataFrame,
-    keys: list[str],
-    out_col: str = "n",
-    n_salt: int = 16,
-    unique_col: str | None = None,
-) -> DataFrame:
-    """Skew-safe groupBy(keys).count()."""
-    return salted_agg(
-        df, keys, counts={out_col: F.lit(1)}, n_salt=n_salt, unique_col=unique_col
-    )

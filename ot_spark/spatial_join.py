@@ -72,24 +72,14 @@ def enrich_with_admin(
     )
 
 
-def admin_stats(df: DataFrame, index: AreaIndex, out_col: str = "admin_key", cell_col: str = "grid_cell") -> dict:
-    """The reference's country counters (area.rs:344-348, 412-417) in one agg."""
-    return {
-        f"country_{k}_node_count" if k in ("found", "not_found") else f"country_{k}_count": v
-        for k, v in admin_stats_df(df, index, out_col, cell_col)
-        .first()
-        .asDict()
-        .items()
-    }
-
-
 def admin_stats_df(
     df: DataFrame,
     index: AreaIndex,
     out_col: str = "admin_key",
     cell_col: str = "grid_cell",
 ) -> DataFrame:
-    """One-row stats frame (the reference's counters as an aggregation).
+    """One-row stats frame: the reference's country counters
+    (area.rs:344-348, 412-417) as one aggregation.
 
     not_found counts only probed rows: the reference early-returns on pole
     latitudes before touching any counter (area.rs:368-370), and our

@@ -1,32 +1,27 @@
 """CRS transforms (C7) — pure-numpy, vectorized, no proj dependency.
 
-The reference resolves GeoTIFF SRS names to EPSG codes and transforms
-WGS84 probe coordinates into the tiff's CRS before the affine pixel math
-(/root/reference/src/handler/geotiff.rs:77-93, name table src/srs.rs).
-Scope here (documented): the projected families a DEM pipeline actually
-meets — UTM on WGS84/ETRS89 (transverse Mercator) and Web Mercator —
-plus geographic pass-through.  Everything is public math:
+The reference transforms WGS84 probe coordinates into the tiff's CRS
+before the affine pixel math (/root/reference/src/handler/geotiff.rs:77-93).
+Rasters here carry an EPSG code, so only the forward direction runs.
+Scope (documented): the projected families a DEM pipeline actually
+meets — UTM on WGS84/ETRS89 (transverse Mercator), Web Mercator and the
+conic national/continental grids — plus geographic pass-through.
+Everything is public math:
 
 - Transverse Mercator uses Karney's 6th-order Krueger series
   ("Transverse Mercator with an accuracy of a few nanometers", 2011) —
   exact to far below the reference's own 1e-7-degree test tolerance
   (geotiff.rs:1013-1052 pins 4326<->25832 on these very formulas).
 - Web Mercator (EPSG:3857) is the closed-form spherical formula.
-- The name->EPSG resolver is rule-generated for the supported families
-  (NOT a copy of the reference's literal table): 'WGS 84 / UTM zone 33N'
-  -> 32633, 'ETRS89 / UTM zone 32N' -> 258xx, etc.; unknown names -> None.
 
-All functions are numpy-vectorized and wrapped for Spark by
-``transform_cols`` (one Arrow-batched pandas UDF).
+All functions are numpy-vectorized; the raster lookup calls
+:func:`wgs84_to_epsg` inside its Arrow-batched UDF.  The TM and Web
+Mercator inverses are kept as the round-trip references of their forwards.
 """
 
 from __future__ import annotations
 
-import re
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 # GRS80 and WGS84 ellipsoids differ only in the inverse flattening's 12th
 # digit; both UTM families use k0=0.9996, FE=500km
@@ -206,22 +201,6 @@ def lcc2sp_forward(lat_deg, lon_deg, p: dict) -> tuple[np.ndarray, np.ndarray]:
     return x, y
 
 
-def lcc2sp_inverse(x, y, p: dict) -> tuple[np.ndarray, np.ndarray]:
-    """Lambert conformal conic 2SP inverse (Snyder 15-5..15-11 + 7-9)."""
-    a, e, n, F_, rho0 = _lcc_constants(p)
-    dx = np.asarray(x, dtype=np.float64) - p["fe"]
-    dy = rho0 - (np.asarray(y, dtype=np.float64) - p["fn"])
-    rho = np.sign(n) * np.hypot(dx, dy)
-    theta = np.arctan2(np.sign(n) * dx, np.sign(n) * dy)
-    t = (rho / (a * F_)) ** (1.0 / n)
-    lam = theta / n + np.radians(p["lon0"])
-    phi = np.pi / 2 - 2 * np.arctan(t)
-    for _ in range(8):  # Snyder 7-9 fixpoint; converges to <1e-12 rad
-        s = e * np.sin(phi)
-        phi = np.pi / 2 - 2 * np.arctan(t * ((1 - s) / (1 + s)) ** (e / 2))
-    return np.degrees(phi), np.degrees(lam)
-
-
 def _albers_constants(p: dict) -> tuple[float, float, float, float, float]:
     a, f = _ELLIPSOIDS[p["ellipsoid"]]
     e = np.sqrt(f * (2 - f))
@@ -244,27 +223,6 @@ def albers_forward(lat_deg, lon_deg, p: dict) -> tuple[np.ndarray, np.ndarray]:
     x = p["fe"] + rho * np.sin(theta)
     y = p["fn"] + rho0 - rho * np.cos(theta)
     return x, y
-
-
-def albers_inverse(x, y, p: dict) -> tuple[np.ndarray, np.ndarray]:
-    """Albers equal-area conic 2SP inverse (Snyder 14-8..14-11, 3-16)."""
-    a, e, n, C, rho0 = _albers_constants(p)
-    dx = np.asarray(x, dtype=np.float64) - p["fe"]
-    dy = rho0 - (np.asarray(y, dtype=np.float64) - p["fn"])
-    rho = np.hypot(dx, dy)
-    theta = np.arctan2(np.sign(n) * dx, np.sign(n) * dy)
-    q = (C - (rho * n / a) ** 2) / n
-    lam = theta / n + np.radians(p["lon0"])
-    phi = np.arcsin(np.clip(q / 2, -1.0, 1.0))
-    for _ in range(8):  # Snyder 3-16 Newton; converges to <1e-12 rad
-        s = np.sin(phi)
-        es2 = 1 - (e * s) ** 2
-        phi = phi + es2 * es2 / (2 * np.cos(phi)) * (
-            q / (1 - e * e)
-            - s / es2
-            + (1 / (2 * e)) * np.log((1 - e * s) / (1 + e * s))
-        )
-    return np.degrees(phi), np.degrees(lam)
 
 
 def _laea_constants(p: dict) -> tuple[float, float, float, float, float, float]:
@@ -296,73 +254,6 @@ def laea_forward(lat_deg, lon_deg, p: dict) -> tuple[np.ndarray, np.ndarray]:
     return x, y
 
 
-def laea_inverse(x, y, p: dict) -> tuple[np.ndarray, np.ndarray]:
-    """LAEA inverse (Snyder 24-16..24-21 + the 3-16 Newton for φ from q)."""
-    a, e, qp, beta1, rq, d = _laea_constants(p)
-    dx = (np.asarray(x, dtype=np.float64) - p["fe"]) / d
-    dy = (np.asarray(y, dtype=np.float64) - p["fn"]) * d
-    rho = np.hypot(dx, dy)
-    ce = 2 * np.arcsin(np.clip(rho / (2 * rq), -1.0, 1.0))
-    with np.errstate(invalid="ignore"):
-        q = qp * (
-            np.cos(ce) * np.sin(beta1)
-            + np.where(rho == 0, 0.0, dy * np.sin(ce) * np.cos(beta1) / rho)
-        )
-    lam = np.arctan2(
-        dx * np.sin(ce),
-        rho * np.cos(beta1) * np.cos(ce) - dy * np.sin(beta1) * np.sin(ce),
-    )
-    phi = np.arcsin(np.clip(q / 2, -1.0, 1.0))
-    for _ in range(8):  # Snyder 3-16 Newton
-        s = np.sin(phi)
-        es2 = 1 - (e * s) ** 2
-        phi = phi + es2 * es2 / (2 * np.cos(phi)) * (
-            q / (1 - e * e)
-            - s / es2
-            + (1 / (2 * e)) * np.log((1 - e * s) / (1 + e * s))
-        )
-    return np.degrees(phi), np.degrees(lam) + p["lon0"]
-
-
-# ---------------------------------------------------------------- name->EPSG
-
-_UTM_RE = re.compile(
-    r"^(WGS ?84|ETRS ?89)\s*/\s*UTM zone (\d{1,2})([NS])$", re.IGNORECASE
-)
-
-
-def name_to_epsg(name: str) -> int | None:
-    """Rule-generated resolver for the supported families (the reference's
-    equivalent is a literal 7800-line table, srs.rs:6-15)."""
-    s = name.strip()
-    if s.upper() in ("WGS 84", "WGS84", "EPSG:4326"):
-        return 4326
-    if s.upper() in ("ETRS89", "EPSG:4258"):
-        return 4258
-    if s in ("WGS 84 / Pseudo-Mercator", "Web Mercator", "EPSG:3857"):
-        return 3857
-    m = _UTM_RE.match(s)
-    if m:
-        datum, zone, hemi = m.group(1).upper().replace(" ", ""), int(m.group(2)), m.group(3).upper()
-        if not 1 <= zone <= 60:
-            return None
-        if datum == "WGS84":
-            return (32600 if hemi == "N" else 32700) + zone
-        if datum == "ETRS89" and hemi == "N" and 28 <= zone <= 38:
-            return 25800 + zone
-    conic = _CONIC_NAMES.get(s.upper())
-    if conic is not None:
-        return conic
-    m2 = re.match(r"^EPSG:(\d+)$", s, re.IGNORECASE)
-    if m2:
-        # only pass through codes the transform layer actually supports —
-        # an unvalidated passthrough would surface as a stage failure inside
-        # the Arrow UDF instead of the documented unknown -> None
-        code = int(m2.group(1))
-        return code if epsg_supported(code) else None
-    return None
-
-
 # Conic grids: parameters straight from the EPSG registry (public), keyed by
 # code — lat1/lat2 standard parallels, lat0/lon0 origin, false easting/northing
 _CONIC_EPSG: dict[int, dict] = {
@@ -382,18 +273,6 @@ _CONIC_EPSG: dict[int, dict] = {
     3035: {"kind": "laea", "ellipsoid": "GRS80",
            "lat0": 52.0, "lon0": 10.0, "fe": 4321000.0, "fn": 3210000.0},
 }
-
-_CONIC_NAMES = {
-    "RGF93 / LAMBERT-93": 2154,
-    "RGF93 V1 / LAMBERT-93": 2154,
-    "ETRS89-EXTENDED / LCC EUROPE": 3034,
-    "ETRS89 / LCC EUROPE": 3034,
-    "ETRS89-EXTENDED / LAEA EUROPE": 3035,
-    "ETRS89 / LAEA EUROPE": 3035,
-    "NAD83 / CANADA ATLAS LAMBERT": 3978,
-    "NAD83 / CONUS ALBERS": 5070,
-}
-
 
 def epsg_params(epsg: int) -> dict | None:
     """Transform parameters for a supported projected EPSG; None if the
@@ -441,46 +320,3 @@ def wgs84_to_epsg(lat, lon, epsg: int) -> tuple[np.ndarray, np.ndarray]:
     if p["kind"] == "laea":
         return laea_forward(lat, lon, p)
     return tm_forward(lat, lon, p["lon0"], p["ellipsoid"], fn=p["fn"])
-
-
-def epsg_to_wgs84(x, y, epsg: int) -> tuple[np.ndarray, np.ndarray]:
-    """(x, y) in source CRS -> (lat, lon) WGS84-ish degrees."""
-    p = epsg_params(epsg)
-    if p is None:
-        return np.asarray(y, dtype=np.float64), np.asarray(x, dtype=np.float64)
-    if p["kind"] == "webmercator":
-        return webmercator_inverse(x, y)
-    if p["kind"] == "lcc2sp":
-        return lcc2sp_inverse(x, y, p)
-    if p["kind"] == "albers":
-        return albers_inverse(x, y, p)
-    if p["kind"] == "laea":
-        return laea_inverse(x, y, p)
-    return tm_inverse(x, y, p["lon0"], p["ellipsoid"], fn=p["fn"])
-
-
-def transform_cols(df, epsg: int, lat_col: str = "lat", lon_col: str = "lon",
-                   out_x: str = "crs_x", out_y: str = "crs_y"):
-    """Spark wrapper: add target-CRS coordinate columns via one
-    Arrow-batched pandas UDF (struct-returning, single boundary crossing)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType([StructField("x", DoubleType()), StructField("y", DoubleType())])
-
-    @F.pandas_udf(schema)
-    def tf(
-        it: Iterator[tuple[pd.Series, pd.Series]],
-    ) -> Iterator[pd.DataFrame]:
-        for lat_s, lon_s in it:
-            la = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            lo = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            x, y = wgs84_to_epsg(la, lo, epsg)
-            yield pd.DataFrame({"x": x, "y": y})
-
-    tmp = df.withColumn("__crs", tf(F.col(lat_col), F.col(lon_col)))
-    return (
-        tmp.withColumn(out_x, F.col("__crs.x"))
-        .withColumn(out_y, F.col("__crs.y"))
-        .drop("__crs")
-    )

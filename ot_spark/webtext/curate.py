@@ -396,10 +396,9 @@ def ccnet_buckets(
     window sorts WITHIN each group; CCNet's groups are per-language (a few
     hundred), so at 100 TB a single group is billions of rows and an exact
     per-group total order is one giant sort.  The published pipeline
-    sidesteps it exactly like :func:`ccnet_bucket_thresholds` below:
-    compute the two cut points from a sample, then bucket map-side.  The
-    exact window is the correctness reference and the right tool at
-    per-shard cardinalities."""
+    sidesteps it by computing the two cut points from a sample and
+    bucketing map-side; the exact window is the correctness reference and
+    the right tool at per-shard cardinalities."""
     scored = unigram_logprob(df, total_tokens=total_tokens)
     scored = scored.join(df.select("doc_id", by_col), "doc_id")
     w = Window.partitionBy(by_col).orderBy(
@@ -412,29 +411,3 @@ def ccnet_buckets(
         F.element_at(labels, b) if n_buckets == 3 else b.cast("string"),
     )
     return out.select("doc_id", by_col, "avg_neg_logp", "bucket")
-
-
-def ccnet_bucket_thresholds(
-    df: DataFrame,
-    total_tokens: int,
-    by_col: str = "source",
-    probs: tuple[float, float] = (1.0 / 3.0, 2.0 / 3.0),
-) -> DataFrame:
-    """The 100-TB bucketing path: per-group perplexity cut points via
-    ``percentile_approx`` (one partial-aggregable pass, no per-group total
-    order), broadcast back and compared map-side.  Bucket boundaries can
-    differ from the exact ntile by the sketch tolerance — CCNet itself
-    computes them from a 1% sample; parity at gate scale is pytest-pinned
-    (tests/test_round6.py)."""
-    scored = unigram_logprob(df, total_tokens=total_tokens)
-    scored = scored.join(df.select("doc_id", by_col), "doc_id")
-    cuts = scored.groupBy(by_col).agg(
-        F.percentile_approx("avg_neg_logp", list(probs), 100000).alias("cuts")
-    )
-    out = scored.join(F.broadcast(cuts), by_col)
-    b = (
-        F.when(F.col("avg_neg_logp") <= F.col("cuts")[0], F.lit("head"))
-        .when(F.col("avg_neg_logp") <= F.col("cuts")[1], F.lit("middle"))
-        .otherwise(F.lit("tail"))
-    )
-    return out.select("doc_id", by_col, "avg_neg_logp", b.alias("bucket"))

@@ -592,15 +592,6 @@ def simhash_near_pairs(
     )
 
 
-def exact_dedup(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Keep the min-id representative per exact content hash."""
-    h = df.withColumn("__h", F.md5(F.col(text_col)))
-    keep = h.groupBy("__h").agg(F.min(id_col).alias(id_col))
-    return df.join(keep, id_col, "left_semi")
-
-
 def _distinct_spans_col(window: int) -> "F.udf":
     """Arrow-batched twin of
     array_distinct(filter(transform(toks, i -> concat_ws(' ',

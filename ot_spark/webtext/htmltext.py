@@ -76,14 +76,6 @@ def extract_text(html: Column) -> Column:
     return F.trim(s)
 
 
-def with_extracted_text(
-    df: DataFrame, html_col: str = "html", out_col: str = "extracted_text"
-) -> DataFrame:
-    """Append the extracted plain text; never rewrites the ``text`` column
-    (the byte-identical invariant is extraction-only, parse.py:12)."""
-    return df.withColumn(out_col, extract_text(F.col(html_col)))
-
-
 # Anchor hrefs, double-quoted form (the overwhelming majority in crawl
 # HTML; single-quoted/bare attrs are out of the WET-style scope). The
 # capture stops at '#' (fragments are never part of the fetch key — same

@@ -17,8 +17,9 @@ rho = leading-zero count of the next 8 hex digits (32-bit prefix) + 1.
 Every step is generated ONCE here as an ANSI-SQL fragment valid in both
 engines (instr/substr/CASE integer compares — no log2, no floats, no
 engine-specific bit ops), so the gate compares registers bit-for-bit.
-The float estimation step (``hll_estimate``) sits OUTSIDE the oracle and
-is pinned by an error-bound pytest instead (sigma ~ 1.04/sqrt(m)).
+No float estimate is computed here: the gate compares the integer
+registers, and an error-bound pytest pins that they yield an estimate
+within sigma ~ 1.04/sqrt(m).
 
 Reference analog: osm-transform's ElementCounter/MinMaxIdCollector
 family (stats.rs) — single-pass corpus statistics; this is the
@@ -27,7 +28,7 @@ approximate-distinct member of that family at web scale.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 HEX = "0123456789abcdef"
@@ -108,32 +109,6 @@ __r AS (SELECT {key_name}, bucket, {rho_sql('v')} AS rho FROM __v)
 SELECT {key_name}, bucket, CAST(max(rho) AS INT) AS max_rho
 FROM __r GROUP BY {key_name}, bucket
 """
-
-
-def hll_estimate(
-    registers: DataFrame, keys: list[str], b: int = 4
-) -> DataFrame:
-    """Bias-corrected HLL estimate per key from the register rows
-    (absent buckets = zero registers).  Small-range correction uses
-    linear counting when the raw estimate <= 2.5m and zero registers
-    exist, per the published algorithm.  Float by nature — pinned by an
-    error-bound pytest, not the SQL oracle."""
-    m = 2 ** b
-    alpha = {16: 0.673, 32: 0.697, 64: 0.709}.get(
-        m, 0.7213 / (1 + 1.079 / m)
-    )
-    g = registers.groupBy(*keys).agg(
-        F.sum(F.pow(F.lit(2.0), -F.col("max_rho"))).alias("__s"),
-        F.count(F.lit(1)).alias("__nb"),
-    )
-    zeros = (F.lit(m) - F.col("__nb")).cast("double")
-    denom = F.col("__s") + zeros  # absent buckets contribute 2^-0 = 1
-    raw = F.lit(alpha * m * m) / denom
-    est = F.when(
-        (raw <= 2.5 * m) & (zeros > 0),
-        F.lit(float(m)) * F.log(F.lit(float(m)) / zeros),
-    ).otherwise(raw)
-    return g.select(*keys, est.alias("hll_estimate"))
 
 
 # --------------------------------------------------------------- Bloom

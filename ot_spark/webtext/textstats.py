@@ -321,17 +321,6 @@ def with_fingerprint(
     ).drop(TOKENS_COL, "__thash")
 
 
-def bigrams_col(tokens: Column) -> Column:
-    """Strict adjacent word 2-grams, NOT distinct (repetition counting needs
-    multiplicity): position i pairs token i with token i+1, so a doc with
-    t tokens yields t-1 bigrams (0 for t < 2).  ``tokens`` must be a bound
-    column (see ``with_tokens``)."""
-    return F.filter(
-        F.transform(tokens, lambda _t, i: F.concat_ws(" ", F.slice(tokens, i + 1, 2))),
-        lambda _s, i: i <= F.size(tokens) - 2,
-    )
-
-
 def with_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Gopher-style repetition filters (Rae et al. 2021, public): the
     fraction of mass in the most-repeated bigram and the duplicate-token
@@ -378,7 +367,8 @@ def with_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def ngrams_col(tokens: Column, n: int) -> Column:
-    """Adjacent word n-grams WITH multiplicity (generalizes bigrams_col);
+    """Adjacent word n-grams WITH multiplicity: position i joins tokens
+    i..i+n-1, so a doc with t tokens yields t-n+1 n-grams (0 for t < n);
     ``tokens`` must be a bound column."""
     return F.filter(
         F.transform(tokens, lambda _t, i: F.concat_ws(" ", F.slice(tokens, i + 1, n))),

@@ -388,3 +388,36 @@ def test_default_run_id_is_never_numeric(spark, tmp_path):
     assert dict(spark.read.parquet(out).dtypes)[lineage.RUN_COL] == "string"
     assert lineage.read_current(spark, out, lin).count() == 40
 
+
+
+def test_snapshot_commit_with_other_columns_raises(spark, tmp_path):
+    """A table has one data schema: a snapshot commit whose columns differ
+    from the last snapshot's raises before anything is written, and the
+    table reads exactly as before.  The snapshot row records the schema."""
+    import glob
+
+    def frame(lo, cell0):
+        return spark.range(lo, lo + 40).select(
+            F.col("id").alias("key"), (cell0 + F.col("id") % 4).alias("grid_cell"),
+        )
+
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    lineage.write_with_lineage(frame(0, 0), out, lin, ["key"], n_buckets=8)
+    snap = lineage._last_snapshot(spark, out)
+    assert snap.data_schema == "struct<key:bigint,grid_cell:bigint>"
+
+    def state():
+        return (
+            sorted(glob.glob(f"{out}/{lineage.BUCKET_COL}=*/*")),
+            sorted(glob.glob(f"{out}/{lineage.SNAPSHOTS_SUBDIR}/*")),
+            sorted(glob.glob(f"{lin}/*")),
+            sorted(lineage.read_current(spark, out, lin).collect()),
+        )
+
+    before = state()
+    # buckets 4..7 are new: without the guard this commit would write them
+    wider = frame(40, 4).withColumn("lang", F.lit("en"))
+    with pytest.raises(ValueError, match="data schema"):
+        lineage.write_with_lineage(wider, out, lin, ["key"], n_buckets=8)
+    assert state() == before
+    assert len(before[3]) == 40

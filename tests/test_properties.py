@@ -55,9 +55,7 @@ def test_grid_cell_bounds_contain_point(lat, lon, ts):
 
 @settings(max_examples=60, deadline=None)
 @given(zone=st.integers(1, 60), south=st.booleans())
-def test_utm_name_resolver_property(zone, south):
-    hemi = "S" if south else "N"
-    code = srs.name_to_epsg(f"WGS 84 / UTM zone {zone}{hemi}")
-    assert code == (32700 if south else 32600) + zone
-    p = srs.epsg_params(code)
+def test_utm_epsg_params_property(zone, south):
+    p = srs.epsg_params((32700 if south else 32600) + zone)
     assert p["lon0"] == zone * 6 - 183
+    assert p["fn"] == (srs.FALSE_NORTHING_SOUTH if south else 0.0)

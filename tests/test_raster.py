@@ -89,12 +89,9 @@ def test_elevation_stats(spark, ridx):
         "lon double, lat double, no_elevation boolean",
     )
     out = raster.enrich_with_elevation(df, ridx, skip_col="no_elevation")
-    stats = raster.elevation_stats(out, skip_col="no_elevation")
-    assert stats == {
-        "elevation_found_node_count": 1,
-        "elevation_not_found_node_count": 1,
-        "elevation_skipped_node_count": 1,
-        "elevation_unknown_crs_node_count": 0,
+    stats = raster.elevation_stats_df(out, skip_col="no_elevation").first()
+    assert stats.asDict() == {
+        "found": 1, "not_found": 1, "skipped": 1, "unknown_crs": 0,
     }
 
 

@@ -277,16 +277,16 @@ def test_lineage_metadata_driver_side_roundtrip(spark, tmp_path):
 
     path = str(tmp_path / "snaplog")
     lin._write_tiny(
-        spark, [(1, None, 123, "append", "r1", 5, 0, 0, 0)],
+        spark, [(1, None, 123, "append", "r1", 5, 0, "struct<k:bigint>")],
         "snapshot_id long, parent_id long, ts long, operation string, "
         "run_id string, buckets_written long, buckets_skipped long, "
-        "schema_id long, spec_id long", path,
+        "data_schema string", path,
     )
     lin._write_tiny(
-        spark, [(2, 1, 124, "overwrite", "r2", 3, 2, 0, 0)],
+        spark, [(2, 1, 124, "overwrite", "r2", 3, 2, "struct<k:bigint>")],
         "snapshot_id long, parent_id long, ts long, operation string, "
         "run_id string, buckets_written long, buckets_skipped long, "
-        "schema_id long, spec_id long", path,
+        "data_schema string", path,
     )
     rows = sorted(lin._meta_rows(spark, path), key=lambda r: r.snapshot_id)
     assert [r.snapshot_id for r in rows] == [1, 2]

@@ -16,6 +16,12 @@ from pyspark.sql import functions as F
 from ot_spark import s2h3
 
 
+def _level_of(cell_id: int) -> int:
+    """S2 level from the id's trailing-one position (2 bits per level)."""
+    lsb = (cell_id & -cell_id).bit_length() - 1
+    return 30 - lsb // 2
+
+
 def faces_of(ids: np.ndarray) -> np.ndarray:
     return (np.asarray(ids).astype(np.uint64) >> np.uint64(61)).astype(np.int64)
 
@@ -35,7 +41,7 @@ def test_s2_face_center_ij():
     # leaf id of (face 0, i=2^29, j=2^29): position bits = Hilbert pos of
     # center-adjacent leaf; structural check: level-1 parent must be the
     # quadrant containing st=(0.5,0.5) boundary — just pin determinism:
-    assert s2h3.s2_level_of(int(ids[0])) == 30
+    assert _level_of(int(ids[0])) == 30
 
 
 def test_s2_uv_st_inverse():
@@ -56,7 +62,7 @@ def test_s2_hierarchy_prefix():
         # parent of parent at coarser level == direct truncation
         assert np.array_equal(s2h3.s2_parent(pl, 4), s2h3.s2_parent(leaf, 4))
         # level_of is exact
-        assert all(s2h3.s2_level_of(int(c)) == level for c in pl[:20])
+        assert all(_level_of(int(c)) == level for c in pl[:20])
         # same point re-encoded at the level directly == truncated leaf
         direct = s2h3.s2_cell_ids(lat, lon, level)
         assert np.array_equal(direct, pl)
@@ -100,28 +106,21 @@ def test_s2_spark_column(spark):
 # ------------------------------------------------------------------- h3x
 
 def test_h3x_kring_sizes_and_contiguity():
-    """k-ring contiguity on TRUE-GEOMETRY H3 (h3x_kring replaced the
-    retired axial k_ring in round 6): gridDisk sizes 1+3k(k+1) away from
-    pentagons, every ring-k cell adjacent to some ring-(k-1) cell, and
-    the disk's axial distances (valid on one face) match the ring index."""
-    from ot_spark.h3x import h3x_cell_fij, h3x_cell_ids, h3x_kring, h3x_neighbors
+    """k-rings on TRUE-GEOMETRY H3, grown ring by ring from
+    h3x_neighbors: gridDisk sizes 1+3k(k+1) away from pentagons, 6k new
+    cells per ring, and the ring's axial distances (valid on one face)
+    match the ring index."""
+    from ot_spark.h3x import h3x_cell_fij, h3x_cell_ids, h3x_neighbors
 
     res = 4
     center = int(h3x_cell_ids(np.array([4.0]), np.array([4.0]), res)[0])
-    prev = {center}
-    seen = {center}
+    prev = seen = {center}
     cf, ci, cj = h3x_cell_fij(np.array([center]), res)
     for k in (1, 2, 3):
-        disk = set(int(c) for c in h3x_kring(center, k))
-        assert len(disk) == 1 + 3 * k * (k + 1)
-        ring = disk - seen
+        nbrs = h3x_neighbors(np.array(sorted(prev), dtype=np.int64))
+        ring = {int(c) for c in nbrs.ravel()} - seen
+        assert len(seen | ring) == 1 + 3 * k * (k + 1)
         assert len(ring) == 6 * k
-        # each ring cell touches the previous ring (contiguity)
-        for c in ring:
-            nbrs = set(int(x) for x in h3x_neighbors(np.array([c])).ravel())
-            assert nbrs & prev or k == 1 and c in set(
-                int(x) for x in h3x_neighbors(np.array([center])).ravel()
-            )
         # axial distance on the (single) face equals the ring index
         arr = np.array(sorted(ring), dtype=np.int64)
         f, i, j = h3x_cell_fij(arr, res)

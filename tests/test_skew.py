@@ -57,7 +57,9 @@ def test_salt_spreads_hot_key(spark):
 
 
 def test_two_stage_plan_shape(spark):
-    out = skew.salted_count(_skewed(spark), ["k"], n_salt=8, unique_col="rid")
+    out = skew.salted_agg(
+        _skewed(spark), ["k"], counts={"n": F.lit(1)}, n_salt=8, unique_col="rid"
+    )
     plan = out._jdf.queryExecution().executedPlan().toString()
     # two hash aggregates per stage (partial+final) -> 4 HashAggregate nodes
     assert plan.count("HashAggregate") >= 4

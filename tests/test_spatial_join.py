@@ -53,14 +53,14 @@ def test_join_pinned_golden_points(spark, pages, idx):
 def test_admin_stats(spark, pages, idx):
     df = parse.with_coordinates(pages)
     out = spatial_join.enrich_with_admin(df, idx)
-    stats = spatial_join.admin_stats(out, idx)
+    stats = spatial_join.admin_stats_df(out, idx).first()
     # poles / unparseable coords are never counted — the reference
     # early-returns before touching any counter (area.rs:368-370)
     n_probed = out.where(F.col("grid_cell").isNotNull()).count()
-    assert stats["country_found_node_count"] + stats["country_not_found_node_count"] == n_probed
-    assert stats["country_found_node_count"] > 0
-    assert stats["country_border_nodes_count"] >= 2  # the two pinned border pts
-    assert stats["country_intersect_checks_count"] >= stats["country_border_nodes_count"]
+    assert stats.found + stats.not_found == n_probed
+    assert stats.found > 0
+    assert stats.border_nodes >= 2  # the two pinned border pts
+    assert stats.intersect_checks >= stats.border_nodes
 
 
 def test_text_untouched(spark, pages, idx):

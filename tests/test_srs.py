@@ -1,6 +1,6 @@
 """CRS transforms (C7): golden values from the reference's own tests
 (/root/reference/src/handler/geotiff.rs:1013-1052) plus round-trip and
-Spark-wrapper checks."""
+projected raster-lookup checks."""
 
 from __future__ import annotations
 
@@ -26,8 +26,8 @@ def test_forward_matches_reference_golden():
 
 
 def test_inverse_matches_reference_golden():
-    la, lo = srs.epsg_to_wgs84(
-        np.array([LIMBURG_25832[0]]), np.array([LIMBURG_25832[1]]), 25832
+    la, lo = srs.tm_inverse(
+        np.array([LIMBURG_25832[0]]), np.array([LIMBURG_25832[1]]), 9.0
     )
     # reference pins 1e-7 degrees (are_floats_close_7)
     assert abs(la[0] - LIMBURG[0]) < 1e-7
@@ -52,17 +52,6 @@ def test_webmercator_golden_and_roundtrip():
     assert abs(la2[0] - 52.5) < 1e-12 and abs(lo2[0] - 13.4) < 1e-12
 
 
-def test_name_resolver():
-    assert srs.name_to_epsg("WGS 84 / UTM zone 33N") == 32633
-    assert srs.name_to_epsg("ETRS89 / UTM zone 32N") == 25832
-    assert srs.name_to_epsg("WGS 84 / UTM zone 10S") == 32710
-    assert srs.name_to_epsg("WGS 84") == 4326
-    assert srs.name_to_epsg("WGS 84 / Pseudo-Mercator") == 3857
-    assert srs.name_to_epsg("Made Up Datum / Grid") is None
-    with pytest.raises(ValueError):
-        srs.epsg_params(2000)
-
-
 # every elevation operator: the composed reference and the pipeline's
 # fused enrichment (no admin polygons: an empty AreaIndex)
 ELEVATION_OPS = {
@@ -75,7 +64,7 @@ ELEVATION_OPS = {
 @pytest.mark.parametrize("op", sorted(ELEVATION_OPS))
 def test_projected_raster_lookup(spark, op, epsg):
     # 100 m UTM32N tile around the Limburg golden point; value = py*1000+px.
-    # EPSG:2000 is not resolvable (test_name_resolver): the point is routed
+    # EPSG:2000 is not supported (srs.epsg_supported): the point is routed
     # to the tile but gets NULL elevation instead of failing the stage
     grid = (np.arange(80)[:, None] * 1000 + np.arange(60)[None, :]).astype(float)
     idx = raster.RasterIndex([
@@ -95,12 +84,3 @@ def test_projected_raster_lookup(spark, op, epsg):
     py = int((5585000.0 - LIMBURG_25832[1]) // 100)
     assert out.raster_id == "utm"
     assert out.elev == (float(py * 1000 + px) if srs.epsg_supported(epsg) else None)
-
-
-def test_transform_cols_spark(spark):
-    pts = spark.createDataFrame(
-        [(1, LIMBURG[0], LIMBURG[1])], "id long, lat double, lon double"
-    )
-    out = srs.transform_cols(pts, 25832).first()
-    assert abs(out.crs_x - LIMBURG_25832[0]) < 1e-6
-    assert abs(out.crs_y - LIMBURG_25832[1]) < 1e-6

@@ -24,13 +24,6 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_exact_dedup(spark, docs):
-    out = dedup.exact_dedup(docs)
-    ids = {r.doc_id for r in out.collect()}
-    assert 0 in ids and 1 not in ids  # min-id representative kept
-    assert ids >= {2, 3, 4, 5, 6, 7}
-
-
 def test_minhash_near_dup_pairs(spark, docs):
     sigs = dedup.with_minhash(docs, k=16)
     cands = dedup.minhash_candidate_pairs(sigs, bands=8)  # 2 rows/band: sensitive
