@@ -25,7 +25,8 @@ from gate_queries import (  # noqa: E402
     crawl, graph, media, sketch, spatial, tables, text, tiles, vectors,
 )
 from gate_queries.common import _admin_index  # noqa: E402
-from ot_spark import filters, pagesview, spatial_join  # noqa: E402
+from ot_spark import filters, pagesview  # noqa: E402
+from ot_spark.enrich_fused import spatial_enrich  # noqa: E402
 
 # One row per gate query: (name, builder, oracle).  An oracle is the SQL, a
 # zero-argument function returning it (called only by oracle_sql()) or None
@@ -150,7 +151,7 @@ def entry(spark: SparkSession) -> DataFrame:
     df = pagesview.pages_df(spark, sf_dir)
     df = filters.complex_filter(df)
     df = filters.remove_tags(df)
-    out = spatial_join.enrich_with_admin(df, _admin_index())
+    out = spatial_enrich(df, _admin_index(), s2_level=None, h3_resolutions=())
     return (
         out.groupBy("admin_key")
         .agg(

@@ -10,7 +10,8 @@ from gate_queries.common import (
     FAN_ROWS, _OFF_BOUNDARY_SQL, _SYNTH_URL_SQL, _admin_case_sql, _admin_index,
     _elevation_cases, _off_boundary_col, _raster_index, _read,
 )
-from ot_spark import pagesview, spatial_join
+from ot_spark import pagesview
+from ot_spark.enrich_fused import spatial_enrich
 
 
 def q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -557,7 +558,6 @@ def q_incremental_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id key (one co-partitioned join; exchange-free under the Iceberg
     bucket layout from lineage.py), and enrichment inputs stay
     broadcast-sized (admin polygons, raster tile index)."""
-    from ot_spark.raster import enrich_with_elevation
     from ot_spark.webtext.crawldiff import (
         CRAWL_EPOCH, DAY, crawl_delta, synthetic_revisions,
     )
@@ -570,8 +570,10 @@ def q_incremental_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("status").isin("added", "changed")
     ).select("doc_id", "status")
     pages = pagesview.pages_df(spark, sf_dir).where(_off_boundary_col())
-    out = spatial_join.enrich_with_admin(pages.join(work, "doc_id"), _admin_index())
-    out = enrich_with_elevation(out, _raster_index())
+    out = spatial_enrich(
+        pages.join(work, "doc_id"), _admin_index(), _raster_index(),
+        s2_level=None, h3_resolutions=(),
+    )
     return out.select("doc_id", "status", "admin_key", "raster_id", "elev")
 
 

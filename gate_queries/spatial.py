@@ -12,6 +12,7 @@ from gate_queries.common import (
 )
 from ot_spark import area_index, filters, pagesview, spatial_join
 from ot_spark.cells import grid_cell, grid_cell_sql
+from ot_spark.enrich_fused import spatial_enrich
 
 
 def q_complex_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -95,7 +96,7 @@ def salted_cells_oracle_sql() -> str:
 def q_pip_admin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 filter-and-refine PIP join against the fixture admin polygons."""
     df = pagesview.pages_df(spark, sf_dir).where(_off_boundary_col())
-    out = spatial_join.enrich_with_admin(df, _admin_index())
+    out = spatial_enrich(df, _admin_index(), s2_level=None, h3_resolutions=())
     return out.select("doc_id", "admin_key")
 
 
@@ -121,17 +122,15 @@ def q_pip_admin_loaded(spark: SparkSession, sf_dir: str) -> DataFrame:
     area_index.save_index(_admin_index(), path)
     loaded = area_index.load_index(path)
     df = pagesview.pages_df(spark, sf_dir).where(_off_boundary_col())
-    out = spatial_join.enrich_with_admin(df, loaded)
+    out = spatial_enrich(df, loaded, s2_level=None, h3_resolutions=())
     return out.select("doc_id", "admin_key")
 
 
 def q_elevation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 raster lookup join: finest-tile routing (CASE chain) + broadcast
     numpy pixel gather in an Arrow UDF (geotiff.rs:240-301, 36-60)."""
-    from ot_spark.raster import enrich_with_elevation
-
     df = pagesview.pages_df(spark, sf_dir)
-    out = enrich_with_elevation(df, _raster_index())
+    out = spatial_enrich(df, None, _raster_index(), s2_level=None, h3_resolutions=())
     return out.select("doc_id", "raster_id", "elev")
 
 
@@ -155,11 +154,12 @@ def q_elevation_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     (geotiff.rs:77-93, srs.py webmercator_forward).  The DuckDB oracle
     re-derives the spherical-Mercator forward + affine + NoData in plain
     SQL (radians/ln/tan), independently of srs.py."""
-    from ot_spark.raster import RasterIndex, enrich_with_elevation
+    from ot_spark.raster import RasterIndex
     from ot_spark.synth import gen_projected_tiles
 
     df = pagesview.pages_df(spark, sf_dir)
-    out = enrich_with_elevation(df, RasterIndex.from_arrow(gen_projected_tiles()))
+    ridx = RasterIndex.from_arrow(gen_projected_tiles())
+    out = spatial_enrich(df, None, ridx, s2_level=None, h3_resolutions=())
     return out.select("doc_id", "raster_id", "elev")
 
 
@@ -476,7 +476,7 @@ def q_admin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 country counters (area.rs:344-348, 412-417) as one row."""
     df = pagesview.pages_df(spark, sf_dir).where(_off_boundary_col())
     idx = _admin_index()
-    out = spatial_join.enrich_with_admin(df, idx)
+    out = spatial_enrich(df, idx, s2_level=None, h3_resolutions=())
     return spatial_join.admin_stats_df(out, idx)
 
 
@@ -505,13 +505,15 @@ FROM j
 
 def q_elevation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 elevation counters (geotiff.rs:350-357) incl. skip semantics."""
-    from ot_spark.raster import elevation_stats_df, enrich_with_elevation
+    from ot_spark.raster import elevation_stats_df
 
     df = pagesview.pages_df(spark, sf_dir).withColumn(
         "skip", F.col("doc_id") % 10 == 0
     )
     idx = _raster_index()
-    out = enrich_with_elevation(df, idx, skip_col="skip")
+    out = spatial_enrich(
+        df, None, idx, s2_level=None, h3_resolutions=(), skip_col="skip"
+    )
     return elevation_stats_df(out, skip_col="skip", index=idx)
 
 

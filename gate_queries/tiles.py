@@ -50,10 +50,10 @@ def q_s2_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Full oracle: s2_tiles_oracle_sql replays the whole encode (face/uv,
     quadratic ST, Hilbert LUT walk) in DuckDB; id algebra additionally
     pinned by tests/test_s2h3.py invariants."""
-    from ot_spark.s2h3 import with_s2_cell
+    from ot_spark.enrich_fused import spatial_enrich
 
     df = pagesview.pages_df(spark, sf_dir)
-    out = with_s2_cell(df, level=10)
+    out = spatial_enrich(df, None, s2_level=10, h3_resolutions=())
     return out.groupBy("s2_10").agg(F.count(F.lit(1)).cast("long").alias("n_pages"))
 
 
@@ -125,10 +125,10 @@ def q_h3_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Class II/III lattices, integer digit chain; res-7 derived from res-9
     by the H3 parent bit-truncation).  The oracle replays the whole
     encode in DuckDB arithmetic (h3x_tiles_oracle_sql)."""
-    from ot_spark.h3x import with_h3x_cells
+    from ot_spark.enrich_fused import spatial_enrich
 
     df = pagesview.pages_df(spark, sf_dir)
-    out = with_h3x_cells(df, (7, 9))
+    out = spatial_enrich(df, None, s2_level=None, h3_resolutions=(7, 9))
     return out.groupBy("h3_7").agg(
         F.count(F.lit(1)).cast("long").alias("n_pages"),
         F.countDistinct("h3_9").cast("long").alias("n_children"),

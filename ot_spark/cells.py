@@ -4,8 +4,9 @@
   ``floor((lat+90)/ts) * num_tiles_lon + floor((lon+180)/ts)`` with
   ``num_tiles_lon = ceil(360/ts)`` (src/area.rs:56-58).  Pure Column
   arithmetic — stays inside whole-stage codegen, no UDF.
-- ``s2_cell`` / ``h3_cell``: hierarchical cell ids (see ot_spark.s2h3) for
-  the graft's H3/S2 tiling; those are batched pandas UDFs.
+- S2 / H3 hierarchical cell ids (ot_spark.s2h3, ot_spark.h3x) are numpy
+  encoders; they run inside enrich_fused.spatial_enrich's one Arrow UDF
+  (``s2_<level>`` / ``h3_<res>`` columns).
 
 Poles: the reference skips |lat| >= 90 at probe time (src/area.rs:368-370);
 ``grid_cell`` returns NULL there so downstream joins miss naturally.

@@ -35,10 +35,11 @@ Documented deltas vs the published library, and why:
    exact.  Hexagon-base-cell roundtrip is EXACT at every resolution
    (pinned by test); encode itself is always deterministic and total.
 
-Scale shape: the per-row transform is a single struct-returning Arrow
-pandas UDF over (lat, lon) — pure vectorized numpy, no shuffle, no
-driver involvement beyond the 500-ish-entry lookup tables baked into the
-closure.  Parent/rollup derivation is pure JVM bit algebra on the id.
+Scale shape: the per-row encode (:func:`h3x_cell_ids`) runs inside
+enrich_fused.spatial_enrich's one Arrow pandas UDF over (lat, lon) —
+pure vectorized numpy, no shuffle, no driver involvement beyond the
+500-ish-entry lookup tables baked into the closure.  Parent/rollup
+derivation is pure JVM bit algebra on the id (:func:`h3x_parent_col`).
 Adjacency: :func:`h3x_neighbors` steps one lattice unit in the cell's own
 face frame and re-encodes — table-free cross-face resolution.
 
@@ -50,13 +51,10 @@ src/cell.rs equivalent — see ot_spark/cells.py); h3x is the north_star's
 from __future__ import annotations
 
 from functools import lru_cache
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from .session import local_df
 
@@ -747,46 +745,6 @@ def oracle_constants(res: int) -> dict:
     }
 
 
-# ------------------------------------------------------------- Spark API
-
-
-def with_h3x_cells(
-    df: DataFrame,
-    resolutions: tuple[int, ...] = (7, 9),
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
-    """True-geometry h3x ids for every resolution in ONE struct-returning
-    Arrow UDF (same single-ArrowEvalPython shape as s2h3.with_tiles —
-    one UDF per res would add one ArrowEvalPython node each).  The finest resolution is
-    computed once; coarser ones are derived by the parent bit-truncation
-    (exactly how a production pipeline would roll res-9 up to res-7)."""
-    finest = max(resolutions)
-    fields = [StructField(f"h3_{r}", LongType()) for r in resolutions]
-    schema = StructType(fields)
-
-    @F.pandas_udf(schema)
-    def enc(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
-        for lat_s, lon_s in it:
-            lat_np = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            lon_np = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            ok = ~(np.isnan(lat_np) | np.isnan(lon_np))
-            fine = np.zeros(len(lat_np), dtype=np.int64)
-            if ok.any():
-                fine[ok] = h3x_cell_ids(lat_np[ok], lon_np[ok], finest)
-            cols = {}
-            for r in resolutions:
-                h = fine if r == finest else h3x_parent(fine, r)
-                hs = pd.Series(h.copy(), dtype="Int64")
-                hs[~ok] = pd.NA
-                cols[f"h3_{r}"] = hs
-            yield pd.DataFrame(cols)
-
-    return df.withColumn("__h3x", enc(F.col(lat_col), F.col(lon_col))).select(
-        "*", *[f"__h3x.h3_{r}" for r in resolutions]
-    ).drop("__h3x")
-
-
 # ------------------------------------------------- k-ring raster kNN (h3x)
 # North-star operator on TRUE-GEOMETRY H3: nearest raster tile via H3
 # k-ring expansion (BASELINE.json "kNN enrichment (nearest elevation/
@@ -897,9 +855,12 @@ def knn_nearest_raster_h3x(
         [(cell, k, rid) for cell, (k, _pix, _ord, rid) in sorted(answer.items())],
         "__knn_cell long, knn_k int, knn_raster_id string",
     )
-    enc = with_h3x_cells(df, (res,), lat_col, lon_col).withColumnRenamed(
-        f"h3_{res}", "__knn_cell"
-    )
+    from .enrich_fused import spatial_enrich  # enrich_fused imports h3x
+
+    enc = spatial_enrich(
+        df, None, s2_level=None, h3_resolutions=(res,),
+        lat_col=lat_col, lon_col=lon_col,
+    ).withColumnRenamed(f"h3_{res}", "__knn_cell")
     return enc.join(F.broadcast(map_df), "__knn_cell", "left").drop("__knn_cell")
 
 

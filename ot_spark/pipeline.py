@@ -83,7 +83,7 @@ class Pipeline:
         pages = spatial_enrich(
             pages,
             cfg.admin_index or AreaIndex(tile_size=cfg.tile_size),
-            cfg.raster_index,
+            cfg.raster_index or RasterIndex([]),
             skip_col="no_elevation",
             keep_original=cfg.keep_original_elevation,
         )

@@ -1,11 +1,13 @@
-"""Raster (elevation) enrichment — semantic mirror of BufferingElevationEnricher.
+"""Raster (elevation) index, routing and pixel gather — semantic mirror of
+BufferingElevationEnricher; the enrichment is enrich_fused.spatial_enrich
+with a ``raster_index``.
 
 Reference (/root/reference/src/handler/geotiff.rs):
 
 - R-tree routing: candidate tiffs whose WGS84 bbox contains the point,
   sorted by pixel size ascending, first (=finest) wins (geotiff.rs:258-301).
 - Per-asset batching: nodes buffered per tiff, tiff opened once per flush
-  (geotiff.rs:406-435) — Spark expresses this natively: the lookup UDF gets
+  (geotiff.rs:406-435) — Spark expresses this natively: spatial_enrich's UDF gets
   Arrow batches and indexes into per-raster numpy grids.
 - Pixel math: top-left origin affine, px = (lon-min_lon)/pixel_w,
   py = (max_lat-lat)/pixel_h truncated (geotiff.rs:51-60).
@@ -36,7 +38,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
 from .session import local_df
 
@@ -299,54 +300,6 @@ def route_via_cell_join(
         routed.withColumn(out_col, F.get(containing, 0)["raster_id"])
         .drop("__route_cell", "__cands")
     )
-
-
-def enrich_with_elevation(
-    df: DataFrame,
-    index: RasterIndex,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    out_col: str = "elev",
-    skip_col: str | None = None,
-    keep_original: bool = False,
-) -> DataFrame:
-    """Add ``raster_id`` and ``elev`` columns.
-
-    ``skip_col``: boolean column — rows with True never get a lookup
-    (skip_ele semantics).  ``keep_original``: rows with a pre-existing
-    non-null ``out_col`` keep it (geotiff.rs:427-429)."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(index.grids())
-
-    @F.pandas_udf(DoubleType())
-    def lookup(it: Iterator[tuple[pd.Series, pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        grids = bc.value
-        for rid_s, lon_s, lat_s in it:
-            lon_np = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            lat_np = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            yield pd.Series(gather_by_raster_id(grids, rid_s, lat_np, lon_np))
-
-    if len(index.tiles) <= ROUTE_JOIN_THRESHOLD:
-        routed = df.withColumn(
-            "raster_id", route_col(index, F.col(lat_col), F.col(lon_col))
-        )
-    else:
-        routed = route_via_cell_join(df, index, lat_col, lon_col, "raster_id")
-    rid_for_lookup = F.col("raster_id")
-    if skip_col is not None:
-        rid_for_lookup = F.when(~F.coalesce(F.col(skip_col), F.lit(False)), rid_for_lookup)
-    if keep_original and out_col in df.columns:
-        rid_for_lookup = F.when(F.col(out_col).isNull(), rid_for_lookup)
-
-    looked = F.round(lookup(rid_for_lookup, F.col(lon_col), F.col(lat_col)), 2)
-    # skip masks only the LOOKED-UP value; a pre-existing elevation on a
-    # skip-flagged row must survive (geotiff.rs:425-432 skips the lookup,
-    # never clears the tag)
-    if skip_col is not None:
-        looked = F.when(~F.coalesce(F.col(skip_col), F.lit(False)), looked)
-    if keep_original and out_col in df.columns:
-        looked = F.coalesce(F.col(out_col), looked)
-    return routed.withColumn(out_col, looked)
 
 
 def elevation_stats_df(

@@ -1,4 +1,4 @@
-"""Hierarchical cell ids: S2 cell ids plus the fused S2/H3 tile encoder.
+"""Hierarchical cell ids: the S2 cell-id encoder.
 
 No s2sphere/h3 libraries exist in the target environment (SURVEY.md §7.0),
 so S2 is implemented from the published algorithm in pure numpy,
@@ -13,19 +13,13 @@ vectorized over Arrow batches:
   (``id >> 61 == face``).
 - **H3**: the true-geometry icosahedral aperture-7 grid lives in
   :mod:`ot_spark.h3x` (gnomonic faces, Class II/III lattices, 122 base
-  cells / 12 pentagons, H3-layout ids, k-ring kNN); :func:`with_tiles`
-  encodes it next to S2 in one Arrow UDF.
+  cells / 12 pentagons, H3-layout ids, k-ring kNN);
+  enrich_fused.spatial_enrich encodes it next to S2 in one Arrow UDF.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 # ------------------------------------------------------------------ S2 core
 
@@ -137,87 +131,3 @@ def s2_parent(ids: np.ndarray, level: int) -> np.ndarray:
 def s2_cell_ids(lat: np.ndarray, lon: np.ndarray, level: int = 10) -> np.ndarray:
     return s2_parent(s2_leaf_ids(lat, lon), level)
 
-
-def with_s2_cell(
-    df: DataFrame, level: int = 10, lat_col: str = "lat", lon_col: str = "lon",
-    out_col: str | None = None,
-) -> DataFrame:
-    out_col = out_col or f"s2_{level}"
-
-    @F.pandas_udf(LongType())
-    def enc(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for lat_s, lon_s in it:
-            lat_np = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            lon_np = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            ok = ~(np.isnan(lat_np) | np.isnan(lon_np))
-            out = np.zeros(len(lat_np), dtype=np.int64)
-            if ok.any():
-                out[ok] = s2_cell_ids(lat_np[ok], lon_np[ok], level)
-            # nullable Int64: float64 would corrupt ids beyond 2^53
-            ser = pd.Series(out, dtype="Int64")
-            ser[~ok] = pd.NA
-            yield ser
-
-    return df.withColumn(out_col, enc(F.col(lat_col), F.col(lon_col)).cast("long"))
-
-
-def with_tiles(
-    df: DataFrame,
-    s2_level: int = 10,
-    h3_resolutions: tuple[int, ...] = (7, 9),
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
-    """FUSED tile encoder: s2 + all H3 resolutions in ONE pandas UDF
-    (round 6: h3 columns are TRUE-GEOMETRY h3x ids — finest res encoded
-    once, coarser by parent bit-truncation — matching enrich_fused).
-
-    Each distinct pandas UDF in a projection becomes its own
-    ArrowEvalPython node with its own per-core Python worker pool — at 32
-    cores, three chained tile UDFs oversubscribe the host 3x and anti-scale.
-    One struct-returning UDF keeps it to a single worker pool and one
-    Arrow round-trip for all tile columns."""
-    from pyspark.sql.types import StructField, StructType
-
-    finest = max(h3_resolutions)
-    fields = [StructField(f"s2_{s2_level}", LongType()),
-              StructField(f"h3_{finest}", LongType())]
-    schema = StructType(fields)
-
-    @F.pandas_udf(schema)
-    def enc(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
-        for lat_s, lon_s in it:
-            lat_np = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            lon_np = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            ok = ~(np.isnan(lat_np) | np.isnan(lon_np))
-            cols = {}
-            s2 = np.zeros(len(lat_np), dtype=np.int64)
-            if ok.any():
-                s2[ok] = s2_cell_ids(lat_np[ok], lon_np[ok], s2_level)
-            ser = pd.Series(s2, dtype="Int64")
-            ser[~ok] = pd.NA
-            cols[f"s2_{s2_level}"] = ser
-            from .h3x import h3x_cell_ids
-
-            hf = np.zeros(len(lat_np), dtype=np.int64)
-            if ok.any():
-                hf[ok] = h3x_cell_ids(lat_np[ok], lon_np[ok], finest)
-            hs = pd.Series(hf, dtype="Int64")
-            hs[~ok] = pd.NA
-            cols[f"h3_{finest}"] = hs
-            yield pd.DataFrame(cols)
-
-    # nondeterministic marker: stops column pruning from cloning the UDF
-    # once per extracted struct field
-    enc = enc.asNondeterministic()
-    tmp = df.withColumn("__tiles", enc(F.col(lat_col), F.col(lon_col)))
-    for f_ in fields:
-        tmp = tmp.withColumn(f_.name, F.col(f"__tiles.{f_.name}"))
-    from .h3x import h3x_parent_col
-
-    for r in sorted(h3_resolutions):
-        if r != finest:
-            tmp = tmp.withColumn(
-                f"h3_{r}", h3x_parent_col(F.col(f"h3_{finest}"), r)
-            )
-    return tmp.drop("__tiles")

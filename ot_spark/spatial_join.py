@@ -1,5 +1,6 @@
-"""Filter-and-refine point-in-polygon spatial join (reference AreaHandler).
+"""Country counters of the point-in-polygon admin join (reference AreaHandler).
 
+The join itself is enrich_fused.spatial_enrich with an ``area_index``.
 Probe semantics = /root/reference/src/area.rs:366-401:
 
 - |lat| >= 90 -> skipped (NULL admin_key), area.rs:368-370;
@@ -9,8 +10,8 @@ Probe semantics = /root/reference/src/area.rs:366-401:
   comma-joined in area-insertion order (area.rs:377-389, 396-399).
 
 Spark shape (SURVEY.md §4): the grid cell is JVM Column arithmetic; the
-probe itself is one Arrow-batched pandas UDF running the vectorised
-:class:`~ot_spark.area_index.CellLookup` kernel — a binary search over the
+probe itself runs in spatial_enrich's one Arrow-batched pandas UDF as the
+vectorised :class:`~ot_spark.area_index.CellLookup` kernel — a binary search over the
 sorted indexed cells and the exact geometry test only for rows landing
 in border cells (the reference counts these via
 country_intersect_checks_count — we expose the same stats).  The kernel's
@@ -26,50 +27,11 @@ salting apply.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 from .area_index import AreaIndex
-from .cells import grid_cell
 from .session import local_df
-
-
-def enrich_with_admin(
-    df: DataFrame,
-    index: AreaIndex,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    out_col: str = "admin_key",
-    cell_col: str = "grid_cell",
-) -> DataFrame:
-    """Add ``grid_cell`` and ``admin_key`` columns.
-
-    NULL admin_key == the reference's "no country tag appended"
-    (area.rs:392-395: empty result_vec -> not-found counter, no tag).
-    """
-    df = df.withColumn(cell_col, grid_cell(F.col(lat_col), F.col(lon_col), index.tile_size))
-    bc = df.sparkSession.sparkContext.broadcast(index.cell_lookup)
-
-    @F.pandas_udf(StringType())
-    def lookup(
-        it: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
-    ) -> Iterator[pd.Series]:
-        kernel = bc.value
-        for cell_s, lon_s, lat_s in it:
-            yield pd.Series(kernel.lookup(
-                cell_s.to_numpy(dtype=np.float64, na_value=np.nan),
-                lon_s.to_numpy(dtype=np.float64, na_value=np.nan),
-                lat_s.to_numpy(dtype=np.float64, na_value=np.nan),
-            ))
-
-    return df.withColumn(
-        out_col, lookup(F.col(cell_col), F.col(lon_col), F.col(lat_col))
-    )
 
 
 def admin_stats_df(

@@ -627,8 +627,8 @@ def build_ivfpq_index(
 ) -> DataFrame:
     """Production IVF+PQ posting lists: one FUSED Arrow UDF computes the
     top-``replicas`` nearest coarse cells AND the packed PQ code per
-    vector (one ArrowEvalPython node — see s2h3.with_tiles for why
-    fusing matters), then explodes to (id, ivf_cell, pq_code) rows.
+    vector (one ArrowEvalPython node — see enrich_fused.spatial_enrich
+    for why fusing matters), then explodes to (id, ivf_cell, pq_code) rows.
 
     Multi-assignment (SPANN-style spill replicas) is what buys recall on
     boundary vectors: a vector near a cell edge is posted to both cells,

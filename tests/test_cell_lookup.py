@@ -4,7 +4,7 @@
 point: cell state 0 -> NULL, single cell -> its key, MULTIPLE -> every
 candidate whose clipped geometry intersects the point, comma-joined in
 insertion order.  The kernel must agree with it through ``probe``,
-``lookup`` and both distributed enrichers, on random points, polygon
+``lookup`` and the distributed enrichment, on random points, polygon
 vertices and edges, NaN coordinates, poles and cells in neither table.
 """
 
@@ -15,7 +15,7 @@ import math
 import numpy as np
 import pytest
 
-from ot_spark import area_index, geom, spatial_join
+from ot_spark import area_index, geom
 from ot_spark.area_index import MULTIPLE, AreaIndex
 from ot_spark.cells import cell_bounds
 from ot_spark.enrich_fused import spatial_enrich
@@ -102,13 +102,14 @@ def test_enrichers_match_oracle(spark, idx):
         [(i, la, lo) for i, (la, lo) in enumerate(pts)], "id long, lat double, lon double"
     )
     cols = ["id", "lat", "lon", "grid_cell", "admin_key"]
-    composed = spatial_join.enrich_with_admin(df, idx).select(cols).collect()
-    fused = spatial_enrich(df, idx).select(cols).collect()
-    assert len(composed) == len(pts)
-    by_id = {r.id: (r.grid_cell, r.admin_key) for r in fused}
-    for r in composed:
+    out = spatial_enrich(df, idx, s2_level=None, h3_resolutions=())
+    rows = out.select(cols).collect()
+    assert len(rows) == len(pts)
+    for r in rows:
+        la, lo = pts[r.id]
+        want_cell = _cells(idx, np.array([la]), np.array([lo]))[0]
+        assert r.grid_cell == (None if np.isnan(want_cell) else want_cell), tuple(r)
         assert r.admin_key == _oracle(idx, r.grid_cell, r.lat, r.lon), tuple(r)
-        assert by_id[r.id] == (r.grid_cell, r.admin_key)
 
 
 def test_empty_and_nan_inputs(idx):
@@ -156,5 +157,5 @@ def test_many_border_cells(spark):
         [(i, float(la), float(lo)) for i, (la, lo) in enumerate(zip(lat, lon))],
         "id long, lat double, lon double",
     )
-    out = spatial_join.enrich_with_admin(df, idx).orderBy("id")
+    out = spatial_enrich(df, idx, s2_level=None, h3_resolutions=()).orderBy("id")
     assert [r.admin_key for r in out.select("admin_key").collect()] == want

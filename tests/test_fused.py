@@ -1,14 +1,15 @@
-"""Fused spatial enrichment == composed operators, row for row."""
+"""spatial_enrich against per-row references, row for row."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from ot_spark import area_index, parse, raster, spatial_join
+from ot_spark import area_index, parse, raster
 from ot_spark.enrich_fused import spatial_enrich
-from ot_spark.s2h3 import with_tiles
 from ot_spark.synth import gen_admin_polygons
+
+ALL_COLS = ["grid_cell", "admin_key", "raster_id", "elev", "s2_10", "h3_7", "h3_9"]
 
 
 @pytest.fixture(scope="module")
@@ -22,18 +23,20 @@ def indices(spark, fixture_dir):
     return idx, ridx
 
 
-def test_fused_equals_composed(spark, pages, indices):
+def test_fused_equals_composed(spark, pages, indices, enrich_ref):
+    """The all-outputs call: every column equals its per-row reference
+    (the test id predates the per-row references)."""
     idx, ridx = indices
     df = parse.with_coordinates(pages).select("url", "lat", "lon")
 
-    fused = spatial_enrich(df, idx, ridx)
-    composed = raster.enrich_with_elevation(
-        spatial_join.enrich_with_admin(with_tiles(df), idx), ridx
-    )
-    cols = ["url", "grid_cell", "admin_key", "raster_id", "elev", "s2_10", "h3_7", "h3_9"]
-    a = {r.url: tuple(r) for r in fused.select(cols).collect()}
-    b = {r.url: tuple(r) for r in composed.select(cols).collect()}
-    assert a == b
+    out = spatial_enrich(df, idx, ridx)
+    assert set(out.columns) - set(df.columns) == set(ALL_COLS)
+    rows = out.collect()
+    got = [{c: r[c] for c in ALL_COLS} for r in rows]
+    assert got == enrich_ref(rows, idx, ridx)
+    assert any(g["admin_key"] is not None for g in got)
+    assert any(g["elev"] is not None for g in got)
+    assert any(g["s2_10"] is None for g in got)  # rows without coordinates
 
 
 def test_fused_skip_col(spark, pages, indices):

@@ -156,12 +156,12 @@ def test_cell_size_uniformity():
 def test_spark_udf_matches_numpy(spark):
     import pandas as pd
 
-    from ot_spark.h3x import with_h3x_cells
+    from ot_spark.enrich_fused import spatial_enrich
 
     lat, lon = _sample(2000, seed=11)
     pdf = pd.DataFrame({"doc_id": np.arange(2000), "lat": lat, "lon": lon})
     out = (
-        with_h3x_cells(spark.createDataFrame(pdf), (7, 9))
+        spatial_enrich(spark.createDataFrame(pdf), None, s2_level=None)
         .orderBy("doc_id")
         .toPandas()
     )
@@ -173,16 +173,15 @@ def test_spark_udf_matches_numpy(spark):
 def test_spark_plan_single_arrow_udf(spark):
     import pandas as pd
 
-    from ot_spark.h3x import with_h3x_cells
+    from ot_spark.enrich_fused import spatial_enrich
+    from tools.gate import node_count
 
     pdf = pd.DataFrame({"doc_id": [1], "lat": [1.0], "lon": [2.0]})
-    df = with_h3x_cells(spark.createDataFrame(pdf), (7, 9))
+    df = spatial_enrich(spark.createDataFrame(pdf), None, s2_level=None)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
-    # the formatted plan prints each node twice (tree + detail section);
-    # count the tree form "ArrowEvalPython (<id>)" to assert ONE node
-    assert plan.count("ArrowEvalPython (") == 1
+    assert node_count(plan, "ArrowEvalPython") == 1
     assert "BatchEvalPython" not in plan
 
 

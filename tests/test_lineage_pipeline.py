@@ -169,14 +169,13 @@ def test_pipeline_rerun_over_completed_output(spark, fixture_dir, tmp_path, monk
     assert rows == first["metrics"]["output"]["rows"]
 
 
-def test_pipeline_build_one_enrichment_for_every_config(spark, fixture_dir, tmp_path):
-    """Pipeline.build runs the fused enrichment whatever the config: admin +
+def test_pipeline_build_one_enrichment_for_every_config(spark, fixture_dir, tmp_path, enrich_ref):
+    """Pipeline.build runs the one enrichment whatever the config: admin +
     raster, no admin index, and keep_original_elevation over an input
     ``elev`` column all emit one column set, with values equal to the
-    composed reference operators."""
-    from ot_spark import spatial_join
+    per-row references (skip-flagged rows get no raster_id and no looked-up
+    elevation; an original elevation wins under keep_original)."""
     from ot_spark.area_index import AreaIndex
-    from ot_spark.s2h3 import with_tiles
 
     idx = area_index.build_area_index(
         [(r["key"], r["name"], r["wkt"]) for r in gen_admin_polygons().to_pylist()]
@@ -189,6 +188,9 @@ def test_pipeline_build_one_enrichment_for_every_config(spark, fixture_dir, tmp_
     spark.read.parquet(pages_path).withColumn(
         "elev", F.when(F.xxhash64("url") % 3 == 0, F.lit(123.45))
     ).write.parquet(elev_path)
+    original = {
+        r.url: r.elev for r in spark.read.parquet(elev_path).select("url", "elev").collect()
+    }
     common = dict(links_path=f"{fixture_dir}/links.parquet", raster_index=ridx)
     configs = {
         "admin+raster": PipelineConfig(pages_path, admin_index=idx, **common),
@@ -197,34 +199,25 @@ def test_pipeline_build_one_enrichment_for_every_config(spark, fixture_dir, tmp_
             elev_path, admin_index=idx, keep_original_elevation=True, **common
         ),
     }
-    cols = ["url", "grid_cell", "admin_key", "raster_id", "elev", "s2_10", "h3_7", "h3_9"]
+    cols = ["grid_cell", "admin_key", "raster_id", "elev", "s2_10", "h3_7", "h3_9"]
     column_sets, got = set(), {}
     for name, cfg in configs.items():
-        out = Pipeline(cfg).build(spark)
-        column_sets.add(frozenset(out.columns))
-        base = out.select("url", "lat", "lon", "no_elevation")
-        if cfg.keep_original_elevation:
-            base = base.join(spark.read.parquet(elev_path).select("url", "elev"), "url")
-        ref = spatial_join.enrich_with_admin(
-            raster.enrich_with_elevation(
-                with_tiles(base), ridx, skip_col="no_elevation",
-                keep_original=cfg.keep_original_elevation,
-            ),
-            cfg.admin_index or AreaIndex(tile_size=cfg.tile_size),
-        ).withColumn(
-            # the fused path routes skip-flagged rows to no raster at all
-            "raster_id",
-            F.when(~F.coalesce(F.col("no_elevation"), F.lit(False)), F.col("raster_id")),
-        )
-        got[name] = {r.url: tuple(r) for r in out.select(cols).collect()}
-        want = {r.url: tuple(r) for r in ref.select(cols).collect()}
-        assert got[name] == want, name
+        rows = Pipeline(cfg).build(spark).collect()
+        column_sets.add(frozenset(rows[0].asDict()))
+        refs = enrich_ref(rows, cfg.admin_index or AreaIndex(tile_size=cfg.tile_size), ridx)
+        for r, want in zip(rows, refs):
+            if r.no_elevation:
+                want.update(raster_id=None, elev=None)
+            if cfg.keep_original_elevation and original[r.url] is not None:
+                want["elev"] = original[r.url]
+            assert {c: r[c] for c in cols} == want, (name, r.url)
+        got[name] = [r.asDict() for r in rows]
     assert len(column_sets) == 1
-    assert any(r[2] is not None for r in got["admin+raster"].values())
-    assert any(r[4] is not None for r in got["admin+raster"].values())
-    assert all(r[2] is None for r in got["no admin"].values())
-    assert any(r[4] is not None for r in got["no admin"].values())
-    assert any(r[4] == 123.45 for r in got["keep original"].values())
+    assert any(r["admin_key"] is not None for r in got["admin+raster"])
+    assert any(r["elev"] is not None for r in got["admin+raster"])
+    assert all(r["admin_key"] is None for r in got["no admin"])
+    assert any(r["elev"] is not None for r in got["no admin"])
+    assert any(r["elev"] == 123.45 for r in got["keep original"])
 
 
 def _keyed(spark, n, payload="v"):

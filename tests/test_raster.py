@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ot_spark import raster
+from ot_spark.enrich_fused import spatial_enrich
 from ot_spark.synth import NODATA, gen_raster_tiles, raster_value
 
 
@@ -14,6 +15,10 @@ from ot_spark.synth import NODATA, gen_raster_tiles, raster_value
 def ridx(spark, fixture_dir):
     rdf = spark.read.parquet(f"{fixture_dir}/raster_tiles.parquet")
     return raster.RasterIndex.from_df(rdf)
+
+
+def _enrich_with_elevation(df, ridx, **kw):
+    return spatial_enrich(df, None, ridx, s2_level=None, h3_resolutions=(), **kw)
 
 
 def _expected(lon: float, lat: float) -> float | None:
@@ -50,7 +55,7 @@ def test_routing_and_lookup_golden(spark, ridx):
     df = spark.createDataFrame(
         [(float(lo), float(la)) for lo, la in GOLDEN_POINTS], "lon double, lat double"
     )
-    out = raster.enrich_with_elevation(df, ridx).collect()
+    out = _enrich_with_elevation(df, ridx).collect()
     for row, (lo, la) in zip(out, GOLDEN_POINTS):
         want = _expected(lo, la)
         if want is None:
@@ -61,7 +66,7 @@ def test_routing_and_lookup_golden(spark, ridx):
 
 def test_routing_finest_first(spark, ridx):
     df = spark.createDataFrame([(1.5, 1.5), (2.5, 2.5), (5.0, 4.0)], "lon double, lat double")
-    rows = raster.enrich_with_elevation(df, ridx).select("raster_id").collect()
+    rows = _enrich_with_elevation(df, ridx).select("raster_id").collect()
     assert [r.raster_id for r in rows] == ["fineA", "fineB", "coarse"]
 
 
@@ -69,7 +74,7 @@ def test_skip_flag(spark, ridx):
     df = spark.createDataFrame(
         [(0.505, 0.505, True), (0.505, 0.505, False)], "lon double, lat double, no_elevation boolean"
     )
-    rows = raster.enrich_with_elevation(df, ridx, skip_col="no_elevation").collect()
+    rows = _enrich_with_elevation(df, ridx, skip_col="no_elevation").collect()
     assert rows[0].elev is None
     assert rows[1].elev is not None
 
@@ -78,7 +83,7 @@ def test_keep_original(spark, ridx):
     df = spark.createDataFrame(
         [(0.505, 0.505, 42.0), (0.505, 0.505, None)], "lon double, lat double, elev double"
     )
-    rows = raster.enrich_with_elevation(df, ridx, keep_original=True).collect()
+    rows = _enrich_with_elevation(df, ridx, keep_original=True).collect()
     assert rows[0].elev == 42.0
     assert rows[1].elev == pytest.approx(_expected(0.505, 0.505))
 
@@ -88,7 +93,7 @@ def test_elevation_stats(spark, ridx):
         [(0.505, 0.505, False), (9.5, 0.0, False), (1.0, 1.0, True)],
         "lon double, lat double, no_elevation boolean",
     )
-    out = raster.enrich_with_elevation(df, ridx, skip_col="no_elevation")
+    out = _enrich_with_elevation(df, ridx, skip_col="no_elevation")
     stats = raster.elevation_stats_df(out, skip_col="no_elevation").first()
     assert stats.asDict() == {
         "found": 1, "not_found": 1, "skipped": 1, "unknown_crs": 0,

@@ -37,7 +37,7 @@ ALLOWED: dict[str, str] = {
     "__spark_entry__.oracle_sql": "driver contract: the driver calls it by name",
     "ot_spark.cds._train": "run by name in a child interpreter (`python -c`)",
     "ot_spark.cds._workload": "run by name in a child interpreter (`python -c`)",
-    "ot_spark.s2h3.with_tiles": "Column-only S2 reference the Arrow tiler is tested against",
+    "ot_spark.h3x.h3x_parent": "numpy parent truncation the JVM h3x_parent_col is tested against",
     "ot_spark.webtext.simsearch._dot": "Column-built dot product the unrolled kernel is tested against",
     "ot_spark.webtext.simsearch._l2sq": "Column-built squared L2 the unrolled kernel is tested against",
     "ot_spark.webtext.simsearch.cosine_col": "Column-built cosine the literal-query kernel is tested against",

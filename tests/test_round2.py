@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from ot_spark import densify, lineage, pipeline, raster, semi
-from ot_spark.area_index import AreaIndex
 from ot_spark.enrich_fused import spatial_enrich
 from ot_spark.webtext.dedup import simhash_near_pairs, with_simhash
 
@@ -119,7 +118,7 @@ def test_enrich_uses_join_path_above_threshold(spark):
     pts = spark.createDataFrame(
         [(1, -48.7, -38.7), (2, 120.0, 80.0)], "id long, lon double, lat double"
     )
-    out = raster.enrich_with_elevation(pts, idx).collect()
+    out = spatial_enrich(pts, None, idx, s2_level=None, h3_resolutions=()).collect()
     got = {r.id: (r.raster_id, r.elev) for r in out}
     assert got[1][0] is not None and got[1][1] == 0.0  # zeros grid
     assert got[2] == (None, None)
@@ -202,8 +201,7 @@ def test_connected_components_chain(spark):
 
 # ------------------------------------------- keep-original x skip interplay
 
-@pytest.mark.parametrize("op", ["enrich_with_elevation", "spatial_enrich"])
-def test_keep_original_skip_preserves_existing_elev(spark, fixture_dir, op):
+def test_keep_original_skip_preserves_existing_elev(spark, fixture_dir):
     rdf = spark.read.parquet(f"{fixture_dir}/raster_tiles.parquet")
     idx = raster.RasterIndex.from_df(rdf)
     pts = spark.createDataFrame(
@@ -215,17 +213,15 @@ def test_keep_original_skip_preserves_existing_elev(spark, fixture_dir, op):
         ],
         "id long, lon double, lat double, elev double, skip boolean",
     )
-    if op == "enrich_with_elevation":
-        out = raster.enrich_with_elevation(
-            pts, idx, skip_col="skip", keep_original=True
-        )
-    else:
-        out = spatial_enrich(
-            pts, AreaIndex(tile_size=1.0), idx, skip_col="skip",
-            keep_original=True,
-        )
-    got = {r.id: r.elev for r in out.collect()}
+    out = spatial_enrich(
+        pts, None, idx, s2_level=None, h3_resolutions=(), skip_col="skip",
+        keep_original=True,
+    )
+    rows = {r.id: r for r in out.collect()}
+    got = {i: r.elev for i, r in rows.items()}
     assert got[1] == 42.0
     assert got[2] is None
     assert got[3] is not None and got[3] != 7.0
     assert got[4] == 7.0
+    # skip-flagged rows are routed to no raster at all
+    assert [rows[i].raster_id is None for i in (1, 2, 3, 4)] == [True, True, False, False]

@@ -110,7 +110,7 @@ def test_unknown_crs_tile_yields_null_and_counter(spark):
     df = spark.createDataFrame(
         [(0.5, 0.5), (5.0, 5.0)], "lon double, lat double"
     )
-    out = raster.enrich_with_elevation(df, ridx)
+    out = spatial_enrich(df, None, ridx, s2_level=None, h3_resolutions=())
     rows = {(r.lon, r.lat): (r.raster_id, r.elev) for r in out.collect()}
     assert rows[(0.5, 0.5)] == ("mystery", None)  # routed but NOT valued
     assert rows[(5.0, 5.0)] == (None, None)
@@ -149,11 +149,12 @@ def _many_tiles(n: int) -> raster.RasterIndex:
     return raster.RasterIndex(tiles)
 
 
-def test_fused_scale_paths_match_composed(spark):
+def test_fused_scale_paths_match_composed(spark, enrich_ref):
     # >1000 border cells (the CellLookup kernel holds them outside the
     # plan); >ROUTE_JOIN_THRESHOLD tiles -> cell-join routing (no CASE chain).
     # route_col's literal chain at 500 tiles would StackOverflow the JVM at
     # plan build — this test passing AT ALL proves the fallback engaged.
+    # Checked against per-row references (the test id predates them).
     idx = _many_border_index(1500)
     ridx = _many_tiles(500)
     rows = [
@@ -161,23 +162,21 @@ def test_fused_scale_paths_match_composed(spark):
         for i in range(300)
     ]
     df = spark.createDataFrame(rows, "url long, lon double, lat double")
-    fused = spatial_enrich(df, idx, ridx)
-    composed = raster.enrich_with_elevation(
-        spatial_join.enrich_with_admin(df, idx), ridx
-    )
-    cols = ["url", "grid_cell", "admin_key", "raster_id", "elev"]
-    a = {r.url: tuple(r) for r in fused.select(cols).collect()}
-    b = {r.url: tuple(r) for r in composed.select(cols).collect()}
-    assert a == b
-    assert sum(1 for v in a.values() if v[2] == "X") > 0
-    assert sum(1 for v in a.values() if v[4] is not None) > 0
+    out = spatial_enrich(df, idx, ridx, s2_level=None, h3_resolutions=())
+    rows = out.collect()
+    cols = ["grid_cell", "admin_key", "raster_id", "elev"]
+    got = [{c: r[c] for c in cols} for r in rows]
+    want = [{c: w[c] for c in cols} for w in enrich_ref(rows, idx, ridx)]
+    assert got == want
+    assert sum(1 for v in got if v["admin_key"] == "X") > 0
+    assert sum(1 for v in got if v["elev"] is not None) > 0
 
 
 def test_admin_stats_broadcast_fallback(spark):
     idx = _many_border_index(1500)
     rows = [(i, -179.5 + i, 0.5) for i in range(10)] + [(99, 0.5, 50.5)]
     df = spark.createDataFrame(rows, "url long, lon double, lat double")
-    out = spatial_join.enrich_with_admin(df, idx)
+    out = spatial_enrich(df, idx, s2_level=None, h3_resolutions=())
     stats = spatial_join.admin_stats_df(out, idx).first()
     assert stats.found == 10
     assert stats.not_found == 1  # probed, empty cell

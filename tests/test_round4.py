@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ot_spark.webtext.dedup import connected_components
+from tools.gate import node_count
 
 
 # --------------------------------------------- CC is O(log n), not O(diam)
@@ -121,12 +122,19 @@ def _formatted_plan(df) -> str:
     )
 
 
-def _node_count(plan: str, op: str) -> int:
-    """Distinct physical nodes of type ``op`` — 'formatted' mode prints
-    every node twice (tree + details), so raw .count() double-counts."""
-    import re
+def _udf_fields(df) -> list[str]:
+    """Field names of the struct spatial_enrich's UDF returns (its ``__e``
+    column, read from the analyzed plan below the final drop)."""
+    import json
 
-    return len(set(re.findall(rf"(?<![A-Za-z]){op} \((\d+)\)", plan)))
+    from pyspark.sql.types import StructType
+
+    node = df._jdf.queryExecution().analyzed()
+    while True:
+        schema = StructType.fromJson(json.loads(node.schema().json()))
+        if "__e" in schema.names:
+            return schema["__e"].dataType.names
+        node = node.children().apply(0)
 
 
 def test_flagship_plan_stays_fused(spark):
@@ -134,7 +142,11 @@ def test_flagship_plan_stays_fused(spark):
     map-only stage — zero shuffle exchanges before the sink and exactly ONE
     Python boundary (the fused Arrow enricher).  A future change that adds
     an exchange or lets column pruning clone the UDF into a second
-    ArrowEvalPython node fails here, not in the next round's bench."""
+    ArrowEvalPython node fails here, not in the next round's bench.
+
+    The same holds for each output selection of spatial_enrich, whose UDF
+    returns only the requested fields: an admin-only call runs no tile
+    encoder and a tiles-only call no lookup."""
     import gate_queries.common as entrymod
     from ot_spark import filters, parse
     from ot_spark.benchdata import pages_range_df
@@ -144,23 +156,37 @@ def test_flagship_plan_stays_fused(spark):
     df = parse.with_coordinates(df)
     df = filters.complex_filter(df)
     df = filters.remove_tags(df)
-    out = spatial_enrich(df, entrymod._admin_index(), entrymod._raster_index())
-    plan = _formatted_plan(out)
-    shuffles = _node_count(plan, "Exchange")  # "Exchange (n)" = shuffle;
-    # broadcasts print as "BroadcastExchange (n)" and don't match
-    assert shuffles == 0, f"flagship grew a shuffle:\n{plan}"
-    assert _node_count(plan, "BatchEvalPython") == 0, "row-at-a-time Python UDF"
-    python_nodes = _node_count(plan, "ArrowEvalPython") + _node_count(
-        plan, "MapInPandas"
-    )
-    assert python_nodes == 1, (
-        f"expected exactly 1 Arrow node, got {python_nodes}:\n{plan}"
-    )
-    # the admin lookup runs inside that node: no broadcast join, and no
-    # driver-side table planned as a Python RDD that every execution of
-    # the plan would rebuild with a Python job
-    assert "Scan ExistingRDD" not in plan, f"Python-RDD table in plan:\n{plan}"
-    assert "BroadcastExchange" not in plan, f"broadcast join in plan:\n{plan}"
+    idx, ridx = entrymod._admin_index(), entrymod._raster_index()
+    no_tiles = dict(s2_level=None, h3_resolutions=())
+    calls = {
+        "all": (spatial_enrich(df, idx, ridx), ["admin_key", "elev", "s2_10", "h3_9"],
+                {"grid_cell", "admin_key", "raster_id", "elev", "s2_10", "h3_7", "h3_9"}),
+        "admin": (spatial_enrich(df, idx, **no_tiles), ["admin_key"],
+                  {"grid_cell", "admin_key"}),
+        "raster": (spatial_enrich(df, None, ridx, **no_tiles), ["elev"],
+                   {"raster_id", "elev"}),
+        "tiles": (spatial_enrich(df, None), ["s2_10", "h3_9"],
+                  {"s2_10", "h3_7", "h3_9"}),
+    }
+    for name, (out, fields, added) in calls.items():
+        plan = _formatted_plan(out)
+        shuffles = node_count(plan, "Exchange")  # "Exchange (n)" = shuffle;
+        # broadcasts print as "BroadcastExchange (n)" and don't match
+        assert shuffles == 0, f"{name} grew a shuffle:\n{plan}"
+        assert node_count(plan, "BatchEvalPython") == 0, "row-at-a-time Python UDF"
+        python_nodes = node_count(plan, "ArrowEvalPython") + node_count(
+            plan, "MapInPandas"
+        )
+        assert python_nodes == 1, (
+            f"{name}: expected exactly 1 Arrow node, got {python_nodes}:\n{plan}"
+        )
+        # the admin lookup runs inside that node: no broadcast join, and no
+        # driver-side table planned as a Python RDD that every execution of
+        # the plan would rebuild with a Python job
+        assert "Scan ExistingRDD" not in plan, f"Python-RDD table in plan:\n{plan}"
+        assert "BroadcastExchange" not in plan, f"broadcast join in plan:\n{plan}"
+        assert _udf_fields(out) == fields, name
+        assert set(out.columns) - set(df.columns) == added, name
 
 
 # -------------------------- tokenizer evaluates ONCE per row (round-4 perf)
@@ -321,4 +347,4 @@ def test_dedup_plans_have_no_cartesian(spark, qname):
     df = entrymod.queries()[qname](spark, "/root/testdata/sf0.001")
     plan = _formatted_plan(df)
     for bad in ("CartesianProduct", "BroadcastNestedLoopJoin"):
-        assert _node_count(plan, bad) == 0, f"{qname} grew {bad}:\n{plan}"
+        assert node_count(plan, bad) == 0, f"{qname} grew {bad}:\n{plan}"

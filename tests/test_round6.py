@@ -6,6 +6,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tools.gate import node_count
+
 
 def _formatted_plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
@@ -334,9 +336,7 @@ def test_crawl_asof_single_partial_aggregable_shuffle(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     snap = latest_snapshot(synthetic_revisions(docs), CRAWL_EPOCH + 6 * DAY)
     plan = _formatted_plan(snap)
-    # formatted explain prints each node twice (tree + detail header);
-    # "Exchange (" matches only the tree line
-    assert plan.count("Exchange (") == 1
+    assert node_count(plan, "Exchange") == 1
     assert "partial_max" in plan
     assert "Window" not in plan
 
@@ -405,7 +405,7 @@ def test_crawl_delta_single_pass_no_join(spark):
         synthetic_revisions(docs), CRAWL_EPOCH + 4 * DAY, CRAWL_EPOCH + 12 * DAY
     )
     plan = _formatted_plan(delta)
-    assert plan.count("Exchange (") == 1, plan
+    assert node_count(plan, "Exchange") == 1, plan
     assert "Join" not in plan, plan
     assert "partial_max" in plan
     assert plan.count("ReadSchema") == 1  # one scan of the revision log

@@ -304,7 +304,7 @@ def test_fused_split_threshold_matches_window_path(spark, fixture_dir):
     from pyspark.sql import Window, functions as F
 
     from ot_spark import densify, raster
-    from ot_spark.raster import enrich_with_elevation
+    from ot_spark.enrich_fused import spatial_enrich
 
     rdf = spark.read.parquet(f"{fixture_dir}/raster_tiles.parquet")
     ridx = raster.RasterIndex.from_df(rdf)
@@ -324,7 +324,7 @@ def test_fused_split_threshold_matches_window_path(spark, fixture_dir):
     # reference: the window form, built from the same primitives
     seg = densify.explode_segments(links, nodes)
     inter = densify.interpolate(seg, 0.3, 0.3)
-    inter = enrich_with_elevation(inter, ridx, out_col="elev")
+    inter = spatial_enrich(inter, None, ridx, s2_level=None, h3_resolutions=())
     inter = inter.withColumn("elev0", F.coalesce("elev", F.lit(0.0)))
     w = Window.partitionBy("link_id", "pos").orderBy("i")
     before = F.coalesce(F.lag("elev0").over(w), F.coalesce("from_elev", F.lit(0.0)))

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ot_spark import s2h3
+from ot_spark.enrich_fused import spatial_enrich
 
 
 def _level_of(cell_id: int) -> int:
@@ -96,7 +97,7 @@ def test_s2_spark_column(spark):
     df = spark.createDataFrame(
         [(52.52, 13.405), (48.8566, 2.3522), (None, None)], "lat double, lon double"
     )
-    out = s2h3.with_s2_cell(df, level=12).collect()
+    out = spatial_enrich(df, None, s2_level=12, h3_resolutions=()).collect()
     want = s2h3.s2_cell_ids(np.array([52.52, 48.8566]), np.array([13.405, 2.3522]), 12)
     assert out[0].s2_12 == int(want[0])
     assert out[1].s2_12 == int(want[1])

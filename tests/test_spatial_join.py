@@ -1,4 +1,5 @@
-"""Distributed filter-and-refine PIP join vs driver-side probe oracle."""
+"""Distributed filter-and-refine PIP join (spatial_enrich with an area
+index) vs driver-side probe oracle."""
 
 from __future__ import annotations
 
@@ -6,9 +7,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from ot_spark import area_index, parse, spatial_join
+from ot_spark.enrich_fused import spatial_enrich
 from ot_spark.synth import gen_admin_polygons
 
 ROWS = [(r["key"], r["name"], r["wkt"]) for r in gen_admin_polygons().to_pylist()]
+
+
+def _enrich_with_admin(df, idx):
+    return spatial_enrich(df, idx, s2_level=None, h3_resolutions=())
 
 
 @pytest.fixture(scope="module")
@@ -18,7 +24,7 @@ def idx():
 
 def test_join_matches_driver_probe(spark, pages, idx):
     df = parse.with_coordinates(pages)
-    out = spatial_join.enrich_with_admin(df, idx)
+    out = _enrich_with_admin(df, idx)
     got = {
         r.url: r.admin_key
         for r in out.select("url", "admin_key").collect()
@@ -37,7 +43,7 @@ def test_join_matches_driver_probe(spark, pages, idx):
 def test_join_pinned_golden_points(spark, pages, idx):
     # the pinned rows from synth._coords (reference PIP golden points)
     df = parse.with_coordinates(pages)
-    out = spatial_join.enrich_with_admin(df, idx)
+    out = _enrich_with_admin(df, idx)
     by_url = {
         r.url: r.admin_key
         for r in out.where(F.col("url").rlike("/p[0-7]$")).collect()
@@ -52,7 +58,7 @@ def test_join_pinned_golden_points(spark, pages, idx):
 
 def test_admin_stats(spark, pages, idx):
     df = parse.with_coordinates(pages)
-    out = spatial_join.enrich_with_admin(df, idx)
+    out = _enrich_with_admin(df, idx)
     stats = spatial_join.admin_stats_df(out, idx).first()
     # poles / unparseable coords are never counted — the reference
     # early-returns before touching any counter (area.rs:368-370)
@@ -66,7 +72,7 @@ def test_admin_stats(spark, pages, idx):
 def test_text_untouched(spark, pages, idx):
     """BASELINE.json invariant: byte-identical text per url end-to-end."""
     df = parse.with_coordinates(pages)
-    out = spatial_join.enrich_with_admin(df, idx)
+    out = _enrich_with_admin(df, idx)
     in_hash = pages.select("url", F.sha2(F.col("text"), 256).alias("h"))
     out_hash = out.select("url", F.sha2(F.col("text"), 256).alias("h"))
     diff = in_hash.join(out_hash, "url").where(

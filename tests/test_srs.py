@@ -8,7 +8,6 @@ import numpy as np
 import pytest
 
 from ot_spark import raster, srs
-from ot_spark.area_index import AreaIndex
 from ot_spark.enrich_fused import spatial_enrich
 
 LIMBURG = (50.38536322, 8.06185930)          # lat, lon
@@ -52,17 +51,8 @@ def test_webmercator_golden_and_roundtrip():
     assert abs(la2[0] - 52.5) < 1e-12 and abs(lo2[0] - 13.4) < 1e-12
 
 
-# every elevation operator: the composed reference and the pipeline's
-# fused enrichment (no admin polygons: an empty AreaIndex)
-ELEVATION_OPS = {
-    "enrich_with_elevation": raster.enrich_with_elevation,
-    "spatial_enrich": lambda df, idx: spatial_enrich(df, AreaIndex(tile_size=1.0), idx),
-}
-
-
 @pytest.mark.parametrize("epsg", [25832, 2000])
-@pytest.mark.parametrize("op", sorted(ELEVATION_OPS))
-def test_projected_raster_lookup(spark, op, epsg):
+def test_projected_raster_lookup(spark, epsg):
     # 100 m UTM32N tile around the Limburg golden point; value = py*1000+px.
     # EPSG:2000 is not supported (srs.epsg_supported): the point is routed
     # to the tile but gets NULL elevation instead of failing the stage
@@ -79,7 +69,7 @@ def test_projected_raster_lookup(spark, op, epsg):
     pts = spark.createDataFrame(
         [(1, LIMBURG[1], LIMBURG[0])], "id long, lon double, lat double"
     )
-    out = ELEVATION_OPS[op](pts, idx).first()
+    out = spatial_enrich(pts, None, idx, s2_level=None, h3_resolutions=()).first()
     px = int((LIMBURG_25832[0] - 430000.0) // 100)
     py = int((5585000.0 - LIMBURG_25832[1]) // 100)
     assert out.raster_id == "utm"

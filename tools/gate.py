@@ -32,13 +32,12 @@ import argparse
 import glob
 import json
 import os
+import re
 import sys
 import time
 
 # appended, not prepended: a PYTHONPATH checkout wins over this tree
 sys.path.append(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-import canon  # noqa: E402  (tools/ is sys.path[0] when run as a script)
 
 
 def _args(argv: list[str]) -> argparse.Namespace:
@@ -68,6 +67,7 @@ def _args(argv: list[str]) -> argparse.Namespace:
 
 
 def _oracle(args, spark):
+    import canon  # tools/ is sys.path[0] when run as a script
     import duckdb
 
     import __spark_entry__ as entrymod
@@ -89,6 +89,8 @@ def _oracle(args, spark):
 
 
 def _snapshot(args, spark):
+    import canon
+
     os.makedirs(args.dir, exist_ok=True)
 
     def check(name, fn):
@@ -124,6 +126,15 @@ def _time(args, spark):
     return check
 
 
+def node_count(plan: str, op: str) -> int:
+    """Distinct physical nodes of type ``op`` in a formatted plan, by the
+    ``(n) <op>`` header each node gets once in the details section: the
+    formatted mode prints every node twice (tree and details), so a
+    substring count doubles, and a tree line may put arguments between
+    the name and the id (``BroadcastHashJoin Inner BuildRight (7)``)."""
+    return len(set(re.findall(rf"^\((\d+)\) {op}\b", plan, re.M)))
+
+
 def _plan(args, spark):
     if args.out:
         os.makedirs(args.out, exist_ok=True)
@@ -136,13 +147,13 @@ def _plan(args, spark):
         if args.out:
             with open(os.path.join(args.out, f"{name}.txt"), "w") as fh:
                 fh.write(plan)
-        row_python = plan.count("BatchEvalPython")
+        row_python = node_count(plan, "BatchEvalPython")
         return not row_python, (
-            f"shuffle_exchanges={plan.count('Exchange') - plan.count('BroadcastExchange')} "
-            f"broadcast={plan.count('BroadcastExchange')} "
-            f"bhj={plan.count('BroadcastHashJoin')} "
-            f"smj={plan.count('SortMergeJoin')} "
-            f"arrow={plan.count('ArrowEvalPython') + plan.count('MapInPandas')} "
+            f"shuffle_exchanges={node_count(plan, 'Exchange')} "
+            f"broadcast={node_count(plan, 'BroadcastExchange')} "
+            f"bhj={node_count(plan, 'BroadcastHashJoin')} "
+            f"smj={node_count(plan, 'SortMergeJoin')} "
+            f"arrow={node_count(plan, 'ArrowEvalPython') + node_count(plan, 'MapInPandas')} "
             f"row_python={row_python}"
             + (" FAIL row-at-a-time Python UDF in plan" if row_python else "")
         )
