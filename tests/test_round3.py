@@ -144,7 +144,7 @@ def _many_tiles(n: int) -> raster.RasterIndex:
             "min_lat": la, "max_lat": la + 2.0,
             "pixel_w": 0.5, "pixel_h": 0.5, "width": 4, "height": 4,
             "nodata": -32768.0,
-            "grid": np.full((4, 4), float(i)),
+            "grid": np.arange(16.0).reshape(4, 4) + 100 * i,
         })
     return raster.RasterIndex(tiles)
 
