@@ -429,7 +429,7 @@ def q_anchor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(p[4]),
     )
     pages = docs.select(F.encode(page, "UTF-8").alias("html"))
-    return anchor_term_counts(pages, "html", k=3)
+    return anchor_term_counts(pages, k=3)
 
 
 # Arithmetic re-derivation: anchor 1 targets site{(3d+1)%1000}.org with
@@ -663,9 +663,11 @@ def q_burst_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return burst_hosts(revs, host)
 
 
-def burst_hosts_oracle_sql(
-    trail_days: int = 3, factor: int = 2, min_count: int = 3
-) -> str:
+def burst_hosts_oracle_sql() -> str:
+    from ot_spark.webtext.crawldiff import (
+        BURST_FACTOR, BURST_MIN_COUNT, BURST_TRAIL_DAYS,
+    )
+
     return f"""
 WITH r AS ({_CRAWL_REVS_SQL}),
 cells AS (
@@ -678,12 +680,12 @@ w AS (
   SELECT host, day, cnt,
          CAST(coalesce(sum(cnt) OVER (
            PARTITION BY host ORDER BY day
-           RANGE BETWEEN {trail_days} PRECEDING AND 1 PRECEDING
+           RANGE BETWEEN {BURST_TRAIL_DAYS} PRECEDING AND 1 PRECEDING
          ), 0) AS BIGINT) AS prev
   FROM cells
 )
 SELECT host, day, cnt, prev,
-       (cnt > {factor} * prev AND cnt >= {min_count}) AS is_burst
+       (cnt > {BURST_FACTOR} * prev AND cnt >= {BURST_MIN_COUNT}) AS is_burst
 FROM w
 """
 

@@ -8,6 +8,15 @@ from pyspark.sql import functions as F
 
 from gate_queries.common import _read, _table_rows
 
+# Run sizes of the graph queries; each builder and its oracle read the same one.
+PAGERANK_ITERS = 3
+FRONTIER_DEPTH = 3
+HITS_ITERS = 2
+PPR_ITERS = 3
+COCITATION_CAP = 20
+LABEL_PROP_ITERS = 3
+KCORE_K, KCORE_ROUNDS = 3, 3
+
 
 def _graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, int]:
     """(documents, their ``synthetic_edges`` link graph, document count):
@@ -30,12 +39,12 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs, edges, n = _graph(spark, sf_dir)
     ranks = pagerank_fixed(
-        edges, docs.select(F.col("doc_id").alias("node")), n, iters=3
+        edges, docs.select(F.col("doc_id").alias("node")), n, PAGERANK_ITERS
     )
     return ranks.orderBy(F.desc("rank"), F.asc("node")).limit(20)
 
 
-def pagerank_oracle_sql(iters: int = 3) -> str:
+def pagerank_oracle_sql() -> str:
     scale = 10**12
     parts = ["""
 WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS c FROM documents),
@@ -51,7 +60,7 @@ e AS (
 ),
 r0 AS (SELECT doc_id AS node, __SCALE__ // nn.c AS rank FROM documents, nn)""".replace(
         "__SCALE__", str(scale))]
-    for k in range(1, iters + 1):
+    for k in range(1, PAGERANK_ITERS + 1):
         parts.append(f""",
 s{k} AS (
   SELECT e.dst AS node, CAST(sum(r{k - 1}.rank // e.d) AS BIGINT) AS s
@@ -64,7 +73,7 @@ r{k} AS (
   FROM documents d CROSS JOIN nn LEFT JOIN s{k} ON s{k}.node = d.doc_id
 )""")
     parts.append(f"""
-SELECT node, rank FROM r{iters} ORDER BY rank DESC, node ASC LIMIT 20
+SELECT node, rank FROM r{PAGERANK_ITERS} ORDER BY rank DESC, node ASC LIMIT 20
 """)
     return "".join(parts)
 
@@ -97,16 +106,16 @@ def q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = docs.where(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("node")
     )
-    return bfs_depth(edges, seeds, max_depth=3)
+    return bfs_depth(edges, seeds, FRONTIER_DEPTH)
 
 
-def crawl_frontier_oracle_sql(max_depth: int = 3) -> str:
+def crawl_frontier_oracle_sql() -> str:
     parts = [
         "WITH ", _EDGES_CTE_SQL, """,
 d0 AS (SELECT doc_id AS node, 0 AS depth FROM documents WHERE doc_id % 97 = 0)""",
     ]
     union = ["SELECT node, depth FROM d0"]
-    for k in range(1, max_depth + 1):
+    for k in range(1, FRONTIER_DEPTH + 1):
         prev_union = " UNION ALL ".join(
             f"SELECT node FROM d{j}" for j in range(k)
         )
@@ -132,18 +141,20 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs, edges, _ = _graph(spark, sf_dir)
     out = hits_fixed(
-        edges, docs.select(F.col("doc_id").alias("node")), iters=2
+        edges, docs.select(F.col("doc_id").alias("node")), HITS_ITERS
     )
     return out.orderBy(
         F.desc("authority"), F.desc("hub"), F.asc("node")
     ).limit(20)
 
 
-def hits_oracle_sql(iters: int = 2, scale: int = 10**6) -> str:
+def hits_oracle_sql() -> str:
+    from ot_spark.graph import HITS_SCALE
+
     parts = ["WITH ", _EDGES_CTE_SQL, f""",
 nodes AS (SELECT doc_id AS node FROM documents),
-h0 AS (SELECT node, CAST({scale} AS BIGINT) AS hub FROM nodes)"""]
-    for k in range(1, iters + 1):
+h0 AS (SELECT node, CAST({HITS_SCALE} AS BIGINT) AS hub FROM nodes)"""]
+    for k in range(1, HITS_ITERS + 1):
         parts.append(f""",
 ar{k} AS (
   SELECT e.dst AS node, CAST(sum(h{k - 1}.hub) AS BIGINT) AS a
@@ -151,7 +162,7 @@ ar{k} AS (
 ),
 a{k} AS (
   SELECT n.node,
-         CAST(coalesce(ar{k}.a, 0) * {scale}
+         CAST(coalesce(ar{k}.a, 0) * {HITS_SCALE}
               // (SELECT greatest(max(a), 1) FROM ar{k}) AS BIGINT) AS authority
   FROM nodes n LEFT JOIN ar{k} ON n.node = ar{k}.node
 ),
@@ -161,14 +172,14 @@ hr{k} AS (
 ),
 h{k} AS (
   SELECT n.node,
-         CAST(coalesce(hr{k}.h, 0) * {scale}
+         CAST(coalesce(hr{k}.h, 0) * {HITS_SCALE}
               // (SELECT greatest(max(h), 1) FROM hr{k}) AS BIGINT) AS hub
   FROM nodes n LEFT JOIN hr{k} ON n.node = hr{k}.node
 )""")
     parts.append(f"""
-SELECT a{iters}.node, authority, hub
-FROM a{iters} JOIN h{iters} ON a{iters}.node = h{iters}.node
-ORDER BY authority DESC, hub DESC, a{iters}.node ASC LIMIT 20
+SELECT a{HITS_ITERS}.node, authority, hub
+FROM a{HITS_ITERS} JOIN h{HITS_ITERS} ON a{HITS_ITERS}.node = h{HITS_ITERS}.node
+ORDER BY authority DESC, hub DESC, a{HITS_ITERS}.node ASC LIMIT 20
 """)
     return "".join(parts)
 
@@ -234,11 +245,13 @@ def q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = docs.where(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("node")
     )
-    out = ppr_fixed(edges, nodes, seeds, iters=3)
+    out = ppr_fixed(edges, nodes, seeds, PPR_ITERS)
     return out.orderBy(F.desc("rank"), F.asc("node")).limit(20)
 
 
-def ppr_oracle_sql(iters: int = 3, damping_pct: int = 85) -> str:
+def ppr_oracle_sql() -> str:
+    from ot_spark.graph import DAMPING_PCT
+
     s = 10**12
     parts = ["WITH ", _EDGES_CTE_SQL, f""",
 qn AS (SELECT CAST(count(*) AS BIGINT) AS c FROM documents WHERE doc_id % 97 = 0),
@@ -248,7 +261,7 @@ nq AS (SELECT doc_id AS node,
        FROM documents),
 r0 AS (SELECT node, CAST(isq * ({s} // qn.c) AS BIGINT) AS rank
        FROM nq CROSS JOIN qn)"""]
-    for k in range(1, iters + 1):
+    for k in range(1, PPR_ITERS + 1):
         parts.append(f""",
 s{k} AS (
   SELECT e.dst AS node, CAST(sum(r{k - 1}.rank // deg.d) AS BIGINT) AS s
@@ -257,12 +270,12 @@ s{k} AS (
 ),
 r{k} AS (
   SELECT nq.node,
-         CAST(nq.isq * ({100 - damping_pct} * ({s} // qn.c) // 100)
-              + ({damping_pct} * coalesce(s{k}.s, 0)) // 100 AS BIGINT) AS rank
+         CAST(nq.isq * ({100 - DAMPING_PCT} * ({s} // qn.c) // 100)
+              + ({DAMPING_PCT} * coalesce(s{k}.s, 0)) // 100 AS BIGINT) AS rank
   FROM nq CROSS JOIN qn LEFT JOIN s{k} ON s{k}.node = nq.node
 )""")
     parts.append(f"""
-SELECT node, rank FROM r{iters} ORDER BY rank DESC, node ASC LIMIT 20
+SELECT node, rank FROM r{PPR_ITERS} ORDER BY rank DESC, node ASC LIMIT 20
 """)
     return "".join(parts)
 
@@ -278,10 +291,10 @@ def q_cocitation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _, edges, _ = _graph(spark, sf_dir)
     hosted = edges.select("src", (F.col("dst") % 50).alias("dst"))
-    return cocitation(hosted, cap=20)
+    return cocitation(hosted, COCITATION_CAP)
 
 
-def cocitation_oracle_sql(cap: int = 20) -> str:
+def cocitation_oracle_sql() -> str:
     return "".join(["WITH ", _EDGES_CTE_SQL, f""",
 he AS (SELECT DISTINCT src, dst % 50 AS dst FROM e),
 capped AS (
@@ -289,7 +302,7 @@ capped AS (
     SELECT src, dst,
            row_number() OVER (PARTITION BY src ORDER BY dst) AS rn
     FROM he
-  ) WHERE rn <= {cap}
+  ) WHERE rn <= {COCITATION_CAP}
 ),
 deg AS (SELECT dst, CAST(count(*) AS BIGINT) AS d FROM capped GROUP BY dst),
 pairs AS (
@@ -314,11 +327,11 @@ def q_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs, edges, _ = _graph(spark, sf_dir)
     return label_prop(
-        edges, docs.select(F.col("doc_id").alias("node")), iters=3
+        edges, docs.select(F.col("doc_id").alias("node")), LABEL_PROP_ITERS
     )
 
 
-def label_prop_oracle_sql(iters: int = 3) -> str:
+def label_prop_oracle_sql() -> str:
     parts = ["WITH ", _EDGES_CTE_SQL, """,
 und AS (
   SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
@@ -326,7 +339,7 @@ und AS (
 ),
 nbr AS (SELECT a AS v, b AS u FROM und UNION ALL SELECT b, a FROM und),
 l0 AS (SELECT doc_id AS node, CAST(doc_id AS BIGINT) AS label FROM documents)"""]
-    for k in range(1, iters + 1):
+    for k in range(1, LABEL_PROP_ITERS + 1):
         parts.append(f""",
 c{k} AS (
   SELECT n.v, l.label, count(*) AS c
@@ -344,7 +357,7 @@ l{k} AS (
   FROM l{k - 1} p LEFT JOIN w{k} ON p.node = w{k}.v
 )""")
     parts.append(f"""
-SELECT node, label FROM l{iters}
+SELECT node, label FROM l{LABEL_PROP_ITERS}
 """)
     return "".join(parts)
 
@@ -358,28 +371,28 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ot_spark.graph import kcore
 
     _, edges, _ = _graph(spark, sf_dir)
-    return kcore(edges, k=3, rounds=3)
+    return kcore(edges, KCORE_K, KCORE_ROUNDS)
 
 
-def kcore_oracle_sql(k: int = 3, rounds: int = 3) -> str:
+def kcore_oracle_sql() -> str:
     parts = ["WITH ", _EDGES_CTE_SQL, """,
 u0 AS (
   SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
   FROM e WHERE src <> dst
 )"""]
-    for r in range(1, rounds + 1):
+    for r in range(1, KCORE_ROUNDS + 1):
         parts.append(f""",
 d{r} AS (
   SELECT node, CAST(count(*) AS BIGINT) AS degree FROM (
     SELECT a AS node FROM u{r - 1} UNION ALL SELECT b FROM u{r - 1}
   ) GROUP BY node
 ),
-a{r} AS (SELECT node FROM d{r} WHERE degree >= {k}),
+a{r} AS (SELECT node FROM d{r} WHERE degree >= {KCORE_K}),
 u{r} AS (
   SELECT u.a, u.b FROM u{r - 1} u
   WHERE u.a IN (SELECT node FROM a{r}) AND u.b IN (SELECT node FROM a{r})
 )""")
     parts.append(f"""
-SELECT node, degree FROM d{rounds} WHERE degree >= {k}
+SELECT node, degree FROM d{KCORE_ROUNDS} WHERE degree >= {KCORE_K}
 """)
     return "".join(parts)

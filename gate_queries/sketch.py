@@ -269,7 +269,7 @@ def q_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ot_spark.webtext.dedup import with_minhash
 
     docs = _read(spark, sf_dir, "documents", fan=True)
-    sigs = with_minhash(docs, k=4, shingle_n=3, hash_mode="md5")
+    sigs = with_minhash(docs, k=4, hash_mode="md5")
     return sigs.select(
         "doc_id",
         *[F.col("minhash").getItem(i).alias(f"m{i}") for i in range(4)],
@@ -303,9 +303,9 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _read(spark, sf_dir, "documents", fan=True).where("doc_id < 2000")
-    sigs = with_minhash(docs, k=8, shingle_n=3, hash_mode="md5")
-    cand = minhash_candidate_pairs(sigs, bands=4, max_bucket=50)
-    return jaccard_pairs(docs, cand, shingle_n=3, threshold=0.2)
+    sigs = with_minhash(docs, k=8, hash_mode="md5")
+    cand = minhash_candidate_pairs(sigs, bands=4)
+    return jaccard_pairs(docs, cand, threshold=0.2)
 
 
 def jaccard_oracle_sql() -> str:
@@ -421,7 +421,7 @@ def q_substring_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ot_spark.webtext.dedup import substring_dup_pairs
 
     docs = _read(spark, sf_dir, "documents", fan=True)
-    return substring_dup_pairs(docs, window=8, max_bucket=50)
+    return substring_dup_pairs(docs, max_bucket=50)
 
 
 def substring_dup_oracle_sql() -> str:
@@ -457,8 +457,8 @@ def q_lsh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded subset keeps the md5-mode bench cost predictable at sf0.1
     # (covers the whole table at the sf0.01 correctness gate)
     docs = _read(spark, sf_dir, "documents", fan=True).where("doc_id < 2000")
-    sigs = with_minhash(docs, k=8, shingle_n=3, hash_mode="md5")
-    return minhash_candidate_pairs(sigs, bands=4, max_bucket=50)
+    sigs = with_minhash(docs, k=8, hash_mode="md5")
+    return minhash_candidate_pairs(sigs, bands=4)
 
 
 def _minhash_sig8_cte(recursive: bool = False) -> str:
@@ -518,7 +518,7 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _read(spark, sf_dir, "documents", fan=True).where("doc_id < 2000")
     out = minhash_dedup(
-        docs, k=8, bands=4, shingle_n=3, threshold=0.5, hash_mode="md5"
+        docs, k=8, bands=4, threshold=0.5, hash_mode="md5"
     )
     return out.select("doc_id", "rep")
 
@@ -538,7 +538,7 @@ def q_minhash_dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _read(spark, sf_dir, "documents", fan=True).where("doc_id < 2000")
     out = minhash_dedup(
-        docs, k=8, bands=4, shingle_n=3, threshold=0.5, hash_mode="md5",
+        docs, k=8, bands=4, threshold=0.5, hash_mode="md5",
         clustering="cc",
     )
     return out.select("doc_id", "rep")

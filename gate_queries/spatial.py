@@ -305,7 +305,6 @@ def q_semi_join_members(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.select("c_custkey"),
         links,
         key_col="c_custkey",
-        ref_col="refs",
         apply_complex_filter=False,
         relations=rels,
     )
@@ -393,7 +392,7 @@ def q_filter_by_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F8 TagValueBasedOsmElementsFilter (filter.rs:19-57): keep rows whose
     attrs['railway'] matches ^plat."""
     df = pagesview.pages_df(spark, sf_dir)
-    return filters.filter_by_tag_value(df, "railway", "^plat", keep=True).select(
+    return filters.filter_by_tag_value(df, "railway", "^plat").select(
         "doc_id"
     )
 

@@ -4,11 +4,15 @@ curation (sampling, packing, decontamination)."""
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gate_queries.common import _TOKS_SQL, _read, _table_rows
-from gate_queries.vectors import _TRAIN_CACHE
+
+# posting-list length of inverted_index and delta_postings, builder and oracle
+POSTING_CAP = 10
 
 
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -41,6 +45,10 @@ def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def corpus_clean_oracle_sql() -> str:
+    from ot_spark.webtext.curate import (
+        MAX_DUP_TOKEN_FRAC, MAX_TOKENS, MAX_TOP_BIGRAM_FRAC, MIN_STOPWORD_RATIO,
+        MIN_TOKENS,
+    )
     from ot_spark.webtext.textstats import LANG_STOPWORDS
 
     en = _stop_list_sql(LANG_STOPWORDS["en"])
@@ -74,8 +82,8 @@ feats AS (
 SELECT f.doc_id, lang_pred, CAST(nt AS BIGINT) AS n_tokens,
        stopword_ratio, round(dup_frac, 6) AS dup_token_frac
 FROM feats f JOIN k ON k.doc_id = f.doc_id
-WHERE k.rn = 1 AND nt >= 5 AND nt <= 5000
-  AND stopword_ratio >= 0.02 AND top_frac <= 0.18 AND dup_frac <= 0.5
+WHERE k.rn = 1 AND nt >= {MIN_TOKENS} AND nt <= {MAX_TOKENS}
+  AND stopword_ratio >= {MIN_STOPWORD_RATIO} AND top_frac <= {MAX_TOP_BIGRAM_FRAC} AND dup_frac <= {MAX_DUP_TOKEN_FRAC}
 """
 
 
@@ -204,23 +212,21 @@ FROM t LEFT JOIN s2 ON s2.d2 = t.doc_id
 """
 
 
+@functools.cache
 def _total_tokens(spark: SparkSession, sf_dir: str) -> int:
-    """Scalar corpus token count, memoized per sf_dir (deterministic;
-    shared by both LM perplexity gates)."""
+    """Scalar corpus token count, memoized per (session, sf_dir)
+    (deterministic; shared by both LM perplexity gates)."""
     from ot_spark.webtext.dedup import tokens_col
 
-    key = ("ntok", sf_dir)
-    if key not in _TRAIN_CACHE:
-        docs = _read(spark, sf_dir, "documents", fan=True)
-        # sum(size(tokens)) == count of the exploded stream, without
-        # materializing one row per token (integer-exact either way)
-        _TRAIN_CACHE[key] = (
-            docs.select(
-                F.size(tokens_col(F.col("text"))).alias("n")
-            ).agg(F.sum(F.greatest(F.col("n"), F.lit(0)))).first()[0]
-            or 0
-        )
-    return _TRAIN_CACHE[key]
+    docs = _read(spark, sf_dir, "documents", fan=True)
+    # sum(size(tokens)) == count of the exploded stream, without
+    # materializing one row per token (integer-exact either way)
+    return (
+        docs.select(F.size(tokens_col(F.col("text"))).alias("n"))
+        .agg(F.sum(F.greatest(F.col("n"), F.lit(0))))
+        .first()[0]
+        or 0
+    )
 
 
 def q_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -351,10 +357,10 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ot_spark.webtext.invindex import inverted_index
 
     docs = _read(spark, sf_dir, "documents", fan=True)
-    return inverted_index(docs, posting_cap=10)
+    return inverted_index(docs, POSTING_CAP)
 
 
-def inverted_index_oracle_sql(cap: int = 10) -> str:
+def inverted_index_oracle_sql() -> str:
     return f"""
 WITH t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
 e AS (SELECT doc_id, unnest(toks) AS term FROM t),
@@ -363,7 +369,7 @@ r AS (SELECT term, doc_id, c,
              row_number() OVER (PARTITION BY term ORDER BY doc_id) AS rn
       FROM pd)
 SELECT term, CAST(count(*) AS BIGINT) AS df, CAST(sum(c) AS BIGINT) AS tf,
-       list(doc_id ORDER BY doc_id) FILTER (WHERE rn <= {cap}) AS postings
+       list(doc_id ORDER BY doc_id) FILTER (WHERE rn <= {POSTING_CAP}) AS postings
 FROM r GROUP BY term
 """
 
@@ -378,10 +384,10 @@ def q_delta_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ot_spark.webtext.invindex import delta_postings
 
     docs = _read(spark, sf_dir, "documents", fan=True)
-    return delta_postings(docs, posting_cap=10)
+    return delta_postings(docs, POSTING_CAP)
 
 
-def delta_postings_oracle_sql(cap: int = 10) -> str:
+def delta_postings_oracle_sql() -> str:
     vb = ("CASE " + " ".join(
         f"WHEN gap < {1 << (7 * n)} THEN {n}" for n in range(1, 9)
     ) + " ELSE 9 END")
@@ -396,7 +402,7 @@ g AS (SELECT term, rn,
              doc_id - coalesce(
                lag(doc_id) OVER (PARTITION BY term ORDER BY doc_id), 0
              ) AS gap
-      FROM r WHERE rn <= {cap}),
+      FROM r WHERE rn <= {POSTING_CAP}),
 caps AS (
   SELECT term, list(gap ORDER BY rn) AS gaps,
          CAST(sum({vb}) AS BIGINT) AS bytes_varint,

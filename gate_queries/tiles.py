@@ -9,6 +9,11 @@ from pyspark.sql import functions as F
 from gate_queries.common import _LAT100, _LON100, _raster_index
 from ot_spark import pagesview
 
+# Tile sizes of the tiling queries; each builder and its oracle read the same one.
+S2_LEVEL = 10
+H3_RES, H3_PARENT_RES = 9, 7
+KNN_RES, KNN_MAX_K = 4, 4
+
 
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order layout assignment (round 6; ot_spark/cells.py::
@@ -25,13 +30,13 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(floor(lon + 180.0) AS BIGINT)").alias("xi"),
         F.expr("CAST(floor(lat + 90.0) AS BIGINT)").alias("yi"),
     )
-    return zorder_layout(p, F.col("xi"), F.col("yi"), bits=9, bucket_bits=6)
+    return zorder_layout(p, F.col("xi"), F.col("yi"))
 
 
 def zorder_oracle_sql() -> str:
     from ot_spark.cells import zorder_sql
 
-    z = zorder_sql("xi", "yi", bits=9)
+    z = zorder_sql("xi", "yi")
     return f"""
 WITH g AS (
   SELECT doc_id,
@@ -53,11 +58,11 @@ def q_s2_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ot_spark.enrich_fused import spatial_enrich
 
     df = pagesview.pages_df(spark, sf_dir)
-    out = spatial_enrich(df, None, s2_level=10, h3_resolutions=())
-    return out.groupBy("s2_10").agg(F.count(F.lit(1)).cast("long").alias("n_pages"))
+    out = spatial_enrich(df, None, s2_level=S2_LEVEL, h3_resolutions=())
+    return out.groupBy(f"s2_{S2_LEVEL}").agg(F.count(F.lit(1)).cast("long").alias("n_pages"))
 
 
-def s2_tiles_oracle_sql(level: int = 10) -> str:
+def s2_tiles_oracle_sql() -> str:
     """Full SQL re-derivation of the S2 encode (graduates s2_tiles from
     rows-only, VERDICT-r3 #6): lat/lon -> unit xyz -> cube face + (u,v) ->
     quadratic ST -> 30-bit (i,j) -> Hilbert position via a RECURSIVE CTE
@@ -75,7 +80,7 @@ def s2_tiles_oracle_sql(level: int = 10) -> str:
         + " ".join(f"WHEN {k} THEN {1 << (k * 8)}::HUGEINT" for k in range(8))
         + " END"
     )
-    lsb = 1 << (2 * (30 - level))
+    lsb = 1 << (2 * (30 - S2_LEVEL))
     return f"""
 WITH RECURSIVE lut(key, val) AS (VALUES {lut_vals}),
 pts AS (SELECT doc_id, {pagesview.LAT_SQL} AS lat, {pagesview.LON_SQL} AS lon FROM documents),
@@ -114,8 +119,8 @@ parent AS (SELECT doc_id, (uid // {2 * lsb}::HUGEINT)*{2 * lsb}::HUGEINT
                           + {lsb}::HUGEINT AS pu FROM leaf),
 cells AS (SELECT doc_id,
  CAST(((pu + 9223372036854775808::HUGEINT) % 18446744073709551616::HUGEINT)
-      - 9223372036854775808::HUGEINT AS BIGINT) AS s2_{level} FROM parent)
-SELECT s2_{level}, CAST(count(*) AS BIGINT) AS n_pages FROM cells GROUP BY 1
+      - 9223372036854775808::HUGEINT AS BIGINT) AS s2_{S2_LEVEL} FROM parent)
+SELECT s2_{S2_LEVEL}, CAST(count(*) AS BIGINT) AS n_pages FROM cells GROUP BY 1
 """
 
 
@@ -128,10 +133,12 @@ def q_h3_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ot_spark.enrich_fused import spatial_enrich
 
     df = pagesview.pages_df(spark, sf_dir)
-    out = spatial_enrich(df, None, s2_level=None, h3_resolutions=(7, 9))
-    return out.groupBy("h3_7").agg(
+    out = spatial_enrich(
+        df, None, s2_level=None, h3_resolutions=(H3_PARENT_RES, H3_RES)
+    )
+    return out.groupBy(f"h3_{H3_PARENT_RES}").agg(
         F.count(F.lit(1)).cast("long").alias("n_pages"),
-        F.countDistinct("h3_9").cast("long").alias("n_children"),
+        F.countDistinct(f"h3_{H3_RES}").cast("long").alias("n_children"),
     )
 
 
@@ -203,7 +210,7 @@ def _h3x_lattice_ctes(k: dict, res_tag: str) -> str:
 )"""
 
 
-def h3x_tiles_oracle_sql(res: int = 9, parent_res: int = 7) -> str:
+def h3x_tiles_oracle_sql() -> str:
     """Full SQL re-derivation of the TRUE-GEOMETRY h3x encode
     (ot_spark/h3x.py): lat/lon -> unit xyz -> nearest icosahedron face
     (argmax of 12-dp-rounded dot products, 20-row inlined frame table) ->
@@ -219,7 +226,7 @@ def h3x_tiles_oracle_sql(res: int = 9, parent_res: int = 7) -> str:
     are absorbed by the 12-dp/9-dp spec roundings)."""
     from ot_spark.h3x import oracle_constants
 
-    k = oracle_constants(res)
+    k = oracle_constants(H3_RES)
     table_rows = ",\n  ".join(str(t) for t in k["table"])
 
     # nine unrolled exact integer up-aperture-7 steps (h3x._up_step):
@@ -227,7 +234,7 @@ def h3x_tiles_oracle_sql(res: int = 9, parent_res: int = 7) -> str:
     steps = []
     prev = "cube"
     carry = ""
-    for rr in range(res, 0, -1):
+    for rr in range(H3_RES, 0, -1):
         if rr % 2 == 1:
             pi = _rha(f"(3*i{rr} - j{rr})/7.0")
             pj = _rha(f"(i{rr} + 2*j{rr})/7.0")
@@ -254,7 +261,7 @@ def h3x_tiles_oracle_sql(res: int = 9, parent_res: int = 7) -> str:
         carry += f", d{rr}"
         prev = f"s{rr}"
     step_sql = ",\n".join(steps)
-    all_digits = ", ".join(f"d{rr}" for rr in range(1, res + 1))
+    all_digits = ", ".join(f"d{rr}" for rr in range(1, H3_RES + 1))
 
     # ccw digit rotation through the axis cycle I->IJ->J->JK->K->IK
     # (h3x._rotate_digits): pos(d) then cyc[(pos + rot) % 6]
@@ -270,17 +277,17 @@ def h3x_tiles_oracle_sql(res: int = 9, parent_res: int = 7) -> str:
         return f"(CASE WHEN {d} = 0 THEN 0 ELSE {cyc} END)"
 
     rot_cols = ", ".join(
-        f"{rot_digit(f'd{rr}')} AS e{rr}" for rr in range(1, res + 1)
+        f"{rot_digit(f'd{rr}')} AS e{rr}" for rr in range(1, H3_RES + 1)
     )
     fine_bits = " | ".join(
-        f"(CAST(e{rr} AS BIGINT) << {3 * (15 - rr)})" for rr in range(1, res + 1)
+        f"(CAST(e{rr} AS BIGINT) << {3 * (15 - rr)})" for rr in range(1, H3_RES + 1)
     )
     parent_bits = " | ".join(
         f"(CAST(e{rr} AS BIGINT) << {3 * (15 - rr)})"
-        for rr in range(1, parent_res + 1)
+        for rr in range(1, H3_PARENT_RES + 1)
     )
-    fine_fill = (1 << (3 * (15 - res))) - 1
-    parent_fill = (1 << (3 * (15 - parent_res))) - 1
+    fine_fill = (1 << (3 * (15 - H3_RES))) - 1
+    parent_fill = (1 << (3 * (15 - H3_PARENT_RES))) - 1
 
     return f"""{_h3x_face_ctes(k)}, hexf AS (
   SELECT doc_id, f,
@@ -301,9 +308,9 @@ bct(bf, bi, bj, bc, rot) AS (VALUES
   SELECT doc_id, bc, {rot_cols} FROM withbc
 ), enc AS (
   SELECT doc_id,
-    (CAST({res} AS BIGINT) << 52) | (CAST(bc AS BIGINT) << 45)
+    (CAST({H3_RES} AS BIGINT) << 52) | (CAST(bc AS BIGINT) << 45)
       | {fine_bits} | {fine_fill} AS h3_9,
-    (CAST({parent_res} AS BIGINT) << 52) | (CAST(bc AS BIGINT) << 45)
+    (CAST({H3_PARENT_RES} AS BIGINT) << 52) | (CAST(bc AS BIGINT) << 45)
       | {parent_bits} | {parent_fill} AS h3_7
   FROM rotd
 )
@@ -320,14 +327,13 @@ def q_knn_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ot_spark.h3x import knn_nearest_raster_h3x
 
     df = pagesview.pages_df(spark, sf_dir)
-    out = knn_nearest_raster_h3x(df, _raster_index(), res=4, max_k=4)
+    out = knn_nearest_raster_h3x(df, _raster_index(), KNN_RES, KNN_MAX_K)
     return out.select("doc_id", "knn_raster_id", "knn_k")
 
 
-def knn_raster_oracle_sql(res: int = 4, max_k: int = 4,
-                           pad_deg: float = 0.25) -> str:
+def knn_raster_oracle_sql() -> str:
     """knn_raster oracle on TRUE-GEOMETRY h3x: the page's (face, i, j)
-    axial lattice coordinates at ``res`` are re-derived FULLY IN SQL
+    axial lattice coordinates at ``KNN_RES`` are re-derived FULLY IN SQL
     (lat/lon -> xyz -> argmax face -> gnomonic -> hex lattice -> cube
     round — the same unrolled fragments the h3_tiles oracle proved
     bit-identical to numpy), and the k-ring walk becomes the CLOSED-FORM
@@ -346,9 +352,9 @@ def knn_raster_oracle_sql(res: int = 4, max_k: int = 4,
     LEFT JOIN NULL semantics are pure SQL."""
     from ot_spark.h3x import oracle_constants
 
-    k = oracle_constants(res)
-    assert res % 2 == 0, "odd res needs the ap7 rotation in hexf"
-    cov = _knn_raster_h3x_cov_rows(res, max_k, pad_deg)
+    k = oracle_constants(KNN_RES)
+    assert KNN_RES % 2 == 0, "odd res needs the ap7 rotation in hexf"
+    cov = _knn_raster_h3x_cov_rows()
     faces_used = {key[0] for key in cov}
     assert len(faces_used) == 1, f"coverage straddles faces {faces_used}"
     cov_rows = ",\n  ".join(
@@ -370,15 +376,14 @@ def knn_raster_oracle_sql(res: int = 4, max_k: int = 4,
 ), best AS (
   SELECT doc_id, rid, k,
          row_number() OVER (PARTITION BY doc_id ORDER BY k, pix, ord) AS rn
-  FROM dist WHERE k <= {max_k}
+  FROM dist WHERE k <= {KNN_MAX_K}
 )
 SELECT h.doc_id, b.rid AS knn_raster_id, CAST(b.k AS INTEGER) AS knn_k
 FROM cube h LEFT JOIN best b ON b.doc_id = h.doc_id AND b.rn = 1
 """
 
 
-def _knn_raster_h3x_cov_rows(res: int = 4, max_k: int = 4,
-                             pad_deg: float = 0.25) -> dict:
+def _knn_raster_h3x_cov_rows() -> dict:
     """Coverage map for the knn_raster oracle, enumerated INDEPENDENTLY of
     the production flood fill (round-3 advice pattern: a bug in one
     enumeration cannot cancel out): a dense lat/lon MESHGRID over each
@@ -392,22 +397,23 @@ def _knn_raster_h3x_cov_rows(res: int = 4, max_k: int = 4,
     import numpy as np
 
     from ot_spark import h3x
+    from ot_spark.h3x import KNN_PAD_DEG
 
     idx = _raster_index()
     step = 0.08  # res-4 cell min-width ~0.35 deg: >= 4 samples per cell
     rows: dict = {}
     for order, t in enumerate(idx.routing()):
-        lon0, lat0 = t["min_lon"] - pad_deg, t["min_lat"] - pad_deg
-        lon1, lat1 = t["max_lon"] + pad_deg, t["max_lat"] + pad_deg
+        lon0, lat0 = t["min_lon"] - KNN_PAD_DEG, t["min_lat"] - KNN_PAD_DEG
+        lon1, lat1 = t["max_lon"] + KNN_PAD_DEG, t["max_lat"] + KNN_PAD_DEG
         ex = 0.5  # sample beyond the bbox so border cells are reached
         lons = np.arange(lon0 - ex, lon1 + ex + step, step)
         lats = np.arange(lat0 - ex, lat1 + ex + step, step)
         lo, la = np.meshgrid(lons, lats)
-        ids = np.unique(h3x.h3x_cell_ids(la.ravel(), lo.ravel(), res))
+        ids = np.unique(h3x.h3x_cell_ids(la.ravel(), lo.ravel(), KNN_RES))
         cla, clo = h3x.h3x_cell_center(ids)
         keep = (clo >= lon0) & (clo <= lon1) & (cla >= lat0) & (cla <= lat1)
         ids = ids[keep]
-        f, i, j = h3x.h3x_cell_fij(ids, res)
+        f, i, j = h3x.h3x_cell_fij(ids, KNN_RES)
         pix = t["pixel_w"] * t["pixel_h"]
         for ff, ii, jj in zip(f, i, j):
             key = (int(ff), int(ii), int(jj))

@@ -3,40 +3,58 @@ top-k, LSH ANN and embedding near-pairs."""
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gate_queries.common import _read
 
+# The oracle-portable PQ and IVF training the builders run and the oracles
+# replay in DuckDB (rounding: simsearch.ROUND_P decimals).
+DIM = 64
+PQ_M, PQ_K, PQ_SAMPLE, PQ_ITERS = 4, 8, 500, 2
+IVF_CELLS, IVF_SAMPLE, IVF_ITERS = 8, 500, 3
+IVFPQ_NPROBE = 3
 
-_TRAIN_CACHE: dict = {}
 
-
+# Deterministic training memoized per (session, sf_dir): the PQ/IVF gate
+# queries each retrain identical codebooks (md5 sample, no RNG), so a
+# bench or gate run that times every query twice would otherwise pay the
+# 500-row collect + numpy Lloyd eight times.
+@functools.cache
 def _pq_books(spark: SparkSession, sf_dir: str):
-    """Deterministic training memoized per sf_dir: the PQ/IVF gate
-    queries each retrain identical codebooks (md5 sample, no RNG), so a
-    bench or gate run that times every query twice would otherwise pay
-    the 500-row collect + numpy Lloyd eight times."""
     from ot_spark.webtext.simsearch import train_pq_codebooks_portable
 
     emb = _read(spark, sf_dir, "embeddings", fan=True)
-    key = ("pq", sf_dir)
-    if key not in _TRAIN_CACHE:
-        _TRAIN_CACHE[key] = train_pq_codebooks_portable(
-            emb, m=4, k=8, sample=500, iters=2
-        )
-    return emb, _TRAIN_CACHE[key]
+    return train_pq_codebooks_portable(emb, PQ_M, PQ_K, PQ_SAMPLE, PQ_ITERS)
 
 
-def _ivf_cents(emb, sf_dir: str):
+@functools.cache
+def _ivf_cents(spark: SparkSession, sf_dir: str):
     from ot_spark.webtext.simsearch import train_ivf_centroids_portable
 
-    key = ("ivf", sf_dir)
-    if key not in _TRAIN_CACHE:
-        _TRAIN_CACHE[key] = train_ivf_centroids_portable(
-            emb, n_centroids=8, sample=500, iters=3
-        )
-    return _TRAIN_CACHE[key]
+    emb = _read(spark, sf_dir, "embeddings", fan=True)
+    return train_ivf_centroids_portable(emb, IVF_CELLS, IVF_SAMPLE, IVF_ITERS)
+
+
+@functools.cache
+def _prod_training(spark: SparkSession, sf_dir: str):
+    """(IVF centroids, PQ codebooks) of the production trainers.  Both
+    draw the IDENTICAL sample (same ordering expression, seed, size), so
+    it is collected once; the sort over the full vector table scales with
+    the corpus, the sample does not."""
+    from ot_spark.webtext.simsearch import (
+        SEED, _xxhash_sample, train_ivf_centroids, train_pq_codebooks,
+    )
+
+    emb = _read(spark, sf_dir, "embeddings", fan=True)
+    sx = _xxhash_sample(emb, 4096, "embedding", SEED)
+    cent = train_ivf_centroids(
+        emb, n_centroids=32, sample=4096, iters=10, sample_X=sx
+    )
+    books = train_pq_codebooks(emb, m=16, k=256, sample=4096, sample_X=sx)
+    return cent, books
 
 
 def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -45,37 +63,38 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded L2 Lloyd) so DuckDB replays training + encode bit-for-bit."""
     from ot_spark.webtext.simsearch import with_pq_codes
 
-    emb, books = _pq_books(spark, sf_dir)
-    return with_pq_codes(emb, books).select(
+    emb = _read(spark, sf_dir, "embeddings", fan=True)
+    return with_pq_codes(emb, _pq_books(spark, sf_dir)).select(
         "vec_id", "code0", "code1", "code2", "code3"
     )
 
 
-def pq_oracle_sql(adc: bool, m: int = 4, k: int = 8, sample: int = 500,
-                   iters: int = 2, dim: int = 64, p: int = 9) -> str:
+def pq_oracle_sql(adc: bool) -> str:
     """Full DuckDB re-derivation of PQ: md5-ordered sample, per-subspace
-    first-k init, ``iters`` unrolled rounded-L2 Lloyd iterations, then the
+    first-k init, ``PQ_ITERS`` unrolled rounded-L2 Lloyd iterations, then the
     whole-table encode (argmin over rounded sequential-fold distances,
     ties -> lowest code).  ``adc=True`` additionally scores every vector
     against the vec_id=0 query through the per-subspace distance table and
     returns the top 10 — exactly the Spark pq_adc_topk plan's semantics."""
-    sub = dim // m
-    body = "WITH " + _pq_train_cte_parts(m, k, sample, iters, dim, p)
+    from ot_spark.webtext.simsearch import ROUND_P
+
+    body = "WITH " + _pq_train_cte_parts(ROUND_P)
     if not adc:
         return body + f"""
-SELECT vec_id, {', '.join(f'CAST(c{s} AS INTEGER) AS code{s}' for s in range(m))}
-FROM {' JOIN '.join(['code0'] + [f'code{s} USING (vec_id)' for s in range(1, m)])}
+SELECT vec_id, {', '.join(f'CAST(c{s} AS INTEGER) AS code{s}' for s in range(PQ_M))}
+FROM {' JOIN '.join(['code0'] + [f'code{s} USING (vec_id)' for s in range(1, PQ_M)])}
 """
-    return body + _pq_adc_sql(m, sub, iters, p)
+    return body + _pq_adc_sql(ROUND_P)
 
 
-def _pq_adc_sql(m: int, sub: int, iters: int, p: int, where: str = "") -> str:
+def _pq_adc_sql(p: int, where: str = "") -> str:
     """Tail of the pq_adc and ivfpq oracles, after the ``code{s}`` CTEs:
     the vec_id=0 query's per-subspace distance tables, then the ADC top 10
     over the rows ``where`` keeps."""
+    sub = DIM // PQ_M
     l2 = _pq_l2_sql(sub)
     parts = []
-    for s in range(m):
+    for s in range(PQ_M):
         lo, hi = s * sub + 1, (s + 1) * sub
         # the query subvector must be a plain joined column: DuckDB
         # rejects subqueries inside lambda expressions
@@ -86,13 +105,13 @@ q{s} AS (
 ),
 qd{s} AS (
   SELECT c.cid, round({l2('q.qv', 'c.cv')}, {p}) AS d
-  FROM c{s}_{iters} c CROSS JOIN q{s} q
+  FROM c{s}_{PQ_ITERS} c CROSS JOIN q{s} q
 )""")
     joins = " JOIN ".join(
-        ["code0"] + [f"code{s} USING (vec_id)" for s in range(1, m)]
+        ["code0"] + [f"code{s} USING (vec_id)" for s in range(1, PQ_M)]
     )
-    dsum = " + ".join(f"qd{s}.d" for s in range(m))
-    on = " ".join(f"JOIN qd{s} ON qd{s}.cid = c{s}" for s in range(m))
+    dsum = " + ".join(f"qd{s}.d" for s in range(PQ_M))
+    on = " ".join(f"JOIN qd{s} ON qd{s}.cid = c{s}" for s in range(PQ_M))
     parts.append(f"""
 SELECT vec_id, round({dsum}, {p}) AS approx_dist
 FROM {joins} {on}
@@ -107,7 +126,8 @@ def q_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes; distances come from the per-query lookup table."""
     from ot_spark.webtext.simsearch import pq_adc_topk, with_pq_codes
 
-    emb, books = _pq_books(spark, sf_dir)
+    emb = _read(spark, sf_dir, "embeddings", fan=True)
+    books = _pq_books(spark, sf_dir)
     qvec = list(emb.where("vec_id = 0").first().embedding)
     codes = with_pq_codes(emb, books)
     return pq_adc_topk(codes, qvec, books, k_out=10)
@@ -125,12 +145,11 @@ def _pq_l2_sql(sub: int):
     return l2
 
 
-def _pq_train_cte_parts(m: int = 4, k: int = 8, sample: int = 500,
-                        iters: int = 2, dim: int = 64, p: int = 9) -> str:
+def _pq_train_cte_parts(p: int) -> str:
     """The PQ portable-training + whole-table-encode CTE chain (no WITH
-    prefix; defines ``c{s}_{iters}`` codebooks and ``code{s}`` per-vector
+    prefix; defines ``c{s}_{PQ_ITERS}`` codebooks and ``code{s}`` per-vector
     codes) — shared by the pq_codes/pq_adc and ivfpq oracles."""
-    sub = dim // m
+    sub = DIM // PQ_M
     l2 = _pq_l2_sql(sub)
     parts = [f"""
 pq_sample AS (
@@ -138,14 +157,14 @@ pq_sample AS (
          CAST(embedding AS DOUBLE[]) AS v
   FROM embeddings
   ORDER BY md5(CAST(vec_id AS VARCHAR))
-  LIMIT {sample}
+  LIMIT {PQ_SAMPLE}
 )"""]
-    for s in range(m):
+    for s in range(PQ_M):
         lo, hi = s * sub + 1, (s + 1) * sub
         parts.append(f""",
 sub{s} AS (SELECT sidx, v[{lo}:{hi}] AS vs FROM pq_sample),
-c{s}_0 AS (SELECT sidx AS cid, vs AS cv FROM sub{s} WHERE sidx < {k})""")
-        for i in range(1, iters + 1):
+c{s}_0 AS (SELECT sidx AS cid, vs AS cv FROM sub{s} WHERE sidx < {PQ_K})""")
+        for i in range(1, PQ_ITERS + 1):
             parts.append(f""",
 a{s}_{i} AS (
   SELECT x.vs, c.cid,
@@ -173,7 +192,7 @@ code{s} AS (
            row_number() OVER (PARTITION BY e.vec_id
                               ORDER BY round({l2(f'(CAST(e.embedding AS DOUBLE[]))[{lo}:{hi}]', 'c.cv')}, {p}) ASC,
                                        c.cid) AS rk
-    FROM embeddings e CROSS JOIN c{s}_{iters} c
+    FROM embeddings e CROSS JOIN c{s}_{PQ_ITERS} c
   ) WHERE rk = 1
 )""")
     return "".join(parts)
@@ -189,15 +208,14 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from ot_spark.webtext.simsearch import (
-        _round_half_away_np, pq_adc_topk, train_ivf_centroids_portable,
-        with_ivf_cell, with_pq_codes,
+        ROUND_P, _round_half_away_np, pq_adc_topk, with_ivf_cell, with_pq_codes,
     )
 
-    emb, books = _pq_books(spark, sf_dir)
-    cents = _ivf_cents(emb, sf_dir)
+    emb = _read(spark, sf_dir, "embeddings", fan=True)
+    books, cents = _pq_books(spark, sf_dir), _ivf_cents(spark, sf_dir)
     qvec = list(emb.where("vec_id = 0").first().embedding)
-    dots = _round_half_away_np(cents @ np.asarray(qvec, dtype=np.float64), 9)
-    probes = sorted(range(len(cents)), key=lambda c: (-dots[c], c))[:3]
+    dots = _round_half_away_np(cents @ np.asarray(qvec, dtype=np.float64), ROUND_P)
+    probes = sorted(range(len(cents)), key=lambda c: (-dots[c], c))[:IVFPQ_NPROBE]
     # Codegen-stage barrier (guide §4.4 shape): an identity Arrow UDF,
     # marked nondeterministic so the probe filter is NOT pushed below it.
     # Without it the coarse-assign dots (8x64 terms), the PQ encode
@@ -207,21 +225,20 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compiled halves this barrier produces).  Only the 4-byte cell id
     # crosses the boundary.
     _ident = F.udf(lambda x: x, "int", useArrow=True).asNondeterministic()
-    cand = with_ivf_cell(emb, cents, round_p=9).withColumn(
+    cand = with_ivf_cell(emb, cents, round_p=ROUND_P).withColumn(
         "ivf_cell", _ident(F.col("ivf_cell"))
     ).where(F.col("ivf_cell").isin([int(c) for c in probes]))
     return pq_adc_topk(with_pq_codes(cand, books), qvec, books, k_out=10)
 
 
-def ivfpq_oracle_sql(n_cells: int = 8, cell_iters: int = 3, nprobe: int = 3,
-                      m: int = 4, k: int = 8, sample: int = 500,
-                      pq_iters: int = 2, dim: int = 64, p: int = 9) -> str:
-    sub = dim // m
+def ivfpq_oracle_sql() -> str:
+    from ot_spark.webtext.simsearch import ROUND_P
+
     parts = [
         "WITH ",
-        _ivf_train_cte_parts(n_cells, sample, cell_iters, p),
+        _ivf_train_cte_parts(ROUND_P),
         ", ",
-        _pq_train_cte_parts(m, k, sample, pq_iters, dim, p),
+        _pq_train_cte_parts(ROUND_P),
         f""",
 qfull AS (
   SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
@@ -229,23 +246,23 @@ qfull AS (
 probes AS (
   SELECT cid FROM (
     SELECT c.cid,
-           row_number() OVER (ORDER BY round(list_dot_product(q.qv, c.v), {p}) DESC,
+           row_number() OVER (ORDER BY round(list_dot_product(q.qv, c.v), {ROUND_P}) DESC,
                               c.cid) AS rk
-    FROM cent{cell_iters} c CROSS JOIN qfull q
-  ) WHERE rk <= {nprobe}
+    FROM cent{IVF_ITERS} c CROSS JOIN qfull q
+  ) WHERE rk <= {IVFPQ_NPROBE}
 ),
 cells AS (
   SELECT vec_id, cid AS cell FROM (
     SELECT e.vec_id, c.cid,
            row_number() OVER (PARTITION BY e.vec_id
                               ORDER BY round(list_dot_product(
-                                  CAST(e.embedding AS DOUBLE[]), c.v), {p}) DESC,
+                                  CAST(e.embedding AS DOUBLE[]), c.v), {ROUND_P}) DESC,
                                        c.cid) AS rk
-    FROM embeddings e CROSS JOIN cent{cell_iters} c
+    FROM embeddings e CROSS JOIN cent{IVF_ITERS} c
   ) WHERE rk = 1
 ),
 cand AS (SELECT vec_id FROM cells JOIN probes ON probes.cid = cells.cell)""",
-        _pq_adc_sql(m, sub, pq_iters, p,
+        _pq_adc_sql(ROUND_P,
                     where="WHERE vec_id IN (SELECT vec_id FROM cand)\n"),
     ]
     return "".join(parts)
@@ -259,33 +276,10 @@ def q_ivfpq_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round6.py.  No SQL oracle: the kmeans++ D^2-weighted RNG
     draws are not ANSI-SQL-expressible — the driver records the weaker
     rows-only check; quality + plan shape are pytest-pinned."""
-    from ot_spark.webtext.simsearch import (
-        _xxhash_sample, build_ivfpq_index, ivfpq_search_packed,
-        train_ivf_centroids, train_pq_codebooks,
-    )
+    from ot_spark.webtext.simsearch import build_ivfpq_index, ivfpq_search_packed
 
     emb = _read(spark, sf_dir, "embeddings", fan=True)
-    ck, bk = ("ivf_prod", sf_dir), ("pq_prod", sf_dir)
-    # both trainers draw the IDENTICAL sample (same ordering expression,
-    # seed, size) — collect it at most once; the sort over the full vector
-    # table scales with the corpus, the sample does not
-    sx = None
-
-    def sample_x():
-        nonlocal sx
-        if sx is None:
-            sx = _xxhash_sample(emb, 4096, "embedding", 42)
-        return sx
-
-    if ck not in _TRAIN_CACHE:
-        _TRAIN_CACHE[ck] = train_ivf_centroids(
-            emb, n_centroids=32, sample=4096, iters=10, sample_X=sample_x()
-        )
-    if bk not in _TRAIN_CACHE:
-        _TRAIN_CACHE[bk] = train_pq_codebooks(
-            emb, m=16, k=256, sample=4096, iters=10, sample_X=sample_x()
-        )
-    cent, books = _TRAIN_CACHE[ck], _TRAIN_CACHE[bk]
+    cent, books = _prod_training(spark, sf_dir)
     index = build_ivfpq_index(emb, cent, books, replicas=2)
     qvec = list(emb.where("vec_id = 0").first().embedding)
     return ivfpq_search_packed(
@@ -374,35 +368,34 @@ def q_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     (xxhash sample, seeded RNG init) stays in
     ``simsearch.train_ivf_centroids``; recall pinned by
     tests/test_webtext.py."""
-    from ot_spark.webtext.simsearch import (
-        train_ivf_centroids_portable, with_ivf_cell,
-    )
+    from ot_spark.webtext.simsearch import ROUND_P, with_ivf_cell
 
     emb = _read(spark, sf_dir, "embeddings", fan=True)
-    cents = _ivf_cents(emb, sf_dir)
+    cents = _ivf_cents(spark, sf_dir)
     return (
-        with_ivf_cell(emb, cents, round_p=9)
+        with_ivf_cell(emb, cents, round_p=ROUND_P)
         .groupBy("ivf_cell")
         .agg(F.count(F.lit(1)).cast("long").alias("n_vecs"))
     )
 
 
-def ivf_oracle_sql(n_centroids: int = 8, sample: int = 500, iters: int = 3,
-                    p: int = 9) -> str:
+def ivf_oracle_sql() -> str:
     """Full re-derivation of the portable IVF quantizer in DuckDB: the
     md5-ordered sample, first-k init, and every Lloyd iteration UNROLLED as
     chained CTEs (assignment -> per-dim mean -> renormalize), then the
     whole-table argmax assignment.  Per-step rounding to 1e-9 on BOTH
     engines absorbs numpy-pairwise vs SQL-sequential summation drift (~1e-14)
     — see ``train_ivf_centroids_portable``."""
-    return "WITH " + _ivf_train_cte_parts(n_centroids, sample, iters, p) + f"""
+    from ot_spark.webtext.simsearch import ROUND_P
+
+    return "WITH " + _ivf_train_cte_parts(ROUND_P) + f"""
 SELECT ivf_cell, CAST(count(*) AS BIGINT) AS n_vecs FROM (
   SELECT e.vec_id, c.cid AS ivf_cell,
          row_number() OVER (PARTITION BY e.vec_id
                             ORDER BY round(list_dot_product(
-                                CAST(e.embedding AS DOUBLE[]), c.v), {p}) DESC,
+                                CAST(e.embedding AS DOUBLE[]), c.v), {ROUND_P}) DESC,
                                      c.cid) AS rk
-  FROM embeddings e CROSS JOIN cent{iters} c
+  FROM embeddings e CROSS JOIN cent{IVF_ITERS} c
 ) WHERE rk = 1 GROUP BY ivf_cell"""
 
 
@@ -447,10 +440,9 @@ WHERE {cos} >= 0.4
 """
 
 
-def _ivf_train_cte_parts(n_centroids: int = 8, sample: int = 500,
-                         iters: int = 3, p: int = 9) -> str:
+def _ivf_train_cte_parts(p: int) -> str:
     """The IVF portable-training CTE chain (no WITH prefix, ends at
-    ``cent{iters}``) — shared by the ivf_cells and ivfpq oracles."""
+    ``cent{IVF_ITERS}``) — shared by the ivf_cells and ivfpq oracles."""
     norm = (
         "list_transform({v}, x -> round(x / greatest("
         "sqrt(list_dot_product({v}, {v})), 1e-12), %d))" % p
@@ -461,10 +453,10 @@ ivf_sample AS (
          {norm.format(v="CAST(embedding AS DOUBLE[])")} AS v
   FROM embeddings
   ORDER BY md5(CAST(vec_id AS VARCHAR))
-  LIMIT {sample}
+  LIMIT {IVF_SAMPLE}
 ),
-cent0 AS (SELECT sidx AS cid, v FROM ivf_sample WHERE sidx < {n_centroids})"""]
-    for i in range(1, iters + 1):
+cent0 AS (SELECT sidx AS cid, v FROM ivf_sample WHERE sidx < {IVF_CELLS})"""]
+    for i in range(1, IVF_ITERS + 1):
         parts.append(f""",
 asg{i} AS (
   SELECT s.v AS pv, c.cid,

@@ -69,20 +69,26 @@ def grid_cell_sql(lat_expr: str, lon_expr: str, tile_size: float = 1.0) -> str:
     )
 
 
-def zorder_col(x: Column, y: Column, bits: int = 9) -> Column:
+# z-value interleaves the low ZORDER_BITS bits of x and y; zorder_layout's
+# bucket is the top ZBUCKET_BITS bits of it
+ZORDER_BITS = 9
+ZBUCKET_BITS = 6
+
+
+def zorder_col(x: Column, y: Column) -> Column:
     """Morton/Z-order interleave of two non-negative integer grid
     coordinates (Morton 1966, public; the layout key behind Delta/
     Iceberg Z-ORDER clustering): bit i of ``x`` lands at 2i, bit i of
     ``y`` at 2i+1, so records close in BOTH dimensions get close
     z-values and one range of z covers a compact spatial tile.
 
-    Pure Column bit algebra — an unrolled OR chain of ``2*bits`` masked
+    Pure Column bit algebra — an unrolled OR chain of ``2*ZORDER_BITS`` masked
     shifts, whole-stage-codegen-friendly, ZERO shuffles.  The SQL twin
     ``zorder_sql`` is generated from the same loop so the two engines
     cannot drift.
     """
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         z = z.bitwiseOR(
             F.shiftleft(F.shiftright(x.cast("long"), i).bitwiseAND(F.lit(1)), 2 * i)
         ).bitwiseOR(
@@ -93,27 +99,25 @@ def zorder_col(x: Column, y: Column, bits: int = 9) -> Column:
     return z
 
 
-def zorder_sql(x_expr: str, y_expr: str, bits: int = 9) -> str:
+def zorder_sql(x_expr: str, y_expr: str) -> str:
     """The SAME interleave as ANSI SQL, generated from the same loop.
     Every term is FULLY parenthesized: DuckDB (like Postgres) gives
     ``|`` and ``<<`` equal precedence left-associative, so an unwrapped
     ``a << 2 | b << 3`` parses as ``((a << 2) | b) << 3``."""
     terms = []
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         terms.append(f"(((({x_expr}) >> {i}) & 1) << {2 * i})")
         terms.append(f"(((({y_expr}) >> {i}) & 1) << {2 * i + 1})")
     return "CAST((" + " | ".join(terms) + ") AS BIGINT)"
 
 
-def zorder_layout(
-    df, x: Column, y: Column, bits: int = 9, bucket_bits: int = 6
-):
+def zorder_layout(df, x: Column, y: Column):
     """Z-order layout assignment: (zval, zbucket) per row, where
-    ``zbucket`` is the TOP ``bucket_bits`` bits of the z-value — a
+    ``zbucket`` is the TOP ``ZBUCKET_BITS`` bits of the z-value — a
     static space partition, so the assignment is a pure map (no global
     sort, no sampled range boundaries, deterministic under any
-    parallelism).  A bucket is exactly one aligned 2^(bits - b/2) x
-    2^(bits - b/2) spatial tile.
+    parallelism).  A bucket is exactly one aligned 2^(ZORDER_BITS - b/2)
+    x 2^(ZORDER_BITS - b/2) spatial tile, b = ZBUCKET_BITS.
 
     At 100 TB this feeds the writer as
     ``df.repartition(n, zbucket).sortWithinPartitions(zval)`` — min/max
@@ -122,9 +126,9 @@ def zorder_layout(
     Skewed tiles (mega-cities) split by appending low z bits to the
     bucket — same salting algebra as ot_spark/skew.py.
     """
-    z = zorder_col(x, y, bits)
+    z = zorder_col(x, y)
     return df.select(
         "*",
         z.alias("zval"),
-        F.shiftright(z, 2 * bits - bucket_bits).cast("long").alias("zbucket"),
+        F.shiftright(z, 2 * ZORDER_BITS - ZBUCKET_BITS).cast("long").alias("zbucket"),
     )

@@ -43,13 +43,7 @@ from .raster import RasterIndex, make_lookup3
 SPLIT_ID_OFFSET = 50_000_000_000
 
 
-def explode_segments(
-    links: DataFrame,
-    nodes: DataFrame,
-    link_key: str = "link_id",
-    ref_col: str = "refs",
-    node_key: str = "url",
-) -> DataFrame:
+def explode_segments(links: DataFrame, nodes: DataFrame) -> DataFrame:
     """links.refs ⨝ nodes -> one row per consecutive segment with both
     endpoint coordinates (+ elevation if present).
 
@@ -65,39 +59,39 @@ def explode_segments(
     unique by contract (the reference's node cache is a hash map keyed by
     id, geotiff.rs:463-477), which both the window and join forms require."""
     has_elev = "elev" in nodes.columns
-    node_cols = [node_key, "lat", "lon"] + (["elev"] if has_elev else [])
+    node_cols = ["url", "lat", "lon"] + (["elev"] if has_elev else [])
     node_side = nodes.select(*node_cols)
     if not has_elev:
         node_side = node_side.withColumn("elev", F.lit(None).cast("double"))
     # greatest(0): slice() raises on negative length for empty refs arrays
-    n_pairs = F.greatest(F.size(F.col(ref_col)) - 1, F.lit(0))
+    n_pairs = F.greatest(F.size(F.col("refs")) - 1, F.lit(0))
     pairs = F.arrays_zip(
-        F.slice(F.col(ref_col), F.lit(1), n_pairs),
-        F.slice(F.col(ref_col), F.lit(2), n_pairs),
+        F.slice(F.col("refs"), F.lit(1), n_pairs),
+        F.slice(F.col("refs"), F.lit(2), n_pairs),
     )
     seg = links.select(
-        link_key, F.posexplode(pairs).alias("pos", "_pair")
+        "link_id", F.posexplode(pairs).alias("pos", "_pair")
     ).select(
-        link_key,
+        "link_id",
         "pos",
         F.col("_pair")["0"].alias("from_url"),
         F.col("_pair")["1"].alias("to_url"),
     )
     frm = node_side.select(
-        F.col(node_key).alias("from_url"),
+        F.col("url").alias("from_url"),
         F.col("lat").alias("from_lat"),
         F.col("lon").alias("from_lon"),
         F.col("elev").alias("from_elev"),
     )
     to = node_side.select(
-        F.col(node_key).alias("to_url"),
+        F.col("url").alias("to_url"),
         F.col("lat").alias("to_lat"),
         F.col("lon").alias("to_lon"),
         F.col("elev").alias("to_elev"),
     )
     seg = seg.join(frm, "from_url", "left").join(to, "to_url", "left")
     return seg.select(
-        link_key, "pos", "from_url", "from_lat", "from_lon", "from_elev",
+        "link_id", "pos", "from_url", "from_lat", "from_lon", "from_elev",
         "to_url", "to_lat", "to_lon", "to_elev",
     )
 
@@ -106,7 +100,6 @@ def interpolate(
     segments: DataFrame,
     res_lon: float,
     res_lat: float,
-    link_key: str = "link_id",
     carry_coords: bool = False,
 ) -> DataFrame:
     """Generate intermediate points (i in 1..n-1) per segment — pure Column
@@ -142,7 +135,7 @@ def interpolate(
     )
     return (
         seg.select(
-            link_key, "pos", "from_url", "to_url", "n",
+            "link_id", "pos", "from_url", "to_url", "n",
             "from_elev", "to_elev", *extra,
             F.explode("idx").alias("i"),
             (F.col("from_lat") + F.col("i") * s_lat).alias("lat"),
@@ -151,14 +144,7 @@ def interpolate(
     )
 
 
-def assign_split_ids(
-    kept: DataFrame,
-    mode: str = "contract",
-    order_cols: tuple[str, ...] = ("link_id", "pos", "i"),
-    offset: int = SPLIT_ID_OFFSET,
-    out_col: str = "node_id",
-    num_partitions: int | None = None,
-) -> DataFrame:
+def assign_split_ids(kept: DataFrame, mode: str = "contract") -> DataFrame:
     """Assign the reference's ``HIGHEST_NODE_ID + 1, +2, ...`` split-node ids
     (src/handler.rs:22, geotiff.rs:398-402; integration test pins 50000000001).
 
@@ -172,16 +158,17 @@ def assign_split_ids(
     each partition only.  The ranged frame is locally checkpointed so the
     count pass and the final pass see identical partitioning (range sampling
     is otherwise re-evaluated per action)."""
+    order_cols = ("link_id", "pos", "i")
     cols = [F.col(c) for c in order_cols]
     if mode == "contract":
         w = Window.orderBy(*cols)
         return kept.withColumn(
-            out_col, F.row_number().over(w) + F.lit(offset)
+            "node_id", F.row_number().over(w) + F.lit(SPLIT_ID_OFFSET)
         )
     if mode != "scale":
         raise ValueError(f"unknown id mode: {mode!r}")
     spark = kept.sparkSession
-    parts = num_partitions or spark.sparkContext.defaultParallelism
+    parts = spark.sparkContext.defaultParallelism
     # Materialize the kept rows BEFORE range partitioning (guide §5):
     # repartitionByRange runs a sampling job over its input, so an
     # unmaterialized `kept` pays its full upstream (segment join, point
@@ -212,8 +199,8 @@ def assign_split_ids(
     out = (
         ranged.join(F.broadcast(off_df), "_pid")
         .withColumn(
-            out_col,
-            F.row_number().over(w) + F.col("_off") + F.lit(offset),
+            "node_id",
+            F.row_number().over(w) + F.col("_off") + F.lit(SPLIT_ID_OFFSET),
         )
         .drop("_pid")
         .drop("_off")
@@ -225,12 +212,9 @@ def split_ways(
     links: DataFrame,
     nodes: DataFrame,
     raster_index: RasterIndex | None,
-    res_lon: float = 0.01,
-    res_lat: float = 0.01,
-    threshold: float = 10.0,
-    link_key: str = "link_id",
-    ref_col: str = "refs",
-    node_key: str = "url",
+    res_lon: float,
+    res_lat: float,
+    threshold: float,
     id_mode: str = "contract",
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (new_nodes, rewritten_links).
@@ -239,14 +223,14 @@ def split_ways(
     intermediates with contract ids 50e9+1....
     rewritten_links: links with refs arrays containing the spliced new ids.
     """
-    segments = explode_segments(links, nodes, link_key, ref_col, node_key)
+    segments = explode_segments(links, nodes)
     # Threshold test on each point and its two sequence neighbours: the
     # neighbours of ``from + i*step`` are ``from + (i±1)*step``, so one
     # Arrow crossing of six narrow numeric columns computes all three
     # elevations (numpy routing + gather) with no (link, pos) window sort.
     # Rounding/coalesce/threshold stay JVM-side.  With no raster every
     # elevation is NaN -> null, so only the endpoint fallbacks count.
-    inter = interpolate(segments, res_lon, res_lat, link_key, carry_coords=True)
+    inter = interpolate(segments, res_lon, res_lat, carry_coords=True)
     lookup3 = make_lookup3(raster_index or RasterIndex([]), inter.sparkSession)
     s_lat = (F.col("to_lat") - F.col("from_lat")) / F.col("n")
     s_lon = (F.col("to_lon") - F.col("from_lon")) / F.col("n")
@@ -280,22 +264,22 @@ def split_ways(
     )
 
     with_ids = assign_split_ids(
-        kept, mode=id_mode, order_cols=(link_key, "pos", "i")
+        kept, mode=id_mode
     )
     new_nodes = with_ids.select(
-        "node_id", link_key, "pos", "i", "lat", "lon",
+        "node_id", "link_id", "pos", "i", "lat", "lon",
         F.col("elev0").alias("elev"),
     ).withColumn("url", F.format_string("split:%d", F.col("node_id")))
 
     # splice: per (link, pos) ordered lists of new urls, then rebuild refs
     splice = (
-        new_nodes.groupBy(link_key, "pos")
+        new_nodes.groupBy("link_id", "pos")
         .agg(F.sort_array(F.collect_list(F.struct("i", "url"))).alias("s"))
-        .select(link_key, "pos", F.col("s.url").alias("new_urls"))
+        .select("link_id", "pos", F.col("s.url").alias("new_urls"))
     )
     exploded = links.select(
-        link_key, F.posexplode(ref_col).alias("pos", "ref_url")
-    ).join(splice, [link_key, "pos"], "left")
+        "link_id", F.posexplode("refs").alias("pos", "ref_url")
+    ).join(splice, ["link_id", "pos"], "left")
     rebuilt = (
         exploded.withColumn(
             "chunk",
@@ -304,15 +288,15 @@ def split_ways(
                 F.coalesce("new_urls", F.array().cast("array<string>")),
             ),
         )
-        .groupBy(link_key)
+        .groupBy("link_id")
         .agg(
             F.flatten(
                 F.transform(
                     F.sort_array(F.collect_list(F.struct("pos", "chunk"))),
                     lambda st: st["chunk"],
                 )
-            ).alias(ref_col)
+            ).alias("refs")
         )
     )
-    rewritten = links.drop(ref_col).join(rebuilt, link_key, "left")
+    rewritten = links.drop("refs").join(rebuilt, "link_id", "left")
     return new_nodes, rewritten

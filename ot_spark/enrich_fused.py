@@ -42,15 +42,12 @@ def spatial_enrich(
     raster_index: RasterIndex | None = None,
     s2_level: int | None = 10,
     h3_resolutions: tuple[int, ...] = (7, 9),
-    lat_col: str = "lat",
-    lon_col: str = "lon",
     skip_col: str | None = None,
-    cell_col: str = "grid_cell",
     keep_original: bool = False,
 ) -> DataFrame:
     """Adds one column family per given argument:
 
-    - ``area_index``: ``grid_cell`` (``cell_col``) and ``admin_key``; NULL
+    - ``area_index``: ``grid_cell`` and ``admin_key``; NULL
       admin_key is the reference's "no country tag" (area.rs:392-395);
     - ``raster_index``: ``raster_id`` and ``elev``;
     - ``s2_level`` not None: ``s2_<level>``;
@@ -61,12 +58,12 @@ def spatial_enrich(
     semantics).  ``keep_original``: a row whose input ``elev`` is non-null
     gets no lookup and keeps that value, skip-flagged or not
     (geotiff.rs:425-432)."""
-    lat, lon = F.col(lat_col), F.col(lon_col)
+    lat, lon = F.col("lat"), F.col("lon")
     inputs, fields = [], []
 
     if area_index is not None:
-        df = df.withColumn(cell_col, grid_cell(lat, lon, area_index.tile_size))
-        inputs.append(F.col(cell_col))
+        df = df.withColumn("grid_cell", grid_cell(lat, lon, area_index.tile_size))
+        inputs.append(F.col("grid_cell"))
         fields.append(StructField("admin_key", StringType()))
 
     keep = False
@@ -78,7 +75,7 @@ def spatial_enrich(
         if len(raster_index.tiles) <= ROUTE_JOIN_THRESHOLD:
             df = df.withColumn("raster_id", route_col(raster_index, lat, lon))
         else:
-            df = route_via_cell_join(df, raster_index, lat_col, lon_col, "raster_id")
+            df = route_via_cell_join(df, raster_index)
         if skip_col is not None:
             df = df.withColumn(
                 "raster_id",

@@ -99,35 +99,29 @@ def complex_filter_condition(attrs: Column) -> Column:
     ) & ~has_only_matching_keys(attrs, TAGS_TO_REMOVE)
 
 
-def complex_filter(df: DataFrame, attrs_col: str = "attrs") -> DataFrame:
-    return df.where(complex_filter_condition(F.col(attrs_col)))
+def complex_filter(df: DataFrame) -> DataFrame:
+    return df.where(complex_filter_condition(F.col("attrs")))
 
 
-def filter_by_tag_value(
-    df: DataFrame, key: str, value_regex: str, keep: bool = True, attrs_col: str = "attrs"
-) -> DataFrame:
-    """Keep/remove rows whose attrs[key] matches regex (filter.rs:19-57)."""
-    cond = F.coalesce(F.col(attrs_col).getItem(key).rlike(value_regex), F.lit(False))
-    return df.where(cond if keep else ~cond)
+def filter_by_tag_value(df: DataFrame, key: str, value_regex: str) -> DataFrame:
+    """Keep rows whose attrs[key] matches regex (filter.rs:19-57)."""
+    cond = F.coalesce(F.col("attrs").getItem(key).rlike(value_regex), F.lit(False))
+    return df.where(cond)
 
 
-def filter_by_tag_keys(
-    df: DataFrame, keys: list[str], keep: bool = True, attrs_col: str = "attrs"
-) -> DataFrame:
+def filter_by_tag_keys(df: DataFrame, keys: list[str], keep: bool = True) -> DataFrame:
     """Keep/remove rows having any of ``keys`` (filter.rs:61-96)."""
-    cond = has_one_of_keys(F.col(attrs_col), keys)
+    cond = has_one_of_keys(F.col("attrs"), keys)
     return df.where(cond if keep else ~cond)
 
 
-def remove_tags(
-    df: DataFrame, key_regex: str = TAGS_TO_REMOVE, attrs_col: str = "attrs"
-) -> DataFrame:
+def remove_tags(df: DataFrame) -> DataFrame:
     """Projection on the attrs map: drop entries whose key matches regex
     (TagFilterByKey, filter.rs:99-145).  The default regex takes the
     substring fast path (see _key_matches)."""
     return df.withColumn(
-        attrs_col,
-        F.map_filter(F.col(attrs_col), lambda k, _v: ~_key_matches(k, key_regex)),
+        "attrs",
+        F.map_filter(F.col("attrs"), lambda k, _v: ~_key_matches(k, TAGS_TO_REMOVE)),
     )
 
 

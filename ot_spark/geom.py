@@ -99,8 +99,9 @@ def ring_area(ring: Ring) -> float:
     )
 
 
-def points_on_ring(lon: np.ndarray, lat: np.ndarray, ring: Ring, eps: float = 1e-12) -> np.ndarray:
+def points_on_ring(lon: np.ndarray, lat: np.ndarray, ring: Ring) -> np.ndarray:
     """Boolean mask: point lies on a ring segment (boundary inclusion)."""
+    eps = 1e-12
     on = np.zeros(len(lon), dtype=bool)
     n = len(ring)
     for i in range(n):

@@ -57,11 +57,11 @@ BUCKET_COL = "cell_bucket"
 RUN_COL = "run"
 
 
-def with_bucket(df: DataFrame, cell_col: str = "grid_cell", n_buckets: int = 64) -> DataFrame:
+def with_bucket(df: DataFrame, n_buckets: int = 64) -> DataFrame:
     """NULL cells (no coords / poles) go to bucket -1."""
     return df.withColumn(
         BUCKET_COL,
-        F.coalesce(F.pmod(F.col(cell_col), F.lit(n_buckets)), F.lit(-1)).cast("int"),
+        F.coalesce(F.pmod(F.col("grid_cell"), F.lit(n_buckets)), F.lit(-1)).cast("int"),
     )
 
 
@@ -161,14 +161,11 @@ def read_table_properties(spark: SparkSession, in_dir: str) -> dict:
     return {r["key"]: r["value"] for r in spark.read.parquet(path).collect()}
 
 
-def propagate_table_properties(
-    spark: SparkSession, in_dir: str, out_dir: str, extra: dict | None = None
-) -> dict:
+def propagate_table_properties(spark: SparkSession, in_dir: str, out_dir: str) -> dict:
     """input -> output property carry-through, mirroring the reference's
     end-to-end replication-timestamp preservation
     (tests/integration_test.rs:267-291)."""
     props = read_table_properties(spark, in_dir)
-    props.update(extra or {})
     if props:
         write_table_properties(spark, out_dir, props)
     return props
@@ -233,19 +230,13 @@ def write_with_lineage(
     out_dir: str,
     lineage_path: str,
     key_cols: list[str],
-    cell_col: str = "grid_cell",
     n_buckets: int = 64,
     run_id: str | None = None,
-    table_props: dict | None = None,
     snapshot: bool = True,
     audit_input: bool = False,
 ) -> dict:
     """Write df partitioned by (cell bucket, run) with lineage; skips
     buckets the lineage table already records. Returns summary counters.
-
-    ``table_props``: properties persisted alongside the output (replication
-    timestamp analog) — survive resume because the sidecar write is
-    idempotent overwrite.
 
     ``audit_input``: lineage facts normally come from a read-back of the
     committed files, which audits POST-COMMIT drift but cannot see a
@@ -273,7 +264,7 @@ def write_with_lineage(
     # a leading letter keeps partition discovery from typing run=<id> as a
     # number (an all-digit id, or one like 12345e67890)
     run_id = run_id or f"r{uuid.uuid4().hex[:12]}"
-    bucketed = with_bucket(df, cell_col, n_buckets)
+    bucketed = with_bucket(df, n_buckets)
 
     done = set(_completed_bucket_list(spark, lineage_path) or ())
     skipped = len(done)
@@ -339,8 +330,8 @@ def write_with_lineage(
         lineage = (
             landed.groupBy(BUCKET_COL)
             .agg(
-                F.min(cell_col).alias("cell_min"),
-                F.max(cell_col).alias("cell_max"),
+                F.min("grid_cell").alias("cell_min"),
+                F.max("grid_cell").alias("cell_max"),
                 F.count(F.lit(1)).alias("row_count"),
                 F.bit_xor(F.xxhash64(*key_cols)).alias("checksum"),
                 F.collect_set(F.col("__file")).alias("files"),
@@ -368,8 +359,6 @@ def write_with_lineage(
                 f"checksum={want['h']}) vs committed files "
                 f"(rows={got_n}, checksum={got_h})"
             )
-    if table_props:
-        write_table_properties(spark, out_dir, table_props)
     snap_id = None
     if snapshot and _exists(spark, lineage_path):
         snap_id = _append_snapshot(

@@ -39,25 +39,18 @@ class PipelineMetrics:
             lines.append(f"{name}: {kv}")
         return "\n".join(lines)
 
-    def trace_elements(
-        self,
-        df: DataFrame,
-        ids: list[int],
-        stage: str,
-        id_col: str = "doc_id",
-        cols: list[str] | None = None,
-    ) -> DataFrame:
+    def trace_elements(self, df: DataFrame, ids: list[int], stage: str) -> DataFrame:
         """ElementPrinter analog (reference src/handler/info.rs:61-100):
         record the named elements as they pass this stage.  Spark-first
         shape: a filtered ``collect_list`` aggregate inside the stage's
         ``observe`` — the trace piggybacks on the action that materializes
         the plan (map-side ``isin`` filter, bounded payload: len(ids) rows
         max), no extra scan and no driver loop.  Read the captured rows
-        from :meth:`get` under ``<stage>.traced`` after the action."""
-        cols = cols or [c for c in df.columns][:8]
+        from :meth:`get` under ``<stage>.traced`` after the action; each
+        traced row carries the frame's first 8 columns."""
         payload = F.when(
-            F.col(id_col).isin([int(i) for i in ids]),
-            F.struct(*[F.col(c) for c in cols]),
+            F.col("doc_id").isin([int(i) for i in ids]),
+            F.struct(*df.columns[:8]),
         )
         obs = Observation(stage)
         self._obs[stage] = obs

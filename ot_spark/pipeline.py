@@ -26,7 +26,7 @@ elements, lib.rs:319-322 places TagFilterByKey late).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,7 +52,6 @@ class PipelineConfig:
     admin_index: AreaIndex | None = None    # -c/--country-csv
     raster_index: RasterIndex | None = None  # -s/--elevation-tiffs
     run_id: str | None = None
-    extra: dict = field(default_factory=dict)
 
 
 class Pipeline:
@@ -103,9 +102,7 @@ class Pipeline:
                 n_buckets=cfg.n_buckets,
                 run_id=cfg.run_id,
             )
-            lineage.propagate_table_properties(
-                spark, cfg.pages_path, cfg.out_dir, cfg.extra.get("table_props")
-            )
+            lineage.propagate_table_properties(spark, cfg.pages_path, cfg.out_dir)
         else:
             info = {"rows": out.count()}
         info["metrics"] = self.metrics.get()

@@ -244,20 +244,15 @@ def route_col(index: RasterIndex, lat: Column, lon: Column) -> Column:
     return expr
 
 
-def route_via_cell_join(
-    df: DataFrame,
-    index: RasterIndex,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    out_col: str = "raster_id",
-    route_tile_size: float = 1.0,
-) -> DataFrame:
+def route_via_cell_join(df: DataFrame, index: RasterIndex) -> DataFrame:
     """Scale routing (SURVEY §2.1/S7, geotiff.rs:281-288): broadcast a
     coarse-cell -> candidate-tile-bbox table (candidates pre-sorted finest
     first, the R-tree's sort), equi-join on the cell, then pick the first
     CONTAINING candidate with pure array algebra — constant expression
     depth, zero shuffle, any tile count."""
     from .cells import grid_cell, grid_cell_py, num_tiles_lon
+
+    route_tile_size = 1.0
 
     by_cell: dict[int, list[tuple]] = {}
     for t in index.routing():  # already finest-first
@@ -286,7 +281,7 @@ def route_via_cell_join(
         "min_lon:double,max_lon:double,min_lat:double,max_lat:double,"
         "raster_id:string>>",
     )
-    lat, lon = F.col(lat_col), F.col(lon_col)
+    lat, lon = F.col("lat"), F.col("lon")
     routed = df.withColumn(
         "__route_cell", grid_cell(lat, lon, route_tile_size)
     ).join(F.broadcast(cell_df), "__route_cell", "left")
@@ -297,17 +292,15 @@ def route_via_cell_join(
     )
     return (
         # F.get is NULL-safe on empty arrays (cell mapped, no bbox contains)
-        routed.withColumn(out_col, F.get(containing, 0)["raster_id"])
+        routed.withColumn("raster_id", F.get(containing, 0)["raster_id"])
         .drop("__route_cell", "__cands")
     )
 
 
 def elevation_stats_df(
     df: DataFrame,
-    out_col: str = "elev",
     skip_col: str | None = None,
     index: RasterIndex | None = None,
-    rid_col: str = "raster_id",
 ) -> DataFrame:
     """found / not-found / skipped counters (geotiff.rs:350-357) as a
     one-row frame.  With ``index``, also counts rows routed to a tile whose
@@ -318,13 +311,13 @@ def elevation_stats_df(
     )
     unknown_ids = index.unknown_crs_ids() if index is not None else []
     unknown = (
-        F.col(rid_col).isin(unknown_ids)
-        if unknown_ids and rid_col in df.columns
+        F.col("raster_id").isin(unknown_ids)
+        if unknown_ids and "raster_id" in df.columns
         else F.lit(False)
     )
     return df.agg(
-        F.count(F.when(F.col(out_col).isNotNull(), 1)).alias("found"),
-        F.count(F.when(F.col(out_col).isNull() & ~skip, 1)).alias("not_found"),
+        F.count(F.when(F.col("elev").isNotNull(), 1)).alias("found"),
+        F.count(F.when(F.col("elev").isNull() & ~skip, 1)).alias("not_found"),
         F.count(F.when(skip, 1)).alias("skipped"),
         F.count(F.when(unknown, 1)).alias("unknown_crs"),
     )

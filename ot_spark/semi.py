@@ -27,10 +27,8 @@ SKIP_ELEVATION_KEYS = ["bridge", "tunnel", "cutting", "indoor"]
 
 def referenced_ids(
     links: DataFrame,
-    ref_col: str = "refs",
     out_name: str = "url",
     relations: DataFrame | None = None,
-    member_col: str = "members",
 ) -> DataFrame:
     """explode(refs) [∪ relation node-members] -> distinct — the accept-set
     build side.
@@ -39,18 +37,16 @@ def referenced_ids(
     relations' Node-type members (collect.rs:29-36: ``Member::Node{id} =>
     set bit``); pass ``relations`` (with an ``array<struct<type,id,role>>``
     member column) to get the second union leg."""
-    ids = links.select(F.explode(ref_col).alias(out_name))
+    ids = links.select(F.explode("refs").alias(out_name))
     if relations is not None:
-        ids = ids.unionByName(member_node_ids(relations, member_col, out_name))
+        ids = ids.unionByName(member_node_ids(relations, out_name))
     return ids.distinct()
 
 
-def member_node_ids(
-    relations: DataFrame, member_col: str = "members", out_name: str = "url"
-) -> DataFrame:
+def member_node_ids(relations: DataFrame, out_name: str = "url") -> DataFrame:
     """Node-type member ids of relations (collect.rs:29-36 — only
     ``Member::Node`` sets the node bitmap; Way/Relation members don't)."""
-    m = relations.select(F.explode(member_col).alias("m"))
+    m = relations.select(F.explode("members").alias("m"))
     return m.where(F.col("m.type") == "node").select(F.col("m.id").alias(out_name))
 
 
@@ -58,24 +54,22 @@ def filter_referenced(
     pages: DataFrame,
     links: DataFrame,
     key_col: str = "url",
-    ref_col: str = "refs",
     apply_complex_filter: bool = True,
     relations: DataFrame | None = None,
-    member_col: str = "members",
 ) -> DataFrame:
     """Keep only pages referenced by (accepted) links — the full pass-1 +
     IdFilter contract in one plan (incl. the relation-member union leg when
     ``relations`` is given)."""
     accepted = complex_filter(links) if apply_complex_filter else links
-    refs = referenced_ids(accepted, ref_col, key_col, relations, member_col)
+    refs = referenced_ids(accepted, key_col, relations)
     return pages.join(refs, key_col, "left_semi")
 
 
-def skip_elevation_condition(attrs: Column, keys: list[str] | None = None) -> Column:
+def skip_elevation_condition(attrs: Column) -> Column:
     """any key in SKIP_ELEVATION_KEYS with value != 'no' (skip_ele.rs:23-25)."""
-    keys = keys or SKIP_ELEVATION_KEYS
     terms = [
-        F.coalesce(attrs.getItem(k) != "no", F.lit(False)) for k in keys
+        F.coalesce(attrs.getItem(k) != "no", F.lit(False))
+        for k in SKIP_ELEVATION_KEYS
     ]
     out = terms[0]
     for t in terms[1:]:
@@ -83,20 +77,18 @@ def skip_elevation_condition(attrs: Column, keys: list[str] | None = None) -> Co
     return out
 
 
-def no_elevation_ids(links: DataFrame, ref_col: str = "refs", out_name: str = "url") -> DataFrame:
+def no_elevation_ids(links: DataFrame) -> DataFrame:
     """Distinct ids referenced by skip-elevation links."""
     flagged = links.where(skip_elevation_condition(F.col("attrs")))
-    return flagged.select(F.explode(ref_col).alias(out_name)).distinct()
+    return flagged.select(F.explode("refs").alias("url")).distinct()
 
 
-def with_no_elevation_flag(
-    pages: DataFrame, links: DataFrame, key_col: str = "url", ref_col: str = "refs"
-) -> DataFrame:
+def with_no_elevation_flag(pages: DataFrame, links: DataFrame) -> DataFrame:
     """Add boolean ``no_elevation`` via a left join against the flag set
     (the bitmap analog; NULL -> False)."""
-    flags = no_elevation_ids(links, ref_col, key_col).withColumn(
+    flags = no_elevation_ids(links).withColumn(
         "no_elevation", F.lit(True)
     )
-    return pages.join(flags, key_col, "left").withColumn(
+    return pages.join(flags, "url", "left").withColumn(
         "no_elevation", F.coalesce(F.col("no_elevation"), F.lit(False))
     )

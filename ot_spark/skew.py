@@ -41,7 +41,6 @@ def salted_agg(
     keys: list[str],
     counts: dict[str, Column] | None = None,
     sums: dict[str, Column] | None = None,
-    mins: dict[str, Column] | None = None,
     maxs: dict[str, Column] | None = None,
     n_salt: int = 16,
     unique_col: str | None = None,
@@ -50,10 +49,9 @@ def salted_agg(
 
     counts: out_name -> condition-ish Column counted via count(expr)
             (pass F.lit(1) for plain row counts);
-    sums/mins/maxs: out_name -> value Column.
+    sums/maxs: out_name -> value Column.
     """
-    counts, sums = counts or {}, sums or {}
-    mins, maxs = mins or {}, maxs or {}
+    counts, sums, maxs = counts or {}, sums or {}, maxs or {}
     salted = with_salt(df, n_salt, unique_col)
 
     def _count_expr(c: Column) -> Column:
@@ -68,12 +66,10 @@ def salted_agg(
     partial = salted.groupBy(*keys, SALT_COL).agg(
         *[F.count(_count_expr(c)).alias(f"__c_{o}") for o, c in counts.items()],
         *[F.sum(c).alias(f"__s_{o}") for o, c in sums.items()],
-        *[F.min(c).alias(f"__mn_{o}") for o, c in mins.items()],
         *[F.max(c).alias(f"__mx_{o}") for o, c in maxs.items()],
     )
     return partial.groupBy(*keys).agg(
         *[F.sum(f"__c_{o}").cast("long").alias(o) for o in counts],
         *[F.sum(f"__s_{o}").alias(o) for o in sums],
-        *[F.min(f"__mn_{o}").alias(o) for o in mins],
         *[F.max(f"__mx_{o}").alias(o) for o in maxs],
     )

@@ -34,12 +34,7 @@ from .area_index import AreaIndex
 from .session import local_df
 
 
-def admin_stats_df(
-    df: DataFrame,
-    index: AreaIndex,
-    out_col: str = "admin_key",
-    cell_col: str = "grid_cell",
-) -> DataFrame:
+def admin_stats_df(df: DataFrame, index: AreaIndex) -> DataFrame:
     """One-row stats frame: the reference's country counters
     (area.rs:344-348, 412-417) as one aggregation.
 
@@ -51,15 +46,15 @@ def admin_stats_df(
     border_df = local_df(
         df.sparkSession,
         [(int(c), True) for c in index.border_cells],
-        f"{cell_col} long, __is_border boolean",
+        "grid_cell long, __is_border boolean",
     )
-    df = df.join(F.broadcast(border_df), cell_col, "left")
+    df = df.join(F.broadcast(border_df), "grid_cell", "left")
     in_border = F.coalesce(F.col("__is_border"), F.lit(False))
     return df.agg(
-        F.count(F.when(F.col(out_col).isNotNull(), 1)).alias("found"),
+        F.count(F.when(F.col("admin_key").isNotNull(), 1)).alias("found"),
         F.count(
-            F.when(F.col(out_col).isNull() & F.col(cell_col).isNotNull(), 1)
+            F.when(F.col("admin_key").isNull() & F.col("grid_cell").isNotNull(), 1)
         ).alias("not_found"),
         F.count(F.when(in_border, 1)).alias("intersect_checks"),
-        F.count(F.when(F.col(out_col).contains(","), 1)).alias("border_nodes"),
+        F.count(F.when(F.col("admin_key").contains(","), 1)).alias("border_nodes"),
     )

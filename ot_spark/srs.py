@@ -68,8 +68,6 @@ def tm_forward(
     lon_deg: np.ndarray,
     lon0_deg: float,
     ellipsoid: str = "GRS80",
-    k0: float = K0,
-    fe: float = FALSE_EASTING,
     fn: float = 0.0,
 ) -> tuple[np.ndarray, np.ndarray]:
     """WGS84/ETRS89 geographic -> transverse Mercator (easting, northing)."""
@@ -87,25 +85,20 @@ def tm_forward(
     for j, aj in enumerate(alpha, start=1):
         xi = xi + aj * np.sin(2 * j * xi_p) * np.cosh(2 * j * eta_p)
         eta = eta + aj * np.cos(2 * j * xi_p) * np.sinh(2 * j * eta_p)
-    return fe + k0 * A * eta, fn + k0 * A * xi
+    return FALSE_EASTING + K0 * A * eta, fn + K0 * A * xi
 
 
 def tm_inverse(
-    easting: np.ndarray,
-    northing: np.ndarray,
-    lon0_deg: float,
-    ellipsoid: str = "GRS80",
-    k0: float = K0,
-    fe: float = FALSE_EASTING,
-    fn: float = 0.0,
+    easting: np.ndarray, northing: np.ndarray, lon0_deg: float
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Transverse Mercator (easting, northing) -> (lat, lon) degrees."""
-    a, f = _ELLIPSOIDS[ellipsoid]
+    """Transverse Mercator (easting, northing) -> (lat, lon) degrees, on
+    GRS80 with no false northing (``tm_forward``'s defaults)."""
+    a, f = _ELLIPSOIDS["GRS80"]
     a_over, _, beta = _krueger_constants(f)
     A = a * a_over
     e = np.sqrt(f * (2 - f))
-    xi = (np.asarray(northing, dtype=np.float64) - fn) / (k0 * A)
-    eta = (np.asarray(easting, dtype=np.float64) - fe) / (k0 * A)
+    xi = np.asarray(northing, dtype=np.float64) / (K0 * A)
+    eta = (np.asarray(easting, dtype=np.float64) - FALSE_EASTING) / (K0 * A)
     xi_p, eta_p = xi.copy(), eta.copy()
     for j, bj in enumerate(beta, start=1):
         xi_p = xi_p - bj * np.sin(2 * j * xi) * np.cosh(2 * j * eta)

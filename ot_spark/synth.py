@@ -24,6 +24,7 @@ generate), read back with spark.read.parquet.
 
 from __future__ import annotations
 
+import functools
 import os
 
 import numpy as np
@@ -63,9 +64,12 @@ WORDS = (
 ).split()
 
 
+@functools.cache
 def _coords(n: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic lat/lon: 70% clustered on the fixture-polygon region
-    (exercises PIP + rasters), 30% world-spread; a few exact edge cases."""
+    (exercises PIP + rasters), 30% world-spread; a few exact edge cases.
+    Memoized (``_url_of`` reads it once per link): callers must not
+    mutate the arrays."""
     rng = np.random.RandomState(seed)
     lat = rng.uniform(-0.9, 4.9, n)
     lon = rng.uniform(-0.9, 8.9, n)
@@ -199,12 +203,9 @@ def _url_of(i: int, n_pages: int) -> str:
     coords only for mode<=4 rows, so recompute the same way."""
     host = f"site-{i % 20}.example.org"
     if i % 10 <= 4:
-        lat, lon = _COORD_CACHE.setdefault(n_pages, _coords(n_pages, SEED))
+        lat, lon = _coords(n_pages, SEED)
         return f"https://{host}/geo/{float(lat[i]):.7f},{float(lon[i]):.7f}/p{i}"
     return f"https://{host}/page/p{i}"
-
-
-_COORD_CACHE: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
 
 def gen_admin_polygons() -> pa.Table:
@@ -319,12 +320,12 @@ def gen_projected_tiles() -> pa.Table:
     )
 
 
-def write_fixture_dir(out_dir: str, n_pages: int = 4000, seed: int = SEED) -> dict[str, str]:
+def write_fixture_dir(out_dir: str, n_pages: int = 4000) -> dict[str, str]:
     """Materialize all fixture tables as parquet; returns name -> path."""
     os.makedirs(out_dir, exist_ok=True)
     tables = {
-        "pages": gen_pages(n_pages, seed),
-        "links": gen_links(n_pages, max(n_pages // 5, 8), seed),
+        "pages": gen_pages(n_pages, SEED),
+        "links": gen_links(n_pages, max(n_pages // 5, 8), SEED),
         "admin_polygons": gen_admin_polygons(),
         "raster_tiles": gen_raster_tiles(),
     }

@@ -53,6 +53,10 @@ DAY = 86400
 #     (the final revision is a tombstone: the page 404'd)
 SIG_MOD = 1_000_000_007
 
+# burst_hosts: a (host, day) bursts when its count exceeds BURST_FACTOR x
+# the total of the trailing BURST_TRAIL_DAYS days and is >= BURST_MIN_COUNT
+BURST_TRAIL_DAYS, BURST_FACTOR, BURST_MIN_COUNT = 3, 2, 3
+
 
 def synthetic_revisions(docs: DataFrame) -> DataFrame:
     """Derive the multi-revision crawl log from the documents table —
@@ -167,18 +171,11 @@ def crawl_delta(revs: DataFrame, t1_epoch: int, t2_epoch: int) -> DataFrame:
     )
 
 
-def burst_hosts(
-    revs: DataFrame,
-    host: Column,
-    epoch_col: str = "warc_epoch",
-    trail_days: int = 3,
-    factor: int = 2,
-    min_count: int = 3,
-) -> DataFrame:
+def burst_hosts(revs: DataFrame, host: Column) -> DataFrame:
     """Crawl-activity burst detection per host: flag (host, day) cells
-    whose page count exceeds ``factor`` x the trailing ``trail_days``-day
-    total — the recrawl-scheduler signal ("this site just published a
-    lot; crawl it sooner").
+    whose page count exceeds ``BURST_FACTOR`` x the trailing
+    ``BURST_TRAIL_DAYS``-day total — the recrawl-scheduler signal ("this
+    site just published a lot; crawl it sooner").
 
     Integer-exact throughout (counts and a multiply — no float z-score),
     so the DuckDB oracle matches bit-for-bit.  The trailing window is a
@@ -193,7 +190,7 @@ def burst_hosts(
 
     Returns (host, day, cnt, prev, is_burst): day is days since the
     crawl epoch, prev the trailing total (0 when no history), and
-    is_burst = cnt > factor * prev AND cnt >= min_count (the min_count
+    is_burst = cnt > BURST_FACTOR * prev AND cnt >= BURST_MIN_COUNT (the
     floor keeps one-page hosts from flagging on their first crawl).
     """
     from pyspark.sql import Window
@@ -209,8 +206,8 @@ def burst_hosts(
             # CRAWL_EPOCH the two are identical, so fixture outputs are
             # unchanged.
             F.expr(
-                f"(({epoch_col} - {CRAWL_EPOCH})"
-                f" - pmod({epoch_col} - {CRAWL_EPOCH}, {DAY})) DIV {DAY}"
+                f"((warc_epoch - {CRAWL_EPOCH})"
+                f" - pmod(warc_epoch - {CRAWL_EPOCH}, {DAY})) DIV {DAY}"
             ).alias("day"),
         )
         .groupBy("host", "day")
@@ -219,13 +216,14 @@ def burst_hosts(
     w = (
         Window.partitionBy("host")
         .orderBy("day")
-        .rangeBetween(-trail_days, -1)
+        .rangeBetween(-BURST_TRAIL_DAYS, -1)
     )
     prev = F.coalesce(F.sum("cnt").over(w), F.lit(0)).cast("long")
     return cells.select(
         "host", "day", "cnt",
         prev.alias("prev"),
         (
-            (F.col("cnt") > factor * prev) & (F.col("cnt") >= min_count)
+            (F.col("cnt") > BURST_FACTOR * prev)
+            & (F.col("cnt") >= BURST_MIN_COUNT)
         ).alias("is_burst"),
     )

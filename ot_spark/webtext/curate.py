@@ -33,10 +33,13 @@ from pyspark.sql import functions as F
 from .dedup import TOKENS_COL, _materialize, with_tokens
 from .textstats import LANG_STOPWORDS
 
+# corpus_clean's keep thresholds (gate_condition)
+MIN_TOKENS, MAX_TOKENS = 5, 5000
+MIN_STOPWORD_RATIO = 0.02
+MAX_TOP_BIGRAM_FRAC, MAX_DUP_TOKEN_FRAC = 0.18, 0.5
 
-def clean_features(
-    df: DataFrame, text_col: str = "text", keep_cols: tuple = ()
-) -> DataFrame:
+
+def clean_features(df: DataFrame) -> DataFrame:
     """The narrow per-document feature frame every cleaning variant shares:
     one tokenizer evaluation feeding quality, repetition, and langid, plus
     the content hash — all per-row and STATELESS (no window, no shuffle).
@@ -46,7 +49,7 @@ def clean_features(
     gate compares)."""
     from .textstats import clean_stats_col
 
-    tok = with_tokens(df, text_col)
+    tok = with_tokens(df)
     toks = F.col(TOKENS_COL)
 
     # ONE Arrow pass computes every integer feature (per-language stopword
@@ -65,7 +68,7 @@ def clean_features(
             "__top_n": F.col("__cs.top2"),
             "__n_bg": F.greatest(F.size(toks) - 1, F.lit(0)),
             "__n_distinct": F.col("__cs.nd"),
-            "__hash": F.md5(F.col(text_col)),
+            "__hash": F.md5(F.col("text")),
         }
     )
     best_lang = F.lit("und")
@@ -95,71 +98,50 @@ def clean_features(
         F.round(dup_frac, 6).alias("dup_token_frac"),
         top_frac.alias("__top_frac"),
         dup_frac.alias("__dup_frac"),
-        *keep_cols,  # e.g. the stream's event-time column for watermarking
     )
 
 
-def gate_condition(
-    min_tokens: int = 5,
-    max_tokens: int = 5000,
-    min_stopword_ratio: float = 0.02,
-    max_top_bigram_frac: float = 0.18,
-    max_dup_token_frac: float = 0.5,
-):
+def gate_condition():
     """The quality + repetition keep-predicate over clean_features columns.
     Identical text yields identical features, so this commutes with exact
     dedup — batch applies it after the keeper window, the stream before
     the dedup state (cheaper: dropped rows never enter state)."""
     return (
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("n_tokens") <= max_tokens)
-        & (F.col("stopword_ratio") >= min_stopword_ratio)
-        & (F.col("__top_frac") <= max_top_bigram_frac)
-        & (F.col("__dup_frac") <= max_dup_token_frac)
+        (F.col("n_tokens") >= MIN_TOKENS)
+        & (F.col("n_tokens") <= MAX_TOKENS)
+        & (F.col("stopword_ratio") >= MIN_STOPWORD_RATIO)
+        & (F.col("__top_frac") <= MAX_TOP_BIGRAM_FRAC)
+        & (F.col("__dup_frac") <= MAX_DUP_TOKEN_FRAC)
     )
 
 
 OUT_COLS = ["doc_id", "lang_pred", "n_tokens", "stopword_ratio", "dup_token_frac"]
 
 
-def corpus_clean(
-    df: DataFrame,
-    text_col: str = "text",
-    min_tokens: int = 5,
-    max_tokens: int = 5000,
-    min_stopword_ratio: float = 0.02,
-    max_top_bigram_frac: float = 0.18,
-    max_dup_token_frac: float = 0.5,
-) -> DataFrame:
+def corpus_clean(df: DataFrame) -> DataFrame:
     """Survivors of the full cleaning pipeline, with their features.
 
     Keep a document iff ALL of:
       - it is the exact-dedup keeper (lowest doc_id for its md5(text));
-      - ``min_tokens <= n_tokens <= max_tokens``;
-      - rounded stopword_ratio >= ``min_stopword_ratio`` (rounded on BOTH
+      - ``MIN_TOKENS <= n_tokens <= MAX_TOKENS``;
+      - rounded stopword_ratio >= ``MIN_STOPWORD_RATIO`` (rounded on BOTH
         engines so the threshold compare cannot straddle a ulp);
       - Gopher repetition gates on the UNROUNDED fractions (matching the
         standalone repetition operator's oracle semantics).
     """
-    narrow = clean_features(df, text_col)
+    narrow = clean_features(df)
     w = Window.partitionBy("__hash").orderBy(F.asc("doc_id"))
     return (
         narrow.withColumn("__rn", F.row_number().over(w))
         .where(
             (F.col("__rn") == 1)
-            & gate_condition(
-                min_tokens,
-                max_tokens,
-                min_stopword_ratio,
-                max_top_bigram_frac,
-                max_dup_token_frac,
-            )
+            & gate_condition()
         )
         .select(*OUT_COLS)
     )
 
 
-def unigram_logprob(df: DataFrame, total_tokens: int, text_col: str = "text") -> DataFrame:
+def unigram_logprob(df: DataFrame, total_tokens: int) -> DataFrame:
     """Per-document unigram LM score: avg_neg_logp = -mean(ln p(token)),
     the CCNet-style perplexity proxy (Wenzek et al. 2020 filter corpora by
     LM perplexity; a unigram model keeps both engines exactly replayable —
@@ -174,7 +156,7 @@ def unigram_logprob(df: DataFrame, total_tokens: int, text_col: str = "text") ->
     (it is at gate scale, after the map-side combine).  ``total_tokens`` is supplied by the caller
     (one scalar agg job) so the plan is a straight tree.  Documents with
     zero tokens have no probability mass and drop out (both engines)."""
-    tok = with_tokens(df, text_col)
+    tok = with_tokens(df)
     terms = _materialize(
         tok.select("doc_id", F.explode(F.col(TOKENS_COL)).alias("term"))
     )
@@ -189,7 +171,7 @@ def unigram_logprob(df: DataFrame, total_tokens: int, text_col: str = "text") ->
     )
 
 
-def tfidf_top_terms(df: DataFrame, n_docs: int, k: int = 5) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, n_docs: int, k: int) -> DataFrame:
     """Top-``k`` TF-IDF terms per source.
 
     score(source, term) = tf(source, term) * ln(N / df(term)), where tf is
@@ -240,12 +222,7 @@ def tfidf_top_terms(df: DataFrame, n_docs: int, k: int = 5) -> DataFrame:
     )
 
 
-def stratified_sample(
-    df: DataFrame,
-    quota: int,
-    strata_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def stratified_sample(df: DataFrame, quota: int) -> DataFrame:
     """Deterministic per-stratum sample: the ``quota`` documents with the
     smallest md5(id) per stratum — the data-mixing primitive (fix the
     per-source/per-language ratio of a training mix) with a stable,
@@ -256,25 +233,19 @@ def stratified_sample(
     WindowGroupLimit (partial before the exchange, final after), so each
     map task forwards at most ``quota`` rows per stratum — the exchange
     carries O(strata x quota), not the corpus."""
-    w = Window.partitionBy(strata_col).orderBy(
-        F.md5(F.col(id_col).cast("string")), F.col(id_col)
+    w = Window.partitionBy("source").orderBy(
+        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
     )
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= quota)
-        .select(id_col, strata_col, F.col("__rn").cast("long").alias("pick"))
+        .select("doc_id", "source", F.col("__rn").cast("long").alias("pick"))
     )
 
 
-def pack_bins(
-    df: DataFrame,
-    budget: int = 512,
-    strata_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def pack_bins(df: DataFrame, budget: int) -> DataFrame:
     """Sequence-packing assignment: concatenate documents in deterministic
-    (``id_col``) order within each stratum and cut at every ``budget``
+    (doc_id) order within each stratum and cut at every ``budget``
     tokens — each document gets the bin its first token lands in and its
     offset within that bin (the boundary-splitting packing a pretraining
     tokenizer run performs; documents longer than the remainder spill
@@ -285,27 +256,22 @@ def pack_bins(
     of strata (shards); a 100 TB run packs within shards by construction
     — a single global ordering would serialize into one task and is
     deliberately not offered."""
-    toks = with_tokens(df, text_col)
+    toks = with_tokens(df)
     n = F.size(F.col(TOKENS_COL)).cast("long")
     w = (
-        Window.partitionBy(strata_col)
-        .orderBy(id_col)
+        Window.partitionBy("source")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     prefix = F.coalesce(F.sum("n_tokens").over(w), F.lit(0).cast("long"))
     return (
-        toks.select(id_col, strata_col, n.alias("n_tokens"))
+        toks.select("doc_id", "source", n.alias("n_tokens"))
         .withColumn("bin", F.floor(prefix / budget).cast("long"))
         .withColumn("offset", (prefix % budget).cast("long"))
     )
 
 
-def bigram_logprob(
-    df: DataFrame,
-    total_tokens: int,
-    lam: float = 0.7,
-    text_col: str = "text",
-) -> DataFrame:
+def bigram_logprob(df: DataFrame, total_tokens: int) -> DataFrame:
     """Interpolated bigram LM score per document:
     p(t_i | t_{i-1}) = lam * c(t_{i-1} t_i)/c(t_{i-1})
                      + (1 - lam) * c(t_i)/N,
@@ -321,7 +287,8 @@ def bigram_logprob(
     at 100 TB) decides broadcast vs shuffle from their runtime size;
     within-corpus scoring means every (prev, term) pair exists in the
     bigram table, so the joins stay inner."""
-    tok = with_tokens(df, text_col)
+    lam = 0.7
+    tok = with_tokens(df)
     pos = tok.select(
         "doc_id",
         F.col(TOKENS_COL).alias("__t"),
@@ -380,14 +347,9 @@ def bigram_logprob(
     )
 
 
-def ccnet_buckets(
-    df: DataFrame,
-    total_tokens: int,
-    by_col: str = "source",
-    n_buckets: int = 3,
-) -> DataFrame:
+def ccnet_buckets(df: DataFrame, total_tokens: int) -> DataFrame:
     """CCNet head/middle/tail split (Wenzek et al. 2020): rank documents by
-    LM perplexity WITHIN each group and cut into ``n_buckets`` equal-count
+    LM perplexity WITHIN each group and cut into three equal-count
     buckets — head = lowest perplexity (most LM-like), the slice CCNet
     keeps for pretraining.
 
@@ -400,14 +362,10 @@ def ccnet_buckets(
     bucketing map-side; the exact window is the correctness reference and
     the right tool at per-shard cardinalities."""
     scored = unigram_logprob(df, total_tokens=total_tokens)
-    scored = scored.join(df.select("doc_id", by_col), "doc_id")
-    w = Window.partitionBy(by_col).orderBy(
+    scored = scored.join(df.select("doc_id", "source"), "doc_id")
+    w = Window.partitionBy("source").orderBy(
         F.asc("avg_neg_logp"), F.asc("doc_id")
     )
     labels = F.array(F.lit("head"), F.lit("middle"), F.lit("tail"))
-    b = F.ntile(n_buckets).over(w)
-    out = scored.withColumn(
-        "bucket",
-        F.element_at(labels, b) if n_buckets == 3 else b.cast("string"),
-    )
-    return out.select("doc_id", by_col, "avg_neg_logp", "bucket")
+    out = scored.withColumn("bucket", F.element_at(labels, F.ntile(3).over(w)))
+    return out.select("doc_id", "source", "avg_neg_logp", "bucket")

@@ -54,9 +54,11 @@ def tokens_col(text: Column) -> Column:
 
 
 TOKENS_COL = "__tokens"
+# word n-gram length of the MinHash shingles and the Jaccard verify
+SHINGLE_N = 3
 
 
-def with_tokens(df: DataFrame, text_col: str = "text", out_col: str = TOKENS_COL) -> DataFrame:
+def with_tokens(df: DataFrame) -> DataFrame:
     """Materialize the token array as a bound column in its own Project.
 
     Any expression that mentions the token array inside a higher-order
@@ -68,7 +70,7 @@ def with_tokens(df: DataFrame, text_col: str = "text", out_col: str = TOKENS_COL
     this Project because the tokenizer is non-cheap and multiply
     referenced downstream (SPARK-36718); ``tests/test_round4.py`` pins the
     single-evaluation plan shape."""
-    return df.withColumn(out_col, tokens_col(F.col(text_col)))
+    return df.withColumn(TOKENS_COL, tokens_col(F.col("text")))
 
 
 def shingles_col(tokens: Column, n: int = 3) -> Column:
@@ -162,41 +164,27 @@ def minhash_signature(
     )
 
 
-def with_minhash(
-    df: DataFrame,
-    text_col: str = "text",
-    k: int = 16,
-    shingle_n: int = 3,
-    hash_mode: str = "xxhash",
-    out_col: str = "minhash",
-) -> DataFrame:
+def with_minhash(df: DataFrame, k: int = 16, hash_mode: str = "xxhash") -> DataFrame:
     if hash_mode == "md5":
         # tokenizer stays a JVM regexp (evaluated once, inside the Arrow
         # input projection); shingling + hashing move to one Arrow batch
         return df.withColumn(
-            out_col, _minhash_md5_col(k, shingle_n)(tokens_col(F.col(text_col)))
+            "minhash", _minhash_md5_col(k, SHINGLE_N)(tokens_col(F.col("text")))
         )
-    tok = with_tokens(df, text_col)
-    sh = shingles_col(F.col(TOKENS_COL), shingle_n)
-    return tok.withColumn(out_col, minhash_signature(sh, k, hash_mode)).drop(TOKENS_COL)
+    tok = with_tokens(df)
+    sh = shingles_col(F.col(TOKENS_COL), SHINGLE_N)
+    return tok.withColumn("minhash", minhash_signature(sh, k, hash_mode)).drop(TOKENS_COL)
 
 
-def lsh_band_buckets(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    sig_col: str = "minhash",
-    bands: int = 4,
-    out_band: str = "band",
-    out_key: str = "band_key",
-) -> DataFrame:
+def lsh_band_buckets(df: DataFrame, bands: int = 4) -> DataFrame:
     """Explode the signature into ``bands`` band-hash rows; equal
     (band, band_key) => LSH candidate bucket."""
-    sig = F.col(sig_col)
+    sig = F.col("minhash")
     rows_per_band = F.size(sig) / F.lit(bands)
     band_structs = F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda b: F.struct(
-            b.alias(out_band),
+            b.alias("band"),
             F.md5(
                 F.concat_ws(
                     "|",
@@ -206,27 +194,22 @@ def lsh_band_buckets(
                         rows_per_band.cast("int"),
                     ).cast("array<string>"),
                 )
-            ).alias(out_key),
+            ).alias("band_key"),
         ),
     )
-    return df.select(id_col, sig_col, F.explode(band_structs).alias("b")).select(
-        id_col, sig_col, F.col(f"b.{out_band}").alias(out_band), F.col(f"b.{out_key}").alias(out_key)
+    return df.select("doc_id", "minhash", F.explode(band_structs).alias("b")).select(
+        "doc_id", "minhash", F.col("b.band").alias("band"), F.col("b.band_key").alias("band_key")
     )
 
 
-def minhash_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    sig_col: str = "minhash",
-    bands: int = 4,
-    max_bucket: int = 50,
-) -> DataFrame:
+def minhash_candidate_pairs(df: DataFrame, bands: int = 4) -> DataFrame:
     """Distinct candidate pairs (a < b) sharing at least one LSH band.
     Buckets larger than ``max_bucket`` are dropped (boilerplate clusters)."""
-    b = lsh_band_buckets(df, id_col, sig_col, bands)
+    max_bucket = 50
+    b = lsh_band_buckets(df, bands)
     grouped = (
         b.groupBy("band", "band_key")
-        .agg(F.collect_list(id_col).alias("ids"))
+        .agg(F.collect_list("doc_id").alias("ids"))
         .where((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
     )
     ids_sorted = F.array_sort("ids")
@@ -246,15 +229,7 @@ def minhash_candidate_pairs(
     return pairs.select("p.a", "p.b").distinct()
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    threshold: float = 0.7,
-    materialize_pairs: bool = True,
-) -> DataFrame:
+def jaccard_pairs(df: DataFrame, pairs: DataFrame, threshold: float = 0.7) -> DataFrame:
     """Verify candidate pairs with EXACT n-gram Jaccard over distinct
     shingle sets (the refine step after LSH).
 
@@ -266,23 +241,22 @@ def jaccard_pairs(
     semi-join build side is the (tiny) distinct candidate id set, and
     both verify-join build sides shrink with it.
 
-    ``materialize_pairs`` persists the candidate DataFrame first: the plan
-    references it three times (id set + the a/b verify joins), and without
+    The candidate DataFrame is persisted first: the plan references it
+    three times (id set + the a/b verify joins), and without
     materialization Catalyst re-executes the whole LSH pipeline per
     reference — exactly what a 100 TB run would avoid by checkpointing
     candidates (pair count ≪ corpus, so the cache is small)."""
-    if materialize_pairs:
-        pairs = pairs.persist()
+    pairs = pairs.persist()
     cand_ids = pairs.select(
-        F.explode(F.array(F.col("a"), F.col("b"))).alias(id_col)
+        F.explode(F.array(F.col("a"), F.col("b"))).alias("doc_id")
     ).distinct()
-    scoped = df.select(id_col, text_col).join(cand_ids, id_col, "left_semi")
-    sh = with_tokens(scoped, text_col).select(
-        F.col(id_col),
-        shingles_col(F.col(TOKENS_COL), shingle_n).alias("sh"),
+    scoped = df.select("doc_id", "text").join(cand_ids, "doc_id", "left_semi")
+    sh = with_tokens(scoped).select(
+        F.col("doc_id"),
+        shingles_col(F.col(TOKENS_COL), SHINGLE_N).alias("sh"),
     )
-    a = sh.withColumnsRenamed({id_col: "a", "sh": "sh_a"})
-    bt = sh.withColumnsRenamed({id_col: "b", "sh": "sh_b"})
+    a = sh.withColumnsRenamed({"doc_id": "a", "sh": "sh_a"})
+    bt = sh.withColumnsRenamed({"doc_id": "b", "sh": "sh_b"})
     joined = pairs.join(a, "a").join(bt, "b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
@@ -296,12 +270,7 @@ def jaccard_pairs(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    max_iters: int = 25,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     """Connected components over an undirected pair list -> (id, label)
     where label = min node id in the component.
 
@@ -320,7 +289,7 @@ def connected_components(
     min.  At fixpoint every edge is (node, component-min)."""
     from pyspark.sql import Observation
 
-    a, b = F.col(a_col), F.col(b_col)
+    a, b = F.col("a"), F.col("b")
     nodes = (
         pairs.select(a.alias("id"))
         .unionByName(pairs.select(b.alias("id")))
@@ -404,12 +373,9 @@ def connected_components(
 
 def minhash_dedup(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-    threshold: float = 0.7,
+    k: int,
+    bands: int,
+    threshold: float,
     hash_mode: str = "xxhash",
     clustering: str = "onestep",
 ) -> DataFrame:
@@ -420,21 +386,21 @@ def minhash_dedup(
     duplicate groups, one shuffle.
     clustering='cc': true connected components (min-label propagation) —
     transitive duplicate chains collapse to one representative."""
-    sigs = with_minhash(df, text_col, k, shingle_n, hash_mode)
-    cands = minhash_candidate_pairs(sigs, id_col, bands=bands)
-    dups = jaccard_pairs(df, cands, id_col, text_col, shingle_n, threshold)
+    sigs = with_minhash(df, k, hash_mode=hash_mode)
+    cands = minhash_candidate_pairs(sigs, bands=bands)
+    dups = jaccard_pairs(df, cands, threshold=threshold)
     if clustering == "cc":
         labels = connected_components(dups)
-        rep = labels.withColumnsRenamed({"id": id_col, "label": "rep"})
+        rep = labels.withColumnsRenamed({"id": "doc_id", "label": "rep"})
     elif clustering == "onestep":
         # representative = min id over the pair graph's direct neighborhood
-        rep = dups.select(F.col("b").alias(id_col), F.col("a").alias("rep")).groupBy(
-            id_col
+        rep = dups.select(F.col("b").alias("doc_id"), F.col("a").alias("rep")).groupBy(
+            "doc_id"
         ).agg(F.min("rep").alias("rep"))
     else:
         raise ValueError(f"unknown clustering: {clustering!r}")
-    return df.join(rep, id_col, "left").withColumn(
-        "rep", F.coalesce("rep", F.col(id_col))
+    return df.join(rep, "doc_id", "left").withColumn(
+        "rep", F.coalesce("rep", F.col("doc_id"))
     )
 
 
@@ -448,18 +414,13 @@ def _token_hash(t: Column, mode: str) -> Column:
     return F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
 
 
-def with_simhash(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "simhash",
-    hash_mode: str = "xxhash",
-) -> DataFrame:
+def with_simhash(df: DataFrame, hash_mode: str = "xxhash") -> DataFrame:
     """SimHash (64-bit xxhash mode / 60-bit portable md5 mode): token hashes
     JVM-side, bit tally in a vectorized Arrow UDF (numpy popcount-style
     accumulation).  Documents with NO tokens get a NULL simhash — otherwise
     every empty/boilerplate page hashes to 0 and forms one quadratic
     near-dup bucket."""
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
     hashes = F.transform(toks, lambda t: _token_hash(t, hash_mode))
 
     # Peak-memory bound for the bit tally: tokens are processed in
@@ -519,17 +480,12 @@ def with_simhash(
             yield pd.Series(out)
 
     return df.withColumn(
-        out_col, F.when(F.size(toks) > 0, tally(hashes))
+        "simhash", F.when(F.size(toks) > 0, tally(hashes))
     )
 
 
 def simhash_near_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    sim_col: str = "simhash",
-    max_hamming: int = 3,
-    n_bits: int = 64,
-    max_bucket: int = 200,
+    df: DataFrame, max_hamming: int, n_bits: int, max_bucket: int
 ) -> DataFrame:
     """Near-dup pairs by Hamming distance <= k using the pigeonhole trick:
     split ``n_bits`` into (k+1) chunks; near pairs must share one exact
@@ -546,7 +502,7 @@ def simhash_near_pairs(
         *[
             F.struct(
                 F.lit(c).alias("chunk_id"),
-                F.shiftrightunsigned(F.col(sim_col), c * width)
+                F.shiftrightunsigned(F.col("simhash"), c * width)
                 .bitwiseAND(F.lit((1 << width) - 1))
                 .alias("chunk_val"),
             )
@@ -554,15 +510,15 @@ def simhash_near_pairs(
         ]
     )
     e = (
-        df.where(F.col(sim_col).isNotNull())
-        .select(id_col, sim_col, F.explode(chunk_structs).alias("c"))
-        .select(id_col, sim_col, "c.chunk_id", "c.chunk_val")
+        df.where(F.col("simhash").isNotNull())
+        .select("doc_id", "simhash", F.explode(chunk_structs).alias("c"))
+        .select("doc_id", "simhash", "c.chunk_id", "c.chunk_val")
     )
     grouped = (
         e.groupBy("chunk_id", "chunk_val")
         .agg(
             F.collect_list(
-                F.struct(F.col(id_col).alias("id"), F.col(sim_col).alias("sim"))
+                F.struct(F.col("doc_id").alias("id"), F.col("simhash").alias("sim"))
             ).alias("ids")
         )
         .where((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
@@ -621,12 +577,7 @@ def _distinct_spans_col(window: int) -> "F.udf":
 
 
 def substring_dup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 8,
-    max_bucket: int = 50,
-    key_mode: str = "hash",
+    df: DataFrame, max_bucket: int, key_mode: str = "hash"
 ) -> DataFrame:
     """EXACT substring dedup (the Lee et al. 2021 "Deduplicating Training
     Data" shape, public): document pairs sharing at least one exact
@@ -653,10 +604,11 @@ def substring_dup_pairs(
     Both modes return identical pairs (the verify filter makes "hash"
     exact), so the gate runs the production path against the span-join
     oracle."""
+    window = 8
     w = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            _distinct_spans_col(window)(tokens_col(F.col(text_col)))
+            _distinct_spans_col(window)(tokens_col(F.col("text")))
         ).alias("win"),
     )
     if key_mode == "hash":
@@ -681,8 +633,8 @@ def substring_dup_pairs(
         .select("wk")
     )
     wb = w.join(sizes, "wk")
-    a = wb.select("wk", F.col("win").alias("win_a"), F.col(id_col).alias("a"))
-    b = wb.select("wk", F.col("win").alias("win_b"), F.col(id_col).alias("b"))
+    a = wb.select("wk", F.col("win").alias("win_a"), F.col("doc_id").alias("a"))
+    b = wb.select("wk", F.col("win").alias("win_b"), F.col("doc_id").alias("b"))
     pairs = a.join(b, "wk").where(F.col("a") < F.col("b"))
     if key_mode == "hash":
         # span-equality verify, written as <=/>= ON PURPOSE: a literal
@@ -700,13 +652,7 @@ def substring_dup_pairs(
     )
 
 
-def contamination_flags(
-    train: DataFrame,
-    eval_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 8,
-) -> DataFrame:
+def contamination_flags(train: DataFrame, eval_df: DataFrame) -> DataFrame:
     """Benchmark decontamination (the Lee et al. / GPT-3-appendix 'dirty
     document' check, public): a training document is contaminated when it
     shares at least one exact ``window``-token span with ANY evaluation
@@ -717,17 +663,18 @@ def contamination_flags(
     10^12) — its distinct window set BROADCASTS, so the corpus-sized
     training side is one map-side explode + broadcast semi-join + groupBy:
     no corpus-vs-corpus shuffle anywhere."""
+    window = 8
 
     def _windows(df: DataFrame) -> DataFrame:
         return df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
-                _distinct_spans_col(window)(tokens_col(F.col(text_col)))
+                _distinct_spans_col(window)(tokens_col(F.col("text")))
             ).alias("win"),
         )
 
     ev = _windows(eval_df).select("win").distinct()
     hits = _windows(train).join(F.broadcast(ev), "win", "left_semi")
-    return hits.groupBy(id_col).agg(
+    return hits.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_shared")
     )

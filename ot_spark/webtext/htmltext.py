@@ -95,13 +95,6 @@ def extract_links(html: Column) -> Column:
     return F.regexp_extract_all(s, F.lit(HREF_RE), F.lit(1))
 
 
-def with_links(
-    df: DataFrame, html_col: str = "html", out_col: str = "links"
-) -> DataFrame:
-    """Append the raw outlink array extracted from ``html_col``."""
-    return df.withColumn(out_col, extract_links(F.col(html_col)))
-
-
 # Full anchor elements: group 1 = href (same stop-at-fragment rule as
 # HREF_RE), group 2 = the inner text. Lazy body + (?is) — Java/RE2
 # portable, no lookaround.
@@ -125,9 +118,7 @@ def extract_anchors(html: Column) -> Column:
     )
 
 
-def anchor_term_counts(
-    df: DataFrame, html_col: str = "html", k: int = 3
-) -> DataFrame:
+def anchor_term_counts(df: DataFrame, k: int) -> DataFrame:
     """Inbound anchor-text term ranking per TARGET host — the classic
     web-graph relevance signal (what other pages call this host).
 
@@ -144,7 +135,7 @@ def anchor_term_counts(
 
     from ot_spark.webtext.urltools import host_col
 
-    a = df.select(F.explode(extract_anchors(F.col(html_col))).alias("a"))
+    a = df.select(F.explode(extract_anchors(F.col("html"))).alias("a"))
     a = a.select(F.col("a.href").alias("href"), F.col("a.text").alias("text"))
     a = a.where(F.lower(F.col("href")).startswith("http"))
     txt = F.lower(F.col("text"))

@@ -29,17 +29,12 @@ from pyspark.sql import functions as F
 from .dedup import TOKENS_COL, _materialize, with_tokens
 
 
-def inverted_index(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    posting_cap: int = 10,
-) -> DataFrame:
+def inverted_index(docs: DataFrame, posting_cap: int) -> DataFrame:
     """(term, df, tf, postings): document frequency, total term
     frequency, and the first ``posting_cap`` doc ids ascending."""
-    t = with_tokens(docs.select(id_col, text_col), text_col)
+    t = with_tokens(docs.select("doc_id", "text"))
     per_doc = (
-        t.select(F.col(id_col).alias("doc"), F.explode(TOKENS_COL).alias("term"))
+        t.select(F.col("doc_id").alias("doc"), F.explode(TOKENS_COL).alias("term"))
         .groupBy("term", "doc")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -67,12 +62,7 @@ def _varint_bytes(g) -> "F.Column":
     return b.otherwise(9)
 
 
-def delta_postings(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    posting_cap: int = 10,
-) -> DataFrame:
+def delta_postings(docs: DataFrame, posting_cap: int) -> DataFrame:
     """Delta-gap + varint compression stats for the capped posting lists
     — the standard index-compression layer (Zobel & Moffat 2006,
     public): sorted doc ids become first-id-then-gaps, and small gaps
@@ -88,7 +78,7 @@ def delta_postings(
     element-for-element, its varint-encoded size, and the uncompressed
     8-bytes-per-id size of the same capped list.
     """
-    idx = inverted_index(docs, id_col, text_col, posting_cap)
+    idx = inverted_index(docs, posting_cap)
     p = F.col("postings")
     gaps = F.transform(
         p,
@@ -110,12 +100,7 @@ def delta_postings(
     )
 
 
-def pmi_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_pair_count: int = 2,
-) -> DataFrame:
+def pmi_pairs(docs: DataFrame, min_pair_count: int) -> DataFrame:
     """Pointwise mutual information over within-document term
     co-occurrence (Church & Hanks 1990, public) — the corpus-linguistics
     collocation panel: PMI(x,y) = ln(N * df_xy / (df_x * df_y)) over
@@ -134,7 +119,7 @@ def pmi_pairs(
     PMI is the one float in the output, rounded to 6 dp for the
     cross-engine gate (counts are BIGINTs).
     """
-    t = with_tokens(docs.select(id_col, text_col), text_col)
+    t = with_tokens(docs.select("doc_id", "text"))
     # three consumers (pair legs a and b, the df table) — tokenize once.
     # repartition("doc") BEFORE the materialization: localCheckpoint
     # preserves outputPartitioning, so the pair self-join below reads both
@@ -143,7 +128,7 @@ def pmi_pairs(
     # stream — the substring_dup shared-shuffle pattern, guide §2.4).
     terms = _materialize(
         t.select(
-            F.col(id_col).alias("doc"),
+            F.col("doc_id").alias("doc"),
             F.explode(F.array_distinct(F.col(TOKENS_COL))).alias("term"),
         ).repartition("doc")
     )

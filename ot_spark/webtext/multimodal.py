@@ -105,17 +105,15 @@ AUD_FEATURE_SCHEMA = StructType(
 )
 
 
-def with_audio_features(
-    df: DataFrame, payload_col: str = "payload", out_col: str = "aud_features"
-) -> DataFrame:
+def with_audio_features(df: DataFrame) -> DataFrame:
     """mapInPandas batch decode: duration / RMS / zero-crossing rate per
     clip — the shapes a real librosa/soundfile stage would produce."""
-    out_schema = StructType(df.schema.fields + [StructField(out_col, AUD_FEATURE_SCHEMA)])
+    out_schema = StructType(df.schema.fields + [StructField("aud_features", AUD_FEATURE_SCHEMA)])
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = []
-            for buf in pdf[payload_col]:
+            for buf in pdf["payload"]:
                 if buf is None:
                     feats.append(None)
                     continue
@@ -136,7 +134,7 @@ def with_audio_features(
                     }
                 )
             pdf = pdf.copy()
-            pdf[out_col] = feats
+            pdf["aud_features"] = feats
             yield pdf
 
     return df.mapInPandas(decode, out_schema)
@@ -151,16 +149,14 @@ def _decode_image(buf: bytes) -> tuple[int, int, np.ndarray]:
     raise NotImplementedError("real image codecs unavailable in this environment")
 
 
-def with_image_features(
-    df: DataFrame, payload_col: str = "payload", out_col: str = "img_features"
-) -> DataFrame:
+def with_image_features(df: DataFrame) -> DataFrame:
     """mapInPandas batch decode: one numpy pass per Arrow batch."""
-    out_schema = StructType(df.schema.fields + [StructField(out_col, IMG_FEATURE_SCHEMA)])
+    out_schema = StructType(df.schema.fields + [StructField("img_features", IMG_FEATURE_SCHEMA)])
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = []
-            for buf in pdf[payload_col]:
+            for buf in pdf["payload"]:
                 if buf is None:
                     feats.append(None)
                     continue
@@ -180,24 +176,22 @@ def with_image_features(
                     }
                 )
             pdf = pdf.copy()
-            pdf[out_col] = feats
+            pdf["img_features"] = feats
             yield pdf
 
     return df.mapInPandas(decode, out_schema)
 
 
-def sample_video_frames(
-    df: DataFrame, payload_col: str = "payload", every_k: int = 4, out_col: str = "frame_means"
-) -> DataFrame:
+def sample_video_frames(df: DataFrame, every_k: int = 4) -> DataFrame:
     """Frame sampling: every k-th 16-byte frame's mean as a double array."""
     out_schema = StructType(
-        df.schema.fields + [StructField(out_col, ArrayType(DoubleType()))]
+        df.schema.fields + [StructField("frame_means", ArrayType(DoubleType()))]
     )
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             res = []
-            for buf in pdf[payload_col]:
+            for buf in pdf["payload"]:
                 b = bytes(buf) if buf is not None else b""
                 if b[:8] != FAKE_VID_MAGIC:
                     res.append(None)
@@ -208,7 +202,7 @@ def sample_video_frames(
                 sampled = frames[::every_k]
                 res.append(sampled.mean(axis=1).round(4).tolist())
             pdf = pdf.copy()
-            pdf[out_col] = res
+            pdf["frame_means"] = res
             yield pdf
 
     return df.mapInPandas(work, out_schema)

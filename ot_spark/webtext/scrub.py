@@ -60,9 +60,9 @@ def pii_counts(text: Column) -> dict[str, Column]:
     }
 
 
-def with_pii_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_pii_scrub(df: DataFrame) -> DataFrame:
     """Adds ``n_email``/``n_ipv4``/``n_phone`` counts and ``text_scrubbed``."""
-    text = F.col(text_col)
+    text = F.col("text")
     return df.withColumns(
         {**pii_counts(text), "text_scrubbed": scrub_text(text)}
     )

@@ -23,6 +23,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# decimals every step of the oracle-portable trainers and scorers rounds
+# to; the DuckDB oracles replay the same rounding
+ROUND_P = 9
+# RNG seed of the production trainers' samples and of ``hyperplanes``
+SEED = 42
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -122,22 +127,16 @@ def cosine_cols(a: str, b: str, dim: int) -> Column:
     )
 
 
-def brute_force_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(df: DataFrame, query_vec: list[float], k: int = 10) -> DataFrame:
     """Exact cosine top-k against a literal query vector."""
     scored = df.select(
-        id_col, F.round(cosine_lit(vec_col, query_vec), 6).alias("score")
+        "vec_id", F.round(cosine_lit("embedding", query_vec), 6).alias("score")
     )
-    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
+    return scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(k)
 
 
-def hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> np.ndarray:
-    rng = np.random.RandomState(seed)
+def hyperplanes(dim: int, n_planes: int = 16) -> np.ndarray:
+    rng = np.random.RandomState(SEED)
     return rng.randn(n_planes, dim).astype(np.float64)
 
 
@@ -154,13 +153,8 @@ def lsh_signature_col(vec: str, planes: np.ndarray) -> Column:
     return sig
 
 
-def with_lsh_bucket(
-    df: DataFrame,
-    planes: np.ndarray,
-    vec_col: str = "embedding",
-    out_col: str = "lsh_bucket",
-) -> DataFrame:
-    return df.withColumn(out_col, lsh_signature_col(vec_col, planes))
+def with_lsh_bucket(df: DataFrame, planes: np.ndarray) -> DataFrame:
+    return df.withColumn("lsh_bucket", lsh_signature_col("embedding", planes))
 
 
 def _sig_of(query_vec: list[float], planes: np.ndarray) -> int:
@@ -181,16 +175,13 @@ def lsh_topk(
     df: DataFrame,
     query_vec: list[float],
     planes: np.ndarray,
-    k: int = 10,
+    k: int,
     multiprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_col: str = "lsh_bucket",
 ) -> DataFrame:
     """Approximate top-k: score only rows in the query's bucket and its
     Hamming<=multiprobe neighbor buckets (classic multiprobe LSH)."""
-    if bucket_col not in df.columns:
-        df = with_lsh_bucket(df, planes, vec_col, bucket_col)
+    if "lsh_bucket" not in df.columns:
+        df = with_lsh_bucket(df, planes)
     qsig = _sig_of(query_vec, planes)
     probes = {qsig}
     if multiprobe >= 1:
@@ -199,16 +190,14 @@ def lsh_topk(
         for i in range(len(planes)):
             for j in range(i + 1, len(planes)):
                 probes.add(qsig ^ (1 << i) ^ (1 << j))
-    cand = df.where(F.col(bucket_col).isin([int(p) for p in probes]))
-    return brute_force_topk(cand, query_vec, k, id_col, vec_col)
+    cand = df.where(F.col("lsh_bucket").isin([int(p) for p in probes]))
+    return brute_force_topk(cand, query_vec, k)
 
 
 def embedding_near_pairs(
     df: DataFrame,
     planes: np.ndarray,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_bucket: int = 200,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the ANN-bucketed dedup shape:
@@ -219,16 +208,16 @@ def embedding_near_pairs(
     Same scale logic as MinHash-LSH: the only shuffle is groupBy(bucket);
     recall is tuned by n_planes (fewer planes = bigger buckets = higher
     recall, more verify work)."""
-    b = with_lsh_bucket(df, planes, vec_col).select(
-        id_col, "lsh_bucket", F.col(vec_col).cast("array<double>").alias("__v")
+    b = with_lsh_bucket(df, planes).select(
+        "vec_id", "lsh_bucket", F.col("embedding").cast("array<double>").alias("__v")
     )
     sizes = b.groupBy("lsh_bucket").agg(F.count(F.lit(1)).alias("__n"))
     b = b.join(F.broadcast(sizes.where(F.col("__n") <= max_bucket)), "lsh_bucket")
     a = b.select(
-        F.col("lsh_bucket"), F.col(id_col).alias("a"), F.col("__v").alias("va")
+        F.col("lsh_bucket"), F.col("vec_id").alias("a"), F.col("__v").alias("va")
     )
     bb = b.select(
-        F.col("lsh_bucket"), F.col(id_col).alias("b"), F.col("__v").alias("vb")
+        F.col("lsh_bucket"), F.col("vec_id").alias("b"), F.col("__v").alias("vb")
     )
     pairs = a.join(bb, "lsh_bucket").where(F.col("a") < F.col("b"))
     cos = cosine_cols("va", "vb", int(planes.shape[1]))
@@ -277,18 +266,16 @@ def train_ivf_centroids(
     n_centroids: int = 16,
     sample: int = 2000,
     iters: int = 5,
-    vec_col: str = "embedding",
-    seed: int = 42,
     sample_X: np.ndarray | None = None,
 ) -> np.ndarray:
     """Deterministic mini-Lloyd on a driver-side sample (dimension table
     scale — the sample, not the corpus, comes to the driver).
-    ``sample_X``: a precollected ``_xxhash_sample(df, sample, vec_col,
-    seed)`` matrix — MUST be exactly that, byte-for-byte, or results
+    ``sample_X``: a precollected ``_xxhash_sample(df, sample,
+    "embedding", SEED)`` matrix — MUST be exactly that, byte-for-byte, or results
     drift; the default path collects it here."""
-    X = _training_sample(df, sample, vec_col, seed, sample_X)
+    X = _training_sample(df, sample, "embedding", SEED, sample_X)
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(SEED)
     cent = X[rng.choice(len(X), n_centroids, replace=False)]
     for _ in range(iters):
         assign = np.argmax(X @ cent.T, axis=1)
@@ -301,13 +288,7 @@ def train_ivf_centroids(
 
 
 def train_ivf_centroids_portable(
-    df: DataFrame,
-    n_centroids: int = 8,
-    sample: int = 500,
-    iters: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_p: int = 9,
+    df: DataFrame, n_centroids: int, sample: int, iters: int
 ) -> np.ndarray:
     """Mini-Lloyd whose every step is reproducible in ANSI SQL (the
     ``ivf_cells`` oracle re-derives it in DuckDB with unrolled iterations):
@@ -316,11 +297,11 @@ def train_ivf_centroids_portable(
       engines hash the identical decimal string;
     - init     = the first ``n_centroids`` sample rows in that md5 order
       (no RNG — numpy's MT19937 is not SQL-expressible);
-    - each update rounds the member mean to ``round_p`` decimals, then the
+    - each update rounds the member mean to ``ROUND_P`` decimals, then the
       normalized centroid again — numpy's pairwise summation and SQL AVG
       disagree only at ~1e-14, so rounding at 1e-9 makes the engines
       bit-identical while leaving clustering quality untouched;
-    - assignments argmax over dots rounded to ``round_p`` (ties -> lowest
+    - assignments argmax over dots rounded to ``ROUND_P`` (ties -> lowest
       centroid index, = SQL ``ORDER BY dot DESC, cid``).
 
     The un-suffixed ``train_ivf_centroids`` (xxhash sample + seeded RNG
@@ -335,8 +316,8 @@ def train_ivf_centroids_portable(
         return np.copysign(np.floor(np.abs(x) * s + 0.5), x) / s
 
     rows = (
-        df.select(id_col, vec_col)
-        .withColumn("__ord", F.md5(F.col(id_col).cast("string")))
+        df.select("vec_id", "embedding")
+        .withColumn("__ord", F.md5(F.col("vec_id").cast("string")))
         .orderBy("__ord")
         .limit(sample)
         .collect()
@@ -346,17 +327,17 @@ def train_ivf_centroids_portable(
     rows = sorted(rows, key=lambda r: hashlib.md5(str(r[0]).encode()).hexdigest())
     X = np.asarray([r[1] for r in rows], dtype=np.float64)
     X = _round_half_away(
-        X / np.maximum(np.sqrt((X * X).sum(axis=1, keepdims=True)), 1e-12), round_p
+        X / np.maximum(np.sqrt((X * X).sum(axis=1, keepdims=True)), 1e-12), ROUND_P
     )
     cent = X[:n_centroids].copy()
     for _ in range(iters):
-        assign = np.argmax(_round_half_away(X @ cent.T, round_p), axis=1)
+        assign = np.argmax(_round_half_away(X @ cent.T, ROUND_P), axis=1)
         for c in range(n_centroids):
             members = X[assign == c]
             if len(members):
-                mv = _round_half_away(members.mean(axis=0), round_p)
+                mv = _round_half_away(members.mean(axis=0), ROUND_P)
                 cent[c] = _round_half_away(
-                    mv / max(np.sqrt((mv * mv).sum()), 1e-12), round_p
+                    mv / max(np.sqrt((mv * mv).sum()), 1e-12), ROUND_P
                 )
     return cent
 
@@ -364,8 +345,6 @@ def train_ivf_centroids_portable(
 def with_ivf_cell(
     df: DataFrame,
     centroids: np.ndarray,
-    vec_col: str = "embedding",
-    out_col: str = "ivf_cell",
     round_p: int | None = None,
 ) -> DataFrame:
     """Assign nearest centroid via JVM dot-product argmax (greatest + CASE —
@@ -373,7 +352,7 @@ def with_ivf_cell(
     dot before the argmax — the oracle-portable mode (see
     ``train_ivf_centroids_portable``)."""
     dots = [
-        _dot_lit(vec_col, c.tolist() if hasattr(c, "tolist") else c).alias(f"__d{i}")
+        _dot_lit("embedding", c.tolist() if hasattr(c, "tolist") else c).alias(f"__d{i}")
         for i, c in enumerate(centroids)
     ]
     if round_p is not None:
@@ -386,7 +365,7 @@ def with_ivf_cell(
     # the same first-wins `>` comparison, so results are identical.
     arr = F.array(*[F.col(f"__d{i}") for i in range(len(centroids))])
     best = (F.array_position(arr, F.array_max(arr)) - 1).cast("int")
-    return tmp.withColumn(out_col, best).drop(*[f"__d{i}" for i in range(len(centroids))])
+    return tmp.withColumn("ivf_cell", best).drop(*[f"__d{i}" for i in range(len(centroids))])
 
 
 # ------------------------------------------------------ product quantization
@@ -407,20 +386,13 @@ def _round_half_away_np(x: np.ndarray, p: int) -> np.ndarray:
 
 
 def train_pq_codebooks_portable(
-    df: DataFrame,
-    m: int = 4,
-    k: int = 8,
-    sample: int = 500,
-    iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_p: int = 9,
+    df: DataFrame, m: int, k: int, sample: int, iters: int
 ) -> np.ndarray:
     """Product-quantization codebooks (Jegou et al. 2011, "Product
     Quantization for Nearest Neighbor Search" — public), trained with the
     same oracle-portable discipline as ``train_ivf_centroids_portable``:
     md5-ordered sample, first-``k`` init per subspace, L2 mini-Lloyd with
-    every assignment distance and every mean rounded to ``round_p`` so
+    every assignment distance and every mean rounded to ``ROUND_P`` so
     DuckDB replays the training bit-for-bit.  Returns (m, k, d/m).
 
     PQ is THE memory-scale path for ANN at 10^12 vectors: 64 float32 dims
@@ -429,8 +401,8 @@ def train_pq_codebooks_portable(
     import hashlib
 
     rows = (
-        df.select(id_col, vec_col)
-        .withColumn("__ord", F.md5(F.col(id_col).cast("string")))
+        df.select("vec_id", "embedding")
+        .withColumn("__ord", F.md5(F.col("vec_id").cast("string")))
         .orderBy("__ord")
         .limit(sample)
         .collect()
@@ -448,23 +420,18 @@ def train_pq_codebooks_portable(
             # sequential-order fold per row, rounded — matches _l2sq and
             # the oracle's list_reduce exactly
             d2 = _round_half_away_np(
-                ((Xs[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2), round_p
+                ((Xs[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2), ROUND_P
             )
             assign = np.argmin(d2, axis=1)  # ties -> lowest code, = SQL
             for c in range(k):
                 members = Xs[assign == c]
                 if len(members):
-                    cent[c] = _round_half_away_np(members.mean(axis=0), round_p)
+                    cent[c] = _round_half_away_np(members.mean(axis=0), ROUND_P)
         books[s] = cent
     return books
 
 
-def with_pq_codes(
-    df: DataFrame,
-    books: np.ndarray,
-    vec_col: str = "embedding",
-    round_p: int = 9,
-) -> DataFrame:
+def with_pq_codes(df: DataFrame, books: np.ndarray) -> DataFrame:
     """Encode every vector as ``m`` uint8 codes: per subspace, argmin of
     the rounded squared L2 to the k codebook entries — pure JVM Column
     algebra (slice + zip_with fold + when-chain), no UDF.  Ties -> lowest
@@ -476,8 +443,8 @@ def with_pq_codes(
         for c in range(k):
             dist_cols.append(
                 F.round(
-                    _l2sq_lit(vec_col, books[s, c].tolist(), offset=s * sub),
-                    round_p,
+                    _l2sq_lit("embedding", books[s, c].tolist(), offset=s * sub),
+                    ROUND_P,
                 ).alias(f"__p{s}_{c}")
             )
     out = out.select("*", *dist_cols)
@@ -550,12 +517,9 @@ def _sq_l2_small_sub(Xs: np.ndarray, cent: np.ndarray) -> np.ndarray:
 
 def train_pq_codebooks(
     df: DataFrame,
-    m: int = 16,
-    k: int = 256,
-    sample: int = 4096,
-    iters: int = 10,
-    vec_col: str = "embedding",
-    seed: int = 42,
+    m: int,
+    k: int,
+    sample: int,
     sample_X: np.ndarray | None = None,
 ) -> np.ndarray:
     """PRODUCTION PQ trainer (vs the oracle-portable m=4/k=8 twin above):
@@ -566,12 +530,13 @@ def train_pq_codebooks(
     embeddings — m=8 was measured at 0.67 there (no cluster structure to
     exploit), m=16 at 0.825; real corpora with cluster structure do
     better at the same m.  Returns (m, k', d/m) with k' = min(k, n)."""
-    X = _training_sample(df, sample, vec_col, seed, sample_X)
+    iters = 10
+    X = _training_sample(df, sample, "embedding", SEED, sample_X)
     n, d = X.shape
     assert d % m == 0, f"dim {d} not divisible by m={m}"
     k = min(k, n)
     sub = d // m
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(SEED)
     books = np.empty((m, k, sub), dtype=np.float64)
     for s in range(m):
         Xs = X[:, s * sub:(s + 1) * sub]
@@ -621,9 +586,7 @@ def build_ivfpq_index(
     df: DataFrame,
     centroids: np.ndarray,
     books: np.ndarray,
-    replicas: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    replicas: int,
 ) -> DataFrame:
     """Production IVF+PQ posting lists: one FUSED Arrow UDF computes the
     top-``replicas`` nearest coarse cells AND the packed PQ code per
@@ -672,9 +635,9 @@ def build_ivfpq_index(
         })
 
     enc = enc.asNondeterministic()  # stop pruning from cloning the UDF
-    tmp = df.withColumn("__ix", enc(F.col(vec_col).cast("array<double>")))
+    tmp = df.withColumn("__ix", enc(F.col("embedding").cast("array<double>")))
     return tmp.select(
-        id_col,
+        "vec_id",
         F.explode(F.col("__ix.cells")).alias("ivf_cell"),
         F.col("__ix.pq_code").alias("pq_code"),
     )
@@ -685,12 +648,10 @@ def ivfpq_search_packed(
     query_vec: list[float],
     centroids: np.ndarray,
     books: np.ndarray,
-    k_out: int = 10,
-    nprobe: int = 8,
-    refine: int = 50,
+    k_out: int,
+    nprobe: int,
+    refine: int,
     vectors_df: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Production IVF+PQ search (FAISS IVFPQ + refine shape):
 
@@ -714,29 +675,24 @@ def ivfpq_search_packed(
     adc = _adc_dist_udf(query_vec, books)
     cand = (
         index_df.where(F.col("ivf_cell").isin([int(c) for c in probe]))
-        .select(id_col, adc(F.col("pq_code")).alias("__adc"))
-        .groupBy(id_col)
+        .select("vec_id", adc(F.col("pq_code")).alias("__adc"))
+        .groupBy("vec_id")
         .agg(F.min("__adc").alias("approx_dist"))
-        .orderBy(F.asc("approx_dist"), F.asc(id_col))
+        .orderBy(F.asc("approx_dist"), F.asc("vec_id"))
         .limit(refine)
     )
     if vectors_df is None:
         return cand.limit(k_out)
     exact = (
-        vectors_df.select(id_col, F.col(vec_col).cast("array<double>").alias("__v"))
-        .join(cand.select(id_col), id_col, "inner")
-        .select(id_col, _l2sq_lit("__v", q.tolist()).alias("dist"))
+        vectors_df.select("vec_id", F.col("embedding").cast("array<double>").alias("__v"))
+        .join(cand.select("vec_id"), "vec_id", "inner")
+        .select("vec_id", _l2sq_lit("__v", q.tolist()).alias("dist"))
     )
-    return exact.orderBy(F.asc("dist"), F.asc(id_col)).limit(k_out)
+    return exact.orderBy(F.asc("dist"), F.asc("vec_id")).limit(k_out)
 
 
 def pq_adc_topk(
-    codes: DataFrame,
-    query_vec: list[float],
-    books: np.ndarray,
-    k_out: int = 10,
-    id_col: str = "vec_id",
-    round_p: int = 9,
+    codes: DataFrame, query_vec: list[float], books: np.ndarray, k_out: int
 ) -> DataFrame:
     """Asymmetric-distance top-k: the query's per-subspace distance table
     (m x k doubles, computed on the driver with the SAME rounded fold) is
@@ -752,7 +708,7 @@ def pq_adc_topk(
         table = [
             float(_round_half_away_np(
                 np.array(sum((qs[j] - books[s, c, j]) ** 2 for j in range(sub))),
-                round_p,
+                ROUND_P,
             ))
             for c in range(k)
         ]
@@ -761,6 +717,6 @@ def pq_adc_topk(
             expr = F.when(F.col(f"code{s}") == c, F.lit(table[c])).otherwise(expr)
         total = total + expr
     scored = codes.select(
-        id_col, F.round(total, round_p).alias("approx_dist")
+        "vec_id", F.round(total, ROUND_P).alias("approx_dist")
     )
-    return scored.orderBy(F.asc("approx_dist"), F.asc(id_col)).limit(k_out)
+    return scored.orderBy(F.asc("approx_dist"), F.asc("vec_id")).limit(k_out)

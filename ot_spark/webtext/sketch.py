@@ -55,31 +55,28 @@ def hashval_sql(hex_col: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def rho_sql(v_col: str, width: int = HASH_BITS) -> str:
+def rho_sql(v_col: str) -> str:
     """Position of the first set bit (leading zeros + 1) of ``v_col``
-    within ``width`` bits, as a pure integer CASE chain — no log2, so no
-    cross-engine float rounding risk.  v = 0 -> width + 1 (the HLL
+    within ``HASH_BITS`` bits, as a pure integer CASE chain — no log2, so
+    no cross-engine float rounding risk.  v = 0 -> HASH_BITS + 1 (the HLL
     convention for an all-zero suffix)."""
     whens = "".join(
-        f" WHEN {v_col} >= {2 ** (width - r)} THEN {r}"
-        for r in range(1, width + 1)
+        f" WHEN {v_col} >= {2 ** (HASH_BITS - r)} THEN {r}"
+        for r in range(1, HASH_BITS + 1)
     )
-    return f"(CASE{whens} ELSE {width + 1} END)"
+    return f"(CASE{whens} ELSE {HASH_BITS + 1} END)"
 
 
-def with_hll_register(
-    df: DataFrame, item_col: str, bucket_out: str = "bucket",
-    rho_out: str = "rho",
-) -> DataFrame:
+def with_hll_register(df: DataFrame, item_col: str) -> DataFrame:
     """Append (bucket, rho) for the md5 of ``item_col``.  The hex digest
     and the 32-bit prefix are materialized as bound columns in separate
     selects — the rho CASE references the prefix 32 times, and Catalyst
     re-evaluates inlined lambda/expr per reference otherwise."""
     d = df.withColumn("__hll_h", F.expr(f"md5({item_col})"))
     d = d.withColumn("__hll_v", F.expr(hashval_sql("__hll_h"))).withColumn(
-        bucket_out, F.expr(bucket_sql("__hll_h"))
+        "bucket", F.expr(bucket_sql("__hll_h"))
     )
-    return d.withColumn(rho_out, F.expr(rho_sql("__hll_v"))).drop(
+    return d.withColumn("rho", F.expr(rho_sql("__hll_v"))).drop(
         "__hll_h", "__hll_v"
     )
 
@@ -96,18 +93,16 @@ def hll_registers(
     )
 
 
-def hll_oracle_sql(
-    source_sql: str, key_sql: str, item_sql: str, key_name: str = "host"
-) -> str:
+def hll_oracle_sql(source_sql: str, key_sql: str, item_sql: str) -> str:
     """DuckDB replay of hll_registers built from the SAME fragment
     generators the Spark plan uses — the two engines can never drift."""
     return f"""
-WITH __raw AS (SELECT {key_sql} AS {key_name}, {item_sql} AS __item FROM {source_sql}),
-__h AS (SELECT {key_name}, md5(__item) AS h FROM __raw),
-__v AS (SELECT {key_name}, {bucket_sql('h')} AS bucket, {hashval_sql('h')} AS v FROM __h),
-__r AS (SELECT {key_name}, bucket, {rho_sql('v')} AS rho FROM __v)
-SELECT {key_name}, bucket, CAST(max(rho) AS INT) AS max_rho
-FROM __r GROUP BY {key_name}, bucket
+WITH __raw AS (SELECT {key_sql} AS host, {item_sql} AS __item FROM {source_sql}),
+__h AS (SELECT host, md5(__item) AS h FROM __raw),
+__v AS (SELECT host, {bucket_sql('h')} AS bucket, {hashval_sql('h')} AS v FROM __h),
+__r AS (SELECT host, bucket, {rho_sql('v')} AS rho FROM __v)
+SELECT host, bucket, CAST(max(rho) AS INT) AS max_rho
+FROM __r GROUP BY host, bucket
 """
 
 
@@ -254,9 +249,7 @@ def bloom_probe(
     )
 
 
-def bloom_oracle_sql(
-    source_sql: str, key_sql: str, item_sql: str, key_name: str = "host"
-) -> str:
+def bloom_oracle_sql(source_sql: str, key_sql: str, item_sql: str) -> str:
     """DuckDB replay of bloom_build from the SAME fragment generators."""
     pos = ", ".join(
         f"{bloom_pos_sql('h', i)} AS p{i}" for i in range(BLOOM_HASHES)
@@ -269,11 +262,11 @@ def bloom_oracle_sql(
         f"CAST(bit_or(b{w}) AS BIGINT) AS w{w}" for w in range(BLOOM_WORDS)
     )
     return f"""
-WITH __raw AS (SELECT {key_sql} AS {key_name}, {item_sql} AS __item FROM {source_sql}),
-__h AS (SELECT {key_name}, md5(__item) AS h FROM __raw),
-__p AS (SELECT {key_name}, {pos} FROM __h),
-__w AS (SELECT {key_name}, {words} FROM __p)
-SELECT {key_name}, {aggs} FROM __w GROUP BY {key_name}
+WITH __raw AS (SELECT {key_sql} AS host, {item_sql} AS __item FROM {source_sql}),
+__h AS (SELECT host, md5(__item) AS h FROM __raw),
+__p AS (SELECT host, {pos} FROM __h),
+__w AS (SELECT host, {words} FROM __p)
+SELECT host, {aggs} FROM __w GROUP BY host
 """
 
 
@@ -313,10 +306,9 @@ def cms_pos_sql(hex_col: str, i: int) -> str:
     return "((" + " + ".join(terms) + f") % {CMS_WIDTH})"
 
 
-def cms_build(df: DataFrame, item_col: str, weight_sql: str = "1") -> DataFrame:
+def cms_build(df: DataFrame, item_col: str) -> DataFrame:
     """Sketch registers (row, pos, cnt): one exchange on (row, pos) —
-    d*w = 256 tiny groups — with map-side partial sums.  ``weight_sql``
-    lets a pre-aggregated (item, count) input feed the sketch."""
+    d*w = 256 tiny groups — with map-side partial counts."""
     d = df.withColumn("__cm_h", F.expr(f"md5({item_col})"))
     d = d.select(
         "*",
@@ -326,17 +318,16 @@ def cms_build(df: DataFrame, item_col: str, weight_sql: str = "1") -> DataFrame:
         ],
     )
     # ONE posexplode instead of d unioned selects: the source is scanned
-    # once, and the map-side partial sum still collapses each task's
+    # once, and the map-side partial count still collapses each task's
     # output to <= d*w register rows before the exchange
     rows = d.select(
         F.posexplode(
             F.array(*[F.col(f"__cp{i}") for i in range(CMS_DEPTH)])
         ).alias("row", "pos"),
-        F.expr(weight_sql).cast("long").alias("__w"),
     )
     return rows.select(
-        F.col("row").cast("int"), F.col("pos").cast("int"), "__w"
-    ).groupBy("row", "pos").agg(F.sum("__w").cast("long").alias("cnt"))
+        F.col("row").cast("int"), F.col("pos").cast("int")
+    ).groupBy("row", "pos").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
 
 
 def cms_estimate(

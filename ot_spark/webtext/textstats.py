@@ -67,9 +67,10 @@ def _ngram_counter_stats(toks: list, n: int) -> tuple[int, int]:
     return best, dups
 
 
-def repetition_stats_col(ns: tuple[int, ...] = (2, 3, 4)) -> Column:
+def repetition_stats_col() -> Column:
     """pandas UDF factory: token array -> struct(best{n}, dups{n} ...) —
     the integer twin of _run_stats(array_sort(ngrams_col(toks, n)))."""
+    ns = (2, 3, 4)
     schema = StructType(
         [
             StructField(f"{k}{n}", IntegerType())
@@ -160,7 +161,7 @@ def clean_stats_col(langs: dict[str, list[str]]) -> Column:
     return stats.asNondeterministic()
 
 
-def with_langid(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
+def with_langid(df: DataFrame) -> DataFrame:
     """argmax over stopword-hit counts; ties -> alphabetical first; zero
     hits -> 'und' (undetermined).
 
@@ -168,7 +169,7 @@ def with_langid(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred
     columns before the argmax when-chain: the chain references each score
     twice (condition + value), and an inline-expression variant would
     re-run the tokenizer regexp ~10x per row (see ``with_tokens``)."""
-    tok = with_tokens(df, text_col)
+    tok = with_tokens(df)
     score_cols = {
         f"__sc_{lang}": F.size(F.filter(F.col(TOKENS_COL), lambda t: t.isin(words)))
         for lang, words in LANG_STOPWORDS.items()
@@ -180,7 +181,7 @@ def with_langid(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred
         cond = F.col(f"__sc_{lang}") > best_score
         best_lang = F.when(cond, F.lit(lang)).otherwise(best_lang)
         best_score = F.when(cond, F.col(f"__sc_{lang}")).otherwise(best_score)
-    return scored.withColumn(out_col, best_lang).drop(TOKENS_COL, *score_cols)
+    return scored.withColumn("lang_pred", best_lang).drop(TOKENS_COL, *score_cols)
 
 
 def quality_features(text: Column, tokens: Column | None = None) -> dict[str, Column]:
@@ -212,9 +213,9 @@ def quality_features(text: Column, tokens: Column | None = None) -> dict[str, Co
     }
 
 
-def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    tok = with_tokens(df, text_col)
-    feats = quality_features(F.col(text_col), tokens=F.col(TOKENS_COL))
+def with_quality(df: DataFrame) -> DataFrame:
+    tok = with_tokens(df)
+    feats = quality_features(F.col("text"), tokens=F.col(TOKENS_COL))
     out = tok.withColumns(feats).drop(TOKENS_COL)
     # simple composite score in [0,1]: length-normalized, penalize
     # punctuation soup, reward alpha + stopword presence
@@ -299,9 +300,7 @@ def fingerprint_min_col(window: int = 8) -> Column:
     return fpmin
 
 
-def with_fingerprint(
-    df: DataFrame, text_col: str = "text", window: int = 8, hash_mode: str = "xxhash"
-) -> DataFrame:
+def with_fingerprint(df: DataFrame, hash_mode: str = "xxhash") -> DataFrame:
     """Winnowing-lite document fingerprint: min window hash (stable under
     local edits) + full-content hash.
 
@@ -310,18 +309,19 @@ def with_fingerprint(
     the rolling fold itself runs in ONE Arrow pass
     (:func:`fingerprint_min_col` — bit-identical to the JVM
     transform+aggregate, pinned by ``test_fingerprint_min_matches_fold``)."""
-    hashed = with_tokens(df, text_col).withColumn(
+    window = 8
+    hashed = with_tokens(df).withColumn(
         "__thash", token_hashes(F.col(TOKENS_COL), hash_mode)
     )
     return hashed.withColumns(
         {
             "fingerprint_min": fingerprint_min_col(window)(F.col("__thash")),
-            "content_hash": F.md5(F.col(text_col)),
+            "content_hash": F.md5(F.col("text")),
         }
     ).drop(TOKENS_COL, "__thash")
 
 
-def with_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_repetition(df: DataFrame) -> DataFrame:
     """Gopher-style repetition filters (Rae et al. 2021, public): the
     fraction of mass in the most-repeated bigram and the duplicate-token
     fraction.  Heavily repetitive pages (boilerplate, keyword stuffing,
@@ -336,7 +336,7 @@ def with_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     ``keep_repetition`` applies Gopher-ish thresholds (top bigram <= 0.18
     of bigram mass, <= 50%% duplicate tokens)."""
-    tok = with_tokens(df, text_col)
+    tok = with_tokens(df)
     toks = F.col(TOKENS_COL)
     # top bigram multiplicity + distinct-token count in ONE Arrow pass
     # (rep2_stats_col) — the former JVM fold over array_sort(bigrams) was
@@ -420,19 +420,19 @@ GOPHER_TOP_THRESH = {2: 0.20, 3: 0.18, 4: 0.16}
 GOPHER_DUP_THRESH = {2: 0.40, 3: 0.35, 4: 0.30}
 
 
-def with_repetition_full(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_repetition_full(df: DataFrame) -> DataFrame:
     """The full Gopher repetition panel: for n in 2..4, the mass of the
     most frequent n-gram (``top_{n}gram_frac``) and the fraction of
     n-grams occurring more than once (``dup_{n}gram_frac``), plus the
     combined ``keep_repetition_full`` gate.  Everything is one map stage:
     three sorted-array folds over the SAME bound token column — no
     explode, no shuffle, no second tokenizer evaluation."""
-    tok = with_tokens(df, text_col)
+    tok = with_tokens(df)
     toks = F.col(TOKENS_COL)
     # one Arrow pass computes all six integers (see repetition_stats_col);
     # every fraction below is the same JVM expression as before
     out = tok.withColumn(
-        "__st", repetition_stats_col((2, 3, 4))(toks)
+        "__st", repetition_stats_col()(toks)
     ).withColumn("__ntok", F.size(toks))
     keep = F.lit(True)
     frac_cols = {}

@@ -96,19 +96,19 @@ def canonicalize_url_col(url: Column) -> Column:
     )
 
 
-def url_dedup(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def url_dedup(df: DataFrame) -> DataFrame:
     """Canonical-URL dedup over the synthetic URL column: one row per
     canonical URL with the variant count and the keeper (min id) — the
     narrow-map + single-exchange shape."""
     with_url = df.select(
-        F.col(id_col), synthetic_url_col(F.col(id_col)).alias("url")
+        F.col("doc_id"), synthetic_url_col(F.col("doc_id")).alias("url")
     )
     canon = with_url.select(
-        F.col(id_col), canonicalize_url_col(F.col("url")).alias("canonical_url")
+        F.col("doc_id"), canonicalize_url_col(F.col("url")).alias("canonical_url")
     )
     return canon.groupBy("canonical_url").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.min(id_col).alias("keeper"),
+        F.min("doc_id").alias("keeper"),
     )
 
 
@@ -143,10 +143,7 @@ def path_col(url: Column) -> Column:
     )
 
 
-def robots_filter(
-    urls: DataFrame, rules: DataFrame, id_col: str = "doc_id",
-    url_col: str = "url",
-) -> DataFrame:
+def robots_filter(urls: DataFrame, rules: DataFrame) -> DataFrame:
     """Robots-exclusion-protocol URL filtering (RFC 9309 semantics): per
     URL, the LONGEST matching path prefix among the host's rules wins;
     allow beats deny on equal length; no matching rule means allowed.
@@ -163,9 +160,9 @@ def robots_filter(
     a same-key join back to attach the default-allow rows.
     """
     u = urls.select(
-        F.col(id_col), F.col(url_col),
-        host_col(F.col(url_col)).alias("__host"),
-        path_col(F.col(url_col)).alias("__path"),
+        F.col("doc_id"), F.col("url"),
+        host_col(F.col("url")).alias("__host"),
+        path_col(F.col("url")).alias("__path"),
     )
     m = u.join(
         rules,
@@ -173,7 +170,7 @@ def robots_filter(
         & F.col("__path").startswith(rules["prefix"]),
         "inner",
     )
-    win = m.groupBy(id_col).agg(
+    win = m.groupBy("doc_id").agg(
         F.max(
             F.struct(
                 F.length("prefix").alias("l"),
@@ -182,15 +179,15 @@ def robots_filter(
             )
         ).alias("__w")
     )
-    return u.join(win, id_col, "left").select(
-        id_col, url_col,
+    return u.join(win, "doc_id", "left").select(
+        "doc_id", "url",
         F.coalesce(F.col("__w.a"), F.lit(True)).alias("allowed"),
         F.col("__w.p").alias("rule_prefix"),
     )
 
 
 # Mini public-suffix list (the real PSL — publicsuffix.org, public data —
-# is ~10k entries; this ships the common shapes and is parameterizable).
+# is ~10k entries; this ships the common shapes).
 # github.io / blogspot.com are PSL "private section" entries, included
 # because host rollups that merge all *.github.io into one owner are
 # exactly the mistake the private section exists to prevent.
@@ -204,16 +201,12 @@ PUBLIC_SUFFIXES: list[str] = [
 ]
 
 
-def _suffixes_ordered(suffixes: list[str] | None) -> list[str]:
-    # longest match = most labels first (a 2-label suffix beats its
-    # 1-label tail, e.g. blogspot.com before com)
-    return sorted(suffixes or PUBLIC_SUFFIXES,
-                  key=lambda s: (-s.count("."), s))
+# longest match = most labels first (a 2-label suffix beats its 1-label
+# tail, e.g. blogspot.com before com)
+_SUFFIXES_ORDERED = sorted(PUBLIC_SUFFIXES, key=lambda s: (-s.count("."), s))
 
 
-def registrable_domain_col(
-    host: Column, suffixes: list[str] | None = None
-) -> Column:
+def registrable_domain_col(host: Column) -> Column:
     """Registrable domain (eTLD+1): one label + the LONGEST matching
     public suffix — a.b.github.io -> b.github.io, x.y.co.uk -> y.co.uk.
 
@@ -225,7 +218,7 @@ def registrable_domain_col(
     without backslash-escape drift); a map-side transform, no shuffle.
     """
     expr = None
-    for s in _suffixes_ordered(suffixes):
+    for s in _SUFFIXES_ORDERED:
         pat = "([^.]+[.]" + s.replace(".", "[.]") + ")$"
         cond = host.endswith("." + s)
         val = F.regexp_extract(host, pat, 1)
@@ -234,14 +227,12 @@ def registrable_domain_col(
     return expr.otherwise(F.when(two != "", two).otherwise(host))
 
 
-def registrable_domain_sql(
-    host_sql: str, suffixes: list[str] | None = None
-) -> str:
+def registrable_domain_sql(host_sql: str) -> str:
     """The SAME longest-match CASE chain as ANSI SQL (DuckDB-ready),
     generated from the same ordered suffix list so the two engines can
     never drift."""
     whens = []
-    for s in _suffixes_ordered(suffixes):
+    for s in _SUFFIXES_ORDERED:
         pat = "([^.]+[.]" + s.replace(".", "[.]") + ")$"
         whens.append(
             f"WHEN {host_sql} LIKE '%.{s}' "
@@ -256,13 +247,7 @@ def registrable_domain_sql(
     )
 
 
-def fetch_schedule(
-    frontier: DataFrame,
-    host: str = "host",
-    priority: str = "priority",
-    url: str = "url",
-    rate_col: str = "rate",
-) -> DataFrame:
+def fetch_schedule(frontier: DataFrame) -> DataFrame:
     """Politeness-aware fetch scheduling: every crawl frontier must turn
     "these URLs are worth fetching" into "fetch at most ``rate`` URLs
     per host per round" (the crawl-delay contract robots.txt implies).
@@ -284,16 +269,16 @@ def fetch_schedule(
     """
     from pyspark.sql import Window
 
-    if rate_col not in frontier.columns:
+    if "rate" not in frontier.columns:
         raise ValueError("frontier must carry a per-host rate column")
-    w = Window.partitionBy(host).orderBy(
-        F.col(priority).desc(), F.col(url).asc()
+    w = Window.partitionBy("host").orderBy(
+        F.col("priority").desc(), F.col("url").asc()
     )
     rk = F.row_number().over(w).cast("long")
     return frontier.select(
-        url, host, priority, rate_col,
+        "url", "host", "priority", "rate",
         rk.alias("rank_in_host"),
     ).select(
-        url, host, priority, "rank_in_host",
-        F.expr(f"(rank_in_host - 1) DIV {rate_col}").alias("fetch_round"),
+        "url", "host", "priority", "rank_in_host",
+        F.expr("(rank_in_host - 1) DIV rate").alias("fetch_round"),
     )

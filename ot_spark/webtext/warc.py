@@ -141,24 +141,20 @@ def _parse_blob(doc_id: int, data: bytes, out: dict) -> None:
         idx += 1
 
 
-def parse_warc_records(
-    df: DataFrame, blob_col: str = "warc", id_col: str = "doc_id"
-) -> DataFrame:
+def parse_warc_records(df: DataFrame) -> DataFrame:
     """mapInPandas WARC parser: blobs in, one row per record out."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: dict = {f.name: [] for f in RECORD_SCHEMA.fields}
-            for doc_id, blob in zip(pdf[id_col], pdf[blob_col]):
+            for doc_id, blob in zip(pdf["doc_id"], pdf["warc"]):
                 _parse_blob(int(doc_id), bytes(blob), out)
             yield pd.DataFrame(out)
 
-    return df.select(id_col, blob_col).mapInPandas(gen, RECORD_SCHEMA)
+    return df.select("doc_id", "warc").mapInPandas(gen, RECORD_SCHEMA)
 
 
-def write_warc_records(
-    records: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def write_warc_records(records: DataFrame) -> DataFrame:
     """WARC sink: serialize parsed record rows back into per-document
     WARC/1.0 blobs — the writer half of the source/sink pair, so a
     filter/enrich pipeline can re-emit valid segment files.
@@ -194,10 +190,10 @@ def write_warc_records(
         F.lit(_CRLF), F.col("payload"), F.lit(_CRLF + _CRLF),
     )
     per = records.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.struct(F.col("rec_idx"), rec.alias("rec")).alias("s"),
     )
-    return per.groupBy(id_col).agg(
+    return per.groupBy("doc_id").agg(
         F.encode(
             F.array_join(
                 F.transform(

@@ -106,7 +106,7 @@ def test_missing_coords_segment_skipped(spark):
     # both segments have one unknown endpoint -> no intermediates
     assert out.count() == 0
     # but refs survive the rewrite untouched
-    new_nodes, rewritten = densify.split_ways(links, nodes, None, 0.1, 0.1)
+    new_nodes, rewritten = densify.split_ways(links, nodes, None, 0.1, 0.1, threshold=10.0)
     assert new_nodes.count() == 0
     refs = rewritten.collect()[0].refs
     assert refs == ["a", "missing", "b"]

@@ -71,7 +71,6 @@ def test_tag_projection_complex_regex(spark):
 def test_filter_by_tag_value_and_keys(spark):
     df = _df_from_maps(spark, [{"highway": "primary"}, {"highway": "footway"}, {"x": "y"}])
     assert filters.filter_by_tag_value(df, "highway", "^primary$").count() == 1
-    assert filters.filter_by_tag_value(df, "highway", "^primary$", keep=False).count() == 2
     assert filters.filter_by_tag_keys(df, ["highway"]).count() == 2
     assert filters.filter_by_tag_keys(df, ["highway"], keep=False).count() == 1
 

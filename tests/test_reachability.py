@@ -1,7 +1,7 @@
-"""Every ot_spark module, and every module-level name of the program, is
-reached from the program's entry points.
+"""Every ot_spark module, every module-level name and every defaulted
+parameter of the program is reached from the program's entry points.
 
-Two static walks (no Spark, nothing imported), both from the same roots:
+Three static walks (no Spark, nothing imported), all from the same roots:
 ``bench.py``, ``submit.py``, ``tools/*.py`` and the benchmark's non-test
 ``perfbench/*.py``, plus the driver contract in ``__spark_entry__.py``.
 
@@ -10,15 +10,20 @@ Two static walks (no Spark, nothing imported), both from the same roots:
   module under ``ot_spark/`` is in the closure.
 - Names: every module-level ``def``, ``class`` and assigned constant in
   ``ot_spark/``, ``gate_queries/`` and ``__spark_entry__.py`` must be used
-  by reached code, or be on ``ALLOWED`` with a one-line reason.  The walk
-  is by name: a definition is reached when any reached code mentions its
-  name (a bare name or an attribute), whichever module that code is in, so
-  it errs toward keeping code.  Reached code is the whole of each root
-  file, every module's import-time statements, and the body of each
-  reached or allowed definition.
+  by reached code, or be on ``ALLOWED`` with a one-line reason.  Names
+  resolve per module: a bare name is its own module's definition or what
+  an import bound it to, and ``mod.attr`` is ``attr`` of that module; an
+  attribute of anything else names no module-level definition.  Reached
+  code is the whole of each root file, every module's import-time
+  statements, and the body of each reached or allowed definition.
+- Parameters: every defaulted parameter of a module-level def or method
+  in those files must be passed a value other than its default literal
+  by some call in program code (the roots, ``ot_spark/`` and
+  ``gate_queries/``), or be on ``ALLOWED_PARAMS`` with a one-line reason.
+  A parameter only one value reaches is a constant.
 
-A module or function only tests reach is dead code; these are the checks
-that find it.
+A module, function or option only tests reach is dead code; these are the
+checks that find it.
 """
 
 from __future__ import annotations
@@ -54,6 +59,17 @@ ALLOWED: dict[str, str] = {
     "ot_spark.synth.ACCEPTED_MODS": "truth table: fixture pages complex_filter keeps",
     "ot_spark.synth.LINK_ACCEPTED_MODS": "truth table: fixture links the semi-join keeps",
     "ot_spark.synth.LINK_SKIP_ELE_MODS": "truth table: fixture links marked skip-elevation",
+}
+
+
+# Defaulted parameters no program call sets that stay, each with why.
+ALLOWED_PARAMS: dict[str, str] = {
+    "ot_spark.session.get_spark(master)": "deployment setting: the master a deployment runs on",
+    "ot_spark.session.get_spark(shuffle_partitions)": "deployment setting: sized to the cluster",
+    "ot_spark.lineage.write_with_lineage(audit_input)": "safety check: recompute input facts at validation scale",
+    "ot_spark.webtext.dedup.substring_dup_pairs(key_mode)": '"span" is the reference the hashed keys are tested against',
+    "ot_spark.webtext.dedup.connected_components(max_iters)": "convergence guard: tests cap the rounds below convergence to pin the error",
+    "ot_spark.s2h3.s2_cell_ids(level)": "spatial_enrich passes it through the local name ``encode``",
 }
 
 
@@ -135,6 +151,9 @@ def all_modules() -> set[str]:
 
 # ------------------------------------------------------------ the name walk
 
+Target = tuple[str, "str | None"]  # (module, name), or (module, None): the module
+
+
 def _top_level(tree: ast.Module) -> tuple[dict[str, list[ast.AST]], list[ast.AST]]:
     """(defined name -> the statements whose code belongs to it, the other
     import-time statements).  Dunder names (``__version__``) are not
@@ -159,12 +178,68 @@ def _top_level(tree: ast.Module) -> tuple[dict[str, list[ast.AST]], list[ast.AST
     return defs, free
 
 
-def _uses(node: ast.AST) -> set[str]:
-    return {
-        n.id if isinstance(n, ast.Name) else n.attr
-        for n in ast.walk(node)
-        if isinstance(n, (ast.Name, ast.Attribute))
-    }
+def _bindings(mod: str | None, tree: ast.Module, modules: set[str]) -> dict[str, set[Target]]:
+    """Local name -> what the file's imports (at any depth) bind it to.
+    Only imports of ``modules`` count; relative ones resolve against the
+    package of ``mod`` (a package's own name when ``mod`` is one)."""
+    out: dict[str, set[Target]] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.asname is None:  # ``import a.b`` binds ``a``
+                    local = target = a.name.partition(".")[0]
+                else:
+                    local, target = a.asname, a.name
+                if target in modules:
+                    out.setdefault(local, set()).add((target, None))
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                assert mod is not None, "relative import outside a package"
+                is_pkg = any(m.startswith(mod + ".") for m in modules)
+                pkg = mod if is_pkg else mod.rpartition(".")[0]
+                anchor = pkg.rsplit(".", node.level - 1)[0]
+                base = f"{anchor}.{base}" if base else anchor
+            for a in node.names:
+                sub = f"{base}.{a.name}"
+                if sub in modules:
+                    out.setdefault(a.asname or a.name, set()).add((sub, None))
+                elif base in modules:
+                    out.setdefault(a.asname or a.name, set()).add((base, a.name))
+    return out
+
+
+def _refs(node: ast.AST, binds: dict[str, set[Target]], own: str | None,
+          own_defs: dict[str, list[ast.AST]], modules: set[str]) -> set[Target]:
+    """What the code under ``node`` names, resolved in its module: a bare
+    name is the module's own definition or an import binding, and
+    ``mod.attr`` (a chain through packages too) is ``attr`` of ``mod``.
+    An attribute of anything else (``obj.attr``) names no module-level
+    definition."""
+    out: set[Target] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out |= binds.get(n.id, set())
+            if n.id in own_defs:
+                out.add((own, n.id))
+        elif isinstance(n, ast.Attribute):
+            chain = [n.attr]
+            base = n.value
+            while isinstance(base, ast.Attribute):
+                chain.append(base.attr)
+                base = base.value
+            if not isinstance(base, ast.Name):
+                continue
+            for mod, name in binds.get(base.id, set()):
+                if name is not None:
+                    continue
+                for attr in reversed(chain):
+                    if f"{mod}.{attr}" in modules:
+                        mod = f"{mod}.{attr}"
+                        continue
+                    out.add((mod, attr))
+                    break
+    return out
 
 
 def unreached_names(
@@ -173,24 +248,39 @@ def unreached_names(
     """Qualified names (``module.name``) ``checked`` defines that neither
     ``roots`` nor the code they reach uses, minus ``allowed`` — which are
     walked as roots themselves."""
-    by_name: dict[str, list[ast.AST]] = {}
-    todo: list[ast.AST] = list(roots)
+    modules = set(checked)
+    tables = {}
+    todo: list[tuple[str | None, ast.AST]] = [(None, r) for r in roots]
     defined: set[str] = set()
     for mod, tree in checked.items():
         defs, free = _top_level(tree)
-        todo += free
+        tables[mod] = (defs, _bindings(mod, tree, modules))
+        todo += [(mod, s) for s in free]
         for name, nodes in defs.items():
             defined.add(f"{mod}.{name}")
-            by_name.setdefault(name, []).extend(nodes)
             if f"{mod}.{name}" in allowed:
-                todo += nodes
-    used: set[str] = set()
+                todo += [(mod, s) for s in nodes]
+    root_binds = {id(r): _bindings(None, r, modules) for r in roots}
+    reached: set[Target] = set()
+
+    def reach(target: Target) -> None:
+        if target in reached:
+            return
+        reached.add(target)
+        mod, name = target
+        if name is not None:
+            defs, binds = tables[mod]
+            todo.extend((mod, s) for s in defs.get(name, []))
+            # a package re-exporting an imported name reaches its source
+            for via in binds.get(name, set()):
+                reach(via)
+
     while todo:
-        fresh = _uses(todo.pop()) - used
-        used |= fresh
-        for name in fresh:
-            todo += by_name.get(name, [])
-    return sorted(q for q in defined - allowed if q.rpartition(".")[2] not in used)
+        mod, node = todo.pop()
+        defs, binds = tables[mod] if mod is not None else ({}, root_binds[id(node)])
+        for target in _refs(node, binds, mod, defs, modules):
+            reach(target)
+    return sorted(q for q in defined - allowed if tuple(q.rsplit(".", 1)) not in reached)
 
 
 def _checked_modules() -> dict[str, ast.Module]:
@@ -210,6 +300,98 @@ def _root_trees() -> list[ast.Module]:
         ast.parse(p.read_text(), filename=str(p))
         for p in _entry_files() if p.name != "__spark_entry__.py"
     ]
+
+
+# ------------------------------------------------------- the parameter walk
+
+Param = tuple[str, str, ast.expr, "int | None"]  # (qualname, param, default, position)
+
+
+def _defaulted_params(tree: ast.Module) -> list[tuple[set[str], Param]]:
+    """(the names a call to it goes by, the parameter) for every defaulted
+    parameter of a module-level def or of a method of a module-level class.
+    The position is the positional argument that fills it (a method's
+    ``self``/``cls`` is none), or None for a keyword-only parameter."""
+    out = []
+    funcs = [(f.name, {f.name}, f, 0) for f in tree.body if isinstance(f, ast.FunctionDef)]
+    for c in tree.body:
+        if not isinstance(c, ast.ClassDef):
+            continue
+        for f in c.body:
+            if isinstance(f, ast.FunctionDef):
+                static = any(getattr(d, "id", None) == "staticmethod" for d in f.decorator_list)
+                names = {f.name, c.name} if f.name == "__init__" else {f.name}
+                funcs.append((f"{c.name}.{f.name}", names, f, 0 if static else 1))
+    for qual, names, f, skip in funcs:
+        a = f.args
+        positional = a.posonlyargs + a.args
+        first = len(positional) - len(a.defaults)
+        for i, (arg, default) in enumerate(zip(positional[first:], a.defaults)):
+            out.append((names, (qual, arg.arg, default, first + i - skip)))
+        for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+            if default is not None:
+                out.append((names, (qual, arg.arg, default, None)))
+    return out
+
+
+def _calls(trees: list[ast.Module]) -> dict[str, list[ast.Call]]:
+    """Calls by the name they call (``f(...)``, ``obj.f(...)``); a
+    ``partial(f, ...)`` counts as a call of ``f``."""
+    out: dict[str, list[ast.Call]] = {}
+    for tree in trees:
+        for n in ast.walk(tree):
+            if not isinstance(n, ast.Call):
+                continue
+            if getattr(n.func, "id", getattr(n.func, "attr", None)) == "partial" and n.args:
+                n = ast.Call(func=n.args[0], args=n.args[1:], keywords=n.keywords)
+            name = getattr(n.func, "id", getattr(n.func, "attr", None))
+            if name is not None:
+                out.setdefault(name, []).append(n)
+    return out
+
+
+def _same_literal(value: ast.expr, default: ast.expr) -> bool:
+    try:
+        a, b = ast.literal_eval(value), ast.literal_eval(default)
+    except ValueError:
+        return False
+    return type(a) is type(b) and a == b
+
+
+def _sets(call: ast.Call, param: str, default: ast.expr, position: int | None) -> bool:
+    """Whether ``call`` may pass ``param`` a value other than its default:
+    by keyword or position, or through ``**``/``*`` (which may carry it)."""
+    for kw in call.keywords:
+        if kw.arg is None:
+            return True
+        if kw.arg == param:
+            return not _same_literal(kw.value, default)
+    if position is None:
+        return False
+    for i, arg in enumerate(call.args[: position + 1]):
+        if isinstance(arg, ast.Starred):
+            return True
+        if i == position:
+            return not _same_literal(arg, default)
+    return False
+
+
+def never_set_params(
+    checked: dict[str, ast.Module], program: list[ast.Module], allowed: set[str]
+) -> list[str]:
+    """``module.func(param)`` of every defaulted parameter in ``checked``
+    that no call in ``program`` sets, minus ``allowed``.  Calls match by
+    name, whichever module they are in, so a parameter of one of two
+    same-named functions counts as set when either is called with it."""
+    calls = _calls(program)
+    out = []
+    for mod, tree in checked.items():
+        for names, (qual, param, default, position) in _defaulted_params(tree):
+            if not any(
+                _sets(c, param, default, position) for n in names for c in calls.get(n, [])
+            ):
+                out.append(f"{mod}.{qual}({param})")
+    return sorted(set(out) - allowed)
 
 
 def test_walk_resolves_relative_and_function_level_imports():
@@ -240,7 +422,11 @@ def test_name_walk_flags_a_planted_test_only_def():
         "def test_only(x):\n    return _CACHE.get(x)\n"
         "class Kept:\n    pass\n"
     )
-    root = ast.parse("from pkg.lib import live, Kept\nprint(live(1), Kept)\n")
+    # a root's own parameter named like a dead def does not reach it
+    root = ast.parse(
+        "from pkg.lib import live, Kept\nprint(live(1), Kept)\n"
+        "def run(test_only):\n    return test_only\n"
+    )
     checked = {"pkg.lib": lib}
     assert unreached_names(checked, [root], set()) == [
         "pkg.lib._CACHE", "pkg.lib.test_only",
@@ -265,4 +451,46 @@ def test_every_module_level_name_is_reached():
     assert not unreached, (
         "module-level names only tests reach (delete them, or add them to "
         f"ALLOWED with a reason): {unreached}"
+    )
+
+
+def test_parameter_walk_flags_a_planted_never_set_default():
+    lib = ast.parse(
+        "def f(x, a=1, b='id', *, c=None):\n    return x\n"
+        "class K:\n    def m(self, y, z=2):\n        return y\n"
+    )
+    root = ast.parse(
+        "from pkg.lib import f, K\n"
+        "f(0, 5)\n"            # sets a by position
+        "f(0, b='id')\n"       # the default literal: b stays unset
+        "K().m(1, z=3)\n"      # a method: self is not a position
+    )
+    checked = {"pkg.lib": lib}
+    program = [root, lib]
+    assert never_set_params(checked, program, set()) == ["pkg.lib.f(b)", "pkg.lib.f(c)"]
+    # an allowed entry is kept
+    assert never_set_params(checked, program, {"pkg.lib.f(c)"}) == ["pkg.lib.f(b)"]
+    # ``**`` may carry any keyword, so it counts as setting them all
+    spread = ast.parse("from pkg.lib import f\nf(0, **opts)\n")
+    assert never_set_params(checked, [root, spread], set()) == []
+
+
+def test_every_allowed_param_exists_and_has_a_reason():
+    params = {
+        f"{mod}.{qual}({param})"
+        for mod, tree in _checked_modules().items()
+        for _, (qual, param, _, _) in _defaulted_params(tree)
+    }
+    stale = sorted(set(ALLOWED_PARAMS) - params)
+    assert not stale, f"ALLOWED_PARAMS entries that no longer exist: {stale}"
+    assert all(reason.strip() for reason in ALLOWED_PARAMS.values())
+
+
+def test_every_defaulted_parameter_is_set_by_the_program():
+    checked = _checked_modules()
+    program = _root_trees() + list(checked.values())
+    unset = never_set_params(checked, program, set(ALLOWED_PARAMS))
+    assert not unset, (
+        "defaulted parameters no program call sets (fold each into a constant, "
+        f"or add it to ALLOWED_PARAMS with a reason): {unset}"
     )

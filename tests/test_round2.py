@@ -29,7 +29,7 @@ def test_assign_split_ids_scale_equals_contract(spark):
     }
     b = {
         (r.link_id, r.pos, r.i): r.node_id
-        for r in densify.assign_split_ids(df, mode="scale", num_partitions=5).collect()
+        for r in densify.assign_split_ids(df, mode="scale").collect()
     }
     assert a == b
     assert min(a.values()) == densify.SPLIT_ID_OFFSET + 1
@@ -51,7 +51,7 @@ def test_simhash_empty_docs_never_pair(spark):
     sigs = with_simhash(docs)
     # empty docs -> NULL simhash
     assert sigs.where("simhash IS NULL").count() == 100
-    pairs = simhash_near_pairs(sigs, max_hamming=3).collect()
+    pairs = simhash_near_pairs(sigs, max_hamming=3, n_bits=64, max_bucket=200).collect()
     ids = {r.a for r in pairs} | {r.b for r in pairs}
     assert ids <= set(range(100, 103))          # sub-quadratic: no empty-doc pairs
     assert len(pairs) == 3                       # the 3 identical docs pair up
@@ -63,8 +63,8 @@ def test_simhash_bucket_cap_drops_boilerplate_clusters(spark):
         "doc_id long, text string",
     )
     sigs = with_simhash(docs)
-    assert simhash_near_pairs(sigs, max_hamming=3, max_bucket=10).count() == 0
-    assert simhash_near_pairs(sigs, max_hamming=3, max_bucket=100).count() == 435
+    assert simhash_near_pairs(sigs, max_hamming=3, n_bits=64, max_bucket=10).count() == 0
+    assert simhash_near_pairs(sigs, max_hamming=3, n_bits=64, max_bucket=100).count() == 435
 
 
 # ----------------------------------------------- raster routing at 500 tiles
@@ -106,7 +106,7 @@ def test_route_via_cell_join_matches_reference_rule(spark):
                 return t["raster_id"]
         return None
 
-    via_join = raster.route_via_cell_join(pts, idx, "lat", "lon")
+    via_join = raster.route_via_cell_join(pts, idx)
     got = {r.id: r.raster_id for r in via_join.collect()}
     want = {i: expected(lon, lat) for i, lon, lat in rows}
     assert got == want
@@ -155,13 +155,9 @@ def test_table_properties_roundtrip_and_propagation(spark, tmp_path):
     assert spark.read.parquet(src).count() == 5
     spark.range(3).write.parquet(dst)
     assert lineage.read_table_properties(spark, dst) == {}  # no sidecar yet
-    props = lineage.propagate_table_properties(spark, src, dst, {"run": "r2"})
-    assert props["osmosis_replication_timestamp"] == "2024-01-02T03:04:05Z"
-    got = lineage.read_table_properties(spark, dst)
-    assert got == {
-        "osmosis_replication_timestamp": "2024-01-02T03:04:05Z",
-        "run": "r2",
-    }
+    props = lineage.propagate_table_properties(spark, src, dst)
+    assert props == {"osmosis_replication_timestamp": "2024-01-02T03:04:05Z"}
+    assert lineage.read_table_properties(spark, dst) == props
 
 
 # ----------------------------------------------- relation-member union leg

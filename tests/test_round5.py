@@ -36,11 +36,11 @@ def test_substring_key_modes_identical(spark):
     df = _span_corpus(spark)
     res_hash = {
         (r.a, r.b): r.shared_windows
-        for r in substring_dup_pairs(df, key_mode="hash").collect()
+        for r in substring_dup_pairs(df, max_bucket=50, key_mode="hash").collect()
     }
     res_span = {
         (r.a, r.b): r.shared_windows
-        for r in substring_dup_pairs(df, key_mode="span").collect()
+        for r in substring_dup_pairs(df, max_bucket=50, key_mode="span").collect()
     }
     assert res_hash == res_span
     assert res_hash  # non-degenerate: the corpus does share spans
@@ -51,7 +51,7 @@ def test_substring_hash_mode_shuffles_fixed_width_keys(spark):
     long, not the span string (VERDICT r4 'What's wrong' #3)."""
     from ot_spark.webtext.dedup import substring_dup_pairs
 
-    plan = _formatted_plan(substring_dup_pairs(_span_corpus(spark)))
+    plan = _formatted_plan(substring_dup_pairs(_span_corpus(spark), max_bucket=50))
     assert "xxhash64" in plan
     # every hashpartitioning exchange keys on wk (bigint) or the final
     # (a, b) group — never on the span string column
@@ -385,7 +385,7 @@ def test_pq_adc_recall(spark):
     ids = np.asarray([r.vec_id for r in rows])
     cents = train_ivf_centroids(emb, n_centroids=8, sample=200, iters=3)
     assert cents.shape == (8, X.shape[1])
-    books = train_pq_codebooks(emb, m=16, k=256, sample=4096, iters=10)
+    books = train_pq_codebooks(emb, m=16, k=256, sample=4096)
     index = build_ivfpq_index(emb, cents, books, replicas=1).cache()
     recalls = []
     for qi in range(5):

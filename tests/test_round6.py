@@ -27,7 +27,7 @@ def ivfpq(spark, emb01):
     )
 
     cent = train_ivf_centroids(emb01, n_centroids=32, sample=4096, iters=10)
-    books = train_pq_codebooks(emb01, m=16, k=256, sample=4096, iters=10)
+    books = train_pq_codebooks(emb01, m=16, k=256, sample=4096)
     index = build_ivfpq_index(emb01, cent, books, replicas=2).cache()
     index.count()
     return cent, books, index
@@ -124,17 +124,17 @@ def test_knn_coverage_enumerations_agree():
     (_knn_raster_h3x_cov_rows) must produce the SAME cell->tile map —
     both the key set and the (pixel, order, raster_id) winners."""
     from gate_queries import common, tiles
-    from ot_spark.h3x import h3x_cell_fij, knn_raster_coverage
+    from ot_spark.h3x import KNN_PAD_DEG, h3x_cell_fij, knn_raster_coverage
 
-    res, pad = 4, 0.25
-    prod = knn_raster_coverage(common._raster_index(), res, pad)
+    res = tiles.KNN_RES
+    prod = knn_raster_coverage(common._raster_index().routing(), res, KNN_PAD_DEG)
     ids = np.array(sorted(prod), dtype=np.int64)
     f, i, j = h3x_cell_fij(ids, res)
     prod_keyed = {
         (int(ff), int(ii), int(jj)): prod[int(c)]
         for c, ff, ii, jj in zip(ids, f, i, j)
     }
-    oracle = tiles._knn_raster_h3x_cov_rows(res, 4, pad)
+    oracle = tiles._knn_raster_h3x_cov_rows()
     assert set(prod_keyed) == set(oracle), (
         len(set(prod_keyed) - set(oracle)), len(set(oracle) - set(prod_keyed))
     )
@@ -154,9 +154,9 @@ def test_jaccard_verify_is_candidate_scoped(spark):
     docs = spark.read.parquet(
         "/root/testdata/sf0.01/documents.parquet"
     ).where("doc_id < 2000")
-    sigs = with_minhash(docs, k=8, shingle_n=3, hash_mode="md5")
-    cand = minhash_candidate_pairs(sigs, bands=4, max_bucket=50)
-    out = jaccard_pairs(docs, cand, shingle_n=3, threshold=0.2)
+    sigs = with_minhash(docs, k=8, hash_mode="md5")
+    cand = minhash_candidate_pairs(sigs, bands=4)
+    out = jaccard_pairs(docs, cand, threshold=0.2)
     opt = out._jdf.queryExecution().optimizedPlan().toString()
     assert "LeftSemi" in opt, opt
     # shingle projection (the `sh` alias) appears above (= earlier in the
@@ -607,7 +607,7 @@ def test_anchor_term_counts_topk_and_plan(spark):
         '<a href="https://other.org/x">zebra</a>',
     ]
     df = spark.createDataFrame([(p.encode(),) for p in pages], ["html"])
-    out = anchor_term_counts(df, "html", k=2)
+    out = anchor_term_counts(df, k=2)
     got = {(r["dst_host"], r["term"]): (r["n"], r["rank"])
            for r in out.collect()}
     # top-2 for h.org: blue (3), cat (2); dog is rank 3 -> cut
@@ -834,7 +834,7 @@ def test_inverted_index_two_exchanges(spark):
     from ot_spark.webtext.invindex import inverted_index
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = _formatted_plan(inverted_index(docs))
+    plan = _formatted_plan(inverted_index(docs, posting_cap=10))
     n_ex = sum(
         1 for line in plan.splitlines()
         if line.strip().startswith("(") and "Exchange" in line
@@ -980,7 +980,7 @@ def test_pmi_join_is_copartitioned_not_cartesian(spark):
     from ot_spark.webtext.invindex import pmi_pairs
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = _formatted_plan(pmi_pairs(docs))
+    plan = _formatted_plan(pmi_pairs(docs, min_pair_count=2))
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastHashJoin") >= 2, plan
 
@@ -1151,8 +1151,8 @@ def test_delta_postings_adds_no_exchange(spark):
     from ot_spark.webtext.invindex import delta_postings, inverted_index
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    base = _formatted_plan(inverted_index(docs)).count("Exchange")
-    comp = _formatted_plan(delta_postings(docs)).count("Exchange")
+    base = _formatted_plan(inverted_index(docs, posting_cap=10)).count("Exchange")
+    comp = _formatted_plan(delta_postings(docs, posting_cap=10)).count("Exchange")
     assert comp == base
 
 
@@ -1275,7 +1275,7 @@ def test_zorder_interleave_replay_and_tiles(spark):
 
     pts = [(x, y) for x in range(0, 360, 7) for y in range(0, 180, 11)]
     df = spark.createDataFrame(pts, ["xi", "yi"])
-    out = zorder_layout(df, F.col("xi"), F.col("yi"), bits=9, bucket_bits=6)
+    out = zorder_layout(df, F.col("xi"), F.col("yi"))
     rows = out.collect()
 
     def morton(x, y, bits=9):

@@ -99,7 +99,7 @@ def test_repetition_stats_parity(spark, sf_dir):
     tok = dedup.with_tokens(docs)
     toks = F.col(dedup.TOKENS_COL)
     new = tok.select(
-        "doc_id", textstats.repetition_stats_col((2, 3, 4))(toks).alias("st")
+        "doc_id", textstats.repetition_stats_col()(toks).alias("st")
     ).select("doc_id", "st.*").collect()
     sel = ["doc_id"]
     old_cols = {}
@@ -133,7 +133,7 @@ def test_clean_stats_parity(spark, sf_dir):
 def test_minhash_md5_parity(spark, sf_dir):
     """hashlib md5 minhash == the JVM shingle+fold md5 signature."""
     docs = _docs(spark, sf_dir)
-    new = dedup.with_minhash(docs, k=4, shingle_n=3, hash_mode="md5").select(
+    new = dedup.with_minhash(docs, k=4, hash_mode="md5").select(
         "doc_id", "minhash"
     ).collect()
     tok = dedup.with_tokens(docs)
@@ -242,13 +242,13 @@ def test_substring_dup_shared_shuffle_plan(spark, sf_dir):
     from ot_spark.webtext.dedup import substring_dup_pairs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    df = substring_dup_pairs(docs, window=8, max_bucket=50)
+    df = substring_dup_pairs(docs, max_bucket=50)
     assert "REPARTITION_BY_COL" in _plan_of(df)
     got = sorted(map(tuple, df.collect()))
     # reference: span-keyed mode (independent code path, same contract)
     ref = sorted(
         map(tuple, substring_dup_pairs(
-            docs, window=8, max_bucket=50, key_mode="span"
+            docs, max_bucket=50, key_mode="span"
         ).collect())
     )
     assert got == ref
@@ -418,7 +418,7 @@ def test_fingerprint_min_matches_fold(spark):
         (4, "a b c d e f g h i j k l m n o p"),
     ]
     df = spark.createDataFrame(texts, "doc_id long, text string")
-    hashed = ts.with_tokens(df, "text").withColumn(
+    hashed = ts.with_tokens(df).withColumn(
         "__thash", ts.token_hashes(F.col(ts.TOKENS_COL), "md5")
     )
     ref = {

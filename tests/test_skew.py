@@ -20,24 +20,22 @@ def _skewed(spark):
 def test_salted_equals_plain_groupby(spark):
     df = _skewed(spark)
     plain = {
-        (r.k): (r.n, r.s, r.mn, r.mx)
+        (r.k): (r.n, r.s, r.mx)
         for r in df.groupBy("k")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum("v").alias("s"),
-            F.min("v").alias("mn"),
             F.max("v").alias("mx"),
         )
         .collect()
     }
     salted = {
-        (r.k): (r.n, r.s, r.mn, r.mx)
+        (r.k): (r.n, r.s, r.mx)
         for r in skew.salted_agg(
             df,
             ["k"],
             counts={"n": F.lit(1)},
             sums={"s": F.col("v")},
-            mins={"mn": F.col("v")},
             maxs={"mx": F.col("v")},
             n_salt=8,
             unique_col="rid",

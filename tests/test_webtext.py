@@ -44,7 +44,7 @@ def test_minhash_dedup_representatives(spark, docs):
 
 def test_simhash_hamming(spark, docs):
     sh = dedup.with_simhash(docs)
-    pairs = dedup.simhash_near_pairs(sh, max_hamming=12)
+    pairs = dedup.simhash_near_pairs(sh, max_hamming=12, n_bits=64, max_bucket=200)
     got = {(r.a, r.b) for r in pairs.collect()}
     assert (0, 1) in got  # identical text -> hamming 0
     row = {r.doc_id: r.simhash for r in sh.collect()}
