@@ -225,7 +225,7 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compiled halves this barrier produces).  Only the 4-byte cell id
     # crosses the boundary.
     _ident = F.udf(lambda x: x, "int", useArrow=True).asNondeterministic()
-    cand = with_ivf_cell(emb, cents, round_p=ROUND_P).withColumn(
+    cand = with_ivf_cell(emb, cents).withColumn(
         "ivf_cell", _ident(F.col("ivf_cell"))
     ).where(F.col("ivf_cell").isin([int(c) for c in probes]))
     return pq_adc_topk(with_pq_codes(cand, books), qvec, books, k_out=10)
@@ -368,12 +368,12 @@ def q_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     (xxhash sample, seeded RNG init) stays in
     ``simsearch.train_ivf_centroids``; recall pinned by
     tests/test_webtext.py."""
-    from ot_spark.webtext.simsearch import ROUND_P, with_ivf_cell
+    from ot_spark.webtext.simsearch import with_ivf_cell
 
     emb = _read(spark, sf_dir, "embeddings", fan=True)
     cents = _ivf_cents(spark, sf_dir)
     return (
-        with_ivf_cell(emb, cents, round_p=ROUND_P)
+        with_ivf_cell(emb, cents)
         .groupBy("ivf_cell")
         .agg(F.count(F.lit(1)).cast("long").alias("n_vecs"))
     )

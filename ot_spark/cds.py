@@ -35,6 +35,13 @@ Files under ``${XDG_CACHE_HOME:-~/.cache}/ot_spark/cds/``:
   after the log shows it was written, and leftovers of a dead process are
   deleted by the next launch.
 
+A launch may append one jar, :mod:`ot_spark.localfs`'s filesystem, as
+``SPARK_DIST_CLASSPATH``, which Spark's launcher puts last on the
+classpath; a ``SPARK_DIST_CLASSPATH`` of the caller's own still turns CDS
+off.  The build's child keeps the stock filesystem, so the archive is
+dumped without the jar: the JVM accepts a classpath that extends the
+dump-time one, and the archive maps for launches with and without it.
+
 An archive the JVM does not use (wrong magic, classpath or JVM mismatch) is
 deleted and rebuilt at exit; a launch that fails with CDS options is
 retried without them.  Under ``spark-submit``, with a running gateway or a
@@ -74,10 +81,17 @@ _JVM_CONF = ("spark.driver.memory", "spark.driver.extraJavaOptions", "spark.driv
 _PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def get_or_create(create: Callable[[dict], object], master: str, conf: dict[str, str]):
+def get_or_create(create: Callable[[dict], object], master: str, conf: dict[str, str], jar: str | None):
     """``create(conf)`` — the session builder — with the driver JVM launched
-    over the class-data archive when this process starts it."""
+    over the class-data archive when this process starts it, and ``jar``
+    (when not None) last on its classpath."""
     launch = _Launch.plan(master, conf)
+    dist = os.pathsep.join(filter(None, [os.environ.get("SPARK_DIST_CLASSPATH"), jar]))
+    with _environ("SPARK_DIST_CLASSPATH", dist or None):
+        return _create(create, launch, conf)
+
+
+def _create(create: Callable[[dict], object], launch: _Launch | None, conf: dict[str, str]):
     if launch is None:
         return create(conf)
     if launch.archive is None:
@@ -87,7 +101,7 @@ def get_or_create(create: Callable[[dict], object], master: str, conf: dict[str,
     from pyspark.errors import PySparkRuntimeError
 
     try:
-        with launch.conf_dir():
+        with _environ("SPARK_CONF_DIR", os.path.join(launch.cache, "conf")):
             spark = create(launch.apply(conf))
     except PySparkRuntimeError as e:
         if e.getCondition() != "JAVA_GATEWAY_EXITED":
@@ -100,6 +114,36 @@ def get_or_create(create: Callable[[dict], object], master: str, conf: dict[str,
     if not launch.mapped():
         launch.build_at_exit(spark)
     return spark
+
+
+def starts_jvm(master: str) -> bool:
+    """Whether creating a session for ``master`` launches this process's
+    driver JVM (not under ``spark-submit`` or a running gateway)."""
+    from pyspark import SparkContext
+
+    return (
+        master.startswith("local")
+        and SparkContext._gateway is None
+        and "PYSPARK_GATEWAY_PORT" not in os.environ
+    )
+
+
+@contextlib.contextmanager
+def _environ(name: str, value: str | None):
+    """``os.environ[name]`` set to ``value`` (unset if None) for the launch only."""
+    prev = os.environ.get(name)
+    _setenv(name, value)
+    try:
+        yield
+    finally:
+        _setenv(name, prev)
+
+
+def _setenv(name: str, value: str | None) -> None:
+    if value is None:
+        os.environ.pop(name, None)
+    else:
+        os.environ[name] = value
 
 
 def _cache_dir() -> str:
@@ -185,13 +229,7 @@ class _Launch:
 
     @classmethod
     def plan(cls, master: str, conf: dict[str, str]) -> _Launch | None:
-        from pyspark import SparkContext
-
-        if (
-            not master.startswith("local")
-            or SparkContext._gateway is not None
-            or "PYSPARK_GATEWAY_PORT" in os.environ
-        ):
+        if not starts_jvm(master):
             return None
         java_opts = conf.get("spark.driver.extraJavaOptions", "")
         if "-Xshare" in java_opts or "SharedArchiveFile" in java_opts or "ArchiveClassesAtExit" in java_opts:
@@ -240,19 +278,6 @@ class _Launch:
         ours = f"-XX:SharedArchiveFile={self.archive} {_log_opts(self.log_path)}"
         opts = " ".join(filter(None, [conf.get("spark.driver.extraJavaOptions"), ours]))
         return {**conf, "spark.driver.extraJavaOptions": opts}
-
-    @contextlib.contextmanager
-    def conf_dir(self):
-        """The empty conf dir, for the launch only."""
-        prev = os.environ.get("SPARK_CONF_DIR")
-        os.environ["SPARK_CONF_DIR"] = os.path.join(self.cache, "conf")
-        try:
-            yield
-        finally:
-            if prev is None:
-                del os.environ["SPARK_CONF_DIR"]
-            else:
-                os.environ["SPARK_CONF_DIR"] = prev
 
     def discard(self) -> None:
         """The JVM did not start: drop this launch's log and the archive."""
@@ -384,6 +409,9 @@ def _train(part: str, log_path: str, tmp: str, jvm_conf: str) -> None:
     ours = f"-XX:ArchiveClassesAtExit={part} -Djava.io.tmpdir={tmp} {_log_opts(log_path)}"
     opts = [conf.get("spark.driver.extraJavaOptions"), ours]
     conf["spark.driver.extraJavaOptions"] = " ".join(filter(None, opts))
+    # the stock filesystem keeps localfs's jar off the classpath: the archive
+    # then matches a launch without the jar and, as a prefix, one with it
+    conf["spark.hadoop.fs.file.impl"] = "org.apache.hadoop.fs.LocalFileSystem"
     spark = get_spark("ot_spark_cds_build", parallelism=2, extra_conf=conf)
     _workload(spark, tmp)
     spark.stop()

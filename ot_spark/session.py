@@ -5,7 +5,9 @@ skew-join splitting, small-partition coalescing), Arrow on (all Python
 boundaries are vectorized), shuffle partitions sized to parallelism rather
 than the 200 default.  On a real cluster the same builder is used with
 ``master`` left to spark-submit.  A driver JVM this process launches for a
-local master starts over a class-data-sharing archive (:mod:`ot_spark.cds`).
+local master starts over a class-data-sharing archive (:mod:`ot_spark.cds`)
+and writes ``file:`` paths through a filesystem that sets file modes
+in-process (:mod:`ot_spark.localfs`).
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from . import cds, pydaemon
+from . import cds, localfs, pydaemon
 
 
 def get_spark(
@@ -43,6 +45,13 @@ def get_spark(
     ``PYTHONPATH``, ahead of any ``spark.executorEnv.PYTHONPATH`` in
     ``extra_conf``: without it every Python UDF, not only the engine's,
     fails when the driver's working directory is not the checkout.
+
+    A driver JVM this call launches for a local master writes ``file:``
+    paths through ``localfs.CLASS`` (``spark.hadoop.fs.file.impl``), whose
+    jar goes last on its classpath: Hadoop's stock local filesystem starts
+    a ``chmod`` process per file and directory it writes.  A
+    ``spark.hadoop.fs.file.impl`` in ``extra_conf`` wins; without ``javac``
+    the stock filesystem stays.
     """
     if parallelism is None:
         parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -93,13 +102,19 @@ def get_spark(
         conf["spark.sql.sources.parallelPartitionDiscovery.threshold"] = str(2**31 - 1)
         conf["spark.python.daemon.module"] = pydaemon.__name__
     conf.update(extra_conf or {})
+    jar = None
     if master.startswith("local"):
         path = [cds._PKG_PARENT, conf.get("spark.executorEnv.PYTHONPATH")]
         conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(filter(None, path))
+        if "spark.hadoop.fs.file.impl" not in conf and cds.starts_jvm(master):
+            jar = localfs.jar()
+            if jar is not None:
+                conf["spark.hadoop.fs.file.impl"] = localfs.CLASS
     spark = cds.get_or_create(
         lambda c: SparkSession.builder.master(master).appName(app_name).config(map=c).getOrCreate(),
         master,
         conf,
+        jar,
     )
     spark.sparkContext.setLogLevel("WARN")
     return spark

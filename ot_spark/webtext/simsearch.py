@@ -342,21 +342,16 @@ def train_ivf_centroids_portable(
     return cent
 
 
-def with_ivf_cell(
-    df: DataFrame,
-    centroids: np.ndarray,
-    round_p: int | None = None,
-) -> DataFrame:
+def with_ivf_cell(df: DataFrame, centroids: np.ndarray) -> DataFrame:
     """Assign nearest centroid via JVM dot-product argmax (greatest + CASE —
-    no UDF; n_centroids is small by construction).  ``round_p`` rounds each
-    dot before the argmax — the oracle-portable mode (see
+    no UDF; n_centroids is small by construction).  Each dot is rounded to
+    ``ROUND_P`` decimals before the argmax — the oracle-portable mode (see
     ``train_ivf_centroids_portable``)."""
     dots = [
-        _dot_lit("embedding", c.tolist() if hasattr(c, "tolist") else c).alias(f"__d{i}")
+        F.round(_dot_lit("embedding", c.tolist() if hasattr(c, "tolist") else c), ROUND_P)
+        .alias(f"__d{i}")
         for i, c in enumerate(centroids)
     ]
-    if round_p is not None:
-        dots = [F.round(d, round_p).alias(f"__d{i}") for i, d in enumerate(dots)]
     tmp = df.select("*", *dots)
     # argmax with ties -> lowest index, as array_position of the max: the
     # when-chain form references its accumulator twice per step, so a

@@ -76,7 +76,7 @@ def test_ivf_argmax_position_parity(spark, sf_dir):
     including first-wins tie semantics."""
     emb = _emb(spark, sf_dir)
     cents = simsearch.train_ivf_centroids_portable(emb, n_centroids=8, sample=100, iters=1)
-    new = simsearch.with_ivf_cell(emb, cents, round_p=9).select("vec_id", "ivf_cell")
+    new = simsearch.with_ivf_cell(emb, cents).select("vec_id", "ivf_cell")
     # reference: the pre-round-7 when-chain over the same rounded dots
     vec = F.col("embedding").cast("array<double>")
     dots = [

@@ -187,7 +187,7 @@ def test_failed_launch_is_retried_without_cds(tmp_path, monkeypatch, caplog):
         return session
 
     conf = {"spark.app.name": "x", "spark.driver.memory": "40g"}
-    assert cds.get_or_create(create, "local[2]", conf) is session
+    assert cds.get_or_create(create, "local[2]", conf, None) is session
     (flags, conf_dir), (plain, plain_conf_dir) = seen
     assert f"-XX:SharedArchiveFile={archive}" in flags and conf_dir.startswith(str(tmp_path))
     assert plain is None and plain_conf_dir is None
@@ -219,3 +219,59 @@ def test_failed_build_turns_cds_off(tmp_path, monkeypatch, caplog):
     assert "class-data archive failed" in caplog.text
     monkeypatch.setattr(cds, "_archive_key", lambda *a: "k")
     assert cds._Launch.plan("local[2]", {}) is None
+
+
+def test_jar_goes_last_on_the_launch_classpath_only(tmp_path, monkeypatch, caplog):
+    """``get_or_create``'s jar is the launch's ``SPARK_DIST_CLASSPATH`` (an
+    entry the launcher puts last) and the launch still plans CDS; any other
+    entry there still turns CDS off.  The variable is restored after the
+    launch, so the build's child does not inherit the jar (no JVM needed)."""
+    from ot_spark import cds
+
+    _no_gateway(tmp_path, monkeypatch)
+    monkeypatch.delenv("SPARK_DIST_CLASSPATH", raising=False)
+    at_exit = []
+    monkeypatch.setattr(cds.atexit, "register", lambda *a: at_exit.append(a[0]))
+    seen = []
+    session = types.SimpleNamespace(sparkContext=types.SimpleNamespace(_gateway=types.SimpleNamespace(proc=None)))
+
+    def create(conf):
+        seen.append(os.environ.get("SPARK_DIST_CLASSPATH"))
+        return session
+
+    cds.get_or_create(create, "local[2]", {}, "/cache/fs.jar")
+    assert seen == ["/cache/fs.jar"] and at_exit == [cds._build]
+    assert "SPARK_DIST_CLASSPATH" not in os.environ
+    assert "skipped" not in caplog.text
+
+    monkeypatch.setenv("SPARK_DIST_CLASSPATH", "/hadoop/jars/*")
+    cds.get_or_create(create, "local[2]", {}, "/cache/fs.jar")
+    assert seen[1] == os.pathsep.join(["/hadoop/jars/*", "/cache/fs.jar"]) and at_exit == [cds._build]
+    assert "class-data sharing skipped" in caplog.text and "$SPARK_DIST_CLASSPATH" in caplog.text
+    assert os.environ["SPARK_DIST_CLASSPATH"] == "/hadoop/jars/*"
+
+
+def test_build_child_dumps_without_the_jar(tmp_path, monkeypatch):
+    """``_train``'s session keeps the stock ``file:`` filesystem, so its JVM's
+    classpath, and the archive it dumps, lack ``localfs``'s jar: the archive
+    then maps for launches without the jar and with it appended."""
+    from pyspark import SparkContext
+
+    from ot_spark import cds
+
+    _no_gateway(tmp_path, monkeypatch)
+    seen = {}
+    proc = types.SimpleNamespace(stdin=types.SimpleNamespace(close=lambda: None), wait=lambda timeout: 0)
+
+    def get_or_create(create, master, conf, jar):
+        seen.update(conf=conf, jar=jar)
+        monkeypatch.setattr(SparkContext, "_gateway", types.SimpleNamespace(proc=proc))
+        return types.SimpleNamespace(
+            sparkContext=types.SimpleNamespace(setLogLevel=lambda level: None), stop=lambda: None,
+        )
+
+    monkeypatch.setattr(cds, "get_or_create", get_or_create)
+    monkeypatch.setattr(cds, "_workload", lambda spark, tmp: None)
+    cds._train(str(tmp_path / "a.part"), str(tmp_path / "a.log"), str(tmp_path), "{}")
+    assert seen["jar"] is None
+    assert seen["conf"]["spark.hadoop.fs.file.impl"] == "org.apache.hadoop.fs.LocalFileSystem"
