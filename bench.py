@@ -79,15 +79,17 @@ def run_pipeline(spark, n_pages: int) -> tuple[float, int, list[float]]:
     return min(times), n_pages, [round(t, 3) for t in times]
 
 
-def time_query(spark, fn, sf_dir: str, repeats: int) -> list[float]:
-    """Wall seconds of ``repeats`` runs of one gate query: build the
-    DataFrame (driver-side index builds and training collects included)
-    and write it to the noop sink."""
+def time_query(spark, fn, sf_dir: str, repeats: int) -> list[tuple[float, float]]:
+    """(build, action) wall seconds of ``repeats`` runs of one gate query:
+    building the DataFrame (driver-side index builds and training collects
+    included), then writing it to the noop sink."""
     runs = []
     for _ in range(repeats):
         t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        runs.append(round(time.time() - t0, 3))
+        df = fn(spark, sf_dir)
+        t1 = time.time()
+        df.write.format("noop").mode("overwrite").save()
+        runs.append((t1 - t0, time.time() - t1))
     return runs
 
 
@@ -117,6 +119,7 @@ def main() -> None:
     # Both runs are recorded in queries_cold for drift forensics.
     q_times: dict[str, object] = {}
     q_cold: dict[str, object] = {}
+    q_split: dict[str, object] = {}
     errors: dict[str, str] = {}
     skipped: list[str] = []
     # Soft deadline for the per-query phase: under a 2-4x noisy-neighbor
@@ -134,8 +137,10 @@ def main() -> None:
             continue
         try:
             runs = time_query(spark, fn, sf_dir, 2)
-            q_times[name] = min(runs)
-            q_cold[name] = runs
+            totals = [round(b + a, 3) for b, a in runs]
+            q_times[name] = min(totals)
+            q_cold[name] = totals
+            q_split[name] = [[round(b, 3), round(a, 3)] for b, a in runs]
         except Exception as exc:  # noqa: BLE001 — isolate per query
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
 
@@ -167,6 +172,7 @@ def main() -> None:
     )
     detail = {
         "queries_all_runs": q_cold,
+        "queries_build_action_runs": q_split,
         "flagship_runs_sec": flagship_all,
         "flagship_steady_median_last5_sec": flagship_steady,
         "protocol": "per-query run-twice-min; write-query cap "

@@ -12,9 +12,9 @@ web pages ``pages(url, warc_ts, html, text, lang)``:
 - segment densification / way split   (ref: src/handler/interpolate.rs)
 - lineage + checkpoint resume         (north_rule requirement)
 
-Architecture is Spark-first: DataFrame/Column algebra everywhere, pandas/
-Arrow UDFs only for geometry & raster inner loops, zero per-row Python UDFs,
-zero RDDs.  See SURVEY.md for the full mapping.
+Architecture is Spark-first: DataFrame/Column algebra everywhere, Arrow
+UDFs for the spatial inner loops (pandas UDFs only in ``webtext/``), zero
+per-row Python UDFs, zero RDDs.  See SURVEY.md for the full mapping.
 """
 
 __version__ = "0.1.0"

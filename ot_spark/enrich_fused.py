@@ -1,11 +1,11 @@
 """The spatial enrichment: ONE Arrow round-trip for all Python work.
 
 Admin PIP (area.rs:366-401), the raster lookup (geotiff.rs) and the
-S2/H3 tile encodes run in a single struct-returning pandas UDF, so a row
-crosses the JVM<->Python boundary once with one Python worker pool,
-whichever of them a caller asks for.  This is the only enrichment
-operator: the pipeline, the bench and the gate queries all call it with
-the output families they need.
+S2/H3 tile encodes run in one struct-returning Arrow UDF over ``pyarrow``
+arrays, so a row crosses the JVM<->Python boundary once with one Python
+worker pool, whichever of them a caller asks for.  This is the only
+enrichment operator: the pipeline, the bench and the gate queries all
+call it with the output families they need.
 
 The JVM side still does everything vectorizable in codegen (grid cell,
 raster routing, skip/keep-original masks); Python does only the numpy
@@ -19,7 +19,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -29,7 +29,7 @@ from pyspark.sql.types import (
 from .area_index import AreaIndex
 from .cells import grid_cell
 from .raster import (
-    ROUTE_JOIN_THRESHOLD, RasterIndex, gather_by_raster_id, route_col,
+    ROUTE_JOIN_THRESHOLD, RasterIndex, f64, gather_by_raster_id, route_col,
     route_via_cell_join,
 )
 from .h3x import h3x_cell_ids, h3x_parent_col
@@ -97,57 +97,49 @@ def spatial_enrich(
     if finest_res is not None:
         encoders.append((f"h3_{finest_res}", h3x_cell_ids, finest_res))
     fields += [StructField(name, LongType()) for name, _, _ in encoders]
+    names = [f_.name for f_ in fields]
 
     bc = df.sparkSession.sparkContext.broadcast((
         area_index.cell_lookup if area_index is not None else None,
         raster_index.grids() if raster_index is not None else None,
     ))
 
-    @F.pandas_udf(StructType(fields))
-    def enrich(it: Iterator[tuple[pd.Series, ...]]) -> Iterator[pd.DataFrame]:
+    @F.arrow_udf(StructType(fields))
+    def enrich(it: Iterator[tuple[pa.Array, ...]]) -> Iterator[pa.Array]:
         kernel, rgrids = bc.value
-        for *opt_s, lon_s, lat_s in it:
-            n = len(lon_s)
-            lon_np = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            lat_np = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            opt = iter(opt_s)
-            out: dict[str, pd.Series] = {}
+        for *opt_a, lon_a, lat_a in it:
+            lon_np, lat_np = f64(lon_a), f64(lat_a)
+            opt = iter(opt_a)
+            out = []
             if kernel is not None:
-                out["admin_key"] = pd.Series(kernel.lookup(
-                    next(opt).to_numpy(dtype=np.float64, na_value=np.nan),
-                    lon_np, lat_np,
-                ))
+                keys = kernel.lookup(f64(next(opt)), lon_np, lat_np)
+                out.append(pa.array(keys, type=pa.string()))
             if rgrids is not None:
-                out["elev"] = pd.Series(
-                    gather_by_raster_id(rgrids, next(opt), lat_np, lon_np)
-                )
+                elev = gather_by_raster_id(rgrids, next(opt), lat_np, lon_np)
+                out.append(pa.array(elev, from_pandas=True))  # NaN -> NULL
             ok = ~(np.isnan(lat_np) | np.isnan(lon_np))
-            for name, encode, level in encoders:
-                ids = np.zeros(n, dtype=np.int64)
+            for _, encode, level in encoders:
+                ids = np.zeros(len(ok), dtype=np.int64)
                 if ok.any():
                     ids[ok] = encode(lat_np[ok], lon_np[ok], level)
-                # nullable Int64: float64 would corrupt ids beyond 2^53
-                ser = pd.Series(ids, dtype="Int64")
-                ser[~ok] = pd.NA
-                out[name] = ser
-            yield pd.DataFrame(out)
+                out.append(pa.array(ids, mask=~ok))
+            yield pa.StructArray.from_arrays(out, names=names)
 
     # nondeterministic marker: a downstream projection of a SUBSET of __e
     # fields lets column pruning clone the UDF once per field otherwise
     enrich_nd = enrich.asNondeterministic()
     df = df.withColumn("__e", enrich_nd(*inputs, lon, lat))
-    for f_ in fields:
-        value = F.col(f"__e.{f_.name}")
-        if f_.name == "elev":
+    cols = {}
+    for name in names:
+        value = F.col(f"__e.{name}")
+        if name == "elev":
             # skip-flagged rows were routed to NULL above, so their
             # looked-up value is already NULL; an original value is
             # coalesced back
             value = F.round(value, 2)
             value = F.coalesce(F.col("elev"), value) if keep else value
-        df = df.withColumn(f_.name, value)
+        cols[name] = value
     for r in sorted(h3_resolutions):
         if r != finest_res:
-            df = df.withColumn(
-                f"h3_{r}", h3x_parent_col(F.col(f"h3_{finest_res}"), r)
-            )
-    return df.drop("__e")
+            cols[f"h3_{r}"] = h3x_parent_col(F.col(f"__e.h3_{finest_res}"), r)
+    return df.withColumns(cols).drop("__e")

@@ -23,11 +23,12 @@ Spark shape: the ROUTING INDEX (bboxes + pixel sizes, a few KB/tile) is
 rendered as a literal CASE expression in finest-first order — pure
 whole-stage-codegen arithmetic, zero shuffle, exactly the reference's
 "sorted candidates, first hit" rule.  The PIXEL GRIDS ride to executors as
-a broadcast of numpy arrays and are gathered vectorized inside an
-Arrow-batched pandas UDF.  At 100 TB this still holds while rasters fit
-executor memory (global DEMs at 90 m ≈ a few GB as float32 — broadcastable);
-beyond that the same API would swap the broadcast for a grid-cell-bucketed
-join against a raster-tile table, which cells.py already supports.
+a broadcast of numpy arrays and are gathered vectorized inside an Arrow
+UDF (an iterator over ``pyarrow`` arrays, no pandas).  At 100 TB this
+still holds while rasters fit executor memory (global DEMs at 90 m ≈ a
+few GB as float32 — broadcastable); beyond that the same API would swap
+the broadcast for a grid-cell-bucketed join against a raster-tile table,
+which cells.py already supports.
 """
 
 from __future__ import annotations
@@ -35,7 +36,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -140,11 +141,19 @@ def _gather_elevations(pos, grids: list, lat_np, lon_np):
     return out
 
 
-def gather_by_raster_id(grids: dict, rid_s: pd.Series, lat_np, lon_np):
+def f64(a: pa.Array) -> np.ndarray:
+    """An Arrow batch column as the kernels' float64 numpy, NULL -> NaN."""
+    return np.asarray(a.to_numpy(zero_copy_only=False), dtype=np.float64)
+
+
+def gather_by_raster_id(grids: dict, rid: pa.Array, lat_np, lon_np):
     """:func:`_gather_elevations` over a batch's raster_id column: the
-    ids are factorized to positions once per batch (NULL -> -1)."""
-    pos, ids = pd.factorize(rid_s)
-    return _gather_elevations(pos, [grids.get(r) for r in ids], lat_np, lon_np)
+    ids are dictionary-encoded to positions once per batch
+    (``pyarrow.compute.dictionary_encode``; NULL -> -1)."""
+    enc = rid.dictionary_encode()
+    pos = enc.indices.fill_null(-1).to_numpy()
+    tiles = [grids.get(r) for r in enc.dictionary.to_pylist()]
+    return _gather_elevations(pos, tiles, lat_np, lon_np)
 
 
 def make_lookup3(index: RasterIndex, spark):
@@ -163,19 +172,12 @@ def make_lookup3(index: RasterIndex, spark):
     the endpoint elevations."""
     bc = spark.sparkContext.broadcast((index.routing(), index.grids()))
 
-    @F.pandas_udf("ev_p double, ev_c double, ev_n double")
-    def lookup3(
-        it: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series, pd.Series, pd.Series]]
-    ) -> Iterator[pd.DataFrame]:
+    @F.arrow_udf("ev_p double, ev_c double, ev_n double")
+    def lookup3(it: Iterator[tuple[pa.Array, ...]]) -> Iterator[pa.Array]:
         routing, grids = bc.value
         tile_grids = [grids.get(t["raster_id"]) for t in routing]
-        for flat_s, flon_s, slat_s, slon_s, i_s, n_s in it:
-            flat = flat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            flon = flon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            slat = slat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            slon = slon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            i_f = i_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            n_f = n_s.to_numpy(dtype=np.float64, na_value=np.nan)
+        for cols in it:
+            flat, flon, slat, slon, i_f, n_f = map(f64, cols)
             nrows = len(flat)
             # one concatenated (3N) routing + gather pass over the three
             # point sets: prev | center | next
@@ -212,11 +214,8 @@ def make_lookup3(index: RasterIndex, spark):
                 idx[m] = j
                 unrouted &= ~m
             ev = _gather_elevations(idx, tile_grids, lat, lon)
-            yield pd.DataFrame({
-                "ev_p": ev[:nrows],
-                "ev_c": ev[nrows:2 * nrows],
-                "ev_n": ev[2 * nrows:],
-            })
+            out = [pa.array(ev[k * nrows:(k + 1) * nrows], from_pandas=True) for k in range(3)]
+            yield pa.StructArray.from_arrays(out, names=["ev_p", "ev_c", "ev_n"])
 
     # guide §4.4: the keep-filter references the UDF's output columns; left
     # deterministic, the optimizer pushes the filter below the projection and

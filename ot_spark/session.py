@@ -52,6 +52,13 @@ def get_spark(
     a ``chmod`` process per file and directory it writes.  A
     ``spark.hadoop.fs.file.impl`` in ``extra_conf`` wins; without ``javac``
     the stock filesystem stays.
+
+    Call-site capture is off (``spark.python.sql.dataFrameDebugging.enabled``):
+    it costs ~4 py4j round trips per Column method, most of plan-building
+    time, and only buys errors that name the Python line that built the
+    failing expression.  ``extra_conf`` can set it back to ``"true"`` in the
+    process's first ``get_spark``: PySpark reads it once per process, on
+    first use, and caches it.
     """
     if parallelism is None:
         parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -93,6 +100,7 @@ def get_spark(
         # Capping hugeMethodLimit at the JIT threshold makes Spark fall
         # back to the per-operator path exactly when fusion stops paying.
         "spark.sql.codegen.hugeMethodLimit": "8000",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
     if master.startswith("local"):
         # Past this many paths (default 32; the 64-bucket read-back lists

@@ -23,9 +23,8 @@ def indices(spark, fixture_dir):
     return idx, ridx
 
 
-def test_fused_equals_composed(spark, pages, indices, enrich_ref):
-    """The all-outputs call: every column equals its per-row reference
-    (the test id predates the per-row references)."""
+def test_all_outputs_match_per_row_reference(spark, pages, indices, enrich_ref):
+    """The all-outputs call: every column equals its per-row reference."""
     idx, ridx = indices
     df = parse.with_coordinates(pages).select("url", "lat", "lon")
 

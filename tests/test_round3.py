@@ -149,12 +149,11 @@ def _many_tiles(n: int) -> raster.RasterIndex:
     return raster.RasterIndex(tiles)
 
 
-def test_fused_scale_paths_match_composed(spark, enrich_ref):
+def test_scale_paths_match_per_row_reference(spark, enrich_ref):
     # >1000 border cells (the CellLookup kernel holds them outside the
     # plan); >ROUTE_JOIN_THRESHOLD tiles -> cell-join routing (no CASE chain).
     # route_col's literal chain at 500 tiles would StackOverflow the JVM at
     # plan build — this test passing AT ALL proves the fallback engaged.
-    # Checked against per-row references (the test id predates them).
     idx = _many_border_index(1500)
     ridx = _many_tiles(500)
     rows = [

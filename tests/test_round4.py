@@ -146,7 +146,12 @@ def test_flagship_plan_stays_fused(spark):
 
     The same holds for each output selection of spatial_enrich, whose UDF
     returns only the requested fields: an admin-only call runs no tile
-    encoder and a tiles-only call no lookup."""
+    encoder and a tiles-only call no lookup.  That node runs an Arrow
+    iterator UDF over ``pyarrow`` arrays, not a pandas one."""
+    import re
+
+    from pyspark.util import PythonEvalType
+
     import gate_queries.common as entrymod
     from ot_spark import filters, parse
     from ot_spark.benchdata import pages_range_df
@@ -180,6 +185,10 @@ def test_flagship_plan_stays_fused(spark):
         assert python_nodes == 1, (
             f"{name}: expected exactly 1 Arrow node, got {python_nodes}:\n{plan}"
         )
+        eval_types = re.findall(
+            r"^\(\d+\) ArrowEvalPython\nInput.*\nArguments: .*, (\d+)$", plan, re.M
+        )
+        assert eval_types == [str(PythonEvalType.SQL_SCALAR_ARROW_ITER_UDF)], (name, eval_types)
         # the admin lookup runs inside that node: no broadcast join, and no
         # driver-side table planned as a Python RDD that every execution of
         # the plan would rebuild with a Python job

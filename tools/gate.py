@@ -14,8 +14,10 @@ named subset of it, four ways over one Spark session.
   recomputes and compares.
 - ``time``: wall seconds of REPEATS build -> noop-write runs per query,
   bench.py's own measurement (``bench.time_query``), with bench.py's
-  write-query cap.  For a before/after, run it once per tree with
-  ``PYTHONPATH`` pointing at a checkout of the other commit.
+  write-query cap.  Besides each run's total it prints the minimum
+  DataFrame build time (driver work) and the minimum action time apart.
+  For a before/after, run it once per tree with ``PYTHONPATH`` pointing
+  at a checkout of the other commit.
 - ``plan``: per-query counts of shuffle and broadcast exchanges, join
   kinds and Arrow nodes from the formatted physical plan; ``--out``
   also writes each plan to DIR/<query>.txt.  A row-at-a-time Python UDF
@@ -121,7 +123,9 @@ def _time(args, spark):
 
     def check(name, fn):
         runs = bench.time_query(spark, fn, args.sf, args.repeats)
-        return True, f"min={min(runs, default=None)} runs={runs}"
+        totals = [round(b + a, 3) for b, a in runs]
+        build, action = (round(min(ts), 3) for ts in zip(*runs))
+        return True, f"min={min(totals)} build_min={build} action_min={action} runs={totals}"
 
     return check
 
