@@ -38,24 +38,3 @@ class PipelineMetrics:
             kv = " ".join(f"{k}={v}" for k, v in vals.items())
             lines.append(f"{name}: {kv}")
         return "\n".join(lines)
-
-    def trace_elements(self, df: DataFrame, ids: list[int], stage: str) -> DataFrame:
-        """ElementPrinter analog (reference src/handler/info.rs:61-100):
-        record the named elements as they pass this stage.  Spark-first
-        shape: a filtered ``collect_list`` aggregate inside the stage's
-        ``observe`` — the trace piggybacks on the action that materializes
-        the plan (map-side ``isin`` filter, bounded payload: len(ids) rows
-        max), no extra scan and no driver loop.  Read the captured rows
-        from :meth:`get` under ``<stage>.traced`` after the action; each
-        traced row carries the frame's first 8 columns."""
-        payload = F.when(
-            F.col("doc_id").isin([int(i) for i in ids]),
-            F.struct(*df.columns[:8]),
-        )
-        obs = Observation(stage)
-        self._obs[stage] = obs
-        return df.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.collect_list(payload).alias("traced"),
-        )

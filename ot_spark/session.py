@@ -4,10 +4,8 @@ Local-mode testing, cluster-shaped configuration: AQE on (runtime re-plan,
 skew-join splitting, small-partition coalescing), Arrow on (all Python
 boundaries are vectorized), shuffle partitions sized to parallelism rather
 than the 200 default.  On a real cluster the same builder is used with
-``master`` left to spark-submit.  A driver JVM this process launches for a
-local master starts over a class-data-sharing archive (:mod:`ot_spark.cds`)
-and writes ``file:`` paths through a filesystem that sets file modes
-in-process (:mod:`ot_spark.localfs`).
+``master`` left to spark-submit.  How a local master's driver JVM and
+Python workers start is :mod:`ot_spark.launch`'s.
 """
 
 from __future__ import annotations
@@ -18,7 +16,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from . import cds, localfs, pydaemon
+from . import launch
 
 
 def get_spark(
@@ -35,23 +33,9 @@ def get_spark(
     partitions default to 2x parallelism — enough to keep AQE's coalescing
     busy without tiny-task overhead at local scale; at 100 TB this knob is
     instead set to ~2-3x total executor cores and AQE coalesces down.
-    A ``spark.driver.extraJavaOptions`` in ``extra_conf`` is kept; the
-    class-data-sharing flags are appended to it.
-
-    A local master's Python workers fork from :mod:`ot_spark.pydaemon`, so
-    a UDF task does not re-read ``pyspark.zip``'s directory (100-190 ms a
-    task on CPython 3.11; gh-103200).  That daemon imports ``ot_spark``
-    before any task does, so the package root goes first on the workers'
-    ``PYTHONPATH``, ahead of any ``spark.executorEnv.PYTHONPATH`` in
-    ``extra_conf``: without it every Python UDF, not only the engine's,
-    fails when the driver's working directory is not the checkout.
-
-    A driver JVM this call launches for a local master writes ``file:``
-    paths through ``localfs.CLASS`` (``spark.hadoop.fs.file.impl``), whose
-    jar goes last on its classpath: Hadoop's stock local filesystem starts
-    a ``chmod`` process per file and directory it writes.  A
-    ``spark.hadoop.fs.file.impl`` in ``extra_conf`` wins; without ``javac``
-    the stock filesystem stays.
+    ``extra_conf`` overrides any key set here; a local master's launch
+    settings (Python workers, local writes, class-data sharing) are
+    :func:`ot_spark.launch.create`'s.
 
     Call-site capture is off (``spark.python.sql.dataFrameDebugging.enabled``):
     it costs ~4 py4j round trips per Column method, most of plan-building
@@ -88,11 +72,8 @@ def get_spark(
         # task).  Measured: inverted_index 2.8s -> 1.5s warm at 10x sf0.1.
         # The rule only prunes empty-array rows pre-shuffle — a no-op
         # semantically, and our explodes sit above the fan repartition
-        # where the early prune saves nothing.  Overridable per deploy.
-        "spark.sql.optimizer.excludedRules": os.environ.get(
-            "OT_SPARK_EXCLUDED_RULES",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        ),
+        # where the early prune saves nothing.
+        "spark.sql.optimizer.excludedRules": "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         # HotSpot never JIT-compiles methods over ~8 KB of bytecode, so a
         # whole-stage-fused method past that limit runs JVM-INTERPRETED —
         # measured 3x slower than per-operator execution on the Bloom
@@ -108,21 +89,10 @@ def get_spark(
         # local listing: on 4 cores, reads of a 1920-run-dir table were ~0.1 s
         # faster listed on the driver.  Cluster masters keep the default.
         conf["spark.sql.sources.parallelPartitionDiscovery.threshold"] = str(2**31 - 1)
-        conf["spark.python.daemon.module"] = pydaemon.__name__
     conf.update(extra_conf or {})
-    jar = None
-    if master.startswith("local"):
-        path = [cds._PKG_PARENT, conf.get("spark.executorEnv.PYTHONPATH")]
-        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(filter(None, path))
-        if "spark.hadoop.fs.file.impl" not in conf and cds.starts_jvm(master):
-            jar = localfs.jar()
-            if jar is not None:
-                conf["spark.hadoop.fs.file.impl"] = localfs.CLASS
-    spark = cds.get_or_create(
+    spark = launch.create(
         lambda c: SparkSession.builder.master(master).appName(app_name).config(map=c).getOrCreate(),
-        master,
-        conf,
-        jar,
+        master, conf,
     )
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -1,6 +1,6 @@
 """Local writes without a ``chmod`` child process per file: a local-master
-``get_spark`` session names ``localfs.CLASS`` as Spark's ``file:``
-filesystem, whose jar ``localfs.jar`` compiles once into the cache."""
+``get_spark`` session names ``launch.FS_CLASS`` as Spark's ``file:``
+filesystem, whose jar ``launch._fs_jar`` compiles once into the cache."""
 
 from __future__ import annotations
 
@@ -14,13 +14,13 @@ import zipfile
 
 import pytest
 
-from ot_spark import cds, localfs
-from ot_spark import session as session_mod
+from ot_spark import launch
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # Hadoop's fs.permissions.umask-mode default: new dirs 0755, new files 0644
 HADOOP_UMASK = 0o022
 STOCK = "org.apache.hadoop.fs.LocalFileSystem"
+_CREATE = launch.create  # the real one, for tests that wrap it
 
 _WRITE = """
 import json, os, stat, sys
@@ -76,7 +76,7 @@ def test_partitioned_write_starts_no_chmod(tmp_path):
     ``chmod`` per file and directory (so the wrapper sees spawns)."""
     ours, ours_calls = _write(tmp_path, "nio", {})
     stock, stock_calls = _write(tmp_path, "stock", {"spark.hadoop.fs.file.impl": STOCK})
-    assert ours["impl"] == localfs.CLASS and stock["impl"] == STOCK
+    assert ours["impl"] == launch.FS_CLASS and stock["impl"] == STOCK
     assert ours_calls == []
     assert len(stock_calls) > 0
     expected = {"dir": [0o777 & ~HADOOP_UMASK], "file": [0o666 & ~HADOOP_UMASK], "crc": [0o666 & ~HADOOP_UMASK]}
@@ -90,7 +90,7 @@ def test_partitioned_write_starts_no_chmod(tmp_path):
 
 @pytest.fixture
 def counted_javac(tmp_path, monkeypatch):
-    """``localfs.jar`` with the cache in ``tmp_path``; the list records each
+    """``launch._fs_jar`` with the cache in ``tmp_path``; the list records each
     ``javac`` it runs."""
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
     calls = []
@@ -100,67 +100,80 @@ def counted_javac(tmp_path, monkeypatch):
         calls.append(cmd)
         return run(cmd, **kw)
 
-    monkeypatch.setattr(localfs.subprocess, "run", counting)
+    monkeypatch.setattr(launch.subprocess, "run", counting)
     return calls
 
 
 def test_jar_is_built_once(counted_javac, tmp_path):
-    first = localfs.jar()
+    first = launch._fs_jar()
     assert len(counted_javac) == 1 and first.startswith(str(tmp_path))
     with zipfile.ZipFile(first) as zf:
         assert sorted(zf.namelist()) == [
             "ot_spark/jvm/NioLocalFileSystem$Raw.class", "ot_spark/jvm/NioLocalFileSystem.class",
         ]
-    assert localfs.jar() == first
+    assert launch._fs_jar() == first
     assert len(counted_javac) == 1
     assert os.listdir(os.path.dirname(first)) == [os.path.basename(first)]  # no temp file left
 
 
 def test_changed_source_builds_a_new_jar(counted_javac, tmp_path, monkeypatch):
-    first = localfs.jar()
+    first = launch._fs_jar()
     source = tmp_path / "NioLocalFileSystem.java"
-    with open(localfs._SOURCE) as fh:
+    with open(launch._FS_SOURCE) as fh:
         source.write_text(fh.read() + "// changed\n")
-    monkeypatch.setattr(localfs, "_SOURCE", str(source))
-    second = localfs.jar()
+    monkeypatch.setattr(launch, "_FS_SOURCE", str(source))
+    second = launch._fs_jar()
     assert second != first and os.path.isfile(first) and os.path.isfile(second)
     assert len(counted_javac) == 2
 
 
-def _launch_of(monkeypatch, **kw) -> dict:
-    """``get_spark``'s conf and jar as they reach ``cds.get_or_create``, with
-    no JVM started."""
+def _no_gateway(monkeypatch):
+    """A launch whose JVM would be this process's."""
     from pyspark import SparkContext
 
     monkeypatch.setattr(SparkContext, "_gateway", None)
     monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+
+
+def _launch_of(monkeypatch, **kw) -> dict:
+    """``get_spark``'s conf and ``SPARK_DIST_CLASSPATH`` as they reach the
+    session builder through ``launch.create``, with no JVM started and no
+    class-data sharing planned."""
+    from ot_spark import session as session_mod
+
     seen = {}
 
-    def get_or_create(create, master, conf, jar):
-        seen.update(conf=conf, jar=jar)
+    def build(conf):
+        seen.update(conf=conf, dist=os.environ.get("SPARK_DIST_CLASSPATH"))
         return types.SimpleNamespace(sparkContext=types.SimpleNamespace(setLogLevel=lambda level: None))
 
-    monkeypatch.setattr(cds, "get_or_create", get_or_create)
+    monkeypatch.setattr(launch, "create", lambda _, master, conf: _CREATE(build, master, conf))
+    monkeypatch.setattr(launch, "_cds_plan", lambda conf: None)
     session_mod.get_spark("localfs_conf", parallelism=2, **kw)
     return seen
 
 
 def test_session_names_the_class_and_passes_the_jar(tmp_path, monkeypatch):
+    _no_gateway(monkeypatch)
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    monkeypatch.delenv("SPARK_DIST_CLASSPATH", raising=False)
     seen = _launch_of(monkeypatch)
-    assert seen["conf"]["spark.hadoop.fs.file.impl"] == localfs.CLASS
-    assert seen["jar"] == localfs.jar()
+    assert seen["conf"]["spark.hadoop.fs.file.impl"] == launch.FS_CLASS
+    assert seen["dist"] == launch._fs_jar() and seen["dist"] is not None
     seen = _launch_of(monkeypatch, extra_conf={"spark.hadoop.fs.file.impl": STOCK})
-    assert seen["conf"]["spark.hadoop.fs.file.impl"] == STOCK and seen["jar"] is None
+    assert seen["conf"]["spark.hadoop.fs.file.impl"] == STOCK and seen["dist"] is None
     seen = _launch_of(monkeypatch, master="spark://cluster:7077")
-    assert "spark.hadoop.fs.file.impl" not in seen["conf"] and seen["jar"] is None
+    assert "spark.hadoop.fs.file.impl" not in seen["conf"] and seen["dist"] is None
 
 
 def test_no_javac_keeps_the_stock_filesystem(tmp_path, monkeypatch, caplog):
+    _no_gateway(monkeypatch)
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
     monkeypatch.setenv("PATH", str(tmp_path))  # nothing on it
-    seen = _launch_of(monkeypatch)
-    assert "spark.hadoop.fs.file.impl" not in seen["conf"] and seen["jar"] is None
-    (warning,) = [r for r in caplog.records if r.name == localfs.__name__]
+    seen = []
+    # -Xshare: the launch plans no class-data sharing, so its only warning is the jar's
+    launch.create(seen.append, "local[2]", {"spark.driver.extraJavaOptions": "-Xshare:auto"})
+    assert "spark.hadoop.fs.file.impl" not in seen[0]
+    (warning,) = [r for r in caplog.records if r.name == launch.__name__]
     assert "no javac" in warning.getMessage()
     assert not os.path.exists(tmp_path / "ot_spark" / "jvm")

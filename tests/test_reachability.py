@@ -16,6 +16,12 @@ Three static walks (no Spark, nothing imported), all from the same roots:
   attribute of anything else names no module-level definition.  Reached
   code is the whole of each root file, every module's import-time
   statements, and the body of each reached or allowed definition.
+- Methods: a method (other than a dunder, which Python calls implicitly)
+  of a reached class must be named as an attribute (``obj.method``) by
+  reached code, or be on ``ALLOWED`` as ``module.Class.method``.  Methods
+  match by name, whatever the object's type; a reached class's own code
+  is its bases, decorators, class-level statements and dunder methods,
+  and a method's body counts only once the method is reached.
 - Parameters: every defaulted parameter of a module-level def or method
   in those files must be passed a value other than its default literal
   by some call in program code (the roots, ``ot_spark/`` and
@@ -40,8 +46,8 @@ ALLOWED: dict[str, str] = {
     "__spark_entry__.entry": "driver contract: the driver calls it by name",
     "__spark_entry__.queries": "driver contract: the driver calls it by name",
     "__spark_entry__.oracle_sql": "driver contract: the driver calls it by name",
-    "ot_spark.cds._train": "run by name in a child interpreter (`python -c`)",
-    "ot_spark.cds._workload": "run by name in a child interpreter (`python -c`)",
+    "ot_spark.launch._train": "run by name in a child interpreter (`python -c`)",
+    "ot_spark.launch._workload": "run by name in a child interpreter (`python -c`)",
     "ot_spark.h3x.h3x_parent": "numpy parent truncation the JVM h3x_parent_col is tested against",
     "ot_spark.webtext.simsearch._dot": "Column-built dot product the unrolled kernel is tested against",
     "ot_spark.webtext.simsearch._l2sq": "Column-built squared L2 the unrolled kernel is tested against",
@@ -154,14 +160,27 @@ def all_modules() -> set[str]:
 Target = tuple[str, "str | None"]  # (module, name), or (module, None): the module
 
 
+def _methods(c: ast.ClassDef) -> dict[str, ast.AST]:
+    """A class's methods that are called by name (not dunders)."""
+    return {
+        f.name: f for f in c.body
+        if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef)) and not f.name.startswith("__")
+    }
+
+
 def _top_level(tree: ast.Module) -> tuple[dict[str, list[ast.AST]], list[ast.AST]]:
-    """(defined name -> the statements whose code belongs to it, the other
-    import-time statements).  Dunder names (``__version__``) are not
-    definitions."""
+    """(defined name -> the code that belongs to it, the other import-time
+    statements).  A class's code leaves out its named methods.  Dunder
+    names (``__version__``) are not definitions."""
     defs: dict[str, list[ast.AST]] = {}
     free: list[ast.AST] = []
     for s in tree.body:
-        if isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        if isinstance(s, ast.ClassDef):
+            methods = _methods(s).values()
+            shell = s.decorator_list + s.bases + s.keywords
+            defs.setdefault(s.name, []).extend(shell + [b for b in s.body if b not in methods])
+            continue
+        if isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef)):
             names = [s.name]
         elif isinstance(s, (ast.Assign, ast.AnnAssign)):
             targets = s.targets if isinstance(s, ast.Assign) else [s.target]
@@ -245,13 +264,16 @@ def _refs(node: ast.AST, binds: dict[str, set[Target]], own: str | None,
 def unreached_names(
     checked: dict[str, ast.Module], roots: list[ast.Module], allowed: set[str]
 ) -> list[str]:
-    """Qualified names (``module.name``) ``checked`` defines that neither
-    ``roots`` nor the code they reach uses, minus ``allowed`` — which are
-    walked as roots themselves."""
+    """Qualified names (``module.name``, ``module.Class.method``)
+    ``checked`` defines that neither ``roots`` nor the code they reach
+    uses, minus ``allowed`` — which are walked as roots themselves.  A
+    method of an unreached class is not listed: its class is."""
     modules = set(checked)
     tables = {}
     todo: list[tuple[str | None, ast.AST]] = [(None, r) for r in roots]
     defined: set[str] = set()
+    # class (module, name) -> its methods as (qualified name, method name, node)
+    methods: dict[Target, list[tuple[str, str, ast.AST]]] = {}
     for mod, tree in checked.items():
         defs, free = _top_level(tree)
         tables[mod] = (defs, _bindings(mod, tree, modules))
@@ -260,8 +282,20 @@ def unreached_names(
             defined.add(f"{mod}.{name}")
             if f"{mod}.{name}" in allowed:
                 todo += [(mod, s) for s in nodes]
+        for c in tree.body:
+            if isinstance(c, ast.ClassDef):
+                for m, node in _methods(c).items():
+                    methods.setdefault((mod, c.name), []).append((f"{mod}.{c.name}.{m}", m, node))
     root_binds = {id(r): _bindings(None, r, modules) for r in roots}
     reached: set[Target] = set()
+    reached_methods: set[str] = set()
+    attrs: set[str] = set()  # attribute names reached code uses
+    waiting: dict[str, list[tuple[str, str, ast.AST]]] = {}  # method name -> reach_method args
+
+    def reach_method(mod: str, qual: str, node: ast.AST) -> None:
+        if qual not in reached_methods:
+            reached_methods.add(qual)
+            todo.append((mod, node))
 
     def reach(target: Target) -> None:
         if target in reached:
@@ -271,6 +305,11 @@ def unreached_names(
         if name is not None:
             defs, binds = tables[mod]
             todo.extend((mod, s) for s in defs.get(name, []))
+            for qual, m, node in methods.get(target, []):
+                if m in attrs or qual in allowed:
+                    reach_method(mod, qual, node)
+                else:
+                    waiting.setdefault(m, []).append((mod, qual, node))
             # a package re-exporting an imported name reaches its source
             for via in binds.get(name, set()):
                 reach(via)
@@ -280,7 +319,17 @@ def unreached_names(
         defs, binds = tables[mod] if mod is not None else ({}, root_binds[id(node)])
         for target in _refs(node, binds, mod, defs, modules):
             reach(target)
-    return sorted(q for q in defined - allowed if tuple(q.rsplit(".", 1)) not in reached)
+        for n in ast.walk(node):
+            if isinstance(n, ast.Attribute) and n.attr not in attrs:
+                attrs.add(n.attr)
+                for args in waiting.pop(n.attr, []):
+                    reach_method(*args)
+    unreached = [q for q in defined - allowed if tuple(q.rsplit(".", 1)) not in reached]
+    unreached += [
+        qual for cls, ms in methods.items() if cls in reached
+        for qual, _, _ in ms if qual not in reached_methods | allowed
+    ]
+    return sorted(unreached)
 
 
 def _checked_modules() -> dict[str, ast.Module]:
@@ -435,12 +484,35 @@ def test_name_walk_flags_a_planted_test_only_def():
     assert unreached_names(checked, [root], {"pkg.lib.test_only"}) == []
 
 
+def test_name_walk_flags_a_planted_test_only_method():
+    lib = ast.parse(
+        "class Index:\n"
+        "    def __init__(self):\n        self.n = 0\n"
+        "    def probe(self, x):\n        return self._hit(x)\n"
+        "    def _hit(self, x):\n        return x\n"
+        "    def trace(self, x):\n        return self._dump(x)\n"
+        "    def _dump(self, x):\n        return x\n"
+        "class Unused:\n"
+        "    def probe(self):\n        return 0\n"
+    )
+    root = ast.parse("from pkg.lib import Index\nprint(Index().probe(1))\n")
+    checked = {"pkg.lib": lib}
+    # only a test calls trace; _dump is called only from trace's body, and
+    # a method of an unreached class is listed as its class
+    assert unreached_names(checked, [root], set()) == [
+        "pkg.lib.Index._dump", "pkg.lib.Index.trace", "pkg.lib.Unused",
+    ]
+    # an allowed method is kept, and what it calls is reached through it
+    assert unreached_names(checked, [root], {"pkg.lib.Index.trace"}) == ["pkg.lib.Unused"]
+
+
 def test_every_allowed_name_exists_and_has_a_reason():
-    defined = {
-        f"{mod}.{name}"
-        for mod, tree in _checked_modules().items()
-        for name in _top_level(tree)[0]
-    }
+    defined = set()
+    for mod, tree in _checked_modules().items():
+        defined |= {f"{mod}.{name}" for name in _top_level(tree)[0]}
+        defined |= {
+            f"{mod}.{c.name}.{m}" for c in tree.body if isinstance(c, ast.ClassDef) for m in _methods(c)
+        }
     stale = sorted(set(ALLOWED) - defined)
     assert not stale, f"ALLOWED names that no longer exist: {stale}"
     assert all(reason.strip() for reason in ALLOWED.values())
@@ -449,7 +521,7 @@ def test_every_allowed_name_exists_and_has_a_reason():
 def test_every_module_level_name_is_reached():
     unreached = unreached_names(_checked_modules(), _root_trees(), set(ALLOWED))
     assert not unreached, (
-        "module-level names only tests reach (delete them, or add them to "
+        "module-level names and methods only tests reach (delete them, or add them to "
         f"ALLOWED with a reason): {unreached}"
     )
 

@@ -105,26 +105,6 @@ def test_iceberg_partition_spec_evolution(spark, tmp_path):
     assert lin.read_current(spark, out, lp).count() == 40
 
 
-# ----------------------- ElementPrinter analog (reference info.rs:61-100)
-
-def test_trace_elements_piggybacks_on_action(spark):
-    """Tracing named ids must capture their rows at the observed stage
-    during the SAME action (no extra scan) and count all rows."""
-    from ot_spark.metrics import PipelineMetrics
-
-    df = spark.range(100).select(
-        F.col("id").alias("doc_id"), (F.col("id") * 2).alias("v")
-    )
-    pm = PipelineMetrics()
-    traced = pm.trace_elements(df, [3, 42, 999], "after_parse")
-    out = traced.where(F.col("v") < 100)  # trace sees pre-filter rows
-    assert out.count() == 50
-    got = pm.get()["after_parse"]
-    assert got["rows"] == 100
-    rows = {r["doc_id"]: r["v"] for r in got["traced"]}
-    assert rows == {3: 6, 42: 84}  # 999 not in data; absent, not null
-
-
 # --------------------------- corpus_clean + tfidf (curation pipeline)
 
 def _curate_corpus(spark):

@@ -1,6 +1,7 @@
-"""JVM class-data sharing in ``get_spark``: each case starts fresh Python
-processes (the archive belongs to the launch of a new driver JVM) with
-``XDG_CACHE_HOME`` pointed at a temp dir."""
+"""JVM class-data sharing and the launch settings of ``ot_spark.launch``:
+each end-to-end case starts fresh Python processes (the archive belongs to
+the launch of a new driver JVM) with ``XDG_CACHE_HOME`` pointed at a temp
+dir; the unit cases start no JVM."""
 
 from __future__ import annotations
 
@@ -13,6 +14,8 @@ import sys
 import types
 
 import pytest
+
+from ot_spark import launch
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -32,6 +35,8 @@ print("RESULT " + json.dumps({
 """
 
 BUILT = "JVM class-data archive built"
+BUILDING = "building the JVM class-data archive"
+STOCK = "org.apache.hadoop.fs.LocalFileSystem"
 
 
 def _run(cache, extra_conf=None, conf_dir=None) -> tuple[dict, str]:
@@ -64,7 +69,7 @@ def _warnings(stderr: str) -> list[str]:
     """Warnings other than the build's start and end notices."""
     return [
         line for line in stderr.splitlines()
-        if line.startswith("LOG WARNING ot_spark") and "building the JVM" not in line and BUILT not in line
+        if line.startswith("LOG WARNING ot_spark") and BUILDING not in line and BUILT not in line
     ]
 
 
@@ -74,31 +79,39 @@ def _intact(path: str) -> bool:
 
 @pytest.fixture(scope="module")
 def built(tmp_path_factory):
-    """A cache whose first run built the archive, that run's output, and a
-    copy of the cache's files."""
+    """A fresh cache after two runs, of which the second built the archive;
+    the first run's output and the files it left, the second run's output,
+    and a copy of the cache's files."""
     cache = tmp_path_factory.mktemp("cds")
-    first = _run(cache)
+    first = _run(cache), _cds_files(cache, "*.*")
+    second = _run(cache)
     saved = tmp_path_factory.mktemp("cds_saved") / "cds"
     shutil.copytree(os.path.join(cache, "ot_spark", "cds"), saved)
-    yield cache, first, saved
+    yield cache, first, second, saved
     shutil.rmtree(cache, ignore_errors=True)
     shutil.rmtree(saved, ignore_errors=True)
 
 
 @pytest.fixture
 def cache(built):
-    """The built cache as its first run left it.  Restored in place: the
+    """The built cache as its building run left it.  Restored in place: the
     archive records the path of the empty conf dir beside it."""
-    cache, _, saved = built
+    cache, _, _, saved = built
     shutil.rmtree(os.path.join(cache, "ot_spark", "cds"))
     shutil.copytree(saved, os.path.join(cache, "ot_spark", "cds"))
     return cache
 
 
 def test_first_run_builds_second_maps(built, cache):
-    result, stderr = built[1]
-    assert result["cds_args"] == []  # the first run's own JVM neither maps nor dumps
-    assert "building the JVM class-data archive" in stderr and BUILT in stderr
+    """In a fresh cache the first run builds nothing (a one-shot process
+    never pays for an archive it will not map), the second builds the
+    archive at exit and the third maps it."""
+    (result, stderr), files = built[1]
+    assert result["cds_args"] == [] and files == []
+    assert BUILDING not in stderr and BUILT not in stderr and _warnings(stderr) == []
+    result, stderr = built[2]
+    assert result["cds_args"] == []  # the building run's own JVM neither maps nor dumps
+    assert BUILDING in stderr and BUILT in stderr
     assert _warnings(stderr) == []
     (archive,) = _cds_files(cache, "*.jsa")
     assert _intact(archive)
@@ -154,12 +167,21 @@ def test_real_conf_dir_skips_cds(tmp_path):
     assert _cds_files(tmp_path / "cache", "*.jsa") == []
 
 
-def _no_gateway(tmp_path, monkeypatch):
+def _no_gateway(tmp_path, monkeypatch, used=True):
+    """A launch whose JVM would be this process's, over a cache in
+    ``tmp_path`` that an earlier launch ``used``, with no jar to build."""
     from pyspark import SparkContext
 
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
     monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.setattr(launch, "_fs_jar", lambda: None)
+    if used:
+        (tmp_path / "ot_spark" / "cds" / "conf").mkdir(parents=True)
+
+
+SESSION = types.SimpleNamespace(sparkContext=types.SimpleNamespace(_gateway=types.SimpleNamespace(proc=None)))
 
 
 def test_failed_launch_is_retried_without_cds(tmp_path, monkeypatch, caplog):
@@ -168,42 +190,36 @@ def test_failed_launch_is_retried_without_cds(tmp_path, monkeypatch, caplog):
     archive is built at exit (no JVM needed)."""
     from pyspark.errors import PySparkRuntimeError
 
-    from ot_spark import cds
-
     _no_gateway(tmp_path, monkeypatch)
     archive = tmp_path / "ot_spark" / "cds" / "k.4.jsa"
-    archive.parent.mkdir(parents=True)
     archive.write_bytes(b"junk")
-    monkeypatch.setattr(cds, "_sweep", lambda cache, key: str(archive))
+    monkeypatch.setattr(launch, "_sweep", lambda cache, key: str(archive))
     at_exit = []
-    monkeypatch.setattr(cds.atexit, "register", lambda *a: at_exit.append(a))
+    monkeypatch.setattr(launch.atexit, "register", lambda *a: at_exit.append(a))
     seen = []
-    session = types.SimpleNamespace(sparkContext=types.SimpleNamespace(_gateway=types.SimpleNamespace(proc=None)))
 
     def create(conf):
         seen.append((conf.get("spark.driver.extraJavaOptions"), os.environ.get("SPARK_CONF_DIR")))
         if len(seen) == 1:
             raise PySparkRuntimeError(errorClass="JAVA_GATEWAY_EXITED", messageParameters={})
-        return session
+        return SESSION
 
     conf = {"spark.app.name": "x", "spark.driver.memory": "40g"}
-    assert cds.get_or_create(create, "local[2]", conf, None) is session
+    assert launch.create(create, "local[2]", conf) is SESSION
     (flags, conf_dir), (plain, plain_conf_dir) = seen
     assert f"-XX:SharedArchiveFile={archive}" in flags and conf_dir.startswith(str(tmp_path))
     assert plain is None and plain_conf_dir is None
     assert _cds_files(tmp_path, "*.*") == []
     assert "starting it without" in caplog.text
     ((fn, *_, jvm_conf, proc),) = at_exit
-    assert fn is cds._build and jvm_conf == {"spark.driver.memory": "40g"} and proc is None
+    assert fn is launch._build and jvm_conf == {"spark.driver.memory": "40g"} and proc is None
 
 
 def test_failed_build_turns_cds_off(tmp_path, monkeypatch, caplog):
     """A build whose child process fails keeps its stderr in ``<key>.failed``
     and leaves nothing else; later launches then skip CDS (no JVM needed).
     The child gets the launch's JVM settings."""
-    from ot_spark import cds
-
-    _no_gateway(tmp_path, monkeypatch)
+    _no_gateway(tmp_path, monkeypatch, used=False)
     cache = tmp_path / "ot_spark" / "cds"
     cache.mkdir(parents=True)
 
@@ -212,66 +228,73 @@ def test_failed_build_turns_cds_off(tmp_path, monkeypatch, caplog):
         stderr.write(b"boom\n")
         return subprocess.CompletedProcess(cmd, 1)
 
-    monkeypatch.setattr(cds.subprocess, "run", failing_child)
-    cds._build(str(cache), "k", {"spark.driver.memory": "40g"}, None)
+    monkeypatch.setattr(launch.subprocess, "run", failing_child)
+    launch._build(str(cache), "k", {"spark.driver.memory": "40g"}, None)
     assert os.listdir(cache) == ["k.failed"]
     assert (cache / "k.failed").read_text() == "boom\n"
     assert "class-data archive failed" in caplog.text
-    monkeypatch.setattr(cds, "_archive_key", lambda *a: "k")
-    assert cds._Launch.plan("local[2]", {}) is None
+    monkeypatch.setattr(launch, "_archive_key", lambda *a: "k")
+    assert launch._cds_plan({}) is None
 
 
 def test_jar_goes_last_on_the_launch_classpath_only(tmp_path, monkeypatch, caplog):
-    """``get_or_create``'s jar is the launch's ``SPARK_DIST_CLASSPATH`` (an
-    entry the launcher puts last) and the launch still plans CDS; any other
-    entry there still turns CDS off.  The variable is restored after the
-    launch, so the build's child does not inherit the jar (no JVM needed)."""
-    from ot_spark import cds
-
+    """A local launch names the filesystem class in the conf and puts its
+    jar in the launch's ``SPARK_DIST_CLASSPATH`` (an entry the launcher
+    puts last), and still plans CDS; any other entry there still turns CDS
+    off.  The variable is restored after the launch, so the build's child
+    does not inherit the jar.  A caller's filesystem and a cluster master
+    get neither (no JVM needed)."""
     _no_gateway(tmp_path, monkeypatch)
+    monkeypatch.setattr(launch, "_fs_jar", lambda: "/cache/fs.jar")
     monkeypatch.delenv("SPARK_DIST_CLASSPATH", raising=False)
     at_exit = []
-    monkeypatch.setattr(cds.atexit, "register", lambda *a: at_exit.append(a[0]))
+    monkeypatch.setattr(launch.atexit, "register", lambda *a: at_exit.append(a[0]))
     seen = []
-    session = types.SimpleNamespace(sparkContext=types.SimpleNamespace(_gateway=types.SimpleNamespace(proc=None)))
 
     def create(conf):
-        seen.append(os.environ.get("SPARK_DIST_CLASSPATH"))
-        return session
+        seen.append((conf.get("spark.hadoop.fs.file.impl"), os.environ.get("SPARK_DIST_CLASSPATH")))
+        return SESSION
 
-    cds.get_or_create(create, "local[2]", {}, "/cache/fs.jar")
-    assert seen == ["/cache/fs.jar"] and at_exit == [cds._build]
+    launch.create(create, "local[2]", {})
+    assert seen == [(launch.FS_CLASS, "/cache/fs.jar")] and at_exit == [launch._build]
     assert "SPARK_DIST_CLASSPATH" not in os.environ
     assert "skipped" not in caplog.text
+    launch.create(create, "local[2]", {"spark.hadoop.fs.file.impl": STOCK})
+    launch.create(create, "spark://cluster:7077", {})
+    assert seen[1:] == [(STOCK, None), (None, None)]
 
     monkeypatch.setenv("SPARK_DIST_CLASSPATH", "/hadoop/jars/*")
-    cds.get_or_create(create, "local[2]", {}, "/cache/fs.jar")
-    assert seen[1] == os.pathsep.join(["/hadoop/jars/*", "/cache/fs.jar"]) and at_exit == [cds._build]
+    at_exit.clear()
+    launch.create(create, "local[2]", {})
+    assert seen[3] == (launch.FS_CLASS, os.pathsep.join(["/hadoop/jars/*", "/cache/fs.jar"]))
+    assert at_exit == []
     assert "class-data sharing skipped" in caplog.text and "$SPARK_DIST_CLASSPATH" in caplog.text
     assert os.environ["SPARK_DIST_CLASSPATH"] == "/hadoop/jars/*"
 
 
 def test_build_child_dumps_without_the_jar(tmp_path, monkeypatch):
     """``_train``'s session keeps the stock ``file:`` filesystem, so its JVM's
-    classpath, and the archive it dumps, lack ``localfs``'s jar: the archive
-    then maps for launches without the jar and with it appended."""
+    classpath, and the archive it dumps, lack the filesystem's jar: the
+    archive then maps for launches without the jar and with it appended."""
     from pyspark import SparkContext
 
-    from ot_spark import cds
-
-    _no_gateway(tmp_path, monkeypatch)
+    _no_gateway(tmp_path, monkeypatch, used=False)
+    monkeypatch.delenv("SPARK_DIST_CLASSPATH", raising=False)
+    monkeypatch.setattr(launch, "_fs_jar", lambda: pytest.fail("the build's child compiled the jar"))
     seen = {}
     proc = types.SimpleNamespace(stdin=types.SimpleNamespace(close=lambda: None), wait=lambda timeout: 0)
 
-    def get_or_create(create, master, conf, jar):
-        seen.update(conf=conf, jar=jar)
+    def build(conf):
+        seen.update(conf=conf, dist=os.environ.get("SPARK_DIST_CLASSPATH"))
         monkeypatch.setattr(SparkContext, "_gateway", types.SimpleNamespace(proc=proc))
         return types.SimpleNamespace(
             sparkContext=types.SimpleNamespace(setLogLevel=lambda level: None), stop=lambda: None,
         )
 
-    monkeypatch.setattr(cds, "get_or_create", get_or_create)
-    monkeypatch.setattr(cds, "_workload", lambda spark, tmp: None)
-    cds._train(str(tmp_path / "a.part"), str(tmp_path / "a.log"), str(tmp_path), "{}")
-    assert seen["jar"] is None
-    assert seen["conf"]["spark.hadoop.fs.file.impl"] == "org.apache.hadoop.fs.LocalFileSystem"
+    create = launch.create
+    monkeypatch.setattr(launch, "create", lambda _, master, conf: create(build, master, conf))
+    monkeypatch.setattr(launch, "_workload", lambda spark, tmp: None)
+    launch._train(str(tmp_path / "a.part"), str(tmp_path / "a.log"), str(tmp_path), "{}")
+    assert seen["dist"] is None
+    assert seen["conf"]["spark.hadoop.fs.file.impl"] == STOCK
+    assert "-XX:ArchiveClassesAtExit=" in seen["conf"]["spark.driver.extraJavaOptions"]
