@@ -24,7 +24,10 @@ BENCH_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "8000000"))
 # min-of-10 with a short warmup: the host shows 3-4x noisy-neighbor swings
 # WITHIN a single bench (observed flagship runs [11.6, 6.1, 15.8, 4.9,
 # 4.2] in one minute) — more measured samples, uniformly applied, is the
-# only estimator that survives that; JIT is warm after ~4 iterations.
+# only estimator that survives that.  The JIT is NOT warm after 4
+# iterations: on a 4-core host C2 was still compiling through about pass
+# 30 (flagship median 0.43 s at passes 6-13, 0.34 s at passes 40-59), so
+# the min-of-10 reads a still-warming JVM.
 FLAGSHIP_WARMUP = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "4"))
 FLAGSHIP_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "10"))
 
@@ -33,9 +36,10 @@ def run_pipeline(spark, n_pages: int) -> tuple[float, int, list[float]]:
     """Flagship: parse -> filter -> project -> fused enrich (grid cell,
     admin PIP, raster elevation, S2/H3 tiles) -> noop sink.
 
-    Measured steady-state: the identical action needs ~8 invocations to
-    reach C2 JIT on this host and single timings swing 3x with noisy
-    neighbors (BENCH/BASELINE.md protocol) — warm up, then min-of-K."""
+    Single timings swing 3x with noisy neighbors (BENCH/BASELINE.md
+    protocol), so: warm up, then min-of-K.  The JVM is not at steady state
+    after the warm-up: C2 keeps compiling through about pass 30 on a
+    4-core host (see FLAGSHIP_WARMUP)."""
     from gate_queries.common import _admin_index, _raster_index
     from ot_spark import filters, parse
     from ot_spark.benchdata import GEN_VERSION, pages_range_df

@@ -16,13 +16,9 @@ from ot_spark import area_index, pagesview
 from ot_spark.synth import gen_admin_polygons
 
 
-_AREA_ROWS = [
-    (r["key"], r["name"], r["wkt"]) for r in gen_admin_polygons().to_pylist()
-]
-
-
 def _admin_index() -> area_index.AreaIndex:
-    return area_index.build_area_index(_AREA_ROWS, tile_size=1.0)
+    rows = [(r["key"], r["name"], r["wkt"]) for r in gen_admin_polygons().to_pylist()]
+    return area_index.build_area_index(rows, tile_size=1.0)
 
 
 # Exclude points exactly on fixture-polygon boundaries: there the reference's

@@ -255,7 +255,7 @@ SELECT doc_id, href FROM x WHERE lower(href) LIKE 'http%'
 def q_warc_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC/1.0 record source (round 6; webtext/warc.py): each page's
     revision log serialized into Common Crawl's length-framed wire format
-    (JVM Column algebra), then parsed back by the mapInPandas
+    (JVM Column algebra), then parsed back by the mapInArrow
     Content-Length framing walk.  Payloads for doc_id%13==0 EMBED the
     record marker, so a delimiter-split parser fails this gate.  The
     DuckDB oracle re-derives every record arithmetically — it never

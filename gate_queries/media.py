@@ -9,7 +9,7 @@ from gate_queries.common import _read
 
 
 def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: binary payload column -> mapInPandas batch
+    """Multimodal plumbing: binary payload column -> Arrow UDF batch
     decode -> typed feature struct.  The gate payload's pixels are a
     CLOSED-FORM integer sequence (the real-codec path is still a
     documented stub), so the DuckDB oracle re-derives width/height/mean
@@ -56,7 +56,7 @@ FROM dims d JOIN px p USING (doc_id)
 
 
 def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal audio plumbing: binary PCM payload -> mapInPandas batch
+    """Multimodal audio plumbing: binary PCM payload -> Arrow UDF batch
     decode -> duration/RMS features.  Closed-form samples (see
     q_image_features): the oracle recomputes RMS per-sample in SQL; the
     sums of integer squares are < 2^53 so numpy's pairwise and SQL's
@@ -103,7 +103,7 @@ FROM dims d JOIN s USING (doc_id)
 
 
 def q_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal video plumbing: binary frame container -> mapInPandas
+    """Multimodal video plumbing: binary frame container -> Arrow UDF
     every-k-th frame sampling -> per-frame mean, exploded to one row per
     sampled frame.  Closed-form frame bytes (see q_image_features) let the
     oracle re-derive each sampled frame's mean arithmetically.  A frame

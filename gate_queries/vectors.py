@@ -224,7 +224,7 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # WHOLE stage runs interpreted (measured 2.2x slower than the two
     # compiled halves this barrier produces).  Only the 4-byte cell id
     # crosses the boundary.
-    _ident = F.udf(lambda x: x, "int", useArrow=True).asNondeterministic()
+    _ident = F.arrow_udf(lambda a: a, "int").asNondeterministic()
     cand = with_ivf_cell(emb, cents).withColumn(
         "ivf_cell", _ident(F.col("ivf_cell"))
     ).where(F.col("ivf_cell").isin([int(c) for c in probes]))

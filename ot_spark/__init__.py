@@ -12,9 +12,11 @@ web pages ``pages(url, warc_ts, html, text, lang)``:
 - segment densification / way split   (ref: src/handler/interpolate.rs)
 - lineage + checkpoint resume         (north_rule requirement)
 
-Architecture is Spark-first: DataFrame/Column algebra everywhere, Arrow
-UDFs for the spatial inner loops (pandas UDFs only in ``webtext/``), zero
-per-row Python UDFs, zero RDDs.  See SURVEY.md for the full mapping.
+Architecture is Spark-first: DataFrame/Column algebra everywhere, and one
+Python boundary style: Arrow UDFs (``arrow_udf``/``mapInArrow`` over
+``pyarrow`` arrays) for the spatial inner loops and the ``webtext/``
+kernels, no pandas UDFs, zero per-row Python UDFs, zero RDDs.  See
+SURVEY.md for the full mapping.
 """
 
 __version__ = "0.1.0"

@@ -9,7 +9,7 @@ area.rs:381), and polygon-by-box clipping for the index build
 Sutherland–Hodgman suffices because the clip region is convex).
 
 All point tests are vectorized numpy over whole Arrow batches — these run
-inside pandas UDFs on executors.
+inside spatial_enrich's Arrow UDF on executors.
 
 Representation: ring = (N,2) float64 array of (lon, lat), closed or open
 (we normalize to open); polygon = list[ring] (ring 0 outer, rest holes);

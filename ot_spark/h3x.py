@@ -36,7 +36,7 @@ Documented deltas vs the published library, and why:
    (pinned by test); encode itself is always deterministic and total.
 
 Scale shape: the per-row encode (:func:`h3x_cell_ids`) runs inside
-enrich_fused.spatial_enrich's one Arrow pandas UDF over (lat, lon) —
+enrich_fused.spatial_enrich's one Arrow UDF over (lat, lon) —
 pure vectorized numpy, no shuffle, no driver involvement beyond the
 500-ish-entry lookup tables baked into the closure.  Parent/rollup
 derivation is pure JVM bit algebra on the id (:func:`h3x_parent_col`).

@@ -29,10 +29,11 @@ The archive is built by a fixed training run, never by whichever run comes
 first, so what it holds depends only on the JDK, the jars and this module:
 at interpreter exit a child process starts a JVM with
 ``-XX:ArchiveClassesAtExit`` and runs ``_workload`` (a synthetic
-``Pipeline.run`` and the flagship chain), announced on stderr, ~50 s on 4
-cores.  A launch that finds no usable archive registers that build only
-if the cache was used before, so the first process in a fresh cache (a
-one-shot CI container) builds nothing, the second builds, later ones map.
+``Pipeline.run`` and the flagship chain), announced on stderr, 20–45 s on
+4 cores (measured 18–42 s).  A launch that finds no usable archive
+registers that build only if the cache was used before, so the first
+process in a fresh cache (a one-shot CI container) builds nothing, the
+second builds, later ones map.
 The build's child keeps the stock filesystem: the archive, dumped without
 ``FS_CLASS``'s jar, maps for launches with the jar appended too.
 
@@ -375,7 +376,7 @@ def _build(cache: str, key: str, jvm_conf: dict[str, str], proc: subprocess.Pope
             return  # another process built it meanwhile
         with _staged(cache, key, "part", "log", "err", "tmp") as (part, cds_log, err, tmp):
             os.makedirs(tmp)
-            log.warning("building the JVM class-data archive in %s (once per JDK and jar set; ~50 s)", cache)
+            log.warning("building the JVM class-data archive in %s (once per JDK and jar set; 20-45 s)", cache)
             env = {k: v for k, v in os.environ.items() if not k.startswith("PYSPARK_GATEWAY_")}
             env.update(
                 SPARK_CONF_DIR=os.path.join(cache, "conf"), TMPDIR=tmp, SPARK_LOCAL_DIRS=tmp,

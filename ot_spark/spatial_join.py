@@ -10,7 +10,7 @@ Probe semantics = /root/reference/src/area.rs:366-401:
   comma-joined in area-insertion order (area.rs:377-389, 396-399).
 
 Spark shape (SURVEY.md §4): the grid cell is JVM Column arithmetic; the
-probe itself runs in spatial_enrich's one Arrow-batched pandas UDF as the
+probe itself runs in spatial_enrich's one Arrow UDF as the
 vectorised :class:`~ot_spark.area_index.CellLookup` kernel — a binary search over the
 sorted indexed cells and the exact geometry test only for rows landing
 in border cells (the reference counts these via

@@ -47,18 +47,16 @@ def clean_features(df: DataFrame) -> DataFrame:
     Columns: doc_id, __hash, n_tokens, stopword_ratio, lang_pred,
     dup_token_frac (rounded), __top_frac / __dup_frac (unrounded, for the
     gate compares)."""
-    from .textstats import clean_stats_col
+    from .textstats import token_stats_col
 
     tok = with_tokens(df)
     toks = F.col(TOKENS_COL)
 
     # ONE Arrow pass computes every integer feature (per-language stopword
-    # hits, top-bigram multiplicity, distinct-token count) — the HOF
-    # filter/fold twins it replaces were interpreted per element (see
-    # textstats.repetition_stats_col).  n_tokens and every ratio/round
-    # stay the same JVM expressions, so outputs are bit-identical.
+    # hits, top-bigram multiplicity, distinct-token count); n_tokens and
+    # every ratio/round are JVM expressions.
     scored = tok.withColumn(
-        "__cs", clean_stats_col(LANG_STOPWORDS)(toks)
+        "__cs", token_stats_col(LANG_STOPWORDS)(toks)
     ).withColumns(
         {
             "n_tokens": F.size(toks).cast("long"),

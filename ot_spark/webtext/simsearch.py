@@ -19,7 +19,8 @@ import functools
 import warnings
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -567,12 +568,11 @@ def _adc_dist_udf(query_vec: list[float], books: np.ndarray):
         [((q[s * sub:(s + 1) * sub][None, :] - books[s]) ** 2).sum(axis=1) for s in range(m)]
     )
 
-    @F.pandas_udf(DoubleType())
-    def adc(s: pd.Series) -> pd.Series:
-        if not len(s):
-            return pd.Series([], dtype=np.float64)
-        arr = np.frombuffer(b"".join(s.tolist()), dtype=np.uint8).reshape(-1, m)
-        return pd.Series(table[np.arange(m)[None, :], arr].sum(axis=1))
+    @F.arrow_udf(DoubleType())
+    def adc(s: pa.Array) -> pa.Array:
+        codes = s.to_numpy(zero_copy_only=False)
+        arr = np.frombuffer(b"".join(codes), dtype=np.uint8).reshape(-1, m)
+        return pa.array(table[np.arange(m)[None, :], arr].sum(axis=1))
 
     return adc
 
@@ -603,9 +603,9 @@ def build_ivfpq_index(
         StructField("pq_code", BinaryType()),
     ])
 
-    @F.pandas_udf(schema)
-    def enc(s: pd.Series) -> pd.DataFrame:
-        X = np.asarray(s.tolist(), dtype=np.float64)
+    @F.arrow_udf(schema)
+    def enc(s: pa.Array) -> pa.Array:
+        X = pc.list_flatten(s).to_numpy().reshape(-1, m * sub)
         # row-chunked coarse assignment: the one-shot broadcast form
         # materializes an (n, n_cells, d) 3D temporary (>1 GB at the
         # 64k-row Arrow batch x 32 cells x 64 dims); chunking the ROW
@@ -624,10 +624,14 @@ def build_ivfpq_index(
         for j in range(m):
             Xs = X[:, j * sub:(j + 1) * sub]
             codes[:, j] = _sq_l2_small_sub(Xs, b[j]).argmin(axis=1)
-        return pd.DataFrame({
-            "cells": [c.tolist() for c in cells],
-            "pq_code": [c.tobytes() for c in codes],
-        })
+        offsets = pa.array(np.arange(len(X) + 1, dtype=np.int32) * width)
+        return pa.StructArray.from_arrays(
+            [
+                pa.ListArray.from_arrays(offsets, pa.array(cells.ravel())),
+                pa.array([c.tobytes() for c in codes], type=pa.binary()),
+            ],
+            names=["cells", "pq_code"],
+        )
 
     enc = enc.asNondeterministic()  # stop pruning from cloning the UDF
     tmp = df.withColumn("__ix", enc(F.col("embedding").cast("array<double>")))

@@ -1,8 +1,10 @@
 """Text analysis: language-id, quality scoring, token stats, fingerprints.
 
-Everything is JVM Column algebra (regexp + array + aggregate expressions) —
-no Python in the hot path at all.  These are the per-document map-side
-transforms a 100 TB curation pipeline runs before any shuffle.
+Tokenizing, scoring and every ratio are JVM Column algebra (regexp + array
+expressions); the integer folds over a token array (n-gram run stats,
+stopword hits, distinct tokens, the rolling fingerprint) run in Arrow UDFs
+over ``pyarrow`` arrays.  These are the per-document map-side transforms a
+100 TB curation pipeline runs before any shuffle.
 """
 
 from __future__ import annotations
@@ -10,12 +12,12 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from .dedup import TOKENS_COL, tokens_col, with_tokens
+from .dedup import TOKENS_COL, row_lists, tokens_col, with_tokens
 
 # tiny deterministic stopword profiles (heuristic lang-id; a real system
 # would ship n-gram tables — same plumbing, bigger literals)
@@ -67,96 +69,64 @@ def _ngram_counter_stats(toks: list, n: int) -> tuple[int, int]:
     return best, dups
 
 
+def _int32_struct(cols: dict[str, list]) -> pa.StructArray:
+    """A struct of int32 fields from per-field Python lists (None -> NULL)."""
+    return pa.StructArray.from_arrays(
+        [pa.array(v, type=pa.int32()) for v in cols.values()], names=list(cols)
+    )
+
+
 def repetition_stats_col() -> Column:
-    """pandas UDF factory: token array -> struct(best{n}, dups{n} ...) —
+    """Arrow UDF factory: token array -> struct(best{n}, dups{n} ...) —
     the integer twin of _run_stats(array_sort(ngrams_col(toks, n)))."""
     ns = (2, 3, 4)
-    schema = StructType(
-        [
-            StructField(f"{k}{n}", IntegerType())
-            for n in ns
-            for k in ("best", "dups")
-        ]
-    )
+    names = [f"{k}{n}" for n in ns for k in ("best", "dups")]
+    schema = StructType([StructField(name, IntegerType()) for name in names])
 
-    @F.pandas_udf(schema)
-    def stats(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    @F.arrow_udf(schema)
+    def stats(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         for col in it:
-            out: dict[str, list[int]] = {
-                f"{k}{n}": [] for n in ns for k in ("best", "dups")
-            }
-            for toks in col:
-                t = list(toks) if toks is not None else []
+            out: dict[str, list[int]] = {name: [] for name in names}
+            for toks in row_lists(col):
                 for n in ns:
-                    best, dups = _ngram_counter_stats(t, n)
+                    best, dups = _ngram_counter_stats(toks or [], n)
                     out[f"best{n}"].append(best)
                     out[f"dups{n}"].append(dups)
-            yield pd.DataFrame(out)
+            yield _int32_struct(out)
 
     # nondeterministic marker: stops column pruning from cloning the UDF
     # once per extracted struct field (see enrich_fused.spatial_enrich)
     return stats.asNondeterministic()
 
 
-def rep2_stats_col() -> Column:
-    """pandas UDF factory for with_repetition's two integers in ONE Arrow
-    pass: top2 (max bigram multiplicity == the sorted-array fold's longest
-    run) and nd (distinct-token count == size(array_distinct)).  The JVM
-    fold it replaces is a higher-order `aggregate` — CodegenFallback, so
-    every element evaluated the lambda interpreted (the same cost
-    repetition_full shed when it moved to repetition_stats_col).  Null
-    token arrays map to null stats, matching the fold's null propagation."""
-    schema = StructType(
-        [StructField("top2", IntegerType()), StructField("nd", IntegerType())]
-    )
-
-    @F.pandas_udf(schema)
-    def stats(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for col in it:
-            top2: list = []
-            nd: list = []
-            for toks in col:
-                if toks is None:
-                    top2.append(None)
-                    nd.append(None)
-                    continue
-                t = list(toks)
-                best, _ = _ngram_counter_stats(t, 2)
-                top2.append(best)
-                nd.append(len(set(t)))
-            yield pd.DataFrame({"top2": top2, "nd": nd})
-
-    # nondeterministic marker: stops column pruning from cloning the UDF
-    # once per extracted struct field (see enrich_fused.spatial_enrich)
-    return stats.asNondeterministic()
-
-
-def clean_stats_col(langs: dict[str, list[str]]) -> Column:
-    """pandas UDF factory for the fused cleaning features: per-language
-    stopword hit counts (== size(filter(toks, isin(words)))), the top
-    bigram multiplicity (== the run_best fold), and the distinct-token
-    count (== size(array_distinct(toks)))."""
+def token_stats_col(langs: dict[str, list[str]]) -> Column:
+    """Arrow UDF factory: token array -> struct(sc_<lang>..., top2, nd) in
+    ONE pass: per-language stopword hit counts (== size(filter(toks,
+    isin(words)))), the top bigram multiplicity (== the longest equal run
+    of the sorted bigram array) and the distinct-token count (==
+    size(array_distinct(toks))).  A null token array gives null fields, as
+    those expressions do.  The JVM forms are higher-order functions —
+    CodegenFallback, interpreted per element."""
     keys = sorted(langs)
     sets = {k: frozenset(langs[k]) for k in keys}
-    schema = StructType(
-        [StructField(f"sc_{k}", IntegerType()) for k in keys]
-        + [StructField("top2", IntegerType()), StructField("nd", IntegerType())]
-    )
+    names = [f"sc_{k}" for k in keys] + ["top2", "nd"]
+    schema = StructType([StructField(name, IntegerType()) for name in names])
 
-    @F.pandas_udf(schema)
-    def stats(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    @F.arrow_udf(schema)
+    def stats(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         for col in it:
-            out: dict[str, list[int]] = {f"sc_{k}": [] for k in keys}
-            out["top2"] = []
-            out["nd"] = []
-            for toks in col:
-                t = list(toks) if toks is not None else []
+            out: dict[str, list] = {name: [] for name in names}
+            for t in row_lists(col):
+                if t is None:
+                    for name in names:
+                        out[name].append(None)
+                    continue
                 for k in keys:
                     s = sets[k]
                     out[f"sc_{k}"].append(sum(1 for x in t if x in s))
                 out["top2"].append(_ngram_counter_stats(t, 2)[0])
                 out["nd"].append(len(set(t)))
-            yield pd.DataFrame(out)
+            yield _int32_struct(out)
 
     return stats.asNondeterministic()
 
@@ -262,7 +232,7 @@ def _rolling_over_hashes(hashed: Column, window: int) -> Column:
 
 
 def fingerprint_min_col(window: int = 8) -> Column:
-    """pandas UDF factory: token-hash array -> min rolling-window
+    """Arrow UDF factory: token-hash array -> min rolling-window
     fingerprint, the Arrow twin of ``array_min(_rolling_over_hashes(...))``.
 
     The JVM form is a CodegenFallback higher-order transform+aggregate —
@@ -273,12 +243,12 @@ def fingerprint_min_col(window: int = 8) -> Column:
     window exactly like ``sequence(0, greatest(n-w, 0))`` does; null hash
     arrays map to null."""
 
-    @F.pandas_udf(LongType())
-    def fpmin(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @F.arrow_udf(LongType())
+    def fpmin(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         p = FP_PRIME
         for col in it:
             out: list = []
-            for h in col:
+            for h in col.to_numpy(zero_copy_only=False):
                 if h is None:
                     out.append(None)
                     continue
@@ -295,7 +265,7 @@ def fingerprint_min_col(window: int = 8) -> Column:
                     for v in a.tolist():
                         acc = (acc * 31 + int(v)) % p
                     out.append(acc)
-            yield pd.Series(out, dtype="Int64")
+            yield pa.array(out, type=pa.int64())
 
     return fpmin
 
@@ -327,23 +297,18 @@ def with_repetition(df: DataFrame) -> DataFrame:
     fraction.  Heavily repetitive pages (boilerplate, keyword stuffing,
     generation loops) are the canonical web-curation drop class.
 
-    Both metrics are pure map-side Column algebra: the top-bigram count is
-    a fold over the SORTED bigram array tracking the longest equal run —
-    no explode/groupBy, so the operator adds zero shuffles at 100 TB.
-    Line-based Gopher metrics (duplicate-line fraction) are omitted: the
-    corpus is single-line by construction and the plumbing would be the
-    same split+fold.
+    Both metrics are map-side: the top-bigram multiplicity and the
+    distinct-token count come from one Arrow pass (:func:`token_stats_col`)
+    and every fraction is a JVM expression — no explode/groupBy, so the
+    operator adds zero shuffles at 100 TB.  Line-based Gopher metrics
+    (duplicate-line fraction) are omitted: the corpus is single-line by
+    construction and the plumbing would be the same split+fold.
 
     ``keep_repetition`` applies Gopher-ish thresholds (top bigram <= 0.18
     of bigram mass, <= 50%% duplicate tokens)."""
     tok = with_tokens(df)
     toks = F.col(TOKENS_COL)
-    # top bigram multiplicity + distinct-token count in ONE Arrow pass
-    # (rep2_stats_col) — the former JVM fold over array_sort(bigrams) was
-    # a CodegenFallback higher-order aggregate evaluated interpreted per
-    # element, the exact cost repetition_full already shed; every fraction
-    # below is the same JVM expression as before (bit-identical outputs).
-    out = tok.withColumn("__st", rep2_stats_col()(toks)).withColumns(
+    out = tok.withColumn("__st", token_stats_col({})(toks)).withColumns(
         {
             "n_bigrams": F.greatest(F.size(toks) - 1, F.lit(0)).cast("long"),
             "top_bigram_n": F.col("__st.top2").cast("long"),

@@ -10,7 +10,7 @@ split implementation fails the gate.
 
 Scale shape (100 TB): segment files arrive via
 ``spark.read.format("binaryFile")`` (or a chunked range reader), one blob
-per task; parsing is ``mapInPandas`` — Arrow-batched blobs in, a record
+per task; parsing is ``mapInArrow`` — Arrow-batched blobs in, a record
 walk per blob, columnar rows out.  The walk is sequential WITHIN a blob
 (framing is inherently serial) but blobs parallelize perfectly, which is
 how every distributed WARC consumer works.  Gate scale stores one
@@ -29,9 +29,10 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     IntegerType, LongType, StringType, StructField, StructType,
 )
@@ -142,16 +143,20 @@ def _parse_blob(doc_id: int, data: bytes, out: dict) -> None:
 
 
 def parse_warc_records(df: DataFrame) -> DataFrame:
-    """mapInPandas WARC parser: blobs in, one row per record out."""
+    """mapInArrow WARC parser: blobs in, one row per record out."""
+    schema = to_arrow_schema(RECORD_SCHEMA)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict = {f.name: [] for f in RECORD_SCHEMA.fields}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["warc"]):
-                _parse_blob(int(doc_id), bytes(blob), out)
-            yield pd.DataFrame(out)
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            out: dict = {name: [] for name in schema.names}
+            for doc_id, blob in zip(
+                rb.column("doc_id").to_numpy(),
+                rb.column("warc").to_numpy(zero_copy_only=False),
+            ):
+                _parse_blob(int(doc_id), blob, out)
+            yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-    return df.select("doc_id", "warc").mapInPandas(gen, RECORD_SCHEMA)
+    return df.select("doc_id", "warc").mapInArrow(gen, RECORD_SCHEMA)
 
 
 def write_warc_records(records: DataFrame) -> DataFrame:

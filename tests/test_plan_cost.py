@@ -1,9 +1,10 @@
 """Driver-side cost of building plans: the py4j traffic of the flagship
-chain, PySpark's call-site capture, and no pandas on the spatial path."""
+chain, PySpark's call-site capture, and no pandas in the engine."""
 
 from __future__ import annotations
 
 import collections
+import glob
 import os
 import subprocess
 import sys
@@ -60,12 +61,26 @@ def test_flagship_build_py4j_budget(spark):
     assert 0 < sum(sent.values()) <= FLAGSHIP_PY4J_BUDGET, sent
 
 
-def test_spatial_path_imports_no_pandas():
-    """The modules of the pipeline and the spatial UDFs load without
-    pandas (a fresh interpreter, so other tests' imports do not count)."""
+def engine_modules() -> list[str]:
+    """Every module under ``ot_spark/`` and ``gate_queries/``, by walking
+    the package directories."""
+    mods = []
+    for pkg in ("ot_spark", "gate_queries"):
+        for path in glob.glob(os.path.join(ROOT, pkg, "**", "*.py"), recursive=True):
+            name = os.path.relpath(path, ROOT)[: -len(".py")].replace(os.sep, ".")
+            mods.append(name.removesuffix(".__init__"))
+    return sorted(mods)
+
+
+def test_engine_imports_no_pandas():
+    """Every engine module loads without pandas (a fresh interpreter, so
+    other tests' imports do not count)."""
+    mods = engine_modules()
+    assert "ot_spark.webtext.textstats" in mods and "gate_queries.vectors" in mods
     code = (
-        "import sys\n"
-        "import ot_spark.pipeline, ot_spark.enrich_fused, ot_spark.raster, ot_spark.densify\n"
+        "import importlib, sys\n"
+        f"for m in {mods!r}:\n"
+        "    importlib.import_module(m)\n"
         "print('pandas' in sys.modules)\n"
     )
     out = subprocess.run(

@@ -117,7 +117,7 @@ def test_clean_stats_parity(spark, sf_dir):
     tok = dedup.with_tokens(docs)
     toks = F.col(dedup.TOKENS_COL)
     new = tok.select(
-        "doc_id", textstats.clean_stats_col(textstats.LANG_STOPWORDS)(toks).alias("cs")
+        "doc_id", textstats.token_stats_col(textstats.LANG_STOPWORDS)(toks).alias("cs")
     ).select("doc_id", "cs.*").collect()
     old_cols = {
         f"sc_{lang}": F.size(F.filter(toks, lambda t: t.isin(words)))
@@ -381,11 +381,12 @@ def test_explode_segments_edge_shapes(spark):
 
 
 def test_rep2_stats_matches_reference_fold(spark):
-    """rep2_stats_col (Arrow) == the retired JVM fold: max bigram
-    multiplicity and distinct-token count, incl. empty/1-token/null."""
+    """token_stats_col with no languages (Arrow) == the retired JVM fold:
+    max bigram multiplicity and distinct-token count, incl.
+    empty/1-token/null."""
     from pyspark.sql import functions as F
 
-    from ot_spark.webtext.textstats import rep2_stats_col
+    from ot_spark.webtext.textstats import token_stats_col
 
     rows = [
         (1, ["a", "b", "a", "b", "a", "b"]),   # top bigram "a b" x3
@@ -397,7 +398,7 @@ def test_rep2_stats_matches_reference_fold(spark):
     df = spark.createDataFrame(rows, "id long, toks array<string>")
     got = {
         r.id: (r.st["top2"], r.st["nd"])
-        for r in df.select("id", rep2_stats_col()(F.col("toks")).alias("st")).collect()
+        for r in df.select("id", token_stats_col({})(F.col("toks")).alias("st")).collect()
     }
     assert got == {
         1: (3, 2), 2: (0, 1), 3: (0, 0), 4: (None, None), 5: (3, 1)

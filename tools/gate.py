@@ -19,9 +19,11 @@ named subset of it, four ways over one Spark session.
   For a before/after, run it once per tree with ``PYTHONPATH`` pointing
   at a checkout of the other commit.
 - ``plan``: per-query counts of shuffle and broadcast exchanges, join
-  kinds and Arrow nodes from the formatted physical plan; ``--out``
-  also writes each plan to DIR/<query>.txt.  A row-at-a-time Python UDF
-  (BatchEvalPython) in any plan is a failure.
+  kinds and Arrow nodes (ArrowEvalPython, MapInArrow) from the formatted
+  physical plan; ``--out`` also writes each plan to DIR/<query>.txt.  A
+  Python node outside the engine's one boundary style — a row-at-a-time
+  UDF (BatchEvalPython), MapInPandas, or an ArrowEvalPython running a
+  pandas UDF — in any plan is a failure.
 
 SF is a testdata dir of parquet tables (the layout ``queries()`` reads).
 Each query prints one verdict line; the exit status is non-zero if any
@@ -139,6 +141,25 @@ def node_count(plan: str, op: str) -> int:
     return len(set(re.findall(rf"^\((\d+)\) {op}\b", plan, re.M)))
 
 
+def python_nodes(plan: str) -> tuple[int, int]:
+    """(Arrow Python nodes, pandas or row-at-a-time Python nodes) of a
+    formatted plan.  An ArrowEvalPython node prints its UDFs' eval type
+    last in its ``Arguments`` line; a pandas UDF's (200 scalar, 204
+    scalar iterator) counts as pandas."""
+    from pyspark.util import PythonEvalType
+
+    pandas_types = {
+        PythonEvalType.SQL_SCALAR_PANDAS_UDF, PythonEvalType.SQL_SCALAR_PANDAS_ITER_UDF
+    }
+    eval_types = re.findall(
+        r"^\(\d+\) ArrowEvalPython\nInput.*\nArguments: .*, (\d+)$", plan, re.M
+    )
+    pandas_arrow = sum(int(t) in pandas_types for t in eval_types)
+    arrow = node_count(plan, "ArrowEvalPython") + node_count(plan, "MapInArrow")
+    other = node_count(plan, "BatchEvalPython") + node_count(plan, "MapInPandas")
+    return arrow - pandas_arrow, other + pandas_arrow
+
+
 def _plan(args, spark):
     if args.out:
         os.makedirs(args.out, exist_ok=True)
@@ -151,15 +172,14 @@ def _plan(args, spark):
         if args.out:
             with open(os.path.join(args.out, f"{name}.txt"), "w") as fh:
                 fh.write(plan)
-        row_python = node_count(plan, "BatchEvalPython")
-        return not row_python, (
+        arrow, other = python_nodes(plan)
+        return not other, (
             f"shuffle_exchanges={node_count(plan, 'Exchange')} "
             f"broadcast={node_count(plan, 'BroadcastExchange')} "
             f"bhj={node_count(plan, 'BroadcastHashJoin')} "
             f"smj={node_count(plan, 'SortMergeJoin')} "
-            f"arrow={node_count(plan, 'ArrowEvalPython') + node_count(plan, 'MapInPandas')} "
-            f"row_python={row_python}"
-            + (" FAIL row-at-a-time Python UDF in plan" if row_python else "")
+            f"arrow={arrow} other_python={other}"
+            + (" FAIL pandas or row-at-a-time Python node in plan" if other else "")
         )
 
     return check
